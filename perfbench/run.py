@@ -39,7 +39,7 @@ import tables  # noqa: E402
 # app workload shape: the reference's 20 terms x 175 regions
 HISTORY_DAYS = 6           # daily basis, 2 records per series per day
 WARMUP_DAYS = 1            # first live day after launch: reported, not in p50
-MIN_LIVE_SAMPLES = 3       # live days measured after the warm-up, at least
+MIN_LIVE_SAMPLES = 2       # live days measured after the warm-up, at least
 LIVE_DAYS_MAX = 6          # hourly basis, 24 records per series per day
 HISTORY_OUTBREAKS = (2, 4)  # day indices with a planted outbreak
 LIVE_OUTBREAKS = (7,)
@@ -122,7 +122,8 @@ def nproc():
 
 def heap():
     """JVM heap, sized like the repository's test command: half the
-    machine's memory, between 2 and 8 GiB."""
+    machine's memory, between 2 and 8 GiB, pinned (-Xms = -Xmx) so G1
+    does not grow and shrink it during a run."""
     try:
         with open("/proc/meminfo") as f:
             kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
@@ -192,11 +193,11 @@ class Jvm:
     attached through Spark configuration. Its event log is tailed for
     completion signals."""
 
-    def __init__(self, cp, main, args, run_dir, conf):
-        self.log = os.path.join(run_dir, "events.jsonl")
+    def __init__(self, cp, main, args, run_dir, conf, name):
+        self.log = os.path.join(run_dir, name + ".events.jsonl")
         tmp = os.path.join(run_dir, "tmp")
         os.makedirs(tmp, exist_ok=True)
-        cmd = ["java", "-Xmx" + heap()]
+        cmd = ["java", "-Xmx" + heap(), "-Xms" + heap()]
         for p in ADD_OPENS:
             cmd += ["--add-opens", "java.base/%s=ALL-UNNAMED" % p]
         conf = dict(conf, **{"spark.ui.enabled": "false",
@@ -204,7 +205,7 @@ class Jvm:
                              "spark.perfbench.log": self.log})
         cmd += ["-D%s=%s" % kv for kv in sorted(conf.items())]
         cmd += ["-Djava.io.tmpdir=" + tmp, "-cp", cp, main] + list(args)
-        self.out = open(os.path.join(run_dir, "jvm.log"), "w")
+        self.out = open(os.path.join(run_dir, name + ".jvm.log"), "w")
         self.t_launch = now()
         # Spark prefers SPARK_LOCAL_DIRS over spark.local.dir
         env = dict(os.environ, SPARK_LOCAL_DIRS=conf["spark.local.dir"])
@@ -286,8 +287,10 @@ def read_parquet_dir(path):
 # -------------------------------------------------------- app workload
 
 def run_app(cp, seed, seconds, trace, master=None, backfill_only=False, tag="app"):
-    """Backfill, then (unless `backfill_only`) feed new days in a closed
-    loop until `seconds` have passed. Returns (observations, checks)."""
+    """One set-up-only launch of the app (`--once` on an empty directory),
+    then the measured launch: backfill, then (unless `backfill_only`) new
+    days in a closed loop until `seconds` have passed. Returns
+    (observations, checks)."""
     run_dir = fresh_dir(tag)
     watched, staging = os.path.join(run_dir, "in"), os.path.join(run_dir, "staging")
     os.makedirs(watched)
@@ -300,7 +303,6 @@ def run_app(cp, seed, seconds, trace, master=None, backfill_only=False, tag="app
     for d in live_days:  # generated ahead, published one at a time
         gen.stage(feed.lines(d, 24), staging, "day-%03d.json" % d)
 
-    out = {k: os.path.join(run_dir, k) for k in ("landing", "scores", "ckpt")}
     stop_file = os.path.join(run_dir, "stop")
     conf = {"spark.sql.streaming.streamingQueryListeners": "perfbench.ProgressLog",
             # a deployment setting (spark-submit --conf): at Spark's default
@@ -309,27 +311,45 @@ def run_app(cp, seed, seconds, trace, master=None, backfill_only=False, tag="app
             "spark.sql.shuffle.partitions": str(nproc())}
     if trace:
         conf["spark.extraListeners"] = "perfbench.EngineListener"
-    args = ["--master", master or "local[%d]" % nproc(), "--json-dir", watched,
-            "--landing", out["landing"], "--scores", out["scores"],
-            "--checkpoint", out["ckpt"]]
-    if backfill_only:
-        args.append("--once")
-    main = "graft.app.Main"
-    if trace:
-        main = "perfbench.TracedApp"
-        args += ["--stop-file", stop_file]
-    jvm = Jvm(cp, main, args, run_dir, conf)
-    obs = {"latencies": [], "warmup": [], "live_events": 0}
+    main = "perfbench.TracedApp" if trace else "graft.app.Main"
+
+    def launch(name, base, input_dir, extra):
+        """Start the app on `input_dir` with outputs under `base`; return
+        the JVM and the time its query started."""
+        argv = ["--master", master or "local[%d]" % nproc(), "--json-dir", input_dir,
+                "--landing", os.path.join(base, "landing"),
+                "--scores", os.path.join(base, "scores"),
+                "--checkpoint", os.path.join(base, "ckpt")] + extra
+        jvm = Jvm(cp, main, argv, run_dir, conf, name)
+        try:
+            t0 = jvm.wait_for(lambda e: e["ev"] == "started", name + " query start")["t"]
+        except BaseException:
+            jvm.stop()
+            raise
+        obs["setups"].append(t0 - jvm.t_launch)
+        return jvm, t0
+
+    def emitted_after(t):
+        return lambda e: (e["ev"] == "batch" and e["rows_emitted"] > 0
+                          and e["t_start"] >= t)
+
+    obs = {"setups": [], "latencies": [], "warmup": [], "live_events": 0}
+    if not backfill_only:
+        # one more set-up sample: the same program on an empty directory
+        probe = os.path.join(run_dir, "setup")
+        os.makedirs(os.path.join(probe, "in"))
+        jvm, _ = launch("setup", probe, os.path.join(probe, "in"), ["--once"])
+        try:
+            if jvm.wait_exit() != 0:
+                raise BenchError("set-up launch exited %d" % jvm.proc.returncode)
+        finally:
+            jvm.stop()
+    extra = ["--once"] if backfill_only else ["--stop-file", stop_file] if trace else []
+    jvm, t0 = launch("run", run_dir, watched, extra)
     try:
-        started = jvm.wait_for(lambda e: e["ev"] == "started", "query start")
-        obs["setup_s"] = started["t"] - jvm.t_launch
-
-        def emitted_after(t):
-            return lambda e: (e["ev"] == "batch" and e["rows_emitted"] > 0
-                              and e["t_start"] >= t)
-
         first = jvm.wait_for(emitted_after(0), "backfill")
-        obs["backfill_s"] = first["t_start"] + first["trigger_s"] - started["t"]
+        obs["backfill_s"] = first["t_start"] + first["trigger_s"] - t0
+        obs["last_closed"] = HISTORY_DAYS - 2
         live0 = now()
         for d in live_days:
             if now() - live0 >= seconds and len(obs["latencies"]) >= MIN_LIVE_SAMPLES:
@@ -345,7 +365,6 @@ def run_app(cp, seed, seconds, trace, master=None, backfill_only=False, tag="app
             obs["last_closed"] = d - 1
         if backfill_only:
             jvm.wait_exit()
-            obs["last_closed"] = HISTORY_DAYS - 2
         else:
             open(jvm.log + ".gc", "w").close()
             obs["live_heap_mb"] = jvm.wait_for(
@@ -356,7 +375,9 @@ def run_app(cp, seed, seconds, trace, master=None, backfill_only=False, tag="app
     finally:
         jvm.stop()
     obs["events"] = jvm.events
-    obs["peak_heap_mb"] = max([e.get("old_gen_mb", 0.0) for e in jvm.events] + [0.0])
+    obs["setup_s"] = statistics.median(obs["setups"])
+    obs["peak_heap_mb"] = max([e.get("old_gen_mb", 0.0) for e in obs["events"]] + [0.0])
+    out = {k: os.path.join(run_dir, k) for k in ("landing", "scores", "ckpt")}
     obs["landing_files"] = count_files(out["landing"])
     obs["score_files"] = count_files(out["scores"])
     obs["checkpoint_files"] = count_files(out["ckpt"])
@@ -388,6 +409,7 @@ def app_result(cp, seed, seconds, trace):
     lat = obs["latencies"]
     named = {
         "setup_s": (obs["setup_s"], "s"),
+        "setup_samples": (len(obs["setups"]), "count"),
         "backfill_s": (obs["backfill_s"], "s"),
         "first_day_latency_s": (obs["warmup"][0], "s"),
         "day_latency_p50_s": (statistics.median(lat), "s"),
@@ -398,9 +420,6 @@ def app_result(cp, seed, seconds, trace):
         "peak_heap_mb": (obs["peak_heap_mb"], "MiB"),
         "live_heap_mb": (obs["live_heap_mb"], "MiB"),
     }
-    tail = tail_percentile(lat)
-    if tail:
-        named[tail[0]] = (tail[1], "s")
     e2e = {"setup_s": obs["setup_s"], "batch_s": obs["backfill_s"],
            "live_heap_mb": obs["live_heap_mb"],
            "outbreak_recall": obs["recall"], "outbreak_precision": obs["precision"]}
@@ -416,14 +435,6 @@ def app_result(cp, seed, seconds, trace):
         decisions = [(e["batch"], e["decision"]) for e in obs["events"] if e["ev"] == "decision"]
         print("batch decisions (batch id, decision): %s" % decisions)
     return named, e2e, layers, attempted, checks
-
-
-def tail_percentile(samples):
-    """The highest of p90/p99 with at least ten samples beyond it."""
-    for q in (99, 90):
-        if len(samples) * (100 - q) / 100.0 >= 10:
-            return "day_latency_p%d_s" % q, statistics.quantiles(samples, n=100)[q - 1]
-    return None
 
 
 def span_sum(events, name, key=None):
@@ -491,26 +502,31 @@ def query_data():
     return d
 
 
-def run_query_mix(cp, seconds, trace, master=None):
+def run_query_mix(cp, seconds, trace):
+    """A set-up-only launch of the client, then the timed one. Returns
+    (set-up samples, the timed launch's events)."""
     data = query_data()
     run_dir = fresh_dir("query_mix")
     conf = {"spark.extraListeners": "perfbench.EngineListener"} if trace else {}
-    jvm = Jvm(cp, "perfbench.QueryMix",
-              [data, ",".join(QUERIES), str(seconds), "1" if trace else "0",
-               master or "local[%d]" % nproc()], run_dir, conf)
-    try:
-        rc = jvm.wait_exit(timeout=170)
-    finally:
-        jvm.stop()
-    if rc != 0:
-        raise BenchError("query mix exited %d, see %s/jvm.log" % (rc, run_dir))
-    return jvm
+    master = "local[%d]" % nproc()
+    setups = []
+    for name, order in (("setup", ""), ("timed", ",".join(QUERIES))):
+        jvm = Jvm(cp, "perfbench.QueryMix",
+                  [data, order, str(seconds), "1" if trace else "0", master],
+                  run_dir, conf, name)
+        try:
+            rc = jvm.wait_exit(timeout=170)
+        finally:
+            jvm.stop()
+        if rc != 0:
+            raise BenchError("query mix exited %d, see %s/%s.jvm.log" % (rc, run_dir, name))
+        ready = next(e for e in jvm.events if e["ev"] == "ready")
+        setups.append(ready["t"] - jvm.t_launch)
+    return setups, jvm.events
 
 
 def query_mix_result(cp, seed, seconds, trace):
-    jvm = run_query_mix(cp, seconds, trace)
-    ev = jvm.events
-    ready = next(e for e in ev if e["ev"] == "ready")
+    setups, ev = run_query_mix(cp, seconds, trace)
     passes = [e["s"] for e in ev if e["ev"] == "pass"]
     per_query = {}
     for e in ev:
@@ -520,11 +536,8 @@ def query_mix_result(cp, seed, seconds, trace):
     geomean = math.exp(sum(math.log(v) for v in medians) / len(medians))
     with open(os.path.join(HERE, "fingerprints.json")) as f:
         committed = json.load(f)
-    checks = {}
-    for e in ev:
-        if e["ev"] == "fingerprint":
-            checks["fingerprint:" + e["name"]] = (
-                committed.get(e["name"]) == {"rows": e["rows"], "fp": e["fp"]})
+    seen = {e["name"]: {"rows": e["rows"], "fp": e["fp"]} for e in ev if e["ev"] == "fingerprint"}
+    checks = {"fingerprint:" + q: q in seen and seen[q] == committed.get(q) for q in QUERIES}
     anomalies = next(e for e in ev if e["ev"] == "anomalies")["rows"]
     flagged = {tuple(x.split("|")) for x in anomalies.split(",") if x}
     planted = tables.planted()
@@ -534,7 +547,8 @@ def query_mix_result(cp, seed, seconds, trace):
     checks["outbreaks_detected"] = hit > 0
     timed_end = next(e for e in ev if e["ev"] == "timed_end")
     named = {
-        "setup_s": (ready["t"] - jvm.t_launch, "s"),
+        "setup_s": (statistics.median(setups), "s"),
+        "setup_samples": (len(setups), "count"),
         "query_mix_s": (statistics.median(passes), "s"),
         "query_mix_passes": (len(passes), "count"),
         "query_geomean_s": (geomean, "s"),
@@ -603,7 +617,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", choices=sorted(RUNNERS) + ["all"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=10)  # BENCHMARK.json run_seconds
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--selfcheck", action="store_true")
     ap.add_argument("--runs", type=int, default=5)

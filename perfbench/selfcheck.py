@@ -7,8 +7,8 @@ metric, each set's spread, the spread of all 2N runs (interquartile range over m
 second set's median moved in the worse direction, both against the
 metric's bound. Then it makes one traced run per workload and prints the
 tracing overhead: the traced run's end-to-end figures against the first
-set's medians. Exit code 0 when every spread (but setup_s's) and every
-shift is within its bound.
+set's medians. Exit code 0 when every spread and every shift is within
+its bound, `setup_s`'s too.
 """
 
 import json
@@ -60,7 +60,7 @@ def main(runs, seconds):
             sign = 1 if m["better"] == "lower" else -1
             shift = sign * (med[1] - med[0]) / med[0]
             overhead = sign * (traced[name] - med[0]) / med[0]
-            bad = shift > bound or (name != "setup_s" and max(sp + [both]) > bound)
+            bad = shift > bound or max(sp + [both]) > bound
             ok = ok and not bad
             print("  %-20s %6.3f %10.4f %8.4f %8.4f %8.4f %8.4f %10.4f%s" % (
                 name, bound, statistics.median(vals[0] + vals[1]), sp[0], sp[1], both,

@@ -1,19 +1,21 @@
 package perfbench
 
 import graft.SparkEntry
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 /** The `query_mix` client: one closed loop over a fixed subset of
   * `SparkEntry.queries`, each written to the `noop` sink, with the query
   * function's eager work (`build`) and the final write (`run`) timed
-  * apart. On the first pass, after each query's timed write, it logs the
-  * output's row count and an order-insensitive fingerprint. A pass's
-  * time is the sum of its queries' timed intervals.
+  * apart. On the first pass each timed write also observes its output's
+  * row count and an order-insensitive fingerprint. A pass's time is the
+  * sum of its queries' timed intervals.
   *
   * Usage: QueryMix <dataDir> <q1,q2,...> <seconds> <trace 0|1> <master>
-  * Passes repeat until `seconds` have passed; there is at least one.
+  * Passes repeat until `seconds` have passed; there is at least one. With
+  * an empty query list it only sets up (builds the session and loads the
+  * query table), logs `ready` and exits: one more set-up sample.
   *
   * The session is configured as the engine's own `graft.Bench` builds
   * it. Output goes to the log named by `spark.perfbench.log`. */
@@ -21,7 +23,7 @@ object QueryMix {
 
   def main(args: Array[String]): Unit = {
     val Array(dir, order, secondsArg, traceArg, master) = args
-    val names = order.split(",").toSeq
+    val names = order.split(",").toSeq.filter(_.nonEmpty)
     val seconds = secondsArg.toDouble
     val traced = traceArg == "1"
     val cpus = master.stripPrefix("local[").stripSuffix("]")
@@ -39,13 +41,13 @@ object QueryMix {
     Probe.open(sc.getConf.get("spark.perfbench.log", ""))
     Probe.watchGc()
     val queries = SparkEntry.queries
+    Probe.emit("ev" -> "ready", "t" -> Probe.now())
+    if (names.isEmpty) {
+      spark.stop()
+      return
+    }
 
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-
-    // warm-up: session, codegen and parquet footers, on one cheap query
-    noop(queries("q11_daily_agg")(spark, dir))
-    spark.catalog.clearCache()
-    Probe.emit("ev" -> "ready", "t" -> Probe.now())
 
     val start = Probe.now()
     var pass = 0
@@ -57,13 +59,16 @@ object QueryMix {
           if (traced) Probe.span(sc, "queries.build", "query" -> name)(queries(name)(spark, dir))
           else queries(name)(spark, dir)
         val t1 = Probe.now()
-        if (traced) Probe.span(sc, "queries.run", "query" -> name)(noop(df)) else noop(df)
+        val observed = if (pass == 0) Some(Observation(name)) else None
+        val out = observed.fold(df)(fingerprinted(df, _))
+        if (traced) Probe.span(sc, "queries.run", "query" -> name)(noop(out)) else noop(out)
         val t2 = Probe.now()
         timed += t2 - t0
         Probe.emit("ev" -> "query", "name" -> name, "pass" -> pass,
           "build_s" -> (t1 - t0), "run_s" -> (t2 - t1))
-        // correctness on the first pass, outside the timed intervals
-        if (pass == 0) check(name, df)
+        // the fingerprint was observed on the timed write; the rest of
+        // the check runs outside the timed intervals
+        observed.foreach(check(name, df, _))
         spark.catalog.clearCache()
       }
       Probe.emit("ev" -> "pass", "pass" -> pass, "s" -> timed)
@@ -78,9 +83,11 @@ object QueryMix {
     spark.stop()
   }
 
-  private def check(name: String, df: DataFrame): Unit = {
-    val (rows, fp) = fingerprint(df)
-    Probe.emit("ev" -> "fingerprint", "name" -> name, "rows" -> rows, "fp" -> fp)
+  private def check(name: String, df: DataFrame, observed: Observation): Unit = {
+    val m = observed.get
+    val fp = Option(m("fp")).map(v => new java.math.BigDecimal(v.toString).toPlainString)
+    Probe.emit("ev" -> "fingerprint", "name" -> name, "rows" -> m("rows"),
+      "fp" -> fp.getOrElse("0"))
     if (name == OutbreakQuery) {
       val flagged = df.where(abs(col("score")) > 2.0)
         .select(col("region"), col("date").cast("string")).collect()
@@ -93,10 +100,12 @@ object QueryMix {
     * features, silhouette-selected KMeans, z-scored centroid distance. */
   val OutbreakQuery = "q41_outbreak_scores"
 
-  /** Row count and an order-insensitive fingerprint: the sum of a 64-bit
-    * hash of each row's JSON, with floating-point values rounded to four
-    * decimals so last-bit differences in summation order do not count. */
-  def fingerprint(df: DataFrame): (Long, String) = {
+  /** `df`, observing on its write the row count (`rows`) and an
+    * order-insensitive fingerprint (`fp`): the sum of a 64-bit hash of each
+    * row's JSON, with floating-point values rounded to four decimals so
+    * last-bit differences in summation order do not count. The output is
+    * checked on the timed write itself, with no second execution. */
+  def fingerprinted(df: DataFrame, observed: Observation): DataFrame = {
     def rounded(c: Column, dt: org.apache.spark.sql.types.DataType): Column = dt match {
       case DoubleType | FloatType => round(c.cast(DoubleType), 4) + lit(0.0)
       case ArrayType(DoubleType | FloatType, _) =>
@@ -104,8 +113,7 @@ object QueryMix {
       case _ => c
     }
     val cols = df.schema.fields.toSeq.map(f => rounded(col(s"`${f.name}`"), f.dataType).as(f.name))
-    val r = df.select(xxhash64(to_json(struct(cols: _*))).cast("decimal(38,0)").as("h"))
-      .agg(count(lit(1)), sum("h")).first()
-    (r.getLong(0), Option(r.getDecimal(1)).map(_.toPlainString).getOrElse("0"))
+    df.observe(observed, count(lit(1)).as("rows"),
+      sum(xxhash64(to_json(struct(cols: _*))).cast("decimal(38,0)")).as("fp"))
   }
 }

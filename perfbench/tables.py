@@ -1,10 +1,10 @@
 """Fixed input tables for the `query_mix` workload.
 
-The queries read four tables of the engine's test schema: `events`,
-`orders`, `lineitem` and `embeddings`. This module writes them with the
-same column names and types, at a fixed size and from a fixed data seed,
-so the committed output fingerprints (`fingerprints.json`) stay valid for
-every benchmark seed. The benchmark seed only orders the queries.
+The workload's queries read two tables of the engine's test schema:
+`events` and `orders`. This module writes them with the same column
+names and types, at a fixed size and from a fixed data seed, so the
+committed output fingerprints (`fingerprints.json`) stay valid for every
+benchmark seed. The benchmark seed has no effect on `query_mix`.
 """
 
 import datetime as _dt
@@ -15,13 +15,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 DATA_SEED = 42
-# rows per table; events/orders/lineitem follow the test data's ratios
+# rows per table, in the test data's ratio
 EVENTS = 20_000
 USERS = 300
 ORDERS = 30_000
-LINEITEMS = 120_000
-EMBEDDINGS = 600
-DIM = 64
 # planted outbreaks in `events`: (user_id % 5, day of January 2024); the
 # outbreak queries read region "R<user_id % 5>" and date(ts)
 OUTBREAKS = [(1, 9), (3, 16), (0, 23)]
@@ -40,7 +37,7 @@ def _ts(base, seconds):
 
 
 def write_all(out_dir):
-    """Write the four tables as `<out_dir>/<name>.parquet`."""
+    """Write the tables as `<out_dir>/<name>.parquet`."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(DATA_SEED)
 
@@ -76,33 +73,5 @@ def write_all(out_dir):
         "o_orderpriority": pa.array(prio[rng.integers(0, len(prio), n)]),
     })
 
-    n = LINEITEMS
-    qty = rng.integers(1, 51, n).astype(np.float64)
-    lineitem = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, ORDERS, n), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, 2000, n), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, 100, n), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, n), pa.int32()),
-        "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(qty * rng.uniform(900.0, 2100.0, n), 2)),
-        "l_discount": pa.array(rng.integers(0, 11, n) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, n) / 100.0),
-        "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
-        "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, n)]),
-        "l_shipdate": _ts((1995, 1, 2), rng.integers(0, 2500, n) * 86400),
-    })
-
-    n = EMBEDDINGS
-    labels = rng.integers(0, 10, n)
-    centers = rng.normal(0.0, 1.0, (10, DIM))
-    vecs = centers[labels] + rng.normal(0.0, 0.8, (n, DIM))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    embeddings = pa.table({
-        "vec_id": pa.array(np.arange(n), pa.int64()),
-        "embedding": pa.array(list(vecs.astype(np.float32)), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-
-    for name, table in [("events", events), ("orders", orders),
-                        ("lineitem", lineitem), ("embeddings", embeddings)]:
+    for name, table in [("events", events), ("orders", orders)]:
         pq.write_table(table, os.path.join(out_dir, name + ".parquet"))
