@@ -25,9 +25,13 @@ import org.apache.spark.sql.streaming.Trigger
   * against persisted model + detrend state
   * ([[graft.outbreak.IncrementalOutbreak]]), writing `(date, region,
   * score)` anomalies partitioned by date. A full re-fit over all history
-  * runs on the first batch, every `--refit-every` batches (default 30),
-  * and whenever the state is missing/unreadable — the reference (and
-  * round 1) re-ran the full pipeline on EVERY batch, linear in history.
+  * runs on the first scored batch, whenever the state is
+  * missing/unreadable, and on the first scored batch whose id has passed
+  * a multiple of `--refit-every` (default 30) since the model's last
+  * batch. In append mode only some batch ids carry closed days, so a test
+  * of `batchId % refitEvery == 0` alone could miss every multiple. The
+  * reference (and round 1) re-ran the full pipeline on EVERY batch,
+  * linear in history.
   */
 object Main {
 
@@ -95,23 +99,21 @@ object Main {
       persist = batch => batch.write.mode(SaveMode.Overwrite)
         .partitionBy("date").parquet(landing),
       analyze = (batch, batchId) => if (!batch.isEmpty) {
-        val state =
-          if (batchId % refitEvery == 0) None // periodic full refit
-          else IncrementalOutbreak.loadState(spark, stateDir)
-        state match {
+        IncrementalOutbreak.loadState(spark, stateDir) match {
           case Some((model, _)) if model.lastBatchId >= batchId =>
             // re-delivered batch: the state commit (saveState) happens
             // strictly AFTER the score write, so a state that already
             // records this batchId proves its scores landed — no-op
             ()
-          case Some((model, detrendState)) =>
+          case Some((model, detrendState))
+              if batchId / refitEvery <= model.lastBatchId / refitEvery =>
             val (scores, newState) = IncrementalOutbreak.scoreIncrement(
               spark, batch.select("date", "region", "kw", "value"),
               model, detrendState)
             writeAnomalies(scores, overwriteAll = false)
             IncrementalOutbreak.saveState(spark, stateDir,
               model.copy(lastBatchId = batchId), newState)
-          case None =>
+          case _ => // no usable state, or a refit boundary was crossed
             val history = spark.read.parquet(landing)
               .select("date", "region", "kw", "value")
             val (scores, model, detrendState) =

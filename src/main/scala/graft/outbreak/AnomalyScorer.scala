@@ -1,9 +1,10 @@
 package graft.outbreak
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.mllib.clustering.DriverKMeans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,11 +15,16 @@ import org.apache.spark.sql.functions._
   * score(x) = z-score of the squared Euclidean distance from x's feature
   * vector to its assigned cluster centroid. |z| > 2 flags an anomaly.
   *
-  * Scale notes: `fit` collects only k centroids to the driver; the k tiny
-  * centroids embed in the plan as an array literal (the reference
-  * closure-captured them — SURVEY §3 EP3 notes the serialization cost) and
-  * the distance is a native codegen'd expression; the z-score constants
-  * come from one scalar aggregate, not a second ML pass.
+  * Scale notes: below `localEvalThreshold` rows the feature table is
+  * collected once and every candidate k is fitted and evaluated on the
+  * driver ([[org.apache.spark.mllib.clustering.DriverKMeans]], bit-identical
+  * to MLlib), so model selection costs two Spark jobs instead of one per
+  * Lloyd iteration; above it MLlib fits and evaluates distributed. Only
+  * the k centroids reach scoring: they embed in the plan as array
+  * literals (the reference closure-captured them — SURVEY §3 EP3 notes
+  * the serialization cost) and the distance is a native codegen'd
+  * expression; the z-score constants come from one scalar aggregate, not
+  * a second ML pass.
   */
 object AnomalyScorer {
 
@@ -32,40 +38,43 @@ object AnomalyScorer {
       .transform(wide)
 
   /** Silhouette-maximizing k in `kRange` (reference `select_k`,
-    * README.md:713-731 semantics): driver loop over fit/evaluate. Returns
-    * the winning FITTED model so the caller never re-fits (same seed ⇒
-    * identical model; the reference's loop discards and re-fits). */
+    * README.md:713-731 semantics) and the winning model's cluster
+    * centers, so the caller never re-fits (same seed ⇒ identical model;
+    * the reference's loop discards and re-fits). Centers are what
+    * `KMeans().setK(k).setSeed(seed).fit(features)` returns when
+    * `features` has one partition. */
   def selectKModel(features: DataFrame, kRange: Range = 2 to 6,
-      seed: Long = 1L, localEvalThreshold: Long = 50000L): (Int, KMeansModel) = {
+      seed: Long = 1L, localEvalThreshold: Long = 50000L): (Int, Array[Vector]) = {
     val cached = features.cache()
     try {
       val n = cached.count()
-      // The candidate-k fits are independent Spark jobs over the same
-      // cached table — submit them CONCURRENTLY (Spark's scheduler
-      // interleaves jobs from different threads) instead of serially: the
-      // model-selection wall clock drops from Σ fit(k) to ~max fit(k).
-      // Same seed per k ⇒ identical models regardless of completion order.
-      def fitAll[T](eval: KMeansModel => T): Seq[(Int, KMeansModel, T)] = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(kRange.map { k => Future {
-          val model = new KMeans().setK(k).setSeed(seed).fit(cached)
-          (k, model, eval(model))
-        }}.toSeq), Duration.Inf)
-      }
       val fitted =
         if (n <= localEvalThreshold) {
           // Feature tables of days × regions rows are tiny next to the raw
-          // input; a distributed silhouette pass per candidate k is pure
-          // job-scheduling overhead. Collect the vectors ONCE, assign to
-          // the fitted centers and evaluate silhouette on the driver.
-          // Above the threshold the distributed evaluator takes over.
-          val pts = cached.select("features").collect()
-            .map(_.getAs[Vector](0).toArray)
-          fitAll(model => localSilhouette(pts, model.clusterCenters.map(_.toArray)))
+          // input, and MLlib would spend one job per Lloyd iteration (and
+          // per init step, and per silhouette pass) on them. Collect the
+          // vectors ONCE; fit and evaluate every candidate k on the
+          // driver. DriverKMeans replays MLlib on the rows in collect
+          // order, which is the partition order MLlib would iterate.
+          val vecs = cached.select("features").collect().map(_.getAs[Vector](0))
+          val pts = vecs.map(_.toArray)
+          kRange.map { k =>
+            val centers = DriverKMeans.fit(vecs, k, seed).centers
+            (k, centers, localSilhouette(pts, centers.map(_.toArray)))
+          }
         } else {
-          fitAll(model => new ClusteringEvaluator().evaluate(model.transform(cached)))
+          // Too big to collect: the candidate-k fits are independent Spark
+          // jobs over the same cached table — submit them CONCURRENTLY
+          // (Spark's scheduler interleaves jobs from different threads).
+          // Same seed per k ⇒ identical models regardless of completion order.
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          import scala.concurrent.ExecutionContext.Implicits.global
+          Await.result(Future.sequence(kRange.map { k => Future {
+            val model = new KMeans().setK(k).setSeed(seed).fit(cached)
+            (k, model.clusterCenters,
+              new ClusteringEvaluator().evaluate(model.transform(cached)))
+          }}), Duration.Inf)
         }
       // deterministic tie-break: highest silhouette, then smallest k
       val best = fitted.sortBy(_._1).maxBy(_._3)
@@ -151,14 +160,15 @@ object AnomalyScorer {
   def kmeansScores(spark: SparkSession, features: DataFrame, k: Int,
       seed: Long = 1L, rawCols: Seq[String] = Nil): DataFrame =
     scoresWithModel(spark, features,
-      new KMeans().setK(k).setSeed(seed).fit(features), rawCols)
+      new KMeans().setK(k).setSeed(seed).fit(features).clusterCenters, rawCols)
 
-  /** Score with an already-fitted model (no re-fit, no transform UDF). */
+  /** Score against already-fitted cluster centers (no re-fit, no
+    * transform UDF). */
   def scoresWithModel(spark: SparkSession, features: DataFrame,
-      model: KMeansModel, rawCols: Seq[String] = Nil): DataFrame = {
+      centers: Array[Vector], rawCols: Seq[String] = Nil): DataFrame = {
     graft.plans.VectorExpressions.register(spark)
     val withDist = features
-      .withColumn("distance", sqDistToNearest(model.clusterCenters, vecArray(rawCols)))
+      .withColumn("distance", sqDistToNearest(centers, vecArray(rawCols)))
       .cache()
     val stats = withDist.agg(
       avg("distance").as("mu"), stddev_samp("distance").as("sigma")).first()

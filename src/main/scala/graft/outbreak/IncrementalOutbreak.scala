@@ -1,6 +1,5 @@
 package graft.outbreak
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{PCA, StandardScaler}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -71,12 +70,12 @@ object IncrementalOutbreak {
         .select(col("date"), col("region"), col("pca").as("features"))
         .cache()
       try {
-        val (_, km) = AnomalyScorer.selectKModel(ml, kRange, seed)
+        val (_, centers) = AnomalyScorer.selectKModel(ml, kRange, seed)
         // same distance definition as AnomalyScorer.scoresWithModel, kept
         // local so mu/sigma can be captured into the model for increments
         val withDist = ml.withColumn("__dist", sqDistToNearestLit(
           org.apache.spark.ml.functions.vector_to_array(col("features"), "float64"),
-          km.clusterCenters.toIndexedSeq.map(_.toArray.toSeq))).cache()
+          centers.toIndexedSeq.map(_.toArray.toSeq))).cache()
         val d = withDist
           .agg(avg("__dist").as("mu"), stddev_samp("__dist").as("sigma")).first()
         val mu = d.getDouble(0)
@@ -90,7 +89,7 @@ object IncrementalOutbreak {
           (0 until dDim).map(i => pcVals(j * dDim + i)).toSeq)
         val model = OutbreakModel(sanVocab,
           scaler.mean.toArray.toSeq, scaler.std.toArray.toSeq,
-          basis, km.clusterCenters.map(_.toArray.toSeq).toSeq, mu, sigma,
+          basis, centers.map(_.toArray.toSeq).toSeq, mu, sigma,
           batchId)
         val detrendState = sanitized
           .groupBy("region", "kw")

@@ -38,8 +38,8 @@ object OutbreakPipeline {
         } else assembled
       val cached = ml.select("date", "region", "features").cache()
       try {
-        val (_, model) = AnomalyScorer.selectKModel(cached, kRange, seed)
-        AnomalyScorer.scoresWithModel(spark, cached, model)
+        val (_, centers) = AnomalyScorer.selectKModel(cached, kRange, seed)
+        AnomalyScorer.scoresWithModel(spark, cached, centers)
       } finally cached.unpersist()
     } finally assembled.unpersist()
   }

@@ -44,20 +44,23 @@ object PipelineQueries {
   /** Flagship: full anomaly scoring — features → assemble → KMeans
     * (silhouette-selected k) → z-scored centroid distance. */
   def outbreakScores(s: SparkSession, dir: String): DataFrame = {
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(Preprocess.detrend(dailyFromEvents(s, dir)), EventTypes))
-    // The per-(date, region) feature table is tiny relative to the raw
-    // events (days × regions rows) — collapse to one partition so the
-    // iterative ML jobs schedule single tasks instead of `cpus` empty ones.
-    val assembled = AnomalyScorer
-      .assemble(wide, EventTypes ++ Preprocess.MonthNames.map("is_" + _))
-      .coalesce(1)
-      .cache()
-    val (_, model) = AnomalyScorer.selectKModel(assembled, 2 to 6, seed = 1L)
+    val assembled = outbreakAssembled(s, dir).cache()
+    val (_, centers) = AnomalyScorer.selectKModel(assembled, 2 to 6, seed = 1L)
     // raw feature columns exist here (no PCA) — scoring is pure array()
     // expressions + native graft_sqdist, zero UDFs in the executed plan
-    AnomalyScorer.scoresWithModel(s, assembled, model,
-      rawCols = EventTypes ++ Preprocess.MonthNames.map("is_" + _))
+    AnomalyScorer.scoresWithModel(s, assembled, centers, rawCols = OutbreakFeatureCols)
+  }
+
+  private val OutbreakFeatureCols = EventTypes ++ Preprocess.MonthNames.map("is_" + _)
+
+  /** [[outbreakScores]]' model input: the wide feature table with its
+    * `features` vector, on one partition. The per-(date, region) table is
+    * tiny relative to the raw events (days × regions rows), and one
+    * partition fixes the row order the seeded KMeans fit depends on. */
+  private[graft] def outbreakAssembled(s: SparkSession, dir: String): DataFrame = {
+    val wide = Preprocess.withMonthOneHot(
+      Preprocess.pivotWide(Preprocess.detrend(dailyFromEvents(s, dir)), EventTypes))
+    AnomalyScorer.assemble(wide, OutbreakFeatureCols).coalesce(1)
   }
 
   /** Token-set Jaccard similarity (≥ 0.5) for same-(source, lang) pairs —

@@ -26,59 +26,93 @@ class MainSpec extends SparkTestBase {
   private def dayStr(day: Int): String =
     java.time.LocalDate.of(2020, 1, 1).plusDays(day - 1).toString
 
-  test("--once run lands daily rows and flags the planted outbreak; " +
-      "a second run scores only the new days incrementally") {
+  /** What the two-run drive left behind: each run's anomalies, the
+    * score files (path -> mtime) and the state's last batch id after
+    * each run. */
+  private case class Drive(run1: Set[(String, String)], run2: Set[(String, String)],
+      filesBefore: Map[String, Long], filesAfter: Map[String, Long],
+      batch1: Long, batch2: Long)
+
+  /** Run 1 lands days 1..40 (spike on 36..38) and fully fits; run 2 adds
+    * days 41..46 (spike on 43). `extraArgs` go to both runs. */
+  private def twoRunDrive(extraArgs: String*): Drive = {
     val in = Files.createTempDirectory("app-in").toString
     val out = Files.createTempDirectory("app-out").toString
     val appArgs = Array("--json-dir", in, "--landing", s"$out/landing",
       "--scores", s"$out/scores", "--checkpoint", s"$out/ckpt",
-      "--terms", "Cough,Fever", "--once")
-
-    // ---- run 1: days 1..40, spike on 36..38 (full fit: batch 0)
-    Files.write(java.nio.file.Paths.get(s"$in/events.json"),
-      eventLines(1 to 40, Set(36, 37, 38)).mkString("\n").getBytes)
-    Main.main(appArgs)
-
-    val landing = spark.read.parquet(s"$out/landing")
-    // 40 days x 2 regions x 2 kw, minus the last (still-open) day
-    assert(landing.count() == 39L * 2 * 2)
-    val anomalies = spark.read.parquet(s"$out/scores")
+      "--terms", "Cough,Fever", "--once") ++ extraArgs
+    def anomalies() = spark.read.parquet(s"$out/scores")
       .select($"region", $"date".cast("string")).as[(String, String)]
       .collect().toSet
-    assert(anomalies.nonEmpty)
-    assert(anomalies.forall(_._1 == "US"), s"non-US anomaly: $anomalies")
-    val spikeDays = (36 to 38).map(dayStr).toSet
-    assert(anomalies.map(_._2).subsetOf(spikeDays), s"false positive: $anomalies")
-    assert(new java.io.File(s"$out/ckpt/graft-state/model").exists(),
-      "full fit must persist incremental state")
-
-    // snapshot run-1 score partitions: content and file mtimes
+    def lastBatchId() = graft.outbreak.IncrementalOutbreak
+      .loadState(spark, s"$out/ckpt/graft-state").get._1.lastBatchId
     def partitionFiles(): Map[String, Long] = {
       val base = new java.io.File(s"$out/scores")
       base.listFiles().filter(_.getName.startsWith("date="))
         .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
           .map(f => f.getPath -> f.lastModified())).toMap
     }
-    val before = partitionFiles()
 
-    // ---- run 2: days 41..46 arrive, spike on 43 (incremental: batch 1)
+    // ---- run 1: days 1..40, spike on 36..38 (full fit)
+    Files.write(java.nio.file.Paths.get(s"$in/events.json"),
+      eventLines(1 to 40, Set(36, 37, 38)).mkString("\n").getBytes)
+    Main.main(appArgs)
+
+    // 40 days x 2 regions x 2 kw, minus the last (still-open) day
+    assert(spark.read.parquet(s"$out/landing").count() == 39L * 2 * 2)
+    val run1 = anomalies()
+    assert(new java.io.File(s"$out/ckpt/graft-state/model").exists(),
+      "full fit must persist incremental state")
+    val before = partitionFiles()
+    val batch1 = lastBatchId()
+
+    // ---- run 2: days 41..46 arrive, spike on 43
     Files.write(java.nio.file.Paths.get(s"$in/events2.json"),
       eventLines(41 to 46, Set(43)).mkString("\n").getBytes)
     Main.main(appArgs)
 
     // landing advanced to 45 closed days
     assert(spark.read.parquet(s"$out/landing").count() == 45L * 2 * 2)
-    val after = spark.read.parquet(s"$out/scores")
-      .select($"region", $"date".cast("string")).as[(String, String)]
-      .collect().toSet
-    // old anomalies still present, new spike flagged, nothing else added
-    assert(anomalies.subsetOf(after), "run 2 dropped run-1 anomalies")
-    assert(after.contains(("US", dayStr(43))), s"new spike not flagged: $after")
-    assert(after.map(_._2).subsetOf(spikeDays + dayStr(43)),
-      s"false positive in run 2: $after")
+    Drive(run1, anomalies(), before, partitionFiles(), batch1, lastBatchId())
+  }
+
+  private val spikeDays = (36 to 38).map(dayStr).toSet
+
+  /** Both runs flag only planted spikes; run 1 flags at least one of
+    * its own and run 2 flags the new one. */
+  private def assertDetections(d: Drive): Unit = {
+    assert(d.run1.nonEmpty)
+    assert(d.run1.forall(_._1 == "US"), s"non-US anomaly: ${d.run1}")
+    assert(d.run1.map(_._2).subsetOf(spikeDays), s"false positive: ${d.run1}")
+    assert(d.run2.forall(_._1 == "US"), s"non-US anomaly in run 2: ${d.run2}")
+    assert(d.run2.contains(("US", dayStr(43))), s"new spike not flagged: ${d.run2}")
+    assert(d.run2.map(_._2).subsetOf(spikeDays + dayStr(43)),
+      s"false positive in run 2: ${d.run2}")
+  }
+
+  test("--once run lands daily rows and flags the planted outbreak; " +
+      "a second run scores only the new days incrementally") {
+    val d = twoRunDrive()
+    assertDetections(d)
+    // old anomalies still present
+    assert(d.run1.subsetOf(d.run2), "run 2 dropped run-1 anomalies")
     // incremental proof: run 2 did not rewrite run-1 date partitions
-    val unchanged = partitionFiles().filter { case (p, _) => before.contains(p) }
-    assert(unchanged == before,
+    val unchanged = d.filesAfter.filter { case (p, _) => d.filesBefore.contains(p) }
+    assert(unchanged == d.filesBefore,
       "run 2 rewrote old score partitions - incremental path not taken")
+  }
+
+  test("--refit-every 2: run 2's closing batch crosses a multiple of 2 " +
+      "and refits over all history") {
+    // run 1 closes its days in batch 1, run 2 in batch 3 (batches 0 and 2
+    // only ingest): 3 / 2 > 1 / 2, so run 2 refits although 3 % 2 != 0
+    val d = twoRunDrive("--refit-every", "2")
+    assert((d.batch1, d.batch2) == ((1L, 3L)))
+    assertDetections(d)
+    // a refit overwrites every score partition (static overwrite): no
+    // run-1 score file survives run 2
+    assert(d.filesBefore.nonEmpty)
+    assert(d.filesBefore.keySet.intersect(d.filesAfter.keySet).isEmpty,
+      "run 2 kept run-1 score files - periodic refit did not fire")
   }
 }

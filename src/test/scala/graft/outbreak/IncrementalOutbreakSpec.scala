@@ -3,6 +3,7 @@ package graft.outbreak
 import java.sql.Date
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The incremental scorer must extend the batch pipeline, not approximate
@@ -11,20 +12,10 @@ import org.apache.spark.sql.functions._
   * the increment must z-score far above the quiet days. */
 class IncrementalOutbreakSpec extends SparkTestBase {
   import spark.implicits._
-
-  private val terms = Seq("Cough", "Fever")
+  import IncrementalOutbreakSpec.terms
 
   private def mkDaily(days: Range, spikeDays: Set[Int] = Set.empty) =
-    (for {
-      day <- days
-      region <- Seq("US", "IL")
-      kw <- terms
-    } yield {
-      val base = 40.0 + (day % 7) + (if (region == "US") 5 else 0) + kw.length
-      val v = if (region == "US" && spikeDays(day)) base * 9 else base
-      (Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(day - 1)),
-        region, kw, v)
-    }).toDF("date", "region", "kw", "value")
+    IncrementalOutbreakSpec.mkDaily(spark, days, spikeDays)
 
   test("incremental detrend from (n, sum) state equals the full-history detrend") {
     val history = mkDaily(1 to 30)
@@ -88,5 +79,26 @@ class IncrementalOutbreakSpec extends SparkTestBase {
     assert(m2 == model)
     assert(s2.count() == state.count())
     assert(IncrementalOutbreak.loadState(spark, dir + "/nope").isEmpty)
+  }
+}
+
+object IncrementalOutbreakSpec {
+
+  val terms = Seq("Cough", "Fever")
+
+  /** Daily table over `days` for 2 regions × [[terms]], with a weekly
+    * pattern; US values are 9× on `spikeDays`. */
+  def mkDaily(spark: SparkSession, days: Range, spikeDays: Set[Int] = Set.empty): DataFrame = {
+    import spark.implicits._
+    (for {
+      day <- days
+      region <- Seq("US", "IL")
+      kw <- terms
+    } yield {
+      val base = 40.0 + (day % 7) + (if (region == "US") 5 else 0) + kw.length
+      val v = if (region == "US" && spikeDays(day)) base * 9 else base
+      (Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(day - 1)),
+        region, kw, v)
+    }).toDF("date", "region", "kw", "value")
   }
 }

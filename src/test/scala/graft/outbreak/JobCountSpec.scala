@@ -1,0 +1,75 @@
+package graft.outbreak
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkTestBase
+import graft.queries.PipelineQueries
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+
+/** Spark-job counts of the outbreak model fit, pinned as upper bounds.
+  * On tables of a few hundred rows the fit's cost is job scheduling, not
+  * arithmetic, so a change that adds jobs per fit is a regression even
+  * when the outputs stay identical. Each bound is the count measured with
+  * driver-side k selection; fitting the candidates with MLlib instead
+  * costs about a hundred jobs per fit. */
+class JobCountSpec extends SparkTestBase {
+
+  /** Jobs started while `body` runs, from any thread (a job group would
+    * miss jobs submitted from pool threads, such as concurrent model
+    * fits). Listener events arrive asynchronously, so the counter is read
+    * only once every started job has ended and the count has held still
+    * for a few polls; the same wait runs before `body`, to drain events
+    * of earlier jobs. Suites run one at a time, so no other jobs mix in. */
+  private def jobsOf(body: => Unit): Int = {
+    val started = new AtomicInteger
+    val ended = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    def settle(): Unit = {
+      var last = -1
+      var still = 0
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (still < 5 && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        val now = started.get()
+        still = if (now == last && ended.get() >= now) still + 1 else 0
+        last = now
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      settle()
+      started.set(0); ended.set(0)
+      body
+      settle()
+      info(s"${started.get()} jobs")
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  test("selectKModel under the local threshold: at most 2 jobs") {
+    val features = PipelineQueries.outbreakAssembled(spark, sf0001).cache()
+    features.count()
+    val jobs = jobsOf(AnomalyScorer.selectKModel(features, 2 to 6, 1L))
+    assert(jobs <= 2, s"selectKModel ran $jobs jobs")
+  }
+
+  test("IncrementalOutbreak.fitFull on IncrementalOutbreakSpec's 30-day table: at most 14 jobs") {
+    val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30).cache()
+    daily.count()
+    val jobs = jobsOf(IncrementalOutbreak.fitFull(spark, daily, IncrementalOutbreakSpec.terms))
+    daily.unpersist()
+    assert(jobs <= 14, s"fitFull ran $jobs jobs")
+  }
+
+  test("q41_outbreak_scores query function at sf0.001: at most 12 jobs") {
+    val jobs = jobsOf(graft.SparkEntry.queries("q41_outbreak_scores")(spark, sf0001))
+    spark.catalog.clearCache()
+    assert(jobs <= 12, s"q41 build ran $jobs jobs")
+  }
+}
