@@ -2,7 +2,7 @@
 """A/B pairs of the repo benchmark between two checkouts.
 
     python3 scripts/perfbench_ab.py <parent-checkout> <change-checkout> --pairs N
-        [--seconds S] [--out runs.json]
+        [--seconds S] [--out runs.json] [--trace]
 
 Pair i runs `python3 perfbench/run.py --workload all --seed i` once in each
 checkout; odd pairs run the parent first, even pairs the change first, so
@@ -25,10 +25,11 @@ import subprocess
 import sys
 
 
-def run_once(checkout, seed, seconds):
+def run_once(checkout, seed, seconds, trace=0):
     """One `--workload all` run; returns (result dict or None, error text)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", "all",
-           "--seed", str(seed), "--seconds", str(seconds)]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.strip()]
@@ -51,6 +52,25 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def print_layers(parent, change, per_layer):
+    """Per-layer table of one traced run per side: value, change, ratio."""
+    print()
+    print("%-10s %-34s %14s %14s %14s %8s" % (
+        "workload", "layer (traced, seed 1)", "parent", "change", "delta",
+        "ratio"))
+    for w in sorted(change["workloads"]):
+        pm = parent["workloads"][w]["metrics"]
+        cm = change["workloads"][w]["metrics"]
+        for layer in per_layer:
+            name = layer["name"]
+            if name not in pm or name not in cm:
+                continue
+            p, c = pm[name]["value"], cm[name]["value"]
+            ratio = "%.3f" % (c / p) if p else "-"
+            print("%-10s %-34s %14.4g %14.4g %+14.4g %8s" % (
+                w, name, p, c, c - p, ratio))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent")
@@ -58,11 +78,14 @@ def main():
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--out", help="write every run's result here as JSON")
+    ap.add_argument("--trace", action="store_true",
+                    help="add one traced run per side and a per-layer table")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
 
     runs = {"parent": [], "change": []}   # per pair: result dict or None
     failures = []
@@ -75,9 +98,18 @@ def main():
             print("pair %d seed %d %-6s %s" % (i, i, side, status), flush=True)
             if err is not None:
                 failures.append((i, side, err))
+    traced = {}
+    if a.trace:
+        for side in ("parent", "change"):
+            result, err = run_once(sides[side], 1, a.seconds, trace=1)
+            traced[side] = result
+            status = "ok" if err is None else "FAILED: " + err
+            print("traced seed 1 %-6s %s" % (side, status), flush=True)
+            if err is not None:
+                failures.append(("traced", side, err))
     if a.out:
         with open(a.out, "w") as f:
-            json.dump(runs, f, indent=1)
+            json.dump(dict(runs, traced=traced), f, indent=1)
 
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
              if p is not None and c is not None]
@@ -105,8 +137,10 @@ def main():
                 "%.4g [%.4g-%.4g]" % (pmed, pq1, pq3),
                 "%.4g [%.4g-%.4g]" % (cmed, cq1, cq3),
                 "%d/%d" % (wins, len(vals)), "holds" if gain else "no"))
+    if traced.get("parent") and traced.get("change"):
+        print_layers(traced["parent"], traced["change"], bench["per_layer"])
     for i, side, err in failures:
-        print("pair %d %s: %s" % (i, side, err), file=sys.stderr)
+        print("pair %s %s: %s" % (i, side, err), file=sys.stderr)
     return 1 if failures else 0
 
 

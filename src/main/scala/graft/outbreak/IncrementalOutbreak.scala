@@ -1,7 +1,6 @@
 package graft.outbreak
 
-import org.apache.spark.ml.feature.{PCA, StandardScaler}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Lineage.CutOps
@@ -41,71 +40,34 @@ object IncrementalOutbreak {
       mu: Double, sigma: Double,     // distance z-normalization
       lastBatchId: Long)
 
-  private def featureCols(sanVocab: Seq[String]): Seq[String] =
-    sanVocab ++ Preprocess.MonthNames.map("is_" + _)
-
   // ------------------------------------------------------------- full fit
 
-  /** Full pipeline over `daily` history: returns (all scores, model,
-    * detrend state). Mirrors [[OutbreakPipeline.scores]] but keeps the
-    * fitted transforms so increments can replay them natively. */
+  /** Full fit over `daily` history: returns (all scores, model, detrend
+    * state). Scores and model come from [[AnomalyScorer.fit]] with PCA,
+    * the fit [[OutbreakPipeline.scores]] runs, so the scores equal that
+    * function's; the model keeps the fitted transforms as plain numbers
+    * so increments can replay them natively. */
   def fitFull(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
       pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
       batchId: Long = 0L): (DataFrame, OutbreakModel, DataFrame) = {
-    graft.plans.VectorExpressions.register(spark)
+    require(pcaK > 0, "the incremental model needs PCA")
     val sanVocab = vocab.map(_.replace(" ", "_"))
-    val sanitized = Preprocess.sanitizeTerms(daily)
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(Preprocess.detrend(sanitized), sanVocab))
-    val cols = featureCols(sanVocab)
-    val assembled = AnomalyScorer.assemble(wide, cols).coalesce(1).cache()
-    try {
-      val scaler = new StandardScaler().setWithMean(true).setWithStd(true)
-        .setInputCol("features").setOutputCol("scaled").fit(assembled)
-      val scaled = scaler.transform(assembled)
-      val k = math.min(pcaK, cols.size)
-      val pcaModel = new PCA().setK(k).setInputCol("scaled")
-        .setOutputCol("pca").fit(scaled)
-      val ml = pcaModel.transform(scaled)
-        .select(col("date"), col("region"), col("pca").as("features"))
-        .cache()
-      try {
-        val (_, centers) = AnomalyScorer.selectKModel(ml, kRange, seed)
-        // same distance definition as AnomalyScorer.scoresWithModel, kept
-        // local so mu/sigma can be captured into the model for increments
-        val withDist = ml.withColumn("__dist", sqDistToNearestLit(
-          org.apache.spark.ml.functions.vector_to_array(col("features"), "float64"),
-          centers.toIndexedSeq.map(_.toArray.toSeq))).cache()
-        val d = withDist
-          .agg(avg("__dist").as("mu"), stddev_samp("__dist").as("sigma")).first()
-        val mu = d.getDouble(0)
-        val sigma = { val s = d.getDouble(1); if (s == 0.0 || s.isNaN) 1.0 else s }
-        val scores = withDist.select(col("date"), col("region"),
-          ((col("__dist") - mu) / sigma).as("score"))
-        // pc is column-major (d rows × k cols): basis vector j = col j
-        val dDim = cols.size
-        val pcVals = pcaModel.pc.values
-        val basis = (0 until k).map(j =>
-          (0 until dDim).map(i => pcVals(j * dDim + i)).toSeq)
-        val model = OutbreakModel(sanVocab,
-          scaler.mean.toArray.toSeq, scaler.std.toArray.toSeq,
-          basis, centers.map(_.toArray.toSeq).toSeq, mu, sigma,
-          batchId)
-        val detrendState = sanitized
-          .groupBy("region", "kw")
-          .agg(count(lit(1)).as("n"), sum("value").as("sumv"))
-        (scores, model, detrendState)
-      } finally ml.unpersist()
-    } finally assembled.unpersist()
+    val k = math.min(pcaK, OutbreakPipeline.featureCols(sanVocab).size)
+    val (scores, fit) = AnomalyScorer.fit(OutbreakPipeline.assembled(daily, vocab),
+      k, kRange, seed)
+    val p = fit.projection.get
+    // pc is column-major (d rows × k cols): basis vector j = col j
+    val basis = (0 until p.pc.numCols).map(j =>
+      (0 until p.pc.numRows).map(i => p.pc(i, j)))
+    val model = OutbreakModel(sanVocab, p.mean.toArray.toSeq, p.std.toArray.toSeq,
+      basis, fit.centers.map(_.toArray.toSeq).toSeq, fit.mu, fit.sigma, batchId)
+    val detrendState = Preprocess.sanitizeTerms(daily)
+      .groupBy("region", "kw")
+      .agg(count(lit(1)).as("n"), sum("value").as("sumv"))
+    (scores, model, detrendState)
   }
 
   // ----------------------------------------------------------- increments
-
-  /** `least(graft_sqdist(vec, center_c))` over literal centers. */
-  private def sqDistToNearestLit(vec: Column, centers: Seq[Seq[Double]]): Column = {
-    val dists = centers.map(c => call_function("graft_sqdist", vec, typedLit(c)))
-    if (dists.length == 1) dists.head else least(dists: _*)
-  }
 
   /** Score ONLY `newDaily` (the freshly closed rows of one micro-batch)
     * against the fitted model + detrend state. Returns (scores for the
@@ -137,17 +99,19 @@ object IncrementalOutbreak {
     val wide = Preprocess.withMonthOneHot(
       Preprocess.pivotWide(
         joined.select("date", "region", "kw", "value"), model.vocab))
-    val cols = featureCols(model.vocab)
+    val cols = OutbreakPipeline.featureCols(model.vocab)
 
-    // scaler + PCA + nearest-centroid distance + z-score, all as literals
+    // scaler + PCA + nearest-centroid distance + z-score, all as literals;
+    // the scaler is StandardScalerModel's: (x − mean) · (1/std, or 0
+    // where std is 0)
     val scaled = array(cols.zipWithIndex.map { case (c, i) =>
-      (col(c).cast("double") - lit(model.scalerMean(i))) /
-        lit(if (model.scalerStd(i) == 0.0) 1.0 else model.scalerStd(i))
+      (col(c).cast("double") - lit(model.scalerMean(i))) *
+        lit(if (model.scalerStd(i) == 0.0) 0.0 else 1.0 / model.scalerStd(i))
     }: _*)
     val pcaArr = array(model.pc.map(b =>
       call_function("graft_dot", scaled, typedLit(b))): _*)
     val scores = wide
-      .withColumn("__dist", sqDistToNearestLit(pcaArr, model.centers))
+      .withColumn("__dist", AnomalyScorer.sqDistToNearest(model.centers, pcaArr))
       .select(col("date"), col("region"),
         ((col("__dist") - model.mu) / model.sigma).as("score"))
 

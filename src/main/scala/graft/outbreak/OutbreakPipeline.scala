@@ -13,35 +13,29 @@ import org.apache.spark.sql.functions._
   */
 object OutbreakPipeline {
 
+  /** The sanitized vocabulary plus the month indicators: the feature
+    * columns, in vector order. */
+  def featureCols(sanVocab: Seq[String]): Seq[String] =
+    sanVocab ++ Preprocess.MonthNames.map("is_" + _)
+
+  /** The model input: daily → detrend → pivot → month one-hot → assembled
+    * `features`, one row per (date, region). */
+  def assembled(daily: DataFrame, vocab: Seq[String]): DataFrame = {
+    val sanVocab = vocab.map(_.replace(" ", "_"))
+    val wide = Preprocess.withMonthOneHot(
+      Preprocess.pivotWide(
+        Preprocess.detrend(Preprocess.sanitizeTerms(daily)), sanVocab))
+    AnomalyScorer.assemble(wide, featureCols(sanVocab))
+  }
+
   /** Full scoring run. Returns `(date, region, score)` for every scored
     * (date, region); filter with [[AnomalyScorer.outliers]] for the
     * anomaly set. */
   def scores(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
       pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
       usePca: Boolean = true): DataFrame = {
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(
-        Preprocess.detrend(Preprocess.sanitizeTerms(daily)),
-        vocab.map(_.replace(" ", "_"))))
-    val featureCols = vocab.map(_.replace(" ", "_")) ++
-      Preprocess.MonthNames.map("is_" + _)
-    val assembled = AnomalyScorer.assemble(wide, featureCols)
-      .coalesce(1)  // days × regions rows: tiny next to the raw input
-      .cache()
-    try {
-      val ml =
-        if (usePca) {
-          val k = math.min(pcaK, featureCols.size)
-          Features.pca(Features.standardize(assembled), k)
-            .withColumnRenamed("features", "raw_features")
-            .withColumnRenamed("pca", "features")
-        } else assembled
-      val cached = ml.select("date", "region", "features").cache()
-      try {
-        val (_, centers) = AnomalyScorer.selectKModel(cached, kRange, seed)
-        AnomalyScorer.scoresWithModel(spark, cached, centers)
-      } finally cached.unpersist()
-    } finally assembled.unpersist()
+    val k = if (usePca) math.min(pcaK, featureCols(vocab).size) else 0
+    AnomalyScorer.fit(assembled(daily, vocab), k, kRange, seed)._1
   }
 
   /** Anomalies only: the reference's exported artifact shape

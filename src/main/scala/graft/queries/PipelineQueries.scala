@@ -43,13 +43,8 @@ object PipelineQueries {
 
   /** Flagship: full anomaly scoring — features → assemble → KMeans
     * (silhouette-selected k) → z-scored centroid distance. */
-  def outbreakScores(s: SparkSession, dir: String): DataFrame = {
-    val assembled = outbreakAssembled(s, dir).cache()
-    val (_, centers) = AnomalyScorer.selectKModel(assembled, 2 to 6, seed = 1L)
-    // raw feature columns exist here (no PCA) — scoring is pure array()
-    // expressions + native graft_sqdist, zero UDFs in the executed plan
-    AnomalyScorer.scoresWithModel(s, assembled, centers, rawCols = OutbreakFeatureCols)
-  }
+  def outbreakScores(s: SparkSession, dir: String): DataFrame =
+    AnomalyScorer.fit(outbreakAssembled(s, dir), pcaK = 0)._1
 
   private val OutbreakFeatureCols = EventTypes ++ Preprocess.MonthNames.map("is_" + _)
 

@@ -4,6 +4,7 @@ import java.sql.Date
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class AnomalyScorerSpec extends SparkTestBase {
   import spark.implicits._
@@ -47,5 +48,33 @@ class AnomalyScorerSpec extends SparkTestBase {
     val assembled = AnomalyScorer.assemble(featureTable(), Seq("f1", "f2"))
     assert(assembled.columns.toSet ==
       Set("date", "region", "f1", "f2", "features"))
+  }
+
+  private def cacheEntries: Int = org.apache.spark.sql.CacheEntries(spark)
+
+  test("MLlib path: a fit and its score write leave the cache manager as they found it") {
+    val out = java.nio.file.Files.createTempDirectory("fit-cache").toString
+    val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30).cache()
+    daily.count()
+    val before = cacheEntries
+    for (pcaK <- Seq(4, 0)) {
+      val (scores, _) = AnomalyScorer.fit(
+        OutbreakPipeline.assembled(daily, IncrementalOutbreakSpec.terms), pcaK,
+        localEvalThreshold = 0L)
+      scores.write.mode("overwrite").parquet(s"$out/$pcaK")
+    }
+    assert(cacheEntries == before)
+    assert(daily.storageLevel != StorageLevel.NONE, "the caller's cache was dropped")
+    daily.unpersist()
+  }
+
+  test("selectKModel keeps a frame the caller cached") {
+    val features = AnomalyScorer.assemble(featureTable(), Seq("f1", "f2")).cache()
+    features.count()
+    AnomalyScorer.selectKModel(features, 2 to 3, seed = 1L, localEvalThreshold = 0L)
+    assert(features.storageLevel != StorageLevel.NONE)
+    AnomalyScorer.selectKModel(features, 2 to 3, seed = 1L)
+    assert(features.storageLevel != StorageLevel.NONE)
+    features.unpersist()
   }
 }

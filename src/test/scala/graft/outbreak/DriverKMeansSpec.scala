@@ -3,6 +3,7 @@ package graft.outbreak
 import graft.SparkTestBase
 import graft.queries.PipelineQueries
 import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.feature.{PCA, StandardScaler}
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.mllib.clustering.DriverKMeans
 import org.apache.spark.sql.DataFrame
@@ -48,7 +49,11 @@ class DriverKMeansSpec extends SparkTestBase {
   }
 
   test("dense PCA-projected table (MLlib's auto solver picks block)") {
-    val pca = Features.pca(Features.standardize(q41Features), 4)
+    val scaled = new StandardScaler().setWithMean(true).setWithStd(true)
+      .setInputCol("features").setOutputCol("scaled").fit(q41Features)
+      .transform(q41Features)
+    val pca = new PCA().setK(4).setInputCol("scaled").setOutputCol("pca")
+      .fit(scaled).transform(scaled)
       .select(col("pca").as("features"))
     val vecs = pca.collect().map(_.getAs[Vector](0))
     // auto picks block when nnz >= rows * dims / 2

@@ -69,6 +69,25 @@ class IncrementalOutbreakSpec extends SparkTestBase {
       s"quiet day outranks the spike: ${quiet.map(math.abs).max} vs $spike")
   }
 
+  test("increments scale like the fit: a feature constant in history scales to 0") {
+    // History all in January: is_february had std 0 in the fit, where
+    // StandardScalerModel multiplies by 0. A hand-built basis that weighs
+    // only is_february then projects a February day to 0.
+    val cols = OutbreakPipeline.featureCols(Seq("Cough"))
+    val model = IncrementalOutbreak.OutbreakModel(Seq("Cough"),
+      scalerMean = cols.map(c => if (c == "Cough" || c == "is_january") 1.0 else 0.0),
+      scalerStd = cols.map(c => if (c == "Cough") 1.0 else 0.0),
+      pc = Seq(cols.map(c => if (c == "is_february") 1.0 else 0.0)),
+      centers = Seq(Seq(0.0)), mu = 0.0, sigma = 1.0, lastBatchId = 0L)
+    val day = Seq((Date.valueOf("2020-02-01"), "US", "Cough", 42.0))
+      .toDF("date", "region", "kw", "value")
+    val noState = Seq.empty[(String, String, Long, Double)].toDF("region", "kw", "n", "sumv")
+    val (scores, _) = IncrementalOutbreak.scoreIncrement(spark, day, model, noState)
+    // detrended Cough = 42 / 42 = 1, scaled (1 − 1) · 1 = 0; is_february
+    // scaled (1 − 0) · 0 = 0; distance to the center 0 is 0
+    assert(scores.select("score").as[Double].collect().toSeq == Seq(0.0))
+  }
+
   test("state round-trips through parquet (model is the commit marker)") {
     val dir = java.nio.file.Files.createTempDirectory("inc-state").toString
     val history = mkDaily(1 to 20)

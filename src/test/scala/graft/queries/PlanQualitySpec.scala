@@ -218,16 +218,21 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
-  test("flagship scoring plan has no ScalaUDF (q41 uses native graft_sqdist)") {
-    // the distance must be least(graft_sqdist(array(raw cols), centers…)) —
-    // codegen'd native expressions. No UDF may consume the feature vector
-    // (the old scorer UDF and vector_to_array both print as
-    // "UDF(features…"); VectorAssembler's UDF survives only inside the
-    // cache-population subtree of the fit input, off the scoring path.
+  test("flagship scores consume no UDF: q41 is a local relation, its MLlib path reads a cut") {
+    // Below the local threshold the whole model, distances included, is
+    // fitted on the driver (graft_sqdist's loop, DriverFitSpec pins it
+    // bit for bit) and the scores come back as a local relation: no
+    // scoring plan is left to hold a UDF. Above it, the scores project a
+    // materialized distance table (least(graft_sqdist(...)) over literal
+    // centers, computed before the cut), again with no UDF.
     val p = plan("q41_outbreak_scores")
-    assert(p.contains("graft_sqdist"), p.take(1200))
-    assert(p.contains("least(graft_sqdist"), "nearest-center rule not native")
-    assert(!p.contains("UDF(features"), "a UDF consumes the feature vector on the scoring path")
+    assert(p.contains("LocalTableScan"), p.take(1200))
+    assert(!p.contains("UDF"), p.take(1200))
+    val mllib = graft.outbreak.AnomalyScorer.fit(
+      PipelineQueries.outbreakAssembled(spark, dir), pcaK = 0, localEvalThreshold = 0L)._1
+      .queryExecution.executedPlan.toString
+    assert(mllib.contains("ExistingRDD"), mllib.take(1200))
+    assert(!mllib.contains("UDF"), mllib.take(1200))
   }
 
   test("weighted sample ranks via WindowGroupLimit, no global sort (q126)") {
