@@ -2,11 +2,13 @@
 """A/B pairs of the repo benchmark between two checkouts.
 
     python3 scripts/perfbench_ab.py <parent-checkout> <change-checkout> --pairs N
-        [--seconds S] [--out runs.json] [--trace]
+        [--first-seed F] [--seconds S] [--out runs.json] [--trace]
 
-Pair i runs `python3 perfbench/run.py --workload all --seed i` once in each
-checkout; odd pairs run the parent first, even pairs the change first, so
-a drift of the host over the session loads both sides alike. The last
+Pair i (1..N) runs `python3 perfbench/run.py --workload all --seed F+i-1`
+once in each checkout (F defaults to 1; pass a seed range not used while
+developing the change to re-check a claim on fresh inputs); odd pairs run
+the parent first, even pairs the change first, so a drift of the host over
+the session loads both sides alike. The last
 line of each run's output is its JSON result.
 
 For every workload and end-to-end metric (names and better direction from
@@ -52,11 +54,11 @@ def quartiles(xs):
     return q1, med, q3
 
 
-def print_layers(parent, change, per_layer):
+def print_layers(parent, change, per_layer, seed):
     """Per-layer table of one traced run per side: value, change, ratio."""
     print()
     print("%-10s %-34s %14s %14s %14s %8s" % (
-        "workload", "layer (traced, seed 1)", "parent", "change", "delta",
+        "workload", "layer (traced, seed %d)" % seed, "parent", "change", "delta",
         "ratio"))
     for w in sorted(change["workloads"]):
         pm = parent["workloads"][w]["metrics"]
@@ -76,6 +78,8 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("change")
     ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--first-seed", type=int, default=1,
+                    help="seed of pair 1 and of the traced runs (default 1)")
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--out", help="write every run's result here as JSON")
     ap.add_argument("--trace", action="store_true",
@@ -90,21 +94,22 @@ def main():
     runs = {"parent": [], "change": []}   # per pair: result dict or None
     failures = []
     for i in range(1, a.pairs + 1):
+        seed = a.first_seed + i - 1
         order = ("parent", "change") if i % 2 else ("change", "parent")
         for side in order:
-            result, err = run_once(sides[side], i, a.seconds)
+            result, err = run_once(sides[side], seed, a.seconds)
             runs[side].append(result)
             status = "ok" if err is None else "FAILED: " + err
-            print("pair %d seed %d %-6s %s" % (i, i, side, status), flush=True)
+            print("pair %d seed %d %-6s %s" % (i, seed, side, status), flush=True)
             if err is not None:
                 failures.append((i, side, err))
     traced = {}
     if a.trace:
         for side in ("parent", "change"):
-            result, err = run_once(sides[side], 1, a.seconds, trace=1)
+            result, err = run_once(sides[side], a.first_seed, a.seconds, trace=1)
             traced[side] = result
             status = "ok" if err is None else "FAILED: " + err
-            print("traced seed 1 %-6s %s" % (side, status), flush=True)
+            print("traced seed %d %-6s %s" % (a.first_seed, side, status), flush=True)
             if err is not None:
                 failures.append(("traced", side, err))
     if a.out:
@@ -138,7 +143,8 @@ def main():
                 "%.4g [%.4g-%.4g]" % (cmed, cq1, cq3),
                 "%d/%d" % (wins, len(vals)), "holds" if gain else "no"))
     if traced.get("parent") and traced.get("change"):
-        print_layers(traced["parent"], traced["change"], bench["per_layer"])
+        print_layers(traced["parent"], traced["change"], bench["per_layer"],
+                     a.first_seed)
     for i, side, err in failures:
         print("pair %s %s: %s" % (i, side, err), file=sys.stderr)
     return 1 if failures else 0

@@ -1,16 +1,18 @@
 package graft.outbreak
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.feature.{PCA, StandardScaler, VectorAssembler}
-import org.apache.spark.ml.linalg.{DenseMatrix, Vector}
+import org.apache.spark.ml.linalg.{DenseMatrix, Vector, Vectors}
 import org.apache.spark.mllib.clustering.{DriverFit, DriverKMeans}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Lineage.CutOps
 
 /** KMeans-distance anomaly scorer — the reference's canonical batch scoring
@@ -20,20 +22,25 @@ import graft.operators.Lineage.CutOps
   * Euclidean distance from x's feature vector to its nearest centroid.
   * |z| > 2 flags an anomaly.
   *
-  * Scale notes: [[fit]] is the one model fit of every outbreak path. Below
-  * `localEvalThreshold` rows it collects the feature table once and fits
-  * the whole model on the driver — scaler, PCA, every candidate k, the
-  * distance normalization — with
+  * Scale notes: [[fit]] is the one model fit of every outbreak path, from
+  * the tidy daily table to the scores. Below `localEvalThreshold` feature
+  * rows it collects the tidy rows once and does everything else on the
+  * driver: the feature front (detrend, pivot, month one-hot, assembly,
+  * replayed by [[localFront]]) and the whole model — scaler, PCA, every
+  * candidate k, the distance normalization — with
   * [[org.apache.spark.mllib.clustering.DriverFit]] and
   * [[org.apache.spark.mllib.clustering.DriverKMeans]], bit-identical to
-  * the MLlib and Spark SQL path, and returns the scores as a local
-  * relation: the feature pipeline's own jobs and nothing else. Above it
-  * MLlib fits distributed (one job per pass, per Lloyd iteration, per
-  * silhouette), only the k centroids reach scoring — as array literals in
-  * a native codegen'd distance expression (the reference closure-captured
-  * them; SURVEY §3 EP3 notes the serialization cost) — and the z-score
-  * constants come from one scalar aggregate over a materialized distance
-  * table, not a second ML pass.
+  * the Spark front and the MLlib path, and returns the scores and the
+  * detrend state as local relations: one Spark job, the collect. Above it
+  * the Spark front ([[sparkFront]]) runs, MLlib fits distributed (one job
+  * per pass, per Lloyd iteration, per silhouette), only the k centroids
+  * reach scoring — as array literals in a native codegen'd distance
+  * expression (the reference closure-captured them; SURVEY §3 EP3 notes
+  * the serialization cost) — and the z-score constants come from one
+  * scalar aggregate over a materialized distance table, not a second ML
+  * pass. Both fronts hand the fit its rows in (date, region) order, which
+  * is the order the seeded k-means|| initialization depends on; without
+  * it the model would follow the shuffle partitioning.
   */
 object AnomalyScorer {
 
@@ -55,30 +62,181 @@ object AnomalyScorer {
   case class Model(projection: Option[Projection], centers: Array[Vector],
       mu: Double, sigma: Double)
 
-  /** Fit the model on `assembled` (`date`, `region`, `features`) and score
-    * every row: returns `(date, region, score)` and the model. `pcaK` > 0
-    * standardizes and projects to `pcaK` components first; 0 clusters the
-    * raw features. Rows are taken in the order of `assembled` coalesced to
-    * one partition, which is the order the seeded fits depend on. */
-  def fit(assembled: DataFrame, pcaK: Int, kRange: Range = 2 to 6,
-      seed: Long = 1L, localEvalThreshold: Long = 50000L): (DataFrame, Model) = {
-    val table = assembled.select("date", "region", "features").coalesce(1)
-    withCached(table) { cached =>
-      // one collect, capped: a table over the threshold stays distributed
-      val local = cached.limit(math.min(localEvalThreshold + 1, Int.MaxValue).toInt)
-        .collect()
-      if (local.length <= localEvalThreshold) driverFit(cached, local, pcaK, kRange, seed)
-      else mllibFit(cached, pcaK, kRange, seed, localEvalThreshold)
+  /** Fit the model on the tidy daily table `daily` (`date`, `region`, `kw`,
+    * `value`, one row per (date, region, kw)) over the terms `vocab`, and
+    * score every (date, region): returns `(date, region, score)`, the
+    * model, and the per-series detrend state `(region, kw, n, sumv)` — the
+    * count and the sum of the non-null values. `pcaK` > 0 standardizes and
+    * projects to `pcaK` components first; 0 clusters the raw features. */
+  def fit(daily: DataFrame, vocab: Seq[String], pcaK: Int, kRange: Range = 2 to 6,
+      seed: Long = 1L, localEvalThreshold: Long = 50000L): (DataFrame, Model, DataFrame) =
+    localFront(daily, vocab, localEvalThreshold) match {
+      case Some(front) =>
+        val (scores, model) = driverFit(daily, front, pcaK, kRange, seed)
+        (scores, model, front.state)
+      case None =>
+        val (scores, model) = withCached(sparkFront(daily, vocab)) { table =>
+          mllibFit(table, pcaK, kRange, seed, localEvalThreshold)
+        }
+        val state = Preprocess.sanitizeTerms(daily).groupBy("region", "kw")
+          .agg(count("value").as("n"), sum(col("value").cast(DoubleType)).as("sumv"))
+        (scores, model, state)
     }
+
+  /** The model input built with Spark: daily → detrend → pivot → month
+    * one-hot → assembled `features`, one row per (date, region), on one
+    * partition in (date, region) order. */
+  private[outbreak] def sparkFront(daily: DataFrame, vocab: Seq[String]): DataFrame = {
+    val sanVocab = Preprocess.sanitizeVocab(vocab)
+    val wide = Preprocess.withMonthOneHot(
+      Preprocess.pivotWide(
+        Preprocess.detrend(Preprocess.sanitizeTerms(daily)), sanVocab))
+    assemble(wide, Preprocess.featureCols(sanVocab))
+      .select("date", "region", "features")
+      .coalesce(1).sortWithinPartitions("date", "region")
   }
 
-  /** [[fit]] on rows collected to the driver. Days × regions feature tables
-    * are tiny next to the raw input, and MLlib spends one job per pass over
-    * them; each step here replays MLlib or Spark SQL on the rows in collect
-    * order, which is the order one partition runs them in. */
-  private def driverFit(table: DataFrame, rows: Array[Row], pcaK: Int,
+  /** [[sparkFront]]'s rows built on the driver — `dates(i)`, `regions(i)`,
+    * `features(i)` in the same order — and the detrend state as a local
+    * relation. */
+  private[outbreak] case class LocalFront(dates: Array[Any], regions: Array[String],
+      features: Array[Vector], state: DataFrame)
+
+  /** [[sparkFront]] replayed on the driver from one capped collect of the
+    * tidy rows, or None where the Spark front must run: more than
+    * `localEvalThreshold` × |vocab| tidy rows or `localEvalThreshold`
+    * feature rows, a `date` that is not a DATE, or a null date or region.
+    * The tidy rows arrive one at a time and are kept as primitives and
+    * shared strings. The replay follows Spark's semantics step by step:
+    *  - detrend: `avg` over ROWS UNBOUNDED PRECEDING is a running sum from
+    *    0.0 in date order over the non-null values, divided by their
+    *    count; an average that is null, 0 or NaN divides by nothing (1.0);
+    *  - pivot: one row per (date, region), out-of-vocabulary terms
+    *    included; `na.fill(0.0)` replaces null and NaN;
+    *  - month one-hot: 1.0 at the month of the date;
+    *  - assembly: `VectorAssembler`'s `Vectors.sparse(nonzeros).compressed`;
+    *  - order: dates ascending, then regions in UTF-8 byte order
+    *    (`UTF8String.compareTo`, not `String.compareTo`).
+    * The state's Σ is the same running sum, so it is summed in date order. */
+  private[outbreak] def localFront(daily: DataFrame, vocab: Seq[String],
+      localEvalThreshold: Long): Option[LocalFront] = {
+    if (daily.schema("date").dataType != DateType) return None
+    val sanVocab = Preprocess.sanitizeVocab(vocab)
+    val cap = math.min(localEvalThreshold * math.max(sanVocab.size, 1), Int.MaxValue - 1L)
+    val tidy = Preprocess.sanitizeTerms(daily)
+      .select(col("date"), unix_date(col("date")), col("region"), col("kw"),
+        col("value").cast(DoubleType))
+      .coalesce(1).limit(cap.toInt + 1)
+
+    val dateOf = mutable.HashMap.empty[Int, Any]
+    val regionId = mutable.HashMap.empty[String, Int]
+    val kwId = mutable.HashMap.empty[String, Int]
+    sanVocab.foreach(t => kwId.getOrElseUpdate(t, kwId.size))
+    val seriesId = mutable.HashMap.empty[Long, Int]
+    val (seriesRegion, seriesKw) = (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
+    val (dayB, regionB, kwB, seriesB) = (mutable.ArrayBuilder.make[Int],
+      mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
+    val valueB = mutable.ArrayBuilder.make[Double]
+    val nulls = new java.util.BitSet
+    var n = 0
+    val it = tidy.toLocalIterator()
+    while (it.hasNext) {
+      val r = it.next()
+      if (n >= cap || r.isNullAt(0) || r.isNullAt(2)) return None
+      val day = r.getInt(1)
+      dateOf.getOrElseUpdate(day, r.get(0))
+      val reg = regionId.getOrElseUpdate(r.getString(2), regionId.size)
+      val kw = kwId.getOrElseUpdate(r.getString(3), kwId.size)
+      seriesB += seriesId.getOrElseUpdate((kw.toLong << 32) | reg, {
+        seriesRegion += reg; seriesKw += kw; seriesId.size })
+      dayB += day; regionB += reg; kwB += kw
+      if (r.isNullAt(4)) { nulls.set(n); valueB += 0.0 } else valueB += r.getDouble(4)
+      n += 1
+    }
+    val (days, regions, kws, series, values) =
+      (dayB.result(), regionB.result(), kwB.result(), seriesB.result(), valueB.result())
+
+    // rank dates and regions, then order the tidy rows by (date, region)
+    val dayList = dateOf.keys.toArray.sorted
+    val regionNames = new Array[String](regionId.size)
+    regionId.foreach { case (name, id) => regionNames(id) = name }
+    val regionList = regionNames.indices.toArray.sortWith((a, b) =>
+      UTF8String.fromString(regionNames(a)).compareTo(UTF8String.fromString(regionNames(b))) < 0)
+    val regionRank = new Array[Int](regionNames.length)
+    regionList.indices.foreach(i => regionRank(regionList(i)) = i)
+    val dayRank = days.map(d => java.util.Arrays.binarySearch(dayList, d))
+    val regRank = regions.map(regionRank)
+    val order = countingSort(countingSort(Array.range(0, n), regRank, regionNames.length),
+      dayRank, dayList.length)
+    def opensCell(j: Int) = j == 0 ||
+      dayRank(order(j)) != dayRank(order(j - 1)) || regRank(order(j)) != regRank(order(j - 1))
+    val cells = order.indices.count(opensCell)
+    if (cells > localEvalThreshold) return None
+
+    // detrend, pivot, one-hot and assemble, one (date, region) cell at a time
+    val v = sanVocab.size
+    val width = v + Preprocess.MonthNames.size
+    val sums = new Array[Double](seriesId.size)
+    val counts = new Array[Long](seriesId.size)
+    val cell = new Array[Double](width)
+    val (dates, cellRegions) = (new Array[Any](cells), new Array[String](cells))
+    val features = new Array[Vector](cells)
+    var c = -1
+    def close(): Unit = if (c >= 0) {
+      val nz = cell.indices.filter(cell(_) != 0.0).toArray
+      features(c) = Vectors.sparse(width, nz, nz.map(cell)).compressed
+    }
+    order.indices.foreach { j =>
+      val i = order(j)
+      if (opensCell(j)) {
+        close()
+        c += 1
+        dates(c) = dateOf(days(i))
+        cellRegions(c) = regionNames(regions(i))
+        java.util.Arrays.fill(cell, 0.0)
+        cell(v + java.time.LocalDate.ofEpochDay(days(i)).getMonthValue - 1) = 1.0
+      }
+      val s = series(i)
+      if (!nulls.get(i)) { sums(s) += values(i); counts(s) += 1 }
+      if (kws(i) < v) {
+        val cma = if (counts(s) == 0) Double.NaN else sums(s) / counts(s).toDouble
+        val detrended =
+          if (cma == 0.0 || cma.isNaN) 1.0 else if (nulls.get(i)) 0.0 else values(i) / cma
+        cell(kws(i)) = if (detrended.isNaN) 0.0 else detrended
+      }
+    }
+    close()
+
+    val kwNames = new Array[String](kwId.size)
+    kwId.foreach { case (name, id) => kwNames(id) = name }
+    val (sRegion, sKw) = (seriesRegion.result(), seriesKw.result())
+    val stateRows = sums.indices.map(s => Row(regionNames(sRegion(s)), kwNames(sKw(s)),
+      counts(s), if (counts(s) == 0) null else sums(s)))
+    val stateSchema = StructType(Seq(daily.schema("region"),
+      StructField("kw", StringType), StructField("n", LongType, nullable = false),
+      StructField("sumv", DoubleType)))
+    Some(LocalFront(dates, cellRegions, features,
+      daily.sparkSession.createDataFrame(stateRows.asJava, stateSchema)))
+  }
+
+  /** `order` stably re-sorted by `key(order(j))`, an int in [0, range). */
+  private def countingSort(order: Array[Int], key: Array[Int], range: Int): Array[Int] = {
+    val start = new Array[Int](range + 1)
+    order.foreach(i => start(key(i) + 1) += 1)
+    var k = 0
+    while (k < range) { start(k + 1) += start(k); k += 1 }
+    val out = new Array[Int](order.length)
+    order.foreach { i => out(start(key(i))) = i; start(key(i)) += 1 }
+    out
+  }
+
+  /** [[fit]] on the driver-built front. Days × regions feature tables are
+    * tiny next to the raw input, and MLlib spends one job per pass over
+    * them; each step here replays MLlib or Spark SQL on the rows in
+    * (date, region) order, the order the Spark front hands MLlib. */
+  private def driverFit(daily: DataFrame, front: LocalFront, pcaK: Int,
       kRange: Range, seed: Long): (DataFrame, Model) = {
-    val vecs = rows.map(_.getAs[Vector](2))
+    val vecs = front.features
     val (projection, points) =
       if (pcaK > 0) {
         val (mean, std) = DriverFit.scalerStats(vecs)
@@ -91,11 +249,11 @@ object AnomalyScorer {
     val dist = points.map(p => DriverFit.sqDistToNearest(p.toArray, cs))
     val (mu, std) = DriverFit.meanStd(dist)
     val sigma = zScale(std)
-    val scores = rows.indices.map(i =>
-      Row(rows(i).get(0), rows(i).get(1), (dist(i) - mu) / sigma))
-    val schema = StructType(Seq(table.schema("date"), table.schema("region"),
+    val scores = vecs.indices.map(i =>
+      Row(front.dates(i), front.regions(i), (dist(i) - mu) / sigma))
+    val schema = StructType(Seq(daily.schema("date"), daily.schema("region"),
       StructField("score", DoubleType)))
-    (table.sparkSession.createDataFrame(scores.asJava, schema),
+    (daily.sparkSession.createDataFrame(scores.asJava, schema),
       Model(projection, centers, mu, sigma))
   }
 

@@ -43,27 +43,27 @@ object IncrementalOutbreak {
   // ------------------------------------------------------------- full fit
 
   /** Full fit over `daily` history: returns (all scores, model, detrend
-    * state). Scores and model come from [[AnomalyScorer.fit]] with PCA,
-    * the fit [[OutbreakPipeline.scores]] runs, so the scores equal that
-    * function's; the model keeps the fitted transforms as plain numbers
-    * so increments can replay them natively. */
+    * state). Scores, model and state come from [[AnomalyScorer.fit]] with
+    * PCA, the fit [[OutbreakPipeline.scores]] runs, so the scores equal
+    * that function's. Up to 50k (date, region) rows that is one collect of
+    * `daily` and no other Spark job: the features, the model and the state
+    * are built on the driver, the state's Σ summed in date order, which
+    * is what lets [[detrendIncrement]] continue the cumulative average
+    * exactly. The model keeps the fitted transforms as plain numbers so
+    * increments can replay them natively. */
   def fitFull(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
       pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
       batchId: Long = 0L): (DataFrame, OutbreakModel, DataFrame) = {
     require(pcaK > 0, "the incremental model needs PCA")
-    val sanVocab = vocab.map(_.replace(" ", "_"))
-    val k = math.min(pcaK, OutbreakPipeline.featureCols(sanVocab).size)
-    val (scores, fit) = AnomalyScorer.fit(OutbreakPipeline.assembled(daily, vocab),
-      k, kRange, seed)
+    val sanVocab = Preprocess.sanitizeVocab(vocab)
+    val k = math.min(pcaK, Preprocess.featureCols(sanVocab).size)
+    val (scores, fit, detrendState) = AnomalyScorer.fit(daily, vocab, k, kRange, seed)
     val p = fit.projection.get
     // pc is column-major (d rows × k cols): basis vector j = col j
     val basis = (0 until p.pc.numCols).map(j =>
       (0 until p.pc.numRows).map(i => p.pc(i, j)))
     val model = OutbreakModel(sanVocab, p.mean.toArray.toSeq, p.std.toArray.toSeq,
       basis, fit.centers.map(_.toArray.toSeq).toSeq, fit.mu, fit.sigma, batchId)
-    val detrendState = Preprocess.sanitizeTerms(daily)
-      .groupBy("region", "kw")
-      .agg(count(lit(1)).as("n"), sum("value").as("sumv"))
     (scores, model, detrendState)
   }
 
@@ -76,30 +76,11 @@ object IncrementalOutbreak {
   def scoreIncrement(spark: SparkSession, newDaily: DataFrame,
       model: OutbreakModel, detrendState: DataFrame): (DataFrame, DataFrame) = {
     graft.plans.VectorExpressions.register(spark)
-    val sanitized = Preprocess.sanitizeTerms(newDaily)
-      .select("date", "region", "kw", "value")
-
-    // extend the cumulative-average detrend from (n, Σ) state: within the
-    // batch, rows of one series accumulate in date order on top of state
-    val w = Window.partitionBy("region", "kw").orderBy(col("date").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val st = detrendState.select(col("region").as("__r"), col("kw").as("__k"),
-      col("n").as("__n0"), col("sumv").as("__s0"))
-    val joined = sanitized
-      .join(broadcast(st),
-        col("region") === col("__r") && col("kw") === col("__k"), "left")
-      .na.fill(Map("__n0" -> 0L, "__s0" -> 0.0))
-      .withColumn("__cn", col("__n0") + count(lit(1)).over(w))
-      .withColumn("__cs", col("__s0") + sum("value").over(w))
-      .withColumn("__cma", col("__cs") / col("__cn"))
-      .withColumn("value",
-        when(col("__cma").isNull || col("__cma") === 0.0 || isnan(col("__cma")), 1.0)
-          .otherwise(col("value") / col("__cma")))
-
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(
-        joined.select("date", "region", "kw", "value"), model.vocab))
-    val cols = OutbreakPipeline.featureCols(model.vocab)
+    val (detrended, updatedState) = detrendIncrement(
+      Preprocess.sanitizeTerms(newDaily).select("date", "region", "kw", "value"),
+      detrendState)
+    val wide = Preprocess.withMonthOneHot(Preprocess.pivotWide(detrended, model.vocab))
+    val cols = Preprocess.featureCols(model.vocab)
 
     // scaler + PCA + nearest-centroid distance + z-score, all as literals;
     // the scaler is StandardScalerModel's: (x − mean) · (1/std, or 0
@@ -114,15 +95,39 @@ object IncrementalOutbreak {
       .withColumn("__dist", AnomalyScorer.sqDistToNearest(model.centers, pcaArr))
       .select(col("date"), col("region"),
         ((col("__dist") - model.mu) / model.sigma).as("score"))
-
-    val updatedState = detrendState
-      .join(sanitized.groupBy("region", "kw")
-          .agg(count(lit(1)).as("__dn"), sum("value").as("__ds")),
-        Seq("region", "kw"), "full_outer")
-      .na.fill(Map("n" -> 0L, "sumv" -> 0.0, "__dn" -> 0L, "__ds" -> 0.0))
-      .select(col("region"), col("kw"),
-        (col("n") + col("__dn")).as("n"), (col("sumv") + col("__ds")).as("sumv"))
     (scores, updatedState)
+  }
+
+  /** The increment's detrend: `sanitized` rows `(date, region, kw, value)`
+    * divided by their series' cumulative moving average, continued from
+    * the (n, Σ) state, and the state after them. Each series' state enters
+    * as a leading row of weight n and value Σ ahead of the new rows in
+    * date order, so the running sum is (Σ + v₁) + v₂ …, the sum the
+    * full-history detrend accumulates: with Σ summed in date order (as
+    * [[fitFull]] and this function leave it) the average equals the
+    * full-history one bit for bit. The updated state is each series' last
+    * running (n, Σ); n counts the non-null values, as `avg` does. */
+  private[outbreak] def detrendIncrement(sanitized: DataFrame,
+      detrendState: DataFrame): (DataFrame, DataFrame) = {
+    val seeds = detrendState.select(
+      lit(null).cast(sanitized.schema("date").dataType).as("date"),
+      col("region"), col("kw"), coalesce(col("sumv").cast("double"), lit(0.0)).as("value"),
+      col("n").as("__w"), lit(0).as("__ord"))
+    val rows = sanitized.select(col("date"), col("region"), col("kw"),
+      col("value").cast("double").as("value"),
+      when(col("value").isNull, 0L).otherwise(1L).as("__w"), lit(1).as("__ord"))
+    val w = Window.partitionBy("region", "kw").orderBy("__ord", "date")
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val run = seeds.unionByName(rows)
+      .withColumn("__cs", sum("value").over(upTo))
+      .withColumn("__cn", sum("__w").over(upTo))
+      .withColumn("__last", lead("__ord", 1).over(w).isNull)
+    val detrended = run.where(col("__ord") === 1)
+      .select(col("date"), col("region"), col("kw"),
+        Preprocess.divideByCma(col("value"), col("__cs") / col("__cn")).as("value"))
+    val state = run.where(col("__last"))
+      .select(col("region"), col("kw"), col("__cn").as("n"), col("__cs").as("sumv"))
+    (detrended, state)
   }
 
   // -------------------------------------------------------------- state IO
@@ -133,9 +138,11 @@ object IncrementalOutbreak {
   def saveState(spark: SparkSession, stateDir: String, model: OutbreakModel,
       detrendState: DataFrame): Unit = {
     import spark.implicits._
-    // the updated state's lineage may READ the path being overwritten
-    // (state(t+1) = state(t) ⊕ batch) — cut it before the self-overwrite
-    val materialized = detrendState.cut()
+    // cut a state whose lineage reads files: an increment's READS the path
+    // being overwritten (state(t+1) = state(t) ⊕ batch); a refit's is a
+    // local relation below the fit's local threshold and needs no cut
+    val materialized =
+      if (detrendState.inputFiles.nonEmpty) detrendState.cut() else detrendState
     // detrend state first, model (with lastBatchId) last: the model row is
     // the commit marker — a crash in between leaves the old model readable
     // or nothing readable, either of which triggers a clean full refit

@@ -6,27 +6,17 @@ import org.apache.spark.sql.functions._
 /** End-to-end batch anomaly pipeline — the reference's EP3
   * (CSV/daily table → detrend → pivot → one-hot → assemble → scale →
   * PCA(4) → KMeans(silhouette k) → z-scored centroid distance →
-  * |z|>threshold outliers), re-derived Spark-first.
+  * |z|>threshold outliers), re-derived Spark-first. Every step from the
+  * daily table on is [[AnomalyScorer.fit]], the one front and fit that q37,
+  * q41 and the app's refit share: up to 50k (date, region) rows it runs on
+  * the driver from one collect of the daily table, above that as Spark
+  * jobs, and either way the fit takes the rows in (date, region) order, so
+  * the scores do not depend on how the input was partitioned.
   *
   * Input contract: tidy daily table `(date: Date, region, kw, value)`
   * with one row per (date, region, kw) — SURVEY §1.2 / FIXTURES A2.
   */
 object OutbreakPipeline {
-
-  /** The sanitized vocabulary plus the month indicators: the feature
-    * columns, in vector order. */
-  def featureCols(sanVocab: Seq[String]): Seq[String] =
-    sanVocab ++ Preprocess.MonthNames.map("is_" + _)
-
-  /** The model input: daily → detrend → pivot → month one-hot → assembled
-    * `features`, one row per (date, region). */
-  def assembled(daily: DataFrame, vocab: Seq[String]): DataFrame = {
-    val sanVocab = vocab.map(_.replace(" ", "_"))
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(
-        Preprocess.detrend(Preprocess.sanitizeTerms(daily)), sanVocab))
-    AnomalyScorer.assemble(wide, featureCols(sanVocab))
-  }
 
   /** Full scoring run. Returns `(date, region, score)` for every scored
     * (date, region); filter with [[AnomalyScorer.outliers]] for the
@@ -34,8 +24,8 @@ object OutbreakPipeline {
   def scores(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
       pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
       usePca: Boolean = true): DataFrame = {
-    val k = if (usePca) math.min(pcaK, featureCols(vocab).size) else 0
-    AnomalyScorer.fit(assembled(daily, vocab), k, kRange, seed)._1
+    val k = if (usePca) math.min(pcaK, Preprocess.featureCols(vocab).size) else 0
+    AnomalyScorer.fit(daily, vocab, k, kRange, seed)._1
   }
 
   /** Anomalies only: the reference's exported artifact shape

@@ -1,6 +1,6 @@
 package graft.outbreak
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,14 @@ object Preprocess {
   def sanitizeTerms(df: DataFrame): DataFrame =
     df.withColumn("kw", regexp_replace(col("kw"), " ", "_"))
 
+  /** [[sanitizeTerms]] on the vocabulary itself. */
+  def sanitizeVocab(vocab: Seq[String]): Seq[String] = vocab.map(_.replace(" ", "_"))
+
+  /** The sanitized vocabulary plus the month indicators: the feature
+    * columns, in vector order. */
+  def featureCols(sanVocab: Seq[String]): Seq[String] =
+    sanVocab ++ MonthNames.map("is_" + _)
+
   /** Detrend by expanding (cumulative) moving average per (kw, region)
     * series, ordered by date — reference Main.scala:168-195 semantics:
     * value := value / cumavg(value), with 0/NULL/NaN repaired to 1.0.
@@ -35,11 +43,13 @@ object Preprocess {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
       .withColumn("cma", avg("value").over(w))
-      .withColumn("value",
-        when(col("cma").isNull || col("cma") === 0.0 || isnan(col("cma")), 1.0)
-          .otherwise(col("value") / col("cma")))
+      .withColumn("value", divideByCma(col("value"), col("cma")))
       .drop("cma")
   }
+
+  /** value / cma, or 1.0 where the cumulative average is null, 0 or NaN. */
+  def divideByCma(value: Column, cma: Column): Column =
+    when(cma.isNull || cma === 0.0 || isnan(cma), 1.0).otherwise(value / cma)
 
   /** Long → wide: one Double column per term (reference Main.scala:212-216).
     * `vocab` is passed statically so Spark skips the distinct-values scan;

@@ -41,22 +41,10 @@ object PipelineQueries {
       col("region") +: (kwCols ++ monthCols): _*)
   }
 
-  /** Flagship: full anomaly scoring — features → assemble → KMeans
-    * (silhouette-selected k) → z-scored centroid distance. */
+  /** Flagship: full anomaly scoring — daily → detrend → pivot → assemble
+    * → KMeans (silhouette-selected k) → z-scored centroid distance. */
   def outbreakScores(s: SparkSession, dir: String): DataFrame =
-    AnomalyScorer.fit(outbreakAssembled(s, dir), pcaK = 0)._1
-
-  private val OutbreakFeatureCols = EventTypes ++ Preprocess.MonthNames.map("is_" + _)
-
-  /** [[outbreakScores]]' model input: the wide feature table with its
-    * `features` vector, on one partition. The per-(date, region) table is
-    * tiny relative to the raw events (days × regions rows), and one
-    * partition fixes the row order the seeded KMeans fit depends on. */
-  private[graft] def outbreakAssembled(s: SparkSession, dir: String): DataFrame = {
-    val wide = Preprocess.withMonthOneHot(
-      Preprocess.pivotWide(Preprocess.detrend(dailyFromEvents(s, dir)), EventTypes))
-    AnomalyScorer.assemble(wide, OutbreakFeatureCols).coalesce(1)
-  }
+    AnomalyScorer.fit(dailyFromEvents(s, dir), EventTypes, pcaK = 0)._1
 
   /** Token-set Jaccard similarity (≥ 0.5) for same-(source, lang) pairs —
     * candidates come from MinHash-LSH BANDS (the q53 machinery via
@@ -319,8 +307,7 @@ object PipelineQueries {
       Preprocess.pivotWide(Preprocess.detrend(dailyFromEvents(s, dir)), EventTypes))
     val scoreDate = graft.outbreak.RegionScorers.latestDate(wide)
     graft.outbreak.RegionScorers
-      .isolationForestScores(s, wide,
-        EventTypes ++ Preprocess.MonthNames.map("is_" + _), scoreDate)
+      .isolationForestScores(s, wide, Preprocess.featureCols(EventTypes), scoreDate)
       .select(date_format(col("date"), "yyyy-MM-dd").as("date"), col("region"),
         col("predictedLabel"), round(col("outlierScore"), 6).as("outlierScore"))
   }

@@ -58,8 +58,7 @@ class AnomalyScorerSpec extends SparkTestBase {
     daily.count()
     val before = cacheEntries
     for (pcaK <- Seq(4, 0)) {
-      val (scores, _) = AnomalyScorer.fit(
-        OutbreakPipeline.assembled(daily, IncrementalOutbreakSpec.terms), pcaK,
+      val (scores, _, _) = AnomalyScorer.fit(daily, IncrementalOutbreakSpec.terms, pcaK,
         localEvalThreshold = 0L)
       scores.write.mode("overwrite").parquet(s"$out/$pcaK")
     }

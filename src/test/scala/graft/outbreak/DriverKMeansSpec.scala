@@ -40,7 +40,8 @@ class DriverKMeansSpec extends SparkTestBase {
   }
 
   private lazy val q41Features =
-    PipelineQueries.outbreakAssembled(spark, "/root/testdata/sf0.001").cache()
+    AnomalyScorer.sparkFront(PipelineQueries.dailyFromEvents(spark, "/root/testdata/sf0.001"),
+      PipelineQueries.EventTypes).cache()
 
   test("q41 feature table at sf0.001 (mostly zeros: sparse rows, row solver)") {
     val vecs = q41Features.select("features").collect().map(_.getAs[Vector](0))

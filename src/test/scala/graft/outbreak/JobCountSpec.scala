@@ -10,10 +10,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * On tables of a few hundred rows the fit's cost is job scheduling, not
   * arithmetic, so a change that adds jobs per fit is a regression even
   * when the outputs stay identical. Each bound is the count measured with
-  * the whole model fitted on the driver from one collect: what is left
-  * are the feature pipeline's own jobs. Fitting the scaler, PCA and the
-  * distance normalization with Spark jobs costs about ten more per fit,
-  * fitting the candidate k with MLlib about a hundred more. */
+  * the features and the whole model built on the driver from one collect
+  * of the tidy daily table: what is left is that collect and, for the
+  * queries, the jobs of the events aggregate in front of it. The Spark
+  * feature front costs about three more per fit, fitting the scaler, PCA
+  * and the distance normalization with Spark jobs about ten more, fitting
+  * the candidate k with MLlib about a hundred more. */
 class JobCountSpec extends SparkTestBase {
 
   /** Jobs started while `body` runs, from any thread (a job group would
@@ -55,27 +57,38 @@ class JobCountSpec extends SparkTestBase {
   private val sf0001 = "/root/testdata/sf0.001"
 
   test("selectKModel under the local threshold: at most 2 jobs") {
-    val features = PipelineQueries.outbreakAssembled(spark, sf0001).cache()
+    val features = AnomalyScorer.sparkFront(
+      PipelineQueries.dailyFromEvents(spark, sf0001), PipelineQueries.EventTypes).cache()
     features.count()
     val jobs = jobsOf(AnomalyScorer.selectKModel(features, 2 to 6, 1L))
     assert(jobs <= 2, s"selectKModel ran $jobs jobs")
   }
 
-  test("IncrementalOutbreak.fitFull on IncrementalOutbreakSpec's 30-day table: at most 4 jobs") {
+  test("IncrementalOutbreak.fitFull on IncrementalOutbreakSpec's 30-day table: at most 1 job") {
     val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30).cache()
     daily.count()
     val jobs = jobsOf(IncrementalOutbreak.fitFull(spark, daily, IncrementalOutbreakSpec.terms))
     daily.unpersist()
-    assert(jobs <= 4, s"fitFull ran $jobs jobs")
+    assert(jobs <= 1, s"fitFull ran $jobs jobs")
   }
 
-  test("q41_outbreak_scores query function at sf0.001: at most 6 jobs") {
+  test("saveState of fitFull's state on IncrementalOutbreakSpec's 30-day table: at most 2 jobs") {
+    val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30).cache()
+    daily.count()
+    val (_, model, state) = IncrementalOutbreak.fitFull(spark, daily, IncrementalOutbreakSpec.terms)
+    val dir = java.nio.file.Files.createTempDirectory("save-jobs").toString
+    val jobs = jobsOf(IncrementalOutbreak.saveState(spark, dir, model, state))
+    daily.unpersist()
+    assert(jobs <= 2, s"saveState ran $jobs jobs")
+  }
+
+  test("q41_outbreak_scores query function at sf0.001: at most 3 jobs") {
     val jobs = jobsOf(graft.SparkEntry.queries("q41_outbreak_scores")(spark, sf0001))
-    assert(jobs <= 6, s"q41 build ran $jobs jobs")
+    assert(jobs <= 3, s"q41 build ran $jobs jobs")
   }
 
-  test("q37_outbreak_pca_scores query function at sf0.001: at most 6 jobs") {
+  test("q37_outbreak_pca_scores query function at sf0.001: at most 3 jobs") {
     val jobs = jobsOf(graft.SparkEntry.queries("q37_outbreak_pca_scores")(spark, sf0001))
-    assert(jobs <= 6, s"q37 build ran $jobs jobs")
+    assert(jobs <= 3, s"q37 build ran $jobs jobs")
   }
 }

@@ -31,8 +31,8 @@ class GoldenMlSpec extends SparkTestBase {
 
   private val golden = Map(
     "q36_iforest_scores" -> "b75680f1f0973bc6b6fb5b9a1a8e47a5",
-    "q37_outbreak_pca_scores" -> "7bbf98b94ab8be0abcf0a54b576a01fa",
-    "q41_outbreak_scores" -> "e6b7ed46f6155d5295f6609e1e5dcfaa")
+    "q37_outbreak_pca_scores" -> "48cdfadd87265bf5d82c80e25faae9f8",
+    "q41_outbreak_scores" -> "649deed2dbda1394acf673c93d6061aa")
 
   for ((name, expected) <- golden) {
     test(s"$name canonical output matches the committed golden hash") {
@@ -47,8 +47,8 @@ class GoldenMlSpec extends SparkTestBase {
     * single-partition sf0.001 fixture. */
   private val golden01 = Map(
     "q36_iforest_scores" -> "5128caa0f0ccf70678937fb494cbfb95",
-    "q37_outbreak_pca_scores" -> "68f4a8891a233f134169712e06abdd9d",
-    "q41_outbreak_scores" -> "2e4eb7264896bcab6a491ff3e1cff43f")
+    "q37_outbreak_pca_scores" -> "7dafb92d62479e9a5f297c22a69e4940",
+    "q41_outbreak_scores" -> "438e9b0e77fb47023fca5bc11503492e")
 
   for ((name, expected) <- golden01) {
     test(s"$name sf0.01 canonical output matches the committed golden hash") {

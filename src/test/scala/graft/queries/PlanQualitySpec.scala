@@ -228,8 +228,8 @@ class PlanQualitySpec extends SparkTestBase {
     val p = plan("q41_outbreak_scores")
     assert(p.contains("LocalTableScan"), p.take(1200))
     assert(!p.contains("UDF"), p.take(1200))
-    val mllib = graft.outbreak.AnomalyScorer.fit(
-      PipelineQueries.outbreakAssembled(spark, dir), pcaK = 0, localEvalThreshold = 0L)._1
+    val mllib = graft.outbreak.AnomalyScorer.fit(PipelineQueries.dailyFromEvents(spark, dir),
+      PipelineQueries.EventTypes, pcaK = 0, localEvalThreshold = 0L)._1
       .queryExecution.executedPlan.toString
     assert(mllib.contains("ExistingRDD"), mllib.take(1200))
     assert(!mllib.contains("UDF"), mllib.take(1200))
