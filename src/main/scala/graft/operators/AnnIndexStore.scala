@@ -65,8 +65,7 @@ object AnnIndexStore {
     }.toIndexedSeq: _*)).getField("i")
 
   /** (`idCol`, `vecCol`, cell) for a batch of vectors under frozen
-    * centroids — shared by [[append]] and the streaming ingest twin, so
-    * batch and stream can never assign differently. */
+    * centroids. */
   def assign(vectors: DataFrame, idCol: String, vecCol: String,
       centers: Array[Array[Double]]): DataFrame =
     vectors.select(col(idCol), col(vecCol),
@@ -83,7 +82,7 @@ object AnnIndexStore {
 
   /** A cell store scan pruned to `probeSet` — the literal IN over the
     * partition column is what turns the probe into reads of only the
-    * probed directories. Shared by [[search]] and the streaming twin. */
+    * probed directories. */
   private[graft] def readPruned(spark: SparkSession, cellsPath: String,
       probeSet: Array[Int], idCol: String, vecCol: String): DataFrame =
     spark.read.parquet(cellsPath)

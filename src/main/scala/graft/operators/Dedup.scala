@@ -460,8 +460,7 @@ object Dedup {
     * touches ([[incrementalMinhashKeepPruned]]) instead of scanning the
     * whole index per batch — the difference between per-batch cost
     * growing with history size and growing with batch size.
-    * `mode=append` supports batch-at-a-time accumulation (callers
-    * needing at-least-once replay wrap writes in the EpochStore layout). */
+    * `mode=append` supports batch-at-a-time accumulation. */
   def writeLaneIndex(index: DataFrame, idCol: String, path: String,
       bands: Int = 8): Unit = {
     writeLanes(index, idCol, path, bands)
@@ -541,11 +540,10 @@ object Dedup {
     prunedAdmit(exLanes, exToks, incoming, incSig, incLanes, idCol, threshold)
   }
 
-  /** Shared admit core of the pruned-store paths (batch function above,
-    * streaming [[graft.streaming.PrunedDedupIngest]]): one band join over
-    * the (already partition-pruned) history lanes + the batch's own
-    * lanes, one Jaccard verify round. History always wins; min-id within
-    * the batch. */
+  /** Admit core of the pruned-store path (the function above): one band
+    * join over the (already partition-pruned) history lanes + the batch's
+    * own lanes, one Jaccard verify round. History always wins; min-id
+    * within the batch. */
   private[graft] def prunedAdmit(exLanes: DataFrame, exToks: DataFrame,
       incoming: DataFrame, incSig: DataFrame, incLanes: DataFrame,
       idCol: String, threshold: Double): DataFrame = {

@@ -239,24 +239,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Batched per-partition image resize (the `mapInPandas`-shaped
-    * transform of the multimodal brief): images are decoded, bilinearly
-    * resampled to `outW`×`outH`, and re-encoded in place; non-image
-    * records pass through untouched. A narrow map — payloads never
-    * shuffle, and at 100 TB this is exactly the thumbnail/normalize
-    * stage that runs on ingest so downstream feature passes read the
-    * small fixed-size payloads instead of raw crawl bytes. */
-  def resizeImages(media: Dataset[MediaRecord], outW: Int,
-      outH: Int): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      if (r.media_type == "image/bmp") {
-        val p = resizeBmp(r.payload, outW, outH)
-        MediaRecord(r.doc_id, p, r.media_type, p.length)
-      } else r
-    })
-  }
-
   /** Single-record 16×16 resize (the q155 hot path — lets the query
     * stay one flatMap-free narrow pass without a Dataset round-trip). */
   private[graft] def resizeImages16(r: MediaRecord): MediaRecord = {

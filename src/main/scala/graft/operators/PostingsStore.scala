@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
   *
   * The layout is [[Dedup.writeLaneIndex]]'s pattern applied to IR:
   * write once, probe forever, per-probe cost ∝ the probed terms'
-  * postings — never the index size. [[graft.streaming.PostingsIngest]]
-  * appends epochs continuously into the same shape.
+  * postings — never the index size.
   */
 object PostingsStore {
 
   /** (doc_id, pos, tok, __pfx) postings rows — positions 1-based, empty
     * tokens dropped; a pure narrow projection shared by the batch
-    * query, the store writer, and the streaming ingest. */
+    * query and the store writer. */
   private[graft] def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "pos", "tok")

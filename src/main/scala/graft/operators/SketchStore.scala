@@ -14,17 +14,15 @@ import org.apache.spark.sql.functions._
   * sketch rows — history is never re-read. Sketch union is register-wise
   * max: associative, commutative, idempotent. That algebra is what makes
   * the layout safe — replayed epochs overwrite their own partition
-  * ([[append]] is rename-free idempotent), duplicated rows from a
-  * compaction crash change nothing ([[estimate]] is a set-semantics
-  * consumer), and [[graft.streaming.EpochStore.compact]] applies as-is.
+  * ([[append]] is rename-free idempotent), and duplicated rows change
+  * nothing ([[estimate]] is a set-semantics consumer).
   * (The union's ESTIMATE can differ slightly from a single-shot
   * sketch's — direct updates use Datasketches' HIP estimator, merged
   * state the composite one — so the accuracy contract is vs the exact
   * count, never estimator-vs-estimator equality.)
   *
   * The batch query twin is q151 (same partial→union algebra inline, with
-  * an accuracy contract the DuckDB oracle checks); the streaming twin is
-  * [[graft.streaming.SketchIngest]].
+  * an accuracy contract the DuckDB oracle checks).
   */
 object SketchStore {
 

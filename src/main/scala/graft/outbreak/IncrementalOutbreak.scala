@@ -16,8 +16,7 @@ import graft.operators.Lineage.CutOps
   *    pipeline over all history. Besides scores it emits a tiny
   *    [[OutbreakModel]] (scaler stats, PCA basis, cluster centers, score
   *    normalization — a few KB) and the per-series detrend state
-  *    (running (n, Σvalue) per (region, kw) — the same constant-per-key
-  *    state shape as [[graft.streaming.OnlineAnomaly]]).
+  *    (running (n, Σvalue) per (region, kw): constant per key).
   *  - INCREMENT (every closed day): score ONLY the new rows. The
   *    cumulative-moving-average detrend extends from (n, Σ) state; the
   *    scaler, PCA projection, nearest-centroid distance and z-score all

@@ -20,11 +20,10 @@ object OutbreakPipeline {
 
   /** Full scoring run. Returns `(date, region, score)` for every scored
     * (date, region); filter with [[AnomalyScorer.outliers]] for the
-    * anomaly set. */
+    * anomaly set. `pcaK` is capped at the feature count; 0 = no PCA. */
   def scores(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
-      pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
-      usePca: Boolean = true): DataFrame = {
-    val k = if (usePca) math.min(pcaK, Preprocess.featureCols(vocab).size) else 0
+      pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L): DataFrame = {
+    val k = math.min(pcaK, Preprocess.featureCols(vocab).size)
     AnomalyScorer.fit(daily, vocab, k, kRange, seed)._1
   }
 

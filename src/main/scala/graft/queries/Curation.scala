@@ -664,8 +664,7 @@ object Curation {
   val BpePieceRe = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
 
   /** Adjacent-token pairs of a split array as array<struct<w1,w2>> —
-    * THE bigram construction (q106, q132, [[graft.streaming.LmRouter]]
-    * must tokenize identically or frozen-model scores drift). */
+    * THE bigram construction (q106 and q132 must tokenize identically). */
   private[graft] def bigramStructs(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     zip_with(
       slice(t, lit(1), size(t) - 1),

@@ -230,8 +230,7 @@ object Modeling {
     * Scale shape: only 32-byte span digests ever shuffle (q105's
     * two-shuffle scheme). The training span set is DISTINCT before the
     * probe join — a span seen in many training docs must count once per
-    * eval occurrence, not multiply (the same multiplicity bug the
-    * streaming CurationGate fixed). One digest-keyed hash join however
+    * eval occurrence, not multiply. One digest-keyed hash join however
     * large the corpus. */
   def q125SplitLeakageOn(docs: DataFrame): DataFrame = {
     val t = split(col("text"), " ")

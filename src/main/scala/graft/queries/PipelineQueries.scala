@@ -321,7 +321,7 @@ object PipelineQueries {
     * notebook path (SURVEY M2/M3/M4/M5). */
   def q37OutbreakPcaScores(s: SparkSession, dir: String): DataFrame =
     graft.outbreak.OutbreakPipeline
-      .scores(s, dailyFromEvents(s, dir), EventTypes, usePca = true)
+      .scores(s, dailyFromEvents(s, dir), EventTypes)
       .select(date_format(col("date"), "yyyy-MM-dd").as("date"), col("region"),
         round(col("score"), 6).as("score"))
 

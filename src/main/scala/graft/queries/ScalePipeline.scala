@@ -53,7 +53,7 @@ object ScalePipeline {
         .as("split"))
   }
 
-  /** Sample size for [[q102BottomkSample]] / the streaming twin. */
+  /** Sample size for [[q102BottomkSample]]. */
   val BottomK = 8
 
   /** q102 — deterministic bottom-k sample per group: the k docs whose
@@ -61,10 +61,8 @@ object ScalePipeline {
     * FUNCTION of the ids — reproducible across runs/engines (oracle
     * hash-checks it exactly), MERGEABLE (bottom-k of a union = bottom-k
     * of the parts' bottom-ks — how per-partition/per-day samples combine
-    * without resampling; the streaming twin in
-    * [[graft.streaming.BottomKSample]] exploits the same property), and
-    * doubles as a KMV distinct-count sketch. One WindowGroupLimit-pruned
-    * shuffle. */
+    * without resampling), and doubles as a KMV distinct-count sketch.
+    * One WindowGroupLimit-pruned shuffle. */
   def q102BottomkSample(s: SparkSession, dir: String): DataFrame = {
     val h = conv(substring(md5(concat(lit("bk:"),
       col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
@@ -431,12 +429,11 @@ object ScalePipeline {
     * invariant to partitioning and ingestion order. */
   def q138MerkleManifest(s: SparkSession, dir: String): DataFrame =
     // distinct: the manifest fingerprints the corpus as a SET of
-    // (doc_id, text) — matches the streaming twin's replay-safe fold
+    // (doc_id, text)
     merkleFold(merkleLeaves(Tables.documents(s, dir)).distinct())
 
   /** (shard, leaf) digest per doc — the Merkle tree's leaf level; a pure
-    * per-row projection shared by the batch manifest and the streaming
-    * [[graft.streaming.ManifestIngest]]. */
+    * per-row projection. */
   private[graft] def merkleLeaves(docs: DataFrame): DataFrame =
     shardAssign(docs)
       .select(col("shard"),

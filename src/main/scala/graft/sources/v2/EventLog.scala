@@ -3138,8 +3138,7 @@ class EventLogScan(path: String, required: StructType,
   * watermark, and a file that later materialized below an already-
   * committed watermark (an out-of-order producer — rows that would
   * silently never be read) fails the query with the contract spelled
-  * out, the [[graft.streaming.PrunedDedupIngest]] loud-failure
-  * discipline applied to a source. */
+  * out. */
 class EventLogMicroBatchStream(path: String, fields: Array[String],
     survives: EventLog.Header => Boolean,
     opts: EventLog.OptPred = EventLog.OptPred.All,

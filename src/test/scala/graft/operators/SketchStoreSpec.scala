@@ -42,19 +42,17 @@ class SketchStoreSpec extends SparkTestBase {
         s"key $k estimate $est vs exact ${exact(k)}")
   }
 
-  test("epoch replay and compaction leave the estimate unchanged") {
+  test("epoch replay leaves the sketch rows and the estimate unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("sketchstore2").toString
     val e0 = rows(0, 1000); val e1 = rows(500, 1500)
     SketchStore.append(e0.toDF("k", "v"), Seq("k"), "v", dir, 0L)
     SketchStore.append(e1.toDF("k", "v"), Seq("k"), "v", dir, 1L)
-    val before = SketchStore.estimate(spark, dir, Seq("k"))
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    def estimates() = SketchStore.estimate(spark, dir, Seq("k"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val before = estimates()
+    assert(before.values.forall(_._1 == 2L))
     // at-least-once replay of epoch 1 overwrites its own partition
     SketchStore.append(e1.toDF("k", "v"), Seq("k"), "v", dir, 1L)
-    // fold both epochs; estimate is a set-semantics consumer
-    graft.streaming.EpochStore.compact(spark, dir, cutoff = 2L)
-    val after = SketchStore.estimate(spark, dir, Seq("k"))
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(after == before)
+    assert(estimates() == before)
   }
 }
