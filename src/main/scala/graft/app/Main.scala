@@ -23,12 +23,14 @@ import org.apache.spark.sql.streaming.Trigger
   * foreachBatch that (a) appends closed daily rows to the parquet landing
   * zone partitioned by date, and (b) scores the NEW rows incrementally
   * against persisted model + detrend state
-  * ([[graft.outbreak.IncrementalOutbreak]]), writing `(date, region,
-  * score)` anomalies partitioned by date. A full re-fit over all history
-  * runs on the first scored batch, whenever the state is
-  * missing/unreadable, and on the first scored batch whose id has passed
-  * a multiple of `--refit-every` (default 30) since the model's last
-  * batch. In append mode only some batch ids carry closed days, so a test
+  * ([[graft.outbreak.IncrementalOutbreak]]: the fit's driver front and
+  * scorer, continued from the state), writing `(date, region, score)`
+  * anomalies partitioned by date. A full re-fit over all history runs on
+  * the first scored batch, whenever the state is missing/unreadable, on
+  * the first scored batch whose id has passed a multiple of
+  * `--refit-every` (default 30) since the model's last batch, and on a
+  * batch the driver front declines (over the fit's driver caps, or a null
+  * date). In append mode only some batch ids carry closed days, so a test
   * of `batchId % refitEvery == 0` alone could miss every multiple. The
   * reference (and round 1) re-ran the full pipeline on EVERY batch,
   * linear in history.
@@ -105,20 +107,21 @@ object Main {
             // strictly AFTER the score write, so a state that already
             // records this batchId proves its scores landed — no-op
             ()
-          case Some((model, detrendState))
-              if batchId / refitEvery <= model.lastBatchId / refitEvery =>
-            val (scores, newState) = IncrementalOutbreak.scoreIncrement(
-              spark, batch.select("date", "region", "kw", "value"),
-              model, detrendState)
-            writeAnomalies(scores, overwriteAll = false)
-            IncrementalOutbreak.saveState(spark, stateDir,
-              model.copy(lastBatchId = batchId), newState)
-          case _ => // no usable state, or a refit boundary was crossed
-            val history = spark.read.parquet(landing)
-              .select("date", "region", "kw", "value")
-            val (scores, model, detrendState) =
+          case state =>
+            val increment = for {
+              (model, detrendState) <- state
+              if batchId / refitEvery <= model.lastBatchId / refitEvery
+              (scores, newState) <- IncrementalOutbreak.tryScoreIncrement(spark,
+                batch.select("date", "region", "kw", "value"), model, detrendState)
+            } yield (scores, model.copy(lastBatchId = batchId), newState)
+            // no usable state, a refit boundary was crossed, or the driver
+            // front declined the batch: refit over all history
+            val (scores, model, detrendState) = increment.getOrElse {
+              val history = spark.read.parquet(landing)
+                .select("date", "region", "kw", "value")
               IncrementalOutbreak.fitFull(spark, history, vocab, batchId = batchId)
-            writeAnomalies(scores, overwriteAll = true)
+            }
+            writeAnomalies(scores, overwriteAll = increment.isEmpty)
             IncrementalOutbreak.saveState(spark, stateDir, model, detrendState)
         }
       },

@@ -40,7 +40,9 @@ import graft.operators.Lineage.CutOps
   * scalar aggregate over a materialized distance table, not a second ML
   * pass. Both fronts hand the fit its rows in (date, region) order, which
   * is the order the seeded k-means|| initialization depends on; without
-  * it the model would follow the shuffle partitioning.
+  * it the model would follow the shuffle partitioning. The app's
+  * increments ([[IncrementalOutbreak]]) run the same driver front, seeded
+  * with the saved detrend state, and the same scorer ([[Model.score]]).
   */
 object AnomalyScorer {
 
@@ -60,28 +62,52 @@ object AnomalyScorer {
     * cluster centers in the projected space, and the z-normalization of
     * the nearest-center distance (sigma is 1 where the std is 0 or NaN). */
   case class Model(projection: Option[Projection], centers: Array[Vector],
-      mu: Double, sigma: Double)
+      mu: Double, sigma: Double) {
+
+    /** The z-scores of feature rows, in order: the scaler, the PCA
+      * projection, the squared distance to the nearest center, then
+      * (d − mu) / sigma, each step MLlib's or Spark SQL's arithmetic. The
+      * driver fit scores its own rows with this, and an increment its new
+      * rows. */
+    def score(features: Array[Vector]): Array[Double] = {
+      val points = projection.fold(features)(p =>
+        features.map(DriverFit.scaler(p.mean, p.std).andThen(DriverFit.projection(p.pc))))
+      sqDistsToNearest(points, centers).map(d => (d - mu) / sigma)
+    }
+  }
+
+  private def sqDistsToNearest(points: Array[Vector], centers: Array[Vector]): Array[Double] = {
+    val cs = centers.map(_.toArray)
+    points.map(p => DriverFit.sqDistToNearest(p.toArray, cs))
+  }
+
+  /** The feature-row count up to which the fit runs on the driver. */
+  private[outbreak] val LocalEvalThreshold = 50000L
 
   /** Fit the model on the tidy daily table `daily` (`date`, `region`, `kw`,
     * `value`, one row per (date, region, kw)) over the terms `vocab`, and
     * score every (date, region): returns `(date, region, score)`, the
     * model, and the per-series detrend state `(region, kw, n, sumv)` — the
     * count and the sum of the non-null values. `pcaK` > 0 standardizes and
-    * projects to `pcaK` components first; 0 clusters the raw features. */
+    * projects to `pcaK` components first, at most one per feature; 0
+    * clusters the raw features. */
   def fit(daily: DataFrame, vocab: Seq[String], pcaK: Int, kRange: Range = 2 to 6,
-      seed: Long = 1L, localEvalThreshold: Long = 50000L): (DataFrame, Model, DataFrame) =
+      seed: Long = 1L,
+      localEvalThreshold: Long = LocalEvalThreshold): (DataFrame, Model, DataFrame) = {
+    val k = math.min(pcaK, Preprocess.featureCols(Preprocess.sanitizeVocab(vocab)).size)
     localFront(daily, vocab, localEvalThreshold) match {
       case Some(front) =>
-        val (scores, model) = driverFit(daily, front, pcaK, kRange, seed)
+        val (scores, model) = driverFit(daily, front, k, kRange, seed)
         (scores, model, front.state)
       case None =>
         val (scores, model) = withCached(sparkFront(daily, vocab)) { table =>
-          mllibFit(table, pcaK, kRange, seed, localEvalThreshold)
+          mllibFit(table, k, kRange, seed, localEvalThreshold)
         }
         val state = Preprocess.sanitizeTerms(daily).groupBy("region", "kw")
           .agg(count("value").as("n"), sum(col("value").cast(DoubleType)).as("sumv"))
         (scores, model, state)
     }
+  }
 
   /** The model input built with Spark: daily → detrend → pivot → month
     * one-hot → assembled `features`, one row per (date, region), on one
@@ -104,10 +130,11 @@ object AnomalyScorer {
 
   /** [[sparkFront]] replayed on the driver from one capped collect of the
     * tidy rows, or None where the Spark front must run: more than
-    * `localEvalThreshold` × |vocab| tidy rows or `localEvalThreshold`
-    * feature rows, a `date` that is not a DATE, or a null date or region.
-    * The tidy rows arrive one at a time and are kept as primitives and
-    * shared strings. The replay follows Spark's semantics step by step:
+    * `localEvalThreshold` × |vocab| tidy rows or state rows, or
+    * `localEvalThreshold` feature rows, a `date` that is not a DATE, or a
+    * null date. The tidy rows arrive one at a time and are kept as
+    * primitives and shared strings. The replay follows Spark's semantics
+    * step by step:
     *  - detrend: `avg` over ROWS UNBOUNDED PRECEDING is a running sum from
     *    0.0 in date order over the non-null values, divided by their
     *    count; an average that is null, 0 or NaN divides by nothing (1.0);
@@ -116,13 +143,22 @@ object AnomalyScorer {
     *  - month one-hot: 1.0 at the month of the date;
     *  - assembly: `VectorAssembler`'s `Vectors.sparse(nonzeros).compressed`;
     *  - order: dates ascending, then regions in UTF-8 byte order
-    *    (`UTF8String.compareTo`, not `String.compareTo`).
-    * The state's Σ is the same running sum, so it is summed in date order. */
+    *    (`UTF8String.compareTo`, not `String.compareTo`), a null region
+    *    first.
+    * The state's Σ is the same running sum, so it is summed in date order.
+    * With a `seed` state `(region, kw, n, sumv)` — an earlier front's, over
+    * the days before `daily`'s — each series' running sum and count start
+    * from its (n, Σ) instead of 0, so the features of `daily`'s rows and
+    * the state equal those of a front over both, bit for bit; the state
+    * keeps the seed's series that `daily` does not touch. */
   private[outbreak] def localFront(daily: DataFrame, vocab: Seq[String],
-      localEvalThreshold: Long): Option[LocalFront] = {
+      localEvalThreshold: Long, seed: Option[DataFrame] = None): Option[LocalFront] = {
     if (daily.schema("date").dataType != DateType) return None
     val sanVocab = Preprocess.sanitizeVocab(vocab)
     val cap = math.min(localEvalThreshold * math.max(sanVocab.size, 1), Int.MaxValue - 1L)
+    val seedRows = seed.fold(Array.empty[Row])(
+      _.select("region", "kw", "n", "sumv").limit(cap.toInt + 1).collect())
+    if (seedRows.length > cap) return None
     val tidy = Preprocess.sanitizeTerms(daily)
       .select(col("date"), unix_date(col("date")), col("region"), col("kw"),
         col("value").cast(DoubleType))
@@ -132,8 +168,13 @@ object AnomalyScorer {
     val regionId = mutable.HashMap.empty[String, Int]
     val kwId = mutable.HashMap.empty[String, Int]
     sanVocab.foreach(t => kwId.getOrElseUpdate(t, kwId.size))
+    def idOf(ids: mutable.HashMap[String, Int], name: String) = ids.getOrElseUpdate(name, ids.size)
     val seriesId = mutable.HashMap.empty[Long, Int]
     val (seriesRegion, seriesKw) = (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
+    def seriesOf(reg: Int, kw: Int) = seriesId.getOrElseUpdate((kw.toLong << 32) | reg, {
+      seriesRegion += reg; seriesKw += kw; seriesId.size })
+    val seeded = seedRows.map(r =>
+      seriesOf(idOf(regionId, r.getString(0)), idOf(kwId, r.getString(1))) -> r)
     val (dayB, regionB, kwB, seriesB) = (mutable.ArrayBuilder.make[Int],
       mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int])
     val valueB = mutable.ArrayBuilder.make[Double]
@@ -142,13 +183,12 @@ object AnomalyScorer {
     val it = tidy.toLocalIterator()
     while (it.hasNext) {
       val r = it.next()
-      if (n >= cap || r.isNullAt(0) || r.isNullAt(2)) return None
+      if (n >= cap || r.isNullAt(0)) return None
       val day = r.getInt(1)
       dateOf.getOrElseUpdate(day, r.get(0))
-      val reg = regionId.getOrElseUpdate(r.getString(2), regionId.size)
-      val kw = kwId.getOrElseUpdate(r.getString(3), kwId.size)
-      seriesB += seriesId.getOrElseUpdate((kw.toLong << 32) | reg, {
-        seriesRegion += reg; seriesKw += kw; seriesId.size })
+      val reg = idOf(regionId, r.getString(2))
+      val kw = idOf(kwId, r.getString(3))
+      seriesB += seriesOf(reg, kw)
       dayB += day; regionB += reg; kwB += kw
       if (r.isNullAt(4)) { nulls.set(n); valueB += 0.0 } else valueB += r.getDouble(4)
       n += 1
@@ -160,8 +200,10 @@ object AnomalyScorer {
     val dayList = dateOf.keys.toArray.sorted
     val regionNames = new Array[String](regionId.size)
     regionId.foreach { case (name, id) => regionNames(id) = name }
-    val regionList = regionNames.indices.toArray.sortWith((a, b) =>
-      UTF8String.fromString(regionNames(a)).compareTo(UTF8String.fromString(regionNames(b))) < 0)
+    val regionList = regionNames.indices.toArray.sortWith { (a, b) =>
+      val (x, y) = (regionNames(a), regionNames(b))
+      y != null && (x == null || UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0)
+    }
     val regionRank = new Array[Int](regionNames.length)
     regionList.indices.foreach(i => regionRank(regionList(i)) = i)
     val dayRank = days.map(d => java.util.Arrays.binarySearch(dayList, d))
@@ -178,6 +220,10 @@ object AnomalyScorer {
     val width = v + Preprocess.MonthNames.size
     val sums = new Array[Double](seriesId.size)
     val counts = new Array[Long](seriesId.size)
+    seeded.foreach { case (s, r) =>
+      counts(s) = r.getLong(2)
+      if (!r.isNullAt(3)) sums(s) = r.getDouble(3)
+    }
     val cell = new Array[Double](width)
     val (dates, cellRegions) = (new Array[Any](cells), new Array[String](cells))
     val features = new Array[Vector](cells)
@@ -245,16 +291,18 @@ object AnomalyScorer {
         (Some(Projection(mean, std, pc)), scaled.map(DriverFit.projection(pc)))
       } else (None, vecs)
     val (_, centers) = selectLocal(points, kRange, seed)
-    val cs = centers.map(_.toArray)
-    val dist = points.map(p => DriverFit.sqDistToNearest(p.toArray, cs))
-    val (mu, std) = DriverFit.meanStd(dist)
-    val sigma = zScale(std)
-    val scores = vecs.indices.map(i =>
-      Row(front.dates(i), front.regions(i), (dist(i) - mu) / sigma))
+    val (mu, std) = DriverFit.meanStd(sqDistsToNearest(points, centers))
+    val model = Model(projection, centers, mu, zScale(std))
+    (scoreFrame(daily, front, model.score(vecs)), model)
+  }
+
+  /** `(date, region, score)` of the front's rows, as a local relation. */
+  private[outbreak] def scoreFrame(daily: DataFrame, front: LocalFront,
+      scores: Array[Double]): DataFrame = {
+    val rows = scores.indices.map(i => Row(front.dates(i), front.regions(i), scores(i)))
     val schema = StructType(Seq(daily.schema("date"), daily.schema("region"),
       StructField("score", DoubleType)))
-    (daily.sparkSession.createDataFrame(scores.asJava, schema),
-      Model(projection, centers, mu, sigma))
+    daily.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** [[fit]] with MLlib and Spark jobs, for tables the driver cannot hold. */
@@ -294,7 +342,7 @@ object AnomalyScorer {
     * `KMeans().setK(k).setSeed(seed).fit(features)` returns when
     * `features` has one partition. */
   def selectKModel(features: DataFrame, kRange: Range = 2 to 6,
-      seed: Long = 1L, localEvalThreshold: Long = 50000L): (Int, Array[Vector]) =
+      seed: Long = 1L, localEvalThreshold: Long = LocalEvalThreshold): (Int, Array[Vector]) =
     withCached(features) { cached =>
       if (cached.count() <= localEvalThreshold)
         selectLocal(cached.select("features").collect().map(_.getAs[Vector](0)),
@@ -395,7 +443,7 @@ object AnomalyScorer {
     * `least` over the k `graft_sqdist` values — KMeansModel.transform's
     * prediction UDF never enters the scoring plan. `vec` must be the
     * feature vector as `array<double>`. */
-  private[outbreak] def sqDistToNearest(centers: Seq[Seq[Double]], vec: Column): Column = {
+  private def sqDistToNearest(centers: Seq[Seq[Double]], vec: Column): Column = {
     val dists = centers.map(c => call_function("graft_sqdist", vec, typedLit(c)))
     if (dists.length == 1) dists.head else least(dists: _*)
   }

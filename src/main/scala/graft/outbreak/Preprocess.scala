@@ -1,6 +1,6 @@
 package graft.outbreak
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,13 +43,11 @@ object Preprocess {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
       .withColumn("cma", avg("value").over(w))
-      .withColumn("value", divideByCma(col("value"), col("cma")))
+      .withColumn("value",
+        when(col("cma").isNull || col("cma") === 0.0 || isnan(col("cma")), 1.0)
+          .otherwise(col("value") / col("cma")))
       .drop("cma")
   }
-
-  /** value / cma, or 1.0 where the cumulative average is null, 0 or NaN. */
-  def divideByCma(value: Column, cma: Column): Column =
-    when(cma.isNull || cma === 0.0 || isnan(cma), 1.0).otherwise(value / cma)
 
   /** Long → wide: one Double column per term (reference Main.scala:212-216).
     * `vocab` is passed statically so Spark skips the distinct-values scan;

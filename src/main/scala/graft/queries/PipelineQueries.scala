@@ -320,8 +320,7 @@ object PipelineQueries {
   /** Full EP3 with StandardScaler + PCA(4) ahead of KMeans — the exact
     * notebook path (SURVEY M2/M3/M4/M5). */
   def q37OutbreakPcaScores(s: SparkSession, dir: String): DataFrame =
-    graft.outbreak.OutbreakPipeline
-      .scores(s, dailyFromEvents(s, dir), EventTypes)
+    AnomalyScorer.fit(dailyFromEvents(s, dir), EventTypes, pcaK = 4)._1
       .select(date_format(col("date"), "yyyy-MM-dd").as("date"), col("region"),
         round(col("score"), 6).as("score"))
 

@@ -102,7 +102,7 @@ object SyntheticProducer {
   }
 }
 
-/** CLI: `runMain graft.app.ProduceSynthetic <outDir> [days] [terms,csv]` —
+/** CLI: `runMain graft.sources.ProduceSynthetic <outDir> [days] [terms,csv]` —
   * the local stand-in for the reference's producer service. */
 object ProduceSynthetic {
   def main(args: Array[String]): Unit = {

@@ -34,8 +34,9 @@ class MainSpec extends SparkTestBase {
       batch1: Long, batch2: Long)
 
   /** Run 1 lands days 1..40 (spike on 36..38) and fully fits; run 2 adds
-    * days 41..46 (spike on 43). `extraArgs` go to both runs. */
-  private def twoRunDrive(extraArgs: String*): Drive = {
+    * days 41..46 (spike on 43) and the event lines `run2Extra`, each its
+    * own (date, region, kw). `extraArgs` go to both runs. */
+  private def twoRunDrive(extraArgs: Seq[String] = Nil, run2Extra: Seq[String] = Nil): Drive = {
     val in = Files.createTempDirectory("app-in").toString
     val out = Files.createTempDirectory("app-out").toString
     val appArgs = Array("--json-dir", in, "--landing", s"$out/landing",
@@ -68,11 +69,11 @@ class MainSpec extends SparkTestBase {
 
     // ---- run 2: days 41..46 arrive, spike on 43
     Files.write(java.nio.file.Paths.get(s"$in/events2.json"),
-      eventLines(41 to 46, Set(43)).mkString("\n").getBytes)
+      (eventLines(41 to 46, Set(43)) ++ run2Extra).mkString("\n").getBytes)
     Main.main(appArgs)
 
     // landing advanced to 45 closed days
-    assert(spark.read.parquet(s"$out/landing").count() == 45L * 2 * 2)
+    assert(spark.read.parquet(s"$out/landing").count() == 45L * 2 * 2 + run2Extra.size)
     Drive(run1, anomalies(), before, partitionFiles(), batch1, lastBatchId())
   }
 
@@ -102,11 +103,24 @@ class MainSpec extends SparkTestBase {
       "run 2 rewrote old score partitions - incremental path not taken")
   }
 
+  test("an increment batch holding a null-region event is scored as an increment, not a refit") {
+    val nullRegion =
+      s"""{"datetime":"${dayStr(42)}T12:00:00","kw":"Cough","region":null,"value":30.0}"""
+    val d = twoRunDrive(run2Extra = Seq(nullRegion))
+    assert((d.batch1, d.batch2) == ((1L, 3L)))
+    // an increment rewrites only its own date partitions; a refit would
+    // have replaced every run-1 score file
+    assert(d.filesBefore.nonEmpty)
+    val unchanged = d.filesAfter.filter { case (p, _) => d.filesBefore.contains(p) }
+    assert(unchanged == d.filesBefore, "run 2 rewrote run-1 score partitions: it refitted")
+    assert(d.run2.contains(("US", dayStr(43))), s"new spike not flagged: ${d.run2}")
+  }
+
   test("--refit-every 2: run 2's closing batch crosses a multiple of 2 " +
       "and refits over all history") {
     // run 1 closes its days in batch 1, run 2 in batch 3 (batches 0 and 2
     // only ingest): 3 / 2 > 1 / 2, so run 2 refits although 3 % 2 != 0
-    val d = twoRunDrive("--refit-every", "2")
+    val d = twoRunDrive(Seq("--refit-every", "2"))
     assert((d.batch1, d.batch2) == ((1L, 3L)))
     assertDetections(d)
     // a refit overwrites every score partition (static overwrite): no

@@ -110,18 +110,24 @@ class DriverFitSpec extends SparkTestBase {
       }
       (date, r, kw, v)
     }
-    // a (date, region) that has only an out-of-vocabulary term
-    (rows :+ ((day("2020-02-03"), "ZZ", "Sneeze", Some(3.3)))).toDF("date", "region", "kw", "value")
+    // a (date, region) that has only an out-of-vocabulary term, and a
+    // null region, which Spark's ascending sort ranks first
+    (rows :+ ((day("2020-02-03"), "ZZ", "Sneeze", Some(3.3)))
+      :+ ((day("2020-02-01"), null, "Cough", Some(2.2))))
+      .toDF("date", "region", "kw", "value")
   }
   private val edgeVocab = Seq("Cough", "Sore throat", "Fever")
 
   test("edge table: null, NaN, zero series, out-of-vocabulary, spaces, UTF-8 order, month end") {
     val daily = edgeTable
     val front = assertSameFront(daily, edgeVocab)
-    assert(front.length == 6 * 3 + 1)
+    assert(front.length == 6 * 3 + 2)
     val local = AnomalyScorer.localFront(daily, edgeVocab, 50000L).get
     assert(local.regions.take(3).toSeq == Seq("RＡ", "R😀", "US"), "UTF-8 byte order")
     assert(local.regions.last == "ZZ" && front.last.numNonzeros == 1, "the OOV-only row")
+    val feb1 = local.dates.indexWhere(_ == day("2020-02-01"))
+    assert(local.regions.slice(feb1, feb1 + 4).toSeq == Seq(null, "RＡ", "R😀", "US"),
+      "a null region first")
     assertIdentical(daily, edgeVocab, 4)
     assertIdentical(daily, edgeVocab, 0)
   }

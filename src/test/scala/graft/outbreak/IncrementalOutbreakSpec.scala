@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The incremental scorer must extend the batch pipeline, not approximate
-  * it: detrending from (n, Σ) state has to reproduce the full
-  * cumulative-moving-average computation exactly, and a planted spike in
-  * the increment must z-score far above the quiet days. */
+  * it: scoring the new days from the (n, Σ) state has to reproduce the
+  * fit's front and scorer over all history bit for bit, and a planted
+  * spike in the increment must z-score far above the quiet days. */
 class IncrementalOutbreakSpec extends SparkTestBase {
   import spark.implicits._
   import IncrementalOutbreakSpec.terms
@@ -17,38 +17,50 @@ class IncrementalOutbreakSpec extends SparkTestBase {
   private def mkDaily(days: Range, spikeDays: Set[Int] = Set.empty) =
     IncrementalOutbreakSpec.mkDaily(spark, days, spikeDays)
 
-  test("incremental detrend from (n, sum) state equals the full-history detrend") {
+  test("increment scores equal the fit's scorer on a 33-day front, and its state a 33-day fit's") {
     // non-integer values: sums round, so only the same order of additions
     // gives the same bits
     def thirds(days: Range) = mkDaily(days).withColumn("value", col("value") / 3.0)
     val history = thirds(1 to 30)
     val increment = thirds(31 to 33)
-    val (_, _, state) = IncrementalOutbreak.fitFull(spark, history, terms)
-    val (detrended, newState) = IncrementalOutbreak.detrendIncrement(
-      Preprocess.sanitizeTerms(increment).select("date", "region", "kw", "value"), state)
+    val (_, model, state) = IncrementalOutbreak.fitFull(spark, history, terms)
+    val (scores, newState) = IncrementalOutbreak.scoreIncrement(spark, increment, model, state)
 
-    // ground truth: detrend over the COMBINED history, keep the new days
-    def byKey(df: DataFrame) = df.select("date", "region", "kw", "value")
-      .as[(Date, String, String, Double)].collect()
-      .map { case (d, r, k, v) => (d.toString, r, k) -> java.lang.Double.doubleToRawLongBits(v) }
-      .toMap
-    val full = byKey(Preprocess.detrend(
-      Preprocess.sanitizeTerms(history.unionByName(increment)))
-      .where(col("date") >= "2020-01-31"))
-    assert(full.size == 3 * 2 * 2)
-    assert(byKey(detrended) == full)
+    // ground truth: the fitted model's scorer on the rows of days 31–33 of
+    // a front over all 33 days
+    val fitted = AnomalyScorer.fit(history, terms, 4)._2
+    val front = AnomalyScorer.localFront(history.unionByName(increment), terms, 50000L).get
+    val newRows = front.dates.indices.filter(i => front.dates(i).toString >= "2020-01-31")
+    assert(newRows.size == 3 * 2) // 3 days × 2 regions
+    val expected = newRows.zip(fitted.score(newRows.map(front.features).toArray)).map {
+      case (i, z) => (front.dates(i), front.regions(i), java.lang.Double.doubleToRawLongBits(z))
+    }
+    val actual = scores.collect().toSeq.map(r =>
+      (r.get(0), r.get(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    assert(actual == expected)
 
     // the updated state equals a from-scratch fit's state over all 33 days
-    val (_, _, expected) = IncrementalOutbreak.fitFull(spark, history.unionByName(increment), terms)
+    val (_, _, fullState) =
+      IncrementalOutbreak.fitFull(spark, history.unionByName(increment), terms)
     def stateBits(df: DataFrame) = df.as[(String, String, Long, Double)].collect()
       .map(t => (t._1, t._2, t._3, java.lang.Double.doubleToRawLongBits(t._4))).toSet
-    assert(stateBits(newState) == stateBits(expected))
+    assert(stateBits(newState) == stateBits(fullState))
+  }
 
-    // scoreIncrement scores the detrended rows and returns the same state
-    val (scores, scored) = IncrementalOutbreak.scoreIncrement(
-      spark, increment, IncrementalOutbreak.fitFull(spark, history, terms)._2, state)
-    assert(scores.count() == 3 * 2) // 3 days × 2 regions
-    assert(stateBits(scored) == stateBits(expected))
+  test("the increment declines a batch over the driver front's cap or with a null date") {
+    val (_, model, state) = IncrementalOutbreak.fitFull(spark, mkDaily(1 to 30), terms)
+    // 3 days × 2 regions × 2 terms: 12 tidy rows, 6 feature rows; the
+    // caps are the threshold feature rows and the threshold × |vocab| tidy
+    // rows
+    val batch = mkDaily(31 to 33)
+    assert(IncrementalOutbreak.tryScoreIncrement(batch, model, state, 6L).isDefined)
+    assert(IncrementalOutbreak.tryScoreIncrement(batch, model, state, 5L).isEmpty, "over the cap")
+    val nullDate = batch.withColumn("date",
+      when(col("date") === "2020-02-01", lit(null)).otherwise(col("date")))
+    assert(IncrementalOutbreak.tryScoreIncrement(spark, nullDate, model, state).isEmpty,
+      "a null date")
+    assertThrows[IllegalArgumentException](
+      IncrementalOutbreak.scoreIncrement(spark, nullDate, model, state))
   }
 
   test("a spike in the increment z-scores far above quiet increment days") {

@@ -5,10 +5,11 @@ import java.sql.Date
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Golden end-to-end test (SURVEY §5.2): a deterministic synthetic
-  * data.csv-shaped fixture with a planted multi-term outbreak must come out
-  * the other end as the flagged anomaly, in the reference's output shape
-  * `(date, region, score)`. */
+/** Golden end-to-end test of the outbreak pipeline, [[AnomalyScorer.fit]]
+  * then [[AnomalyScorer.outliers]] (SURVEY §5.2): a deterministic
+  * synthetic data.csv-shaped fixture with a planted multi-term outbreak
+  * must come out the other end as the flagged anomaly, in the reference's
+  * output shape `(date, region, score)`. */
 class OutbreakPipelineSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -31,8 +32,14 @@ class OutbreakPipelineSpec extends SparkTestBase {
     rows.toDF("date", "kw", "region", "value")
   }
 
+  /** The reference's EP3 run: scaler + PCA(4) + KMeans scores. */
+  private def scores() = AnomalyScorer.fit(fixture(), terms, pcaK = 4, seed = 1L)._1
+
+  /** The exported artifact: the |z| > 2 anomalies. */
+  private def anomalies() = AnomalyScorer.outliers(scores())
+
   test("planted outbreak days are exactly the |z|>2 anomalies, in US only") {
-    val out = OutbreakPipeline.anomalies(spark, fixture(), terms, seed = 1L)
+    val out = anomalies()
       .select(date_format($"date", "yyyy-MM-dd"), $"region")
       .as[(String, String)].collect().toSet
     val outbreakDays = (100 to 104).map(d =>
@@ -44,7 +51,7 @@ class OutbreakPipelineSpec extends SparkTestBase {
   }
 
   test("output matches the reference artifact schema (date, region, score)") {
-    val df = OutbreakPipeline.anomalies(spark, fixture(), terms, seed = 1L)
+    val df = anomalies()
     assert(df.columns.toSeq == Seq("date", "region", "score"))
   }
 
@@ -62,7 +69,7 @@ class OutbreakPipelineSpec extends SparkTestBase {
       try src.getLines().next() finally src.close()
     }
     assert(header == ",date,region,score", s"reference header drifted: $header")
-    val df = OutbreakPipeline.anomalies(spark, fixture(), terms, seed = 1L)
+    val df = anomalies()
     // our export = the reference's columns minus the pandas write index
     assert(df.columns.toSeq == header.split(",").toSeq.filter(_.nonEmpty))
     // dtypes line up with what the artifact's rows actually parse as
@@ -87,7 +94,7 @@ class OutbreakPipelineSpec extends SparkTestBase {
   }
 
   test("pipeline is deterministic under a fixed seed") {
-    def run() = OutbreakPipeline.scores(spark, fixture(), terms, seed = 1L)
+    def run() = scores()
       .orderBy("date", "region").select("score").as[Double].collect().toSeq
     assert(run() == run())
   }
