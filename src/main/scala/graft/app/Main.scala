@@ -117,7 +117,7 @@ object Main {
             // no usable state, a refit boundary was crossed, or the driver
             // front declined the batch: refit over all history
             val (scores, model, detrendState) = increment.getOrElse {
-              val history = spark.read.parquet(landing)
+              val history = spark.read.schema(Ingest.landingSchema).parquet(landing)
                 .select("date", "region", "kw", "value")
               IncrementalOutbreak.fitFull(spark, history, vocab, batchId = batchId)
             }

@@ -15,10 +15,15 @@ import org.apache.spark.sql.DataFrame
   * per-call-site literal — so every cut in the engine goes through
   * this one helper, governed by runtime conf:
   *
-  *   graft.checkpoint.mode = local     (default: localCheckpoint(true))
-  *   graft.checkpoint.mode = reliable  (Dataset.checkpoint(true) into
-  *       graft.checkpoint.dir — set it to a fault-tolerant FS path; an
-  *       already-configured SparkContext checkpoint dir also counts)
+  *   spark.graft.checkpoint.mode = local     (default: localCheckpoint(true))
+  *   spark.graft.checkpoint.mode = reliable  (Dataset.checkpoint(true) into
+  *       spark.graft.checkpoint.dir — set it to a fault-tolerant FS path;
+  *       an already-configured SparkContext checkpoint dir also counts)
+  *
+  * The keys carry the `spark.` prefix because `spark-submit --conf` and
+  * `spark-defaults.conf` drop any other key. The unprefixed names
+  * `graft.checkpoint.{mode,dir}`, which a session can still set at
+  * runtime, are read where the prefixed ones are unset.
   *
   * Both modes materialize eagerly and preserve the input's
   * partitioning, so plan shape and results are identical — only the
@@ -27,22 +32,27 @@ import org.apache.spark.sql.DataFrame
   */
 object Lineage {
 
+  val ModeKey = "spark.graft.checkpoint.mode"
+  val DirKey = "spark.graft.checkpoint.dir"
+
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    spark.conf.get("graft.checkpoint.mode", "local") match {
+    def conf(key: String) =
+      spark.conf.getOption(key).orElse(spark.conf.getOption(key.stripPrefix("spark.")))
+    conf(ModeKey).getOrElse("local") match {
       case "local" => df.localCheckpoint(true)
       case "reliable" =>
         val sc = spark.sparkContext
         if (sc.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.getOption("graft.checkpoint.dir").getOrElse(
+          val dir = conf(DirKey).getOrElse(
             throw new IllegalStateException(
-              "graft.checkpoint.mode=reliable needs graft.checkpoint.dir " +
+              s"$ModeKey=reliable needs $DirKey " +
                 "(or a pre-set SparkContext checkpoint dir)"))
           sc.setCheckpointDir(dir)
         }
         df.checkpoint(true)
       case other => throw new IllegalArgumentException(
-        s"graft.checkpoint.mode must be local|reliable, got '$other'")
+        s"$ModeKey must be local|reliable, got '$other'")
     }
   }
 

@@ -81,6 +81,12 @@ object AnomalyScorer {
     points.map(p => DriverFit.sqDistToNearest(p.toArray, cs))
   }
 
+  /** The per-series detrend state: the count `n` and the sum `sumv` of the
+    * non-null values of each (region, kw). */
+  private[outbreak] val StateSchema: StructType = StructType(Seq(
+    StructField("region", StringType), StructField("kw", StringType),
+    StructField("n", LongType, nullable = false), StructField("sumv", DoubleType)))
+
   /** The feature-row count up to which the fit runs on the driver. */
   private[outbreak] val LocalEvalThreshold = 50000L
 
@@ -258,11 +264,8 @@ object AnomalyScorer {
     val (sRegion, sKw) = (seriesRegion.result(), seriesKw.result())
     val stateRows = sums.indices.map(s => Row(regionNames(sRegion(s)), kwNames(sKw(s)),
       counts(s), if (counts(s) == 0) null else sums(s)))
-    val stateSchema = StructType(Seq(daily.schema("region"),
-      StructField("kw", StringType), StructField("n", LongType, nullable = false),
-      StructField("sumv", DoubleType)))
     Some(LocalFront(dates, cellRegions, features,
-      daily.sparkSession.createDataFrame(stateRows.asJava, stateSchema)))
+      daily.sparkSession.createDataFrame(stateRows.asJava, StateSchema)))
   }
 
   /** `order` stably re-sorted by `key(order(j))`, an int in [0, range). */

@@ -1,7 +1,8 @@
 package graft.outbreak
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.linalg.{DenseMatrix, Vectors}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 
 /** Incremental daily anomaly scoring — the fix for the reference's (and
   * round 1's) biggest scale flaw: re-reading the ENTIRE landing zone and
@@ -101,6 +102,7 @@ object IncrementalOutbreak {
 
   private def modelPath(stateDir: String) = s"$stateDir/model"
   private def detrendPath(stateDir: String) = s"$stateDir/detrend"
+  private val ModelEncoder = Encoders.product[OutbreakModel]
 
   /** Writes the detrend state, then the model. `detrendState` must not
     * read `stateDir`: an increment's and a driver fit's are local
@@ -123,14 +125,18 @@ object IncrementalOutbreak {
   }
 
   /** None ⇒ no usable state (first run or corrupted by a crash): caller
-    * falls back to a full refit. */
+    * falls back to a full refit. Both parquets are read with their known
+    * schemas, so the load runs one Spark job (the model row's), and a
+    * missing model is None before any read. */
   def loadState(spark: SparkSession, stateDir: String)
       : Option[(OutbreakModel, DataFrame)] = {
-    import spark.implicits._
-    try {
-      val model = spark.read.parquet(modelPath(stateDir))
-        .as[OutbreakModel].head()
-      val detrendState = spark.read.parquet(detrendPath(stateDir))
+    val path = new Path(modelPath(stateDir))
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    else try {
+      val model = spark.read.schema(ModelEncoder.schema).parquet(modelPath(stateDir))
+        .as(ModelEncoder).head()
+      val detrendState = spark.read.schema(AnomalyScorer.StateSchema)
+        .parquet(detrendPath(stateDir))
       Some((model, detrendState))
     } catch { case _: Exception => None }
   }

@@ -55,6 +55,14 @@ object Ingest {
   def parseJson(raw: DataFrame, jsonCol: String = "json"): DataFrame =
     raw.select(from_json(col(jsonCol), eventSchema).as("r")).select("r.*")
 
+  /** The rows [[dailyAggregate]] emits, as the app lands them: the read
+    * schema of the landing zone, `date` its partition column. */
+  val landingSchema: StructType = StructType(Array(
+    StructField("date", DateType),
+    StructField("region", StringType),
+    StructField("kw", StringType),
+    StructField("value", DoubleType)))
+
   /** Event-time daily aggregation with late-data handling (SURVEY A1):
     * terms sanitized, 1-hour watermark, tumbling 1-day window, sum.
     * Append mode ⇒ each (date, region, kw) row is emitted exactly once,

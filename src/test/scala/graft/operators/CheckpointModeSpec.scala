@@ -23,35 +23,44 @@ class CheckpointModeSpec extends SparkTestBase {
         .collect().map(_.toString).toSeq)
   }
 
-  test("reliable mode matches local mode bit-for-bit and writes checkpoint files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    dir.deleteOnExit()
-    val local = runIteratives()
-    spark.conf.set("graft.checkpoint.mode", "reliable")
-    spark.conf.set("graft.checkpoint.dir", dir.getAbsolutePath)
-    try {
-      val reliable = runIteratives()
-      assert(reliable == local)
-      // the reliable path was actually exercised: RDD checkpoint data on disk
-      def countFiles(f: java.io.File): Int =
-        if (f.isFile) 1 else Option(f.listFiles()).toSeq.flatten.map(countFiles).sum
-      assert(countFiles(dir) > 0, "no checkpoint files written")
-    } finally {
-      spark.conf.unset("graft.checkpoint.mode")
-      spark.conf.unset("graft.checkpoint.dir")
+  // runs before the reliable-mode test, which sets the shared SparkContext's
+  // checkpoint dir for the rest of the JVM
+  test("unknown mode and missing dir fail loudly") {
+    val df = Seq((1L, 2L)).toDF("src", "dst")
+    for (mode <- Seq(Lineage.ModeKey, "graft.checkpoint.mode")) {
+      spark.conf.set(mode, "turbo")
+      try intercept[IllegalArgumentException] { Lineage.cut(df) }
+      finally spark.conf.unset(mode)
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.conf.set(mode, "reliable")
+      try {
+        val e = intercept[IllegalStateException] { Lineage.cut(df) }
+        assert(e.getMessage.contains(Lineage.DirKey))
+      } finally spark.conf.unset(mode)
     }
   }
 
-  test("unknown mode and missing dir fail loudly") {
-    val df = Seq((1L, 2L)).toDF("src", "dst")
-    spark.conf.set("graft.checkpoint.mode", "turbo")
-    try intercept[IllegalArgumentException] { Lineage.cut(df) }
-    finally spark.conf.unset("graft.checkpoint.mode")
-    // missing dir: only when the context has no checkpoint dir already
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      spark.conf.set("graft.checkpoint.mode", "reliable")
-      try intercept[IllegalStateException] { Lineage.cut(df) }
-      finally spark.conf.unset("graft.checkpoint.mode")
+  test("reliable mode matches local mode bit-for-bit and writes checkpoint files") {
+    val Seq(dir, oldKeyDir) = Seq("graft-ckpt", "graft-ckpt-old").map { name =>
+      val d = java.nio.file.Files.createTempDirectory(name).toFile
+      d.deleteOnExit()
+      d
+    }
+    val local = runIteratives()
+    spark.conf.set(Lineage.ModeKey, "reliable")
+    spark.conf.set(Lineage.DirKey, dir.getAbsolutePath)
+    spark.conf.set("graft.checkpoint.dir", oldKeyDir.getAbsolutePath)
+    try {
+      val reliable = runIteratives()
+      assert(reliable == local)
+      // the reliable path was actually exercised: RDD checkpoint data on
+      // disk, under the prefixed key's dir
+      def countFiles(f: java.io.File): Int =
+        if (f.isFile) 1 else Option(f.listFiles()).toSeq.flatten.map(countFiles).sum
+      assert(countFiles(dir) > 0, "no checkpoint files written")
+      assert(countFiles(oldKeyDir) == 0, "the unprefixed key won over the prefixed one")
+    } finally {
+      Seq(Lineage.ModeKey, Lineage.DirKey, "graft.checkpoint.dir").foreach(spark.conf.unset)
     }
   }
 }

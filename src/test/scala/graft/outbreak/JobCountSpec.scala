@@ -4,11 +4,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.queries.PipelineQueries
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Spark-job counts of the outbreak model fit and of an app increment,
+/** Spark-job counts of the outbreak fit, the app's state load and increment,
   * pinned as upper bounds. On tables of a few hundred rows the fit's cost
   * is job scheduling, not arithmetic, so a change that adds jobs per fit
   * is a regression even when the outputs stay identical. Each bound is
@@ -82,6 +87,36 @@ class JobCountSpec extends SparkTestBase {
     val jobs = jobsOf(IncrementalOutbreak.saveState(spark, dir, model, state))
     daily.unpersist()
     assert(jobs <= 2, s"saveState ran $jobs jobs")
+  }
+
+  test("loadState of a saved state: 1 job, the model row's") {
+    val (_, model, state) = IncrementalOutbreak.fitFull(spark,
+      IncrementalOutbreakSpec.mkDaily(spark, 1 to 30), IncrementalOutbreakSpec.terms)
+    val dir = java.nio.file.Files.createTempDirectory("load-jobs").toString
+    IncrementalOutbreak.saveState(spark, dir, model, state)
+    var loaded: Option[(IncrementalOutbreak.OutbreakModel, DataFrame)] = None
+    val jobs = jobsOf { loaded = IncrementalOutbreak.loadState(spark, dir) }
+    assert(jobs == 1, s"loadState ran $jobs jobs")
+    assert(loaded.map(_._1) == Some(model))
+    assert(loaded.get._2.collect().toSet == state.collect().toSet)
+  }
+
+  test("loadState of a missing state: None, 0 jobs, nothing logged") {
+    val dir = java.nio.file.Files.createTempDirectory("load-missing").toString
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("load-missing", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    var loaded: Option[(IncrementalOutbreak.OutbreakModel, DataFrame)] = null
+    val jobs = try jobsOf { loaded = IncrementalOutbreak.loadState(spark, s"$dir/state") }
+      finally { root.removeAppender(capture); capture.stop() }
+    assert(loaded == None)
+    assert(jobs == 0, s"loadState ran $jobs jobs")
+    assert(logged.isEmpty, s"loadState logged: $logged")
   }
 
   test("one increment on IncrementalOutbreakSpec's 30-day table plus 3 days: " +

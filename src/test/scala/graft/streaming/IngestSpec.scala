@@ -88,6 +88,12 @@ class IngestSpec extends SparkTestBase {
     assert(out.exists(_._3 == "Sore_throat"))
   }
 
+  test("landingSchema is the schema dailyAggregate emits, field by field") {
+    val daily = Ingest.dailyAggregate(MemoryStream[Raw](spark).toDF())
+    assert(daily.schema.map(f => f.name -> f.dataType) ==
+      Ingest.landingSchema.map(f => f.name -> f.dataType))
+  }
+
   test("parseJson unmarshals the producer contract in one pass") {
     val raw = Seq(
       """{"datetime":"2020-01-01T00:01:00","kw":"Cough","region":"US","value":12.0}""")
