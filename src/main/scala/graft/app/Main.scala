@@ -1,9 +1,8 @@
 package graft.app
 
-import graft.outbreak.IncrementalOutbreak
+import graft.outbreak.{AnomalyScorer, IncrementalOutbreak}
 import graft.streaming.Ingest
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{abs, col}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Application wiring — the reference's `main()` (EP1 + EP2) with
@@ -82,7 +81,7 @@ object Main {
     val zThreshold = arg(args, "--threshold").map(_.toDouble).getOrElse(2.0)
 
     def writeAnomalies(scores: DataFrame, overwriteAll: Boolean): Unit =
-      scores.where(abs(col("score")) > zThreshold)
+      AnomalyScorer.outliers(scores, zThreshold)
         // dynamic: an incremental batch rewrites only its own date
         // partitions (also what makes at-least-once re-delivery
         // idempotent); static: a full refit truncates stale partitions

@@ -80,11 +80,6 @@ object TextFunctions {
           i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*)))
     })
 
-  /** One MinHash value over the n-gram shingle set (seeded MD5 family). */
-  def minhashShingle(text: Column, n: Int, seed: Int): Column =
-    array_min(transform(shingles(text, n),
-      sh => md5(concat(lit(s"$seed|"), sh))))
-
   /** One MinHash value: min over the distinct-token set of a seeded MD5.
     * Lexicographic min over hex digests is a valid min-wise hash family;
     * the seed is prefixed so the k hash functions are independent. */
@@ -96,17 +91,6 @@ object TextFunctions {
     * would otherwise be re-split per hash function). */
   def minhashOfTokens(toks: Column, seed: Int): Column =
     array_min(transform(toks, t => md5(concat(lit(s"$seed|"), t))))
-
-  /** [[bandKey]] over a pre-tokenized distinct-token array. */
-  def bandKeyOfTokens(toks: Column, band: Int, bandSize: Int): Column = {
-    val parts = (0 until bandSize).map(i =>
-      minhashOfTokens(toks, band * bandSize + i))
-    md5(concat_ws("|", parts: _*))
-  }
-
-  /** xxhash64 variant of [[minhashOfTokens]] (production-speed family). */
-  def fastMinhashOfTokens(toks: Column, seed: Int): Column =
-    array_min(transform(toks, t => xxhash64(lit(seed), t)))
 
   // ---- Kirsch–Mitzenmacher double-hashing minhash family ----------------
   //
@@ -157,14 +141,6 @@ object TextFunctions {
   def dhBandKey(hashPairs: Column, band: Int, bandSize: Int): Column =
     md5(concat_ws("|", (0 until bandSize).map(i =>
       dhMinhash(hashPairs, band * bandSize + i).cast("string")): _*))
-
-  /** Production-speed MinHash: xxhash64 with a seed column instead of MD5
-    * string digests — ~an order of magnitude less hash work, Long min
-    * instead of string min. Not DuckDB-replicable (different hash family),
-    * so oracle-checked paths keep the MD5 family; semantics (min-wise
-    * independent family) are identical. */
-  def fastMinhash(text: Column, seed: Int): Column =
-    bindOnce(distinctTokens(text))(fastMinhashOfTokens(_, seed))
 
   /** MinHash signature of `k` hashes. */
   def minhashSignature(text: Column, k: Int): Seq[Column] =

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-/** Persisted EXACT-distinct bitmap store — [[SketchStore]]'s exact
-  * sibling. Per key, the id set compresses to a dense bitmap (one bit
+/** Persisted EXACT-distinct bitmap store — the exact sibling of q151's
+  * HyperLogLog sketches. Per key, the id set compresses to a dense bitmap (one bit
   * per id) written partition-per-epoch; read-time union is bytewise
   * OR and the answer is an exact popcount, not an estimate. The trade
   * against HLL is explicit: bitmap size grows with the ID DOMAIN
@@ -119,14 +119,6 @@ object BitmapStore {
     df.groupBy(keyCols.map(col): _*)
       .agg(udaf(new IdBitmapAgg, Encoders.scalaLong)(col(valueCol))
         .as("bitmap"))
-
-  /** Bitmap `df`'s epoch and land it at `path/__batch=<epoch>` —
-    * rename-free idempotent like [[SketchStore.append]]: a replay
-    * rewrites byte-identical bitmaps. */
-  def append(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      path: String, epoch: Long): Unit =
-    bitmaps(df, keyCols, valueCol)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/__batch=$epoch")
 
   /** Union every epoch's bitmaps per key: (keys…, n_epochs,
     * n_distinct) — EXACT, and cost proportional to the store, never

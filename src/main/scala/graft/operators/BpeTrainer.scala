@@ -40,13 +40,6 @@ object BpeTrainer {
     if (cmp != 0) cmp else x.length - y.length
   }
 
-  /** One codepoint per symbol (a surrogate pair stays whole) — matches
-    * the training histogram's `split(w, "")`, which is codepoint-based;
-    * splitting on UTF-16 code units would break non-BMP symbols so
-    * trained merges never apply at segmentation. */
-  private[operators] def codepointSyms(w: String): Seq[String] =
-    w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
-
   /** Left-to-right non-overlapping application of one merge — the BPE
     * greedy rule ("a a a" under (a,a) becomes ["aa", "a"]). */
   private[operators] def applyMerge(syms: Seq[String], l: String, r: String): Seq[String] = {
@@ -169,22 +162,5 @@ object BpeTrainer {
       }
     }
     merges.toSeq.toDF("rank", "left", "right", "pair_count")
-  }
-
-  /** Segment `textCol` with an already-trained merge table (collected to
-    * the driver — merge tables are a few thousand rows by construction):
-    * replays the merges in rank order per word. A narrow map, exactly as
-    * parallel as the scan; the inverse artifact check of [[train]]. */
-  def segment(docs: DataFrame, textCol: String, mergeTable: Array[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val merges = spark.sparkContext.broadcast(mergeTable)
-    val segment1 = (w: String) =>
-      merges.value.foldLeft(codepointSyms(w) :+ Eow) {
-        case (syms, (l, r)) => applyMerge(syms, l, r)
-      }
-    val f = udf((text: String) =>
-      text.split(" ").filter(_.nonEmpty).flatMap(segment1))
-    docs.withColumn("pieces", f(col(textCol)))
   }
 }

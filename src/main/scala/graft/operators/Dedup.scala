@@ -81,7 +81,7 @@ object Dedup {
     // (id, band, bucket)-only lane table instead spreads pair GENERATION
     // across the left side's partitions — hot buckets parallelize. At a
     // scale where lanes outgrow broadcast, disable and pre-split hot
-    // buckets (SkewJoin.saltedJoin pattern) instead.
+    // buckets (salt the hot keys) instead.
     val r = if (broadcastLanes) broadcast(right) else right
     // spread the probe side round-robin first: a small cached input often
     // sits in one partition, which would serialize all pair emission
@@ -160,15 +160,7 @@ object Dedup {
     * (proven in IncrementalDedupSpec); a survivors-only index silently
     * diverges from it. */
   def minhashIndex(df: DataFrame, idCol: String, textCol: String,
-      bands: Int = 8, bandSize: Int = 3): DataFrame =
-    minhashIndexWithCache(df, idCol, textCol, bands, bandSize)._1
-
-  /** [[minhashIndex]] plus its internal cache handle, for scoped callers
-    * that must release EVERY persisted frame they caused
-    * ([[incrementalMinhashKeepBucketedScoped]]). */
-  private[graft] def minhashIndexWithCache(df: DataFrame, idCol: String,
-      textCol: String, bands: Int = 8, bandSize: Int = 3)
-      : (DataFrame, DataFrame) = {
+      bands: Int = 8, bandSize: Int = 3): DataFrame = {
     val spread = df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
     // cache boundary before the 8-way band-key fan-out, as in lshKeep:
     // CollapseProject would otherwise re-inline tokenize+md5 into every
@@ -178,9 +170,9 @@ object Dedup {
         sort_array(T.distinctTokens(col(textCol))).as("__toks"))
       .withColumn("__hp", T.md5HashPairs(col("__toks")))
       .cache()
-    (toks.select(col(idCol) +: col("__toks") +:
+    toks.select(col(idCol) +: col("__toks") +:
       (0 until bands).map(b =>
-        T.dhBandKey(col("__hp"), b, bandSize).as(s"__b$b")): _*), toks)
+        T.dhBandKey(col("__hp"), b, bandSize).as(s"__b$b")): _*)
   }
 
   /** Incremental near-dup dedup: admit the subset of `incoming` that is
@@ -448,233 +440,5 @@ object Dedup {
       .select(col("__b_id").as(idCol)).distinct()
 
     drops1.unionByName(drops2).distinct()
-  }
-
-  /** Persist a [[minhashIndex]] as a PRUNABLE on-disk store — the 100 TB
-    * layout the scaladoc above prescribes, realized: lane rows
-    * (id, bucket) land `partitionBy(__band, __pfx)` where `__pfx` is the
-    * bucket's first hex nibble, and token arrays land once per doc in a
-    * separate `toks` table (lanes stay a few dozen bytes per row; the
-    * heavy arrays are never ×bands duplicated). An incremental probe
-    * then reads ONLY the (band, prefix) partitions its batch actually
-    * touches ([[incrementalMinhashKeepPruned]]) instead of scanning the
-    * whole index per batch — the difference between per-batch cost
-    * growing with history size and growing with batch size.
-    * `mode=append` supports batch-at-a-time accumulation. */
-  def writeLaneIndex(index: DataFrame, idCol: String, path: String,
-      bands: Int = 8): Unit = {
-    writeLanes(index, idCol, path, bands)
-    index.select(col(idCol), col("__toks"))
-      .write.mode("append").parquet(s"$path/toks")
-  }
-
-  /** [[writeLaneIndex]] with the token arrays in an id-BUCKETED,
-    * id-sorted catalog table instead of a flat parquet dir: the verify
-    * fetch can then push the batch's candidate-id set down as an
-    * `IN` filter, and Spark prunes whole bucket FILES (plus row groups
-    * within them, thanks to the sort) — the toks side of a probe stops
-    * scaling with history size just like the lane side already does.
-    * Append-mode on the table accumulates batches, mirroring the lane
-    * layout's epoch appends. */
-  def writeLaneIndexBucketed(index: DataFrame, idCol: String, path: String,
-      toksTable: String, bands: Int = 8, toksBuckets: Int = 64): Unit = {
-    writeLanes(index, idCol, path, bands)
-    index.select(col(idCol), col("__toks"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .bucketBy(toksBuckets, idCol).sortBy(idCol)
-      .saveAsTable(toksTable)
-  }
-
-  private def writeLanes(index: DataFrame, idCol: String, path: String,
-      bands: Int): Unit =
-    laneView(index, idCol, bands)
-      .select(col(idCol), col("__bucket"), col("__band"), col("__pfx"))
-      .write.partitionBy("__band", "__pfx")
-      .mode("append").parquet(s"$path/lanes")
-
-  /** Lanes + the partition-prefix column the on-disk layout keys on. */
-  private[graft] def laneView(sig: DataFrame, idCol: String, bands: Int): DataFrame =
-    bandLanes(sig, idCol, bands)
-      .withColumn("__pfx", substring(col("__bucket"), 1, 1))
-
-  /** History lane scan restricted to the batch's (band, prefix) set —
-    * the predicate lands on partition columns, so only matched
-    * directories are read (PrunedIndexSpec asserts it on the plan and
-    * on the touched files). */
-  private[graft] def prunedLaneScan(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, incLanes: DataFrame,
-      extraCond: Column = lit(true),
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    // the batch's partition fingerprint: ≤ bands × 16 rows, driver-safe
-    val probes = incLanes.select("__band", "__pfx").distinct()
-      .collect().map(r => (r.getInt(0), r.getString(1)))
-    val cond = probes.map { case (b, p) =>
-        col("__band") === b && col("__pfx") === p
-      }.reduceOption(_ || _).getOrElse(lit(false))
-    // an explicit schema (writer-derived) keeps the scan alive when a
-    // concurrent lister catches the store footerless — inference would
-    // hard-fail the whole query on that transient
-    val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-    reader.parquet(s"$indexPath/lanes").where(cond && extraCond)
-  }
-
-  /** [[incrementalMinhashKeep]] against a [[writeLaneIndex]] store: the
-    * batch's distinct (band, prefix) set — bounded by batch×bands — is
-    * collected and pushed as a PARTITION FILTER, so the history lane
-    * scan reads only matched directories (asserted in PrunedIndexSpec).
-    * Token arrays are fetched for verification only; at full scale
-    * bucket the toks table by id so that fetch prunes too. Admission
-    * rule identical to the in-memory path: existing docs always win,
-    * min-id within the batch. */
-  def incrementalMinhashKeepPruned(indexPath: String, incoming: DataFrame,
-      idCol: String, textCol: String, bands: Int = 8, bandSize: Int = 3,
-      threshold: Double = 0.5,
-      incomingIndex: Option[DataFrame] = None): DataFrame = {
-    val spark = incoming.sparkSession
-    val incSig = incomingIndex
-      .getOrElse(minhashIndex(incoming, idCol, textCol, bands, bandSize))
-      .cache()
-    val incLanes = laneView(incSig, idCol, bands).cache()
-    val exLanes = prunedLaneScan(spark, indexPath, incLanes)
-    val exToks = spark.read.parquet(s"$indexPath/toks")
-    prunedAdmit(exLanes, exToks, incoming, incSig, incLanes, idCol, threshold)
-  }
-
-  /** Admit core of the pruned-store path (the function above): one band
-    * join over the (already partition-pruned) history lanes + the batch's
-    * own lanes, one Jaccard verify round. History always wins; min-id
-    * within the batch. */
-  private[graft] def prunedAdmit(exLanes: DataFrame, exToks: DataFrame,
-      incoming: DataFrame, incSig: DataFrame, incLanes: DataFrame,
-      idCol: String, threshold: Double): DataFrame = {
-    val pairs = prunedPairs(exLanes, incLanes, idCol)
-    val aSig = exToks.select(col(idCol), col("__toks"))
-      .unionByName(incSig.select(col(idCol), col("__toks")))
-    val drops = jaccardDrops(pairs, aSig, incSig.select(col(idCol), col("__toks")),
-      idCol, threshold, broadcastA = false, broadcastB = true)
-    incoming.join(drops, Seq(idCol), "left_anti")
-  }
-
-  /** The one candidate join of the pruned-store paths: history lanes
-    * (already partition-pruned) union the batch's own lanes, probed
-    * against the broadcast batch lanes. History always wins (no id
-    * guard); min-id within the batch. */
-  private[graft] def prunedPairs(exLanes: DataFrame, incLanes: DataFrame,
-      idCol: String): DataFrame =
-    exLanes.select(col(idCol), col("__band"), col("__bucket"))
-      .withColumn("__new", lit(false))
-      .unionByName(incLanes.select(col(idCol), col("__band"), col("__bucket"))
-        .withColumn("__new", lit(true)))
-      .join(broadcast(incLanes
-          .select(col(idCol).as("__b_id"), col("__band"), col("__bucket"))),
-        Seq("__band", "__bucket"))
-      .where(!col("__new") || col(idCol) < col("__b_id"))
-      .select(col(idCol).as("__a_id"), col("__b_id"))
-      .distinct()
-
-  /** Bucket-pruned fetch from a [[writeLaneIndexBucketed]] toks table:
-    * the candidate-id `IN` filter lands on the bucketing column, so the
-    * scan reads only the bucket files (and, via the in-file id sort,
-    * row groups) that can hold a candidate.
-    *
-    * The planner's auto-bucketed-scan pass disables bucketed reading
-    * for a bare filter query (nothing downstream wants the bucket
-    * distribution) and bucket pruning is lost with it — so the fetch is
-    * MATERIALIZED here, eagerly, under a scoped conf that keeps the
-    * bucketed scan on. The result is bounded by the candidate-id set
-    * (the premise of a pointed fetch), the session conf is restored
-    * before returning, and downstream joins read the cache. Callers
-    * own the unpersist (the query harness clears per-query caches). */
-  private[graft] def pointedToks(spark: org.apache.spark.sql.SparkSession,
-      toksTable: String, idCol: String, ids: Seq[Any]): DataFrame =
-    // the conf flip is session-global: serialize fetches so concurrent
-    // callers (several foreachBatch loops share one session) cannot
-    // interleave set/restore and strand the session with the scan
-    // optimization off
-    pointedFetchLock.synchronized {
-      val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val old = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try {
-        val df = spark.table(toksTable).where(col(idCol).isin(ids: _*)).cache()
-        df.count() // cache fill runs the bucket-pruned scan inside the scope
-        df
-      } finally spark.conf.set(key, old)
-    }
-
-  private val pointedFetchLock = new Object
-
-  /** [[incrementalMinhashKeepPruned]] against a [[writeLaneIndexBucketed]]
-    * store: identical admission rule, but the verify-time token fetch is
-    * POINTED — the (bounded: ≤ candidate pairs) distinct history-side ids
-    * are collected and pushed down as a bucket-pruning filter, so BOTH
-    * history touches of a probe (lanes and toks) read only what the
-    * batch's band keys and candidates select, however large history has
-    * grown. Batches beyond `maxPointedFetch` candidate ids fall back to
-    * the full-table join (same result; a batch that large is a backfill,
-    * not an increment).
-    *
-    * CACHING CONTRACT: this builds three internal caches (plus the
-    * pointed fetch) that stay persisted until the caller's
-    * `clearCache()`; loops that probe forever must use
-    * [[incrementalMinhashKeepBucketedScoped]], which releases them. */
-  def incrementalMinhashKeepBucketed(indexPath: String, toksTable: String,
-      incoming: DataFrame, idCol: String, textCol: String, bands: Int = 8,
-      bandSize: Int = 3, threshold: Double = 0.5,
-      incomingIndex: Option[DataFrame] = None,
-      maxPointedFetch: Int = 100000): DataFrame =
-    bucketedKeepWithCaches(indexPath, toksTable, incoming, idCol, textCol,
-      bands, bandSize, threshold, incomingIndex, maxPointedFetch)._1
-
-  /** [[incrementalMinhashKeepBucketed]] as a scoped resource for the
-    * probe-forever usage (a long-lived loop probing batch after batch):
-    * runs `use` on the admitted frame and ALWAYS unpersists the three
-    * internal caches plus the pointed-toks fetch before returning, so a
-    * loop that never ends never accumulates cached frames. One-shot
-    * callers may keep using the plain variant — there the per-query
-    * harness `clearCache()` is the documented owner of the release. */
-  def incrementalMinhashKeepBucketedScoped[A](indexPath: String,
-      toksTable: String, incoming: DataFrame, idCol: String, textCol: String,
-      bands: Int = 8, bandSize: Int = 3, threshold: Double = 0.5,
-      incomingIndex: Option[DataFrame] = None,
-      maxPointedFetch: Int = 100000)(use: DataFrame => A): A = {
-    val (admitted, caches) = bucketedKeepWithCaches(indexPath, toksTable,
-      incoming, idCol, textCol, bands, bandSize, threshold, incomingIndex,
-      maxPointedFetch)
-    try use(admitted)
-    finally caches.foreach(_.unpersist())
-  }
-
-  private def bucketedKeepWithCaches(indexPath: String, toksTable: String,
-      incoming: DataFrame, idCol: String, textCol: String, bands: Int,
-      bandSize: Int, threshold: Double, incomingIndex: Option[DataFrame],
-      maxPointedFetch: Int): (DataFrame, Seq[DataFrame]) = {
-    val spark = incoming.sparkSession
-    val (incSigRaw, idxCaches) = incomingIndex match {
-      case Some(idx) => (idx, Nil)
-      case None =>
-        val (idx, toksCache) =
-          minhashIndexWithCache(incoming, idCol, textCol, bands, bandSize)
-        (idx, Seq(toksCache))
-    }
-    val incSig = incSigRaw.cache()
-    val incLanes = laneView(incSig, idCol, bands).cache()
-    val exLanes = prunedLaneScan(spark, indexPath, incLanes)
-    val pairs = prunedPairs(exLanes, incLanes, idCol).cache()
-    // the batch's own ids resolve from incSig below; only history ids
-    // need fetching, but passing the full set is harmless (non-matching
-    // ids just select nothing) and saves an anti-join
-    val aIds = pairs.select("__a_id").distinct()
-      .limit(maxPointedFetch + 1).collect().map(_.get(0)).toSeq
-    val (exToks, fetchCaches) =
-      if (aIds.size <= maxPointedFetch)
-        { val t = pointedToks(spark, toksTable, idCol, aIds); (t, Seq(t)) }
-      else (spark.table(toksTable), Nil)
-    val aSig = exToks.select(col(idCol), col("__toks"))
-      .unionByName(incSig.select(col(idCol), col("__toks")))
-    val drops = jaccardDrops(pairs, aSig, incSig.select(col(idCol), col("__toks")),
-      idCol, threshold, broadcastA = false, broadcastB = true)
-    (incoming.join(drops, Seq(idCol), "left_anti"),
-      Seq(incSig, incLanes, pairs) ++ fetchCaches ++ idxCaches)
   }
 }

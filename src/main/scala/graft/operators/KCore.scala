@@ -122,40 +122,4 @@ object KCore {
     for (_ <- 0 until rounds) e = step(e, k)
     survivors(e, k)
   }
-
-  /** Core number (max k whose k-core contains the node) for every node
-    * of `edges`, computed by ascending peeling: the (k+1)-core is
-    * peeled from the k-core's survivor edges, so total work is the sum
-    * of shrinking subgraphs, not `kMax` full passes. Nodes with
-    * coreness 0 (isolated after self-loop removal) are absent. */
-  def coreness(edges: DataFrame, kMax: Int = 32, maxIter: Int = 50,
-      failOnMaxIter: Boolean = true): DataFrame = {
-    var e = clean(edges, assumeCanonical = false)
-    // cores are nested, so coreness = max k whose core holds the node:
-    // collect the per-k membership frames (each already checkpointed)
-    // and take one grouped max at the end
-    var layers = List.empty[DataFrame]
-    var k = 1
-    var done = false
-    while (!done && k <= kMax) {
-      val core = kcore(e, k, maxIter, failOnMaxIter,
-        assumeCanonical = true).cut()
-      if (core.isEmpty) done = true
-      else {
-        layers ::= core.select(col("id"), lit(k).as("k"))
-        // restrict the edge set to this core before peeling for k+1
-        val ids = core.select("id")
-        e = e.join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .cut()
-        k += 1
-      }
-    }
-    layers match {
-      case Nil => edges.sparkSession.range(0)
-        .select(col("id"), lit(0).as("coreness")).limit(0)
-      case l => l.reduce(_ unionByName _)
-        .groupBy("id").agg(max("k").as("coreness"))
-    }
-  }
 }

@@ -1,25 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Persisted positional inverted index — the at-rest layout behind the
-  * q143 phrase query: postings (doc, position) land partitioned by
-  * token PREFIX, so a phrase probe reads only its terms' prefix
-  * directories (PartitionFilters — spec-asserted on files actually
-  * touched) instead of scanning the corpus-wide postings table. The
-  * in-partition sort (tok, doc, pos) keeps each term's rows co-located
-  * for row-group pruning on top of the directory pruning.
-  *
-  * The layout is [[Dedup.writeLaneIndex]]'s pattern applied to IR:
-  * write once, probe forever, per-probe cost ∝ the probed terms'
-  * postings — never the index size.
+/** Positional postings and the adjacent-pair phrase match behind the
+  * q143 phrase query. Each postings row carries its token's PREFIX
+  * (`__pfx`), and a phrase term selects on it before the token itself,
+  * so a postings table partitioned by prefix is read only in its terms'
+  * prefix directories.
   */
 object PostingsStore {
 
   /** (doc_id, pos, tok, __pfx) postings rows — positions 1-based, empty
-    * tokens dropped; a pure narrow projection shared by the batch
-    * query and the store writer. */
+    * tokens dropped; a pure narrow projection. */
   private[graft] def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "pos", "tok")
@@ -43,19 +36,4 @@ object PostingsStore {
       .agg(count(lit(1)).as("n_matches"),
         min(col("pos")).cast("long").as("first_pos"))
   }
-
-  /** Materialize the index: one directory per token prefix, postings
-    * sorted (tok, doc, pos) within. The ONE shuffle is the prefix
-    * co-location before the partitioned write. */
-  def write(docs: DataFrame, path: String): Unit =
-    postings(docs)
-      .repartition(col("__pfx"))
-      .sortWithinPartitions("__pfx", "tok", "doc_id", "pos")
-      .write.partitionBy("__pfx").mode("overwrite").parquet(path)
-
-  /** Phrase probe against a written store — only the two terms' prefix
-    * partitions are read. */
-  def phrase(spark: SparkSession, path: String, first: String,
-      second: String): DataFrame =
-    phraseOn(spark.read.parquet(path), first, second)
 }

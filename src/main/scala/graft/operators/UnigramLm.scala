@@ -151,17 +151,4 @@ object UnigramLm {
         BpeTrainer.utf8Order))
       .toDS()
   }
-
-  /** Segment `docs(textCol)` words with a trained vocabulary — the
-    * apply side, exposed for fertility/coverage audits. Returns
-    * (word, pieces) per word TYPE. */
-  def encode(words: Dataset[(String, Long)], pieces: Dataset[Piece],
-      maxPieceLen: Int = 8): Dataset[(String, Seq[String])] = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    val scores = pieces.collect().map(p => p.piece -> p.logp_micro).toMap
-    val bc = spark.sparkContext.broadcast(scores)
-    val maxLen = maxPieceLen
-    words.map { case (w, _) => (w, viterbi(w, bc.value, maxLen)) }
-  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.feature.{PCA, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.{DenseMatrix, Vector, Vectors}
 import org.apache.spark.mllib.clustering.{DriverFit, DriverKMeans}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -432,9 +432,6 @@ object AnomalyScorer {
     if (sil.isEmpty) 0.0 else sil.sum / sil.size
   }
 
-  def selectK(features: DataFrame, kRange: Range = 2 to 6, seed: Long = 1L): Int =
-    selectKModel(features, kRange, seed)._1
-
   /** The distance to a z-score divides by this: the std, or 1 where the
     * std is 0 or undefined. */
   private def zScale(std: Double): Double =
@@ -450,13 +447,6 @@ object AnomalyScorer {
     val dists = centers.map(c => call_function("graft_sqdist", vec, typedLit(c)))
     if (dists.length == 1) dists.head else least(dists: _*)
   }
-
-  /** Fit KMeans(k, seed) and return `(date, region, score)` where score is
-    * the z-scored squared centroid distance. */
-  def kmeansScores(spark: SparkSession, features: DataFrame, k: Int,
-      seed: Long = 1L): DataFrame =
-    scoresWithModel(features,
-      new KMeans().setK(k).setSeed(seed).fit(features).clusterCenters)._1
 
   /** Score `features` against fitted cluster centers (no re-fit, no
     * transform UDF): `(date, region, score)`, mu and sigma. The distance

@@ -5,7 +5,6 @@ import java.sql.Date
 import graft.operators.IsolationForest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Per-region model fan-out (SURVEY §2.11 M6/M7).
   *
@@ -18,12 +17,6 @@ import org.apache.spark.sql.types._
   * decomposition.
   */
 object RegionScorers {
-
-  val outputSchema: StructType = StructType(Array(
-    StructField("date", DateType),
-    StructField("region", StringType),
-    StructField("predictedLabel", DoubleType),
-    StructField("outlierScore", DoubleType)))
 
   /** Fit per region on history (`date < scoreDate`), score the rows of
     * `scoreDate` — reference `handleBatchProcessing` semantics

@@ -194,7 +194,7 @@ object Analytics {
     * latest-state compactions à la q80, so the join is key-unique — no
     * row explosion). This is the compaction kernel a lakehouse MERGE
     * INTO lowers to; at scale both sides pre-bucket on user_id
-    * ([[graft.sinks.Sinks.writeBucketed]]) and the join is exchange-free. */
+    * (`bucketBy`) and the join is exchange-free. */
   def q93MergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("value"),
@@ -461,22 +461,20 @@ object Analytics {
     * adjacency is an equi-join on (doc, aligned position) — never a
     * scan of non-matching tokens past the filter. At rest this layout
     * is the classic searchable index: partition postings by token
-    * prefix and both probes become partition-pruned reads (the
-    * Dedup.writeLaneIndex pattern). Positions are 1-based in the
-    * output. */
+    * prefix and both probes become partition-pruned reads.
+    * Positions are 1-based in the output. */
   def q143PhraseSearch(s: SparkSession, dir: String): DataFrame =
     q143PhraseSearchOn(Tables.documents(s, dir))
 
   /** [[q143PhraseSearch]] over any (doc_id, text) frame — the postings
     * derivation and adjacency join live in
-    * [[graft.operators.PostingsStore]], which also persists the same
-    * rows as a prefix-partitioned index for pruned standing probes. */
+    * [[graft.operators.PostingsStore]]. */
   def q143PhraseSearchOn(docs: DataFrame): DataFrame =
     graft.operators.PostingsStore.phraseOn(
       graft.operators.PostingsStore.postings(docs), PhraseFirst, PhraseSecond)
 
   /** q144 — join-key skew audit: the measurement half of skew handling
-    * ([[graft.operators.SkewJoin]] is the mitigation half). One
+    * (salting the hot keys is the mitigation half). One
     * combinable key histogram, one 3-number stats row broadcast back,
     * and a TakeOrdered top-10 of the heaviest keys with their corpus
     * share — the numbers that decide salting factors and AQE skew

@@ -20,8 +20,8 @@ object Behavioral {
   private def epochS = unix_timestamp(col("ts"))
 
   /** Batch sessionization: a gap > `gapMinutes` between a user's
-    * consecutive events opens a new session (the batch analog of the
-    * streaming `session_window` in Ingest.sessionAggregate). Classic
+    * consecutive events opens a new session (the batch analog of
+    * Spark's streaming `session_window`). Classic
     * lag → is-new-flag → running-sum session index; one shuffle on
     * user_id serves both windows. */
   def q71Sessionize(s: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {

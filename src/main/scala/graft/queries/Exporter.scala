@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => T}
@@ -17,7 +17,7 @@ import graft.sources.Tables
   * q154 is the pure PLAN of that pipeline (who survives, how they pack)
   * and is hash-checked end-to-end: its DuckDB oracle composes the same
   * per-stage oracle CTEs, so a drift in ANY stage's semantics fails the
-  * gate. [[export]] materializes the plan to disk.
+  * gate.
   *
   * Stage-order semantics (deliberate, spec-pinned): the gate runs FIRST,
   * so rejected junk neither claims canonical spans nor votes in dedup;
@@ -90,31 +90,6 @@ object Exporter {
 
   def q154ExportPlan(s: SparkSession, dir: String): DataFrame =
     q154ExportPlanOn(Tables.documents(s, dir))
-
-  /** Materialize the export: survivor docs land as the hashed-shard
-    * layout under `outDir/shards` ([[ScalePipeline.writeShards]]) and
-    * the packing plan under `outDir/plan`; returns the funnel summary
-    * (docs surviving each stage — the lineage record an export job
-    * ships with its artifact). */
-  def export(docs: DataFrame, outDir: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val cleaned = cleanedOn(docs)
-    val survivors = survivorsOf(cleaned).cache()
-    ScalePipeline.writeShards(survivors, s"$outDir/shards")
-    val plan = packed(survivors)
-    plan.write.mode(SaveMode.Overwrite).parquet(s"$outDir/plan")
-    val nSeq = spark.read.parquet(s"$outDir/plan")
-      .select(count_distinct(struct(col("source"), col("seq_id"))))
-      .as[Long].head()
-    val summary = Seq(
-      ("input", docs.count()),
-      ("gated_cleaned", cleaned.count()),
-      ("survivors", survivors.count()),
-      ("sequences", nSeq))
-    survivors.unpersist()
-    summary.toDF("stage", "n")
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q154_export_plan" -> (q154ExportPlan _))

@@ -102,8 +102,8 @@ object Inference {
     * Scale shape: exact medians require a per-group sort — this query
     * accepts ONE shuffle keyed by event_type (bounded alphabet) where
     * each group sorts locally; for unbounded-cardinality keys the
-    * engine's GK sketch ([[graft.operators.SketchStore]], q48's
-    * exactness-gated `percentile_approx`) is the scale path. */
+    * engine's GK sketch (q48's exactness-gated `percentile_approx`)
+    * is the scale path. */
   def q163MadOutliers(s: SparkSession, dir: String): DataFrame =
     q163MadOutliersOn(Tables.events(s, dir))
 
@@ -291,8 +291,8 @@ object Inference {
     * Scale shape: candidate generation is a self-equi-join on the
     * blocking key (nation) — never all-pairs; at 100 TB the blocking
     * key is the audit's first knob and q144's skew profile the second
-    * (a hot block is exactly a hot join key; [[graft.operators.SkewJoin]]
-    * salts it). Scoring is embarrassingly parallel integer addition;
+    * (a hot block is exactly a hot join key, which salting splits).
+    * Scoring is embarrassingly parallel integer addition;
     * the global decision histogram is a 3-number broadcast. Output is
     * the top-50 pairs (deterministic order) with the histogram
     * attached — the reviewer-queue slice, not the full pair set. */

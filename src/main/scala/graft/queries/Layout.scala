@@ -17,12 +17,8 @@ import graft.sources.Tables
   * (user × day) plane, so single-user and single-day scans skip
   * all-but-a-few files on BOTH dimensions from ONE sort key.
   *
-  * [[graft.operators.ZOrder]] is the actual WRITER (rank-normalize →
-  * interleave → `repartitionByRange`, verified on real parquet by
-  * ZOrderSpec); this query is its oracle-checkable audit twin — the
-  * same Morton math expressed as pure integer div/mod SQL both engines
-  * can run (the two interleaves assign x/y to opposite parities, which
-  * is irrelevant to the box geometry being audited).
+  * The Morton math is pure integer div/mod SQL, so both engines run it
+  * and the audit is oracle-checkable.
   */
 object Layout {
 

@@ -231,7 +231,7 @@ object Mining {
     * joined on the key histogram. At 100 TB this is the go/no-go check
     * before a fact-fact join: `total_join_rows` says whether the
     * output explodes, and the top contributors name the skewed keys a
-    * salting pass (or [[graft.operators.SkewJoin]]) must split.
+    * salting pass must split.
     * Products are widened to decimal(38,0) before the integral divide
     * — two 1e10-row hot sides would overflow a Long contribution (the
     * q144 lesson, applied two-sided). */
@@ -326,20 +326,27 @@ object Mining {
     * for `docs`, computed exactly as [[q183PrefixJoinOn]] computes it
     * before deciding to run (exposed for audits and the predicted-vs-
     * true spec). */
-  def q183Preflight(docs0: DataFrame): Long = {
-    val T = graft.functions.TextFunctions
-    val docs = docs0.where(col("text").isNotNull)
+  def q183Preflight(docs0: DataFrame): Long =
+    prefixFanout(prefixTable(sortedTokens(docs0)))
+
+  /** `(doc_id, toks)`: each non-null doc's distinct tokens, sorted. */
+  private def sortedTokens(docs0: DataFrame): DataFrame =
+    docs0.where(col("text").isNotNull)
       .select(col("doc_id"),
-        sort_array(T.distinctTokens(col("text"))).as("toks"))
+        sort_array(graft.functions.TextFunctions.distinctTokens(col("text"))).as("toks"))
+
+  /** q183's prefix table `(tok, doc_id, n)` over a [[sortedTokens]]
+    * frame: each doc's first `n − (n+1) div 2 + 1` tokens in (global
+    * df, token) order, with its token count `n`. */
+  private def prefixTable(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(col("toks")).as("tok"))
     val dfreq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("tok"))
-    val pref = tok.join(dfreq, "tok")
+    tok.join(dfreq, "tok")
       .withColumn("rn", row_number().over(w))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
       .where(col("rn") <= col("n") - expr("(n + 1) div 2") + 1)
       .select(col("tok"), col("doc_id"), col("n"))
-    prefixFanout(pref)
   }
 
   /** [[q183PrefixJoin]] over any (doc_id, text) frame.
@@ -353,22 +360,10 @@ object Mining {
     * job no cluster should run unreviewed. */
   def q183PrefixJoinOn(docs0: DataFrame,
       pairBudget: Long = PrefixPairBudget): DataFrame = {
-    val T = graft.functions.TextFunctions
-    val docs = docs0.where(col("text").isNotNull)
-      .select(col("doc_id"),
-        sort_array(T.distinctTokens(col("text"))).as("toks"))
-      .cache()
-    val tok = docs.select(col("doc_id"), explode(col("toks")).as("tok"))
-    val dfreq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("tok"))
+    val docs = sortedTokens(docs0).cache()
     // cached: the candidate self-join references pref on BOTH sides,
     // and recomputing it costs a df join + per-doc window sort each time
-    val pref = tok.join(dfreq, "tok")
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .where(col("rn") <= col("n") - expr("(n + 1) div 2") + 1)
-      .select(col("tok"), col("doc_id"), col("n"))
-      .cache()
+    val pref = prefixTable(docs).cache()
     // pair-budget rail: the join's exact pre-filter fan-out, computed
     // from per-token prefix counts BEFORE any pair exists
     val nPairs = prefixFanout(pref)

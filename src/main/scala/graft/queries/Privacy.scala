@@ -38,10 +38,6 @@ object Privacy {
 
   // ---------------------------------------------------------------- q175
 
-  /** Geometric-mechanism scale: noise ~ two-sided geometric with
-    * α = e^(−ε) = 1/2, i.e. ε = ln 2 per released count. */
-  val DpEpsilonLog2: Int = 1
-
   /** q175 — ε-differentially-private statistics release: per-(source,
     * lang) document counts under two-sided geometric (discrete
     * Laplace) noise — the corpus-card numbers a data steward can

@@ -394,9 +394,6 @@ object ScalePipeline {
       .where(col("rk") <= k)
   }
 
-  /** Shard count for [[q112ShardManifest]] — one hex nibble. */
-  val NumShards = 16
-
   /** q112 — deterministic training-shard manifest: every doc is assigned
     * a shard (first md5 nibble — uniform, a pure value function) and a
     * pseudo-random in-shard position (independent salted hash), i.e. the
@@ -405,9 +402,7 @@ object ScalePipeline {
     * order fingerprint (md5 of the comma-joined doc ids in shard order) —
     * the artifact a trainer checks before streaming a shard, and the
     * lineage record that makes the shuffle auditable. One combinable
-    * aggregation; the hash order means NO global sort anywhere. The
-    * physical write is `partitionBy(shard)` on the same columns
-    * ([[writeShards]], spec-verified). */
+    * aggregation; the hash order means NO global sort anywhere. */
   def q112ShardManifest(s: SparkSession, dir: String): DataFrame =
     shardAssign(Tables.documents(s, dir))
       .groupBy("shard")
@@ -501,19 +496,6 @@ object ScalePipeline {
       .withColumn("__ord", graft.functions.TextFunctions
         .md5Hash60(concat(lit("ord:"), col("doc_id").cast("string"))))
       .withColumn("__n", graft.functions.TextFunctions.tokenCount(col("text")))
-
-  /** Materialize the shard layout: one directory per shard, docs stored
-    * in shuffle order. `partitionBy` routes rows by the shard column;
-    * within-file order comes from the range-free in-partition sort on
-    * the hash key — no global sort, no skew (hash-uniform shards). The
-    * ONE payload shuffle is the shard repartition; the helper columns
-    * are projected away before the write. */
-  def writeShards(docs: DataFrame, path: String): Unit =
-    shardAssign(docs)
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "__ord", "doc_id")
-      .drop("__n", "__ord")
-      .write.partitionBy("shard").mode("overwrite").parquet(path)
 
   /** q113 — epoch-mix materialization: balance the source mix by
     * REPLICATION (upsampling), the step that turns q78-style mixture

@@ -148,10 +148,14 @@ object TextVector {
           .as("mean_cos"))
   }
 
+  /** Datasketches lgConfigK of q151's sketches: 2^12 registers ≈ 0.8%
+    * relative error. */
+  private val HllLgK = 12
+
   /** q151 — partial→union sketch algebra as a query: per-(event_type,
     * month) HLL sketches union into the all-time distinct-user estimate,
-    * exactly what a [[graft.operators.SketchStore]] reader computes over
-    * persisted epochs. Like q48, the sketch internals can't cross-engine
+    * exactly what a reader of per-epoch persisted sketches computes.
+    * Like q48, the sketch internals can't cross-engine
     * compare, so the CONTRACT is the output: exact distinct (the oracle
     * recomputes it) + an in-query ±5% accuracy bool the oracle expects
     * TRUE — an out-of-tolerance sketch fails the gate. The partial pass
@@ -160,7 +164,7 @@ object TextVector {
   def q151SketchDistinct(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
     val parts = e.groupBy(col("event_type"), month(col("ts")).as("__epoch"))
-      .agg(hll_sketch_agg(col("user_id"), lit(graft.operators.SketchStore.LgK))
+      .agg(hll_sketch_agg(col("user_id"), lit(HllLgK))
         .as("__sk"))
     val merged = parts.groupBy("event_type")
       .agg(count(lit(1)).as("n_epochs"),

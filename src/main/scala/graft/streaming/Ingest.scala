@@ -78,22 +78,6 @@ object Ingest {
       .agg(sum("value").as("value"))
       .drop("window")
 
-  /** Sliding-window variant (SURVEY A1b — the reference's Python path uses
-    * a 60-day window sliding daily; each record lands in window/slide
-    * windows). Tumbling daily (above) is canonical; this is the config
-    * knob. Emits (window_start, window_end, region, kw, value). */
-  def slidingAggregate(parsed: DataFrame, windowLen: String = "60 days",
-      slide: String = "1 day", watermark: String = "1 hour"): DataFrame =
-    parsed
-      .withColumn("kw", regexp_replace(col("kw"), " ", "_"))
-      .withWatermark("datetime", watermark)
-      .groupBy(window(col("datetime"), windowLen, slide),
-        col("region"), col("kw"))
-      .agg(sum("value").as("value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("region"), col("kw"), col("value"))
-
   /** Start the single sink: persist the closed daily rows, then run the
     * batch analysis — both inside one foreachBatch so Kafka is read once
     * and both consumers see the same cached batch. foreachBatch delivery
@@ -117,69 +101,5 @@ object Ingest {
         } finally cached.unpersist()
         ()
       }
-      .start()
-
-  /** Session-window aggregation: activity bursts per (region, kw) where
-    * events within `gap` of each other merge into one session (beyond the
-    * reference's tumbling/sliding windows — completes the window-kind
-    * surface; SURVEY §2.9 notes "no session windows" in the reference). */
-  def sessionAggregate(parsed: DataFrame, gap: String = "30 minutes",
-      watermark: String = "1 hour"): DataFrame =
-    parsed
-      .withWatermark("datetime", watermark)
-      .groupBy(session_window(col("datetime"), gap), col("region"), col("kw"))
-      .agg(sum("value").as("value"), count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("region"), col("kw"), col("value"), col("n_events"))
-
-  /** Watermarked stream-stream inner join on a key plus an event-time
-    * interval: right-side events within `[left.ts - lag, left.ts]` match.
-    * Both sides carry watermarks so the join state is bounded — unbounded
-    * stream-stream joins are the classic state-explosion trap (SURVEY
-    * §2.9: absent from the reference; table stakes for the engine).
-    *
-    * Column contract: `left` has (ts, key, ...), `right` has
-    * (r_ts, key, ...). */
-  def intervalJoin(left: DataFrame, right: DataFrame, key: String,
-      lag: String = "1 hour", watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-    val r = right.withWatermark("r_ts", watermark)
-    l.join(r, l(key) === r(key) &&
-      col("r_ts") >= col("ts") - expr(s"INTERVAL $lag") &&
-      col("r_ts") <= col("ts"))
-      .drop(r(key))
-  }
-
-  /** Stream-static enrichment join: decorate each streamed record with
-    * dimension attributes. The static side is explicitly broadcast — on a
-    * cluster the dim ships once per executor and the stream NEVER
-    * shuffles, which is the only join shape that keeps per-micro-batch
-    * latency flat as stream volume grows. Left join ⇒ unmatched stream
-    * rows pass through with nulls (never silently dropped); the static
-    * plan is re-resolved every micro-batch, so a dim refreshed in place
-    * is picked up without restarting the query. */
-  def enrich(parsed: DataFrame, dim: DataFrame, key: String): DataFrame =
-    parsed.join(broadcast(dim), Seq(key), "left")
-
-  /** Streaming exact-deduplication: drop re-deliveries of the same key(s)
-    * with state bounded by the watermark — the streaming form of the
-    * LLM-pipeline exact-dedup operator. At scale the state store holds only
-    * keys younger than the watermark (RocksDB provider recommended via
-    * `spark.sql.streaming.stateStore.providerClass`). */
-  def streamingDedup(df: DataFrame, eventTimeCol: String, watermark: String,
-      keys: Seq[String]): DataFrame =
-    df.withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Durable columnar landing (SURVEY K5 — the commented-out parquet sink
-    * the reference never enabled, made the default). */
-  def startParquetSink(daily: DataFrame, path: String, checkpointDir: String)
-      : StreamingQuery =
-    daily.writeStream
-      .format("parquet")
-      .outputMode(OutputMode.Append)
-      .option("path", path)
-      .option("checkpointLocation", checkpointDir)
       .start()
 }

@@ -179,7 +179,8 @@ class ShinglesSpec extends SparkTestBase {
       (1L, "the cat sat on the mat today ok"),
       (2L, "ok today mat the on sat cat the")).toDF("doc_id", "text")
     val uni = df.select(TextFunctions.minhash($"text", 0)).as[String].collect()
-    val shi = df.select(TextFunctions.minhashShingle($"text", 3, 0)).as[String].collect()
+    val shi = df.select(TextFunctions.minhashOfTokens(TextFunctions.shingles($"text", 3), 0))
+      .as[String].collect()
     assert(uni(0) == uni(1))  // same token set: unigram minhash identical
     assert(shi(0) != shi(1))  // different 3-gram sets: shingles differ
   }

@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.Files
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** BitmapStore: canonical bytes, exact popcount, epoch-append +
@@ -10,6 +11,13 @@ import org.apache.spark.sql.functions._
   * loud out-of-range failure. */
 class BitmapStoreSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** Bitmap `df`'s epoch and land it at `path/__batch=<epoch>`, the
+    * store layout q245 writes. */
+  private def append(df: DataFrame, keyCols: Seq[String], valueCol: String,
+      path: String, epoch: Long): Unit =
+    BitmapStore.bitmaps(df, keyCols, valueCol)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/__batch=$epoch")
 
   test("popcount and canonical trim") {
     assert(BitmapStore.popcount(Array[Byte](0x03, 0x00, (0x80).toByte)) == 3L)
@@ -21,8 +29,8 @@ class BitmapStoreSpec extends SparkTestBase {
     // epoch 1: key a -> {1,2,3}, b -> {10}; epoch 2: a -> {3,4}, b -> {10}
     val e1 = Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 10L)).toDF("k", "id")
     val e2 = Seq(("a", 3L), ("a", 4L), ("b", 10L)).toDF("k", "id")
-    BitmapStore.append(e1, Seq("k"), "id", store, 1L)
-    BitmapStore.append(e2, Seq("k"), "id", store, 2L)
+    append(e1, Seq("k"), "id", store, 1L)
+    append(e2, Seq("k"), "id", store, 2L)
     val got = BitmapStore.countDistinct(spark, store, Seq("k")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got("a") == (2L, 4L), s"$got") // {1,2,3,4}
@@ -30,7 +38,7 @@ class BitmapStoreSpec extends SparkTestBase {
     // replaying epoch 2 rewrites byte-identical bitmaps: count unchanged
     val bytesBefore = spark.read.parquet(s"$store/__batch=2")
       .orderBy("k").collect().map(_.getAs[Array[Byte]]("bitmap").toSeq)
-    BitmapStore.append(e2, Seq("k"), "id", store, 2L)
+    append(e2, Seq("k"), "id", store, 2L)
     val bytesAfter = spark.read.parquet(s"$store/__batch=2")
       .orderBy("k").collect().map(_.getAs[Array[Byte]]("bitmap").toSeq)
     assert(bytesBefore.toSeq == bytesAfter.toSeq)
@@ -42,7 +50,7 @@ class BitmapStoreSpec extends SparkTestBase {
   test("duplicate rows change nothing (idempotent OR algebra)") {
     val store = Files.createTempDirectory("bm_dup").toString
     val e = Seq.fill(50)(("k", 7L)).toDF("k", "id")
-    BitmapStore.append(e, Seq("k"), "id", store, 1L)
+    append(e, Seq("k"), "id", store, 1L)
     val got = BitmapStore.countDistinct(spark, store, Seq("k")).collect().head
     assert(got.getLong(2) == 1L)
   }
@@ -58,11 +66,11 @@ class BitmapStoreSpec extends SparkTestBase {
   test("sliding union over epochs: window membership by hand") {
     val store = Files.createTempDirectory("bm_slide").toString
     // day 1: {1,2}; day 3: {2,3}; day 9: {9}
-    BitmapStore.append(Seq(("k", 1L), ("k", 2L)).toDF("k", "id"),
+    append(Seq(("k", 1L), ("k", 2L)).toDF("k", "id"),
       Seq("k"), "id", store, 1L)
-    BitmapStore.append(Seq(("k", 2L), ("k", 3L)).toDF("k", "id"),
+    append(Seq(("k", 2L), ("k", 3L)).toDF("k", "id"),
       Seq("k"), "id", store, 3L)
-    BitmapStore.append(Seq(("k", 9L)).toDF("k", "id"),
+    append(Seq(("k", 9L)).toDF("k", "id"),
       Seq("k"), "id", store, 9L)
     val bm = spark.read.parquet(store)
     val days = bm.select(col("__batch").cast("long").as("d")).distinct()

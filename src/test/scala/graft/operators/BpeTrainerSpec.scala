@@ -95,30 +95,4 @@ class BpeTrainerSpec extends SparkTestBase {
     // to U+FFFD (smaller in UTF-8 byte order), not the surrogate pair
     assert(local(1)._2 == "�", s"tie went to ${local(1)._2}")
   }
-
-  test("segment keeps supplementary characters whole and applies their merges") {
-    val clef = "𝄞"
-    val df = Seq.fill(4)(s"$clef$clef").zipWithIndex
-      .map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
-    val table = BpeTrainer.train(df, "text", 3).orderBy("rank")
-      .as[(Int, String, String, Long)].collect().map(m => (m._2, m._3))
-    val pieces = BpeTrainer.segment(
-        Seq((1L, s"$clef$clef")).toDF("doc_id", "text"), "text", table)
-      .select("pieces").as[Seq[String]].head()
-    // fully trained word collapses to one piece; splitting by UTF-16 code
-    // units would leave lone surrogates that never match any merge
-    assert(pieces == Seq(s"$clef$clef${BpeTrainer.Eow}"), s"got $pieces")
-  }
-
-  test("segment replays merges: trained words collapse, novel words stay chars") {
-    val table = BpeTrainer.train(corpusDf, "text", 10)
-      .orderBy("rank")
-      .as[(Int, String, String, Long)].collect().map(m => (m._2, m._3))
-    val segmented = BpeTrainer.segment(Seq((1L, "newest zap")).toDF("doc_id", "text"),
-      "text", table)
-      .select("pieces").as[Seq[String]].head()
-    // 10 merges on the Sennrich corpus fully fuse "newest</w>"
-    assert(segmented.takeWhile(_ != "z").mkString("+") == "newest</w>")
-    assert(segmented.drop(1) == Seq("z", "a", "p", "</w>"))
-  }
 }

@@ -43,15 +43,6 @@ class KCoreSpec extends SparkTestBase {
     assert(!coreIds(KCore.kcore(graph, k = 2)).contains(30L))
   }
 
-  test("coreness labels every surviving node with its max core") {
-    val got = KCore.coreness(graph).as[(Long, Int)].collect().toMap
-    val expected =
-      (1L to 4L).map(_ -> 3).toMap ++
-        (10L to 12L).map(_ -> 2).toMap ++
-        Seq(20L, 21L, 22L, 23L, 30L, 31L, 32L, 33L, 34L, 35L).map(_ -> 1)
-    assert(got === expected.map { case (k, v) => k -> v })
-  }
-
   test("fixed-round peel equals the convergent peel once rounds cover the depth") {
     val conv = KCore.kcore(graph, k = 2).as[(Long, Long)].collect().toSet
     val fixed = KCore.kcoreRounds(graph, k = 2, rounds = 6)

@@ -3,39 +3,6 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-class SkewJoinSpec extends SparkTestBase {
-  import spark.implicits._
-
-  /** 90% of fact rows share one key — the classic skew shape. */
-  private def skewed() = {
-    val fact = ((1 to 900).map(i => (1L, s"v$i")) ++
-      (1 to 100).map(i => ((i % 7 + 2).toLong, s"w$i"))).toDF("k", "payload")
-    val dim = (1L to 10L).map(k => (k, s"dim$k")).toDF("k", "name")
-    (fact, dim)
-  }
-
-  test("salted join returns exactly the plain join's rows") {
-    val (fact, dim) = skewed()
-    val plain = fact.join(dim, "k")
-      .select($"k", $"payload", $"name").as[(Long, String, String)]
-      .collect().sorted.toSeq
-    val salted = SkewJoin.saltedInnerJoin(fact, dim, "k", buckets = 8)
-      .select(fact("k"), $"payload", $"name").as[(Long, String, String)]
-      .collect().sorted.toSeq
-    assert(salted == plain)
-    assert(plain.size == 1000)
-  }
-
-  test("salted count matches exact counts") {
-    val (fact, _) = skewed()
-    val exact = fact.groupBy("k").count()
-      .as[(Long, Long)].collect().toMap
-    val salted = SkewJoin.saltedCount(fact, $"k", buckets = 8)
-      .as[(Long, Long)].collect().toMap
-    assert(salted == exact)
-  }
-}
-
 class ApproxSpec extends SparkTestBase {
   import spark.implicits._
 

@@ -62,20 +62,4 @@ class UnigramLmSpec extends SparkTestBase {
       vocabSize = 64, maxPieceLen = 8, iters = 3).collect().toSeq
     assert(one === many)
   }
-
-  test("encode round-trips every word and uses trained pieces") {
-    val df = corpus(Seq.fill(40)("sunlight moonlight").mkString(" "))
-    val pieces = UnigramLm.train(df, "text", vocabSize = 64,
-      maxPieceLen = 8, iters = 3)
-    val words = Seq(("sunlight", 1L), ("moonlight", 1L), ("daylight", 1L)).toDS()
-    val enc = UnigramLm.encode(words, pieces).collect().toMap
-    enc.foreach { case (w, ps) =>
-      assert(ps.mkString("") === w, s"lossy segmentation of $w: $ps")
-    }
-    // a trained word encodes as its surviving whole piece (hard-EM
-    // without vocab pressure collapses ≤8-char words to themselves —
-    // that IS the fitted optimum, not a bug); the unseen "daylight"
-    // falls back to alphabet pieces but still round-trips above
-    assert(enc("sunlight") === List("sunlight"))
-  }
 }

@@ -1,7 +1,5 @@
 package graft.outbreak
 
-import java.sql.Date
-
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -19,29 +17,39 @@ class AnomalyScorerSpec extends SparkTestBase {
       .select(to_date($"d").as("date"), $"region", $"f1", $"f2")
   }
 
-  test("kmeansScores: z-scored distances have ~zero mean and flag the planted outlier") {
-    val assembled = AnomalyScorer.assemble(featureTable(), Seq("f1", "f2"))
-    val scores = AnomalyScorer.kmeansScores(spark, assembled, k = 2, seed = 1L).cache()
-    val collected = scores.collect()
-    assert(collected.length == 21)
-    val mean = collected.map(_.getAs[Double]("score")).sum / collected.length
-    assert(math.abs(mean) < 1e-9) // z-scores are centered
-    val outliers = AnomalyScorer.outliers(scores, 2.0)
-      .select("date").as[Date].collect()
-    assert(outliers.map(_.toString).toSet == Set("2020-02-01"))
+  private def spiked() =
+    IncrementalOutbreakSpec.mkDaily(spark, 1 to 30, spikeDays = Set(30))
+
+  /** The MLlib branch of [[AnomalyScorer.fit]] (k = 2, no PCA) over 30
+    * days × 2 regions with the US spiking on the last day. */
+  private def mllibFit() =
+    AnomalyScorer.fit(spiked(), IncrementalOutbreakSpec.terms, pcaK = 0,
+      kRange = 2 to 2, seed = 1L, localEvalThreshold = 0L)
+
+  test("MLlib fit: z-scored distances have ~zero mean and equal the model's own scorer") {
+    val (scores, model, _) = mllibFit()
+    val got = scores.orderBy("date", "region").select("score").as[Double].collect()
+    assert(got.length == 60)
+    assert(math.abs(got.sum / got.length) < 1e-9) // z-scores are centered
+    // the model's driver scorer on the same rows, in the same order
+    val features = AnomalyScorer.sparkFront(spiked(), IncrementalOutbreakSpec.terms)
+      .collect().map(_.getAs[org.apache.spark.ml.linalg.Vector]("features"))
+    val expected = model.score(features)
+    got.zip(expected).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9, s"$g vs $e") }
+    val flagged = AnomalyScorer.outliers(scores, 2.0).count()
+    assert(flagged > 0 && flagged == expected.count(z => math.abs(z) > 2.0))
   }
 
-  test("kmeansScores: deterministic under fixed seed") {
-    val assembled = AnomalyScorer.assemble(featureTable(), Seq("f1", "f2"))
-    def run() = AnomalyScorer.kmeansScores(spark, assembled, k = 2, seed = 1L)
-      .orderBy("date").select("score").as[Double].collect().toSeq
+  test("MLlib fit: deterministic under fixed seed") {
+    def run() = mllibFit()._1.orderBy("date", "region")
+      .select("score").as[Double].collect().toSeq
     assert(run() == run())
   }
 
   test("selectK finds the obvious 2-cluster structure") {
     val assembled = AnomalyScorer.assemble(
       featureTable().where($"f1" < 50), Seq("f1", "f2"))
-    assert(AnomalyScorer.selectK(assembled, 2 to 4, seed = 1L) == 2)
+    assert(AnomalyScorer.selectKModel(assembled, 2 to 4, seed = 1L)._1 == 2)
   }
 
   test("assemble keeps id columns alongside the features vector") {

@@ -196,22 +196,6 @@ class ScalePipelineSpec extends SparkTestBase {
     assert(got.values.exists(_ == 0), "zero-match signups are preserved")
   }
 
-  test("q112/writeShards: physical layout matches the manifest exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    ScalePipeline.writeShards(docs, dir)
-    val manifest = ScalePipeline.q112ShardManifest(spark, sfDir)
-      .select("shard", "n_docs").as[(String, Long)].collect().toMap
-    // partitionBy layout: one directory per shard, contents match counts
-    val back = spark.read.parquet(dir)
-    val got = back.groupBy("shard").count()
-      .as[(String, Long)].collect().toMap
-    assert(got == manifest, s"layout $got != manifest $manifest")
-    assert(back.count() == docs.count(), "sharding must not drop or duplicate docs")
-    // every doc's payload survives the round-trip
-    assert(back.select("doc_id").distinct().count() == docs.count())
-  }
-
   test("q113: epoch mix balances sources to within one doc per residual") {
     val mix = ScalePipeline.q113EpochMix(spark, sfDir)
     val perSource = mix.groupBy("source").count().as[(String, Long)].collect().toMap

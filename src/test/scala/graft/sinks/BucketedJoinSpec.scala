@@ -1,10 +1,11 @@
 package graft.sinks
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Co-located join via bucketed storage: after writeBucketed on the join
-  * key, a join between the two tables must run with ZERO exchanges —
+/** Co-located join via bucketed storage: after a `bucketBy` write on the
+  * join key, a join between the two tables must run with ZERO exchanges —
   * the write-once shuffle replaces the per-query shuffle. */
 class BucketedJoinSpec extends SparkTestBase {
 
@@ -15,8 +16,8 @@ class BucketedJoinSpec extends SparkTestBase {
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val lineitem = graft.sources.Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_quantity")
-    Sinks.writeBucketed(orders, "b_orders", 4, "o_orderkey", Seq("o_orderkey"))
-    Sinks.writeBucketed(lineitem, "b_lineitem", 4, "l_orderkey", Seq("l_orderkey"))
+    writeBucketed(orders, "b_orders", "o_orderkey")
+    writeBucketed(lineitem, "b_lineitem", "l_orderkey")
 
     val joined = spark.table("b_orders")
       .join(spark.table("b_lineitem"),
@@ -47,6 +48,10 @@ class BucketedJoinSpec extends SparkTestBase {
         "groupBy on the bucket key must not shuffle:\n" + p.take(1500))
     }
   }
+
+  private def writeBucketed(df: DataFrame, table: String, key: String): Unit =
+    df.write.mode(SaveMode.Overwrite).format("parquet")
+      .bucketBy(4, key).sortBy(key).saveAsTable(table)
 
   private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
     val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -1,19 +1,24 @@
 package graft.sinks
 
 import graft.streaming.Ingest
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** K3 Kafka-write contract, broker-free (VERDICT r5 task #5; no Kafka
-  * connector jars exist offline — see the coverage note on
-  * [[Ingest.fromKafka]]). What IS assertable without a broker is the
-  * serialization contract the reference relies on
-  * (`spark_main.py:90-98`): the producer folds every column into one
-  * JSON `value`, and the consumer's single `from_json` with the stream
-  * schema recovers the record. This spec round-trips
-  * [[Sinks.kafkaJsonValue]] → [[Ingest.parseJson]] and asserts identity.
+/** The Kafka wire contract, broker-free (no Kafka connector jars exist
+  * offline — see the coverage note on [[Ingest.fromKafka]]). What IS
+  * assertable without a broker is the serialization contract the
+  * reference relies on (`spark_main.py:90-98`): the producer folds every
+  * column into one JSON `value`, and the consumer's single `from_json`
+  * with the stream schema recovers the record. This spec round-trips
+  * that wire frame through [[Ingest.parseJson]] and asserts identity.
   */
 class KafkaContractSpec extends graft.SparkTestBase {
   import spark.implicits._
+
+  /** The reference producer's wire frame: every column in one JSON
+    * `value`. */
+  private def kafkaJsonValue(df: DataFrame): DataFrame =
+    df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
 
   test("kafkaJson value round-trips through the consumer's from_json") {
     val rows = Seq(
@@ -24,7 +29,7 @@ class KafkaContractSpec extends graft.SparkTestBase {
       .select(to_timestamp($"dt").as("datetime"),
         $"kw", $"region", $"value")
 
-    val wire = Sinks.kafkaJsonValue(records)
+    val wire = kafkaJsonValue(records)
     // the wire frame has EXACTLY the kafka-writer shape: one string value
     assert(wire.columns.toSeq == Seq("value"))
     assert(wire.schema("value").dataType ==
@@ -47,7 +52,7 @@ class KafkaContractSpec extends graft.SparkTestBase {
       .withColumn("datetime", to_timestamp(lit("2020-01-01 00:00:00")))
       .select("datetime", "kw", "region", "value")
     val back = Ingest.parseJson(
-      Sinks.kafkaJsonValue(records).withColumnRenamed("value", "json"))
+      kafkaJsonValue(records).withColumnRenamed("value", "json"))
     val r = back.collect()
     assert(r.length == 1 && r.head.isNullAt(1) && r.head.getString(2) == "EU")
   }
