@@ -79,9 +79,6 @@ KEEP = {
     "graft.sources.v2.EventLog.isManifestFile":
         "spec hook: tells manifest files from data files in store-shape "
         "assertions",
-    "graft.sources.v2.EventLog.installFsFromConf":
-        "no entry point calls it yet, so the driver does not install the "
-        "filesystem a --conf names (CHANGES.md FOUND); the fix is to call it",
     "graft.functions.VectorFunctions.cosine":
         "reference implementation: specs compare the native "
         "graft_cosine against it",

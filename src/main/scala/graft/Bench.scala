@@ -32,6 +32,7 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.sources.v2.EventLog.installFsFromConf(spark)
     // the measurement is only meaningful with real heap headroom —
     // make a too-small launcher configuration loudly visible
     val maxGb = Runtime.getRuntime.maxMemory / (1L << 30)

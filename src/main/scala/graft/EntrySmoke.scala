@@ -7,6 +7,7 @@ object EntrySmoke {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.sources.v2.EventLog.installFsFromConf(spark)
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS=" + df.count())
     df.show(5)

@@ -17,6 +17,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.sources.v2.EventLog.installFsFromConf(spark)
     new java.io.File(outDir).mkdirs()
     // failures are per-query (one broken query must not hide the other
     // 150 results) but they must not exit 0 either — r5 lost 35 queries

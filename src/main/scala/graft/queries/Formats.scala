@@ -12,6 +12,24 @@ import graft.sources.Tables
   * computes the same aggregate from the original parquet. */
 object Formats {
 
+  /** The events table as eventlog rows (`event_id, ts_us, user_id,
+    * event_type, cents`, cents the value in whole cents) — the input
+    * of every store builder below. */
+  private[graft] def eventlogRows(events: DataFrame): DataFrame =
+    events.select(col("event_id"),
+      unix_micros(col("ts")).as("ts_us"), col("user_id"),
+      col("event_type"),
+      expr("cast(round(value * 100) as bigint)").as("cents"))
+
+  /** The day layout the store builders write: repartitioned by UTC day
+    * and sorted by (ts_us, event_id) within each partition, so each
+    * writing task rolls one zone-mapped `.gel` file per day. */
+  private def dayLayout(df: DataFrame): DataFrame =
+    df.withColumn("__day", expr("ts_us div 86400000000"))
+      .repartition(col("__day"))
+      .sortWithinPartitions("ts_us", "event_id")
+      .drop("__day")
+
   /** One materialized eventlog store per (session, input dir), via the
     * shared [[graft.operators.TempStoreCache]]: repeated bench/verify
     * invocations reuse the converted store instead of re-writing a
@@ -20,14 +38,8 @@ object Formats {
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_store") { p =>
       // day-repartitioned V2 write: executors write in parallel, one
       // zone-mapped .gel file per UTC day (per writing partition)
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      eventlogRows(Tables.events(s, dir))
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
     }
 
@@ -93,16 +105,10 @@ object Formats {
     * maintenance cycle a real ingest store lives through. */
   private def compactedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_compact") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       (0 until 3).foreach { k =>
         ev.where(pmod(col("user_id"), lit(3)) === k)
-          .withColumn("__day", expr("ts_us div 86400000000"))
-          .repartition(col("__day"))
-          .sortWithinPartitions("ts_us", "event_id")
-          .drop("__day")
+          .transform(dayLayout)
           .write.format("graft-eventlog").mode("append").save(p)
       }
       val st = graft.sources.v2.EventLogCompact.compact(s, p)
@@ -183,10 +189,7 @@ object Formats {
     * granularity, for q287's join-driven runtime filtering. */
   private def typeSplitStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_bytype") { p =>
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
+      eventlogRows(Tables.events(s, dir))
         // EXPLICIT 5-way range split: one type per partition (no hash
         // collisions), and an explicit count is exempt from AQE's
         // shuffle coalescing — which at small SFs would merge the types
@@ -265,10 +268,7 @@ object Formats {
     * expression so each write task holds few buckets (bounded files). */
   private def bucketedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_bucketed") { p =>
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
+      eventlogRows(Tables.events(s, dir))
         .repartition(16, pmod(col("user_id"), lit(16)))
         .sortWithinPartitions("ts_us", "event_id")
         .write.format("graft-eventlog")
@@ -353,17 +353,11 @@ object Formats {
     * changes-feed (q293) reads. */
   private def versionedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_versioned") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       Seq(col("ts_us") < EventlogCutoffUs, col("ts_us") >= EventlogCutoffUs)
         .foreach { half =>
           ev.where(half)
-            .withColumn("__day", expr("ts_us div 86400000000"))
-            .repartition(col("__day"))
-            .sortWithinPartitions("ts_us", "event_id")
-            .drop("__day")
+            .transform(dayLayout)
             .write.format("graft-eventlog").mode("append").save(p)
         }
       require(graft.sources.v2.EventLog.currentVersion(p) == 2L,
@@ -415,14 +409,8 @@ object Formats {
     * their removes to the manifest — never a rewrite. */
   private def retainedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_retained") { p =>
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      eventlogRows(Tables.events(s, dir))
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val name = s"events_retained_${Integer.toHexString(p.hashCode)}"
       graft.sources.v2.GraftCatalog.register(s, name, p)
@@ -461,14 +449,8 @@ object Formats {
     * + mtimes). */
   private def dvStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_dv") { p =>
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      eventlogRows(Tables.events(s, dir))
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val userHi = Tables.events(s, dir).agg(max("user_id")).head.getLong(0) / 5
       val before = graft.sources.v2.EventLog.listFiles(p)
@@ -525,14 +507,8 @@ object Formats {
       // dot-named staging/checkpoint dirs are invisible to the store's
       // readers (they list *.gel files and fixed metadata names only)
       val staging = new java.io.File(p, ".staging").toString
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      eventlogRows(Tables.events(s, dir))
+        .transform(dayLayout)
         .write.parquet(staging)
       val q = s.readStream
         .schema(org.apache.spark.sql.types.StructType(
@@ -666,14 +642,8 @@ object Formats {
     * functions of the events table, so DuckDB can replay them in SQL. */
   private def mergedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_merged") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      ev.withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      val ev = eventlogRows(Tables.events(s, dir))
+      ev.transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val updates = ev.where(col("event_id") % 101 === 0)
         .withColumn("cents", col("cents") + 7777L)
@@ -713,14 +683,8 @@ object Formats {
     * but the batch never materializes on the driver. */
   private def mergedShuffleStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_merged_sh") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      ev.withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      val ev = eventlogRows(Tables.events(s, dir))
+      ev.transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val updates = ev.where(col("event_id") % 101 === 0)
         .withColumn("cents", col("cents") + 7777L)
@@ -763,16 +727,10 @@ object Formats {
     * round-9 user zone lane selective. */
   private def zorderedStore(s: SparkSession, dir: String): String =
     graft.operators.TempStoreCache.getOrCreate(s, dir, "eventlog_zorder") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       (0 until 3).foreach { k =>
         ev.where(pmod(col("user_id"), lit(3)) === k)
-          .withColumn("__day", expr("ts_us div 86400000000"))
-          .repartition(col("__day"))
-          .sortWithinPartitions("ts_us", "event_id")
-          .drop("__day")
+          .transform(dayLayout)
           .write.format("graft-eventlog").mode("append").save(p)
       }
       val total = ev.count()
@@ -878,17 +836,11 @@ object Formats {
     val root = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_cdc_typed") { p =>
       val store = new java.io.File(p, "store").toString
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       Seq(col("ts_us") < EventlogCutoffUs, col("ts_us") >= EventlogCutoffUs)
         .foreach { half =>
           ev.where(half)
-            .withColumn("__day", expr("ts_us div 86400000000"))
-            .repartition(col("__day"))
-            .sortWithinPartitions("ts_us", "event_id")
-            .drop("__day")
+            .transform(dayLayout)
             .write.format("graft-eventlog").mode("append").save(store)
         }
       def drain(): Unit = {
@@ -943,24 +895,15 @@ object Formats {
   def q310EventlogSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_schema") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       ev.where(col("ts_us") < EventlogCutoffUs)
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       graft.sources.v2.EventLogSchema.addColumn(p, "flags")
       ev.where(col("ts_us") >= EventlogCutoffUs)
         .withColumn("flags", when(col("event_id") % 11 === 0, lit(null))
           .otherwise(col("event_id") % 7))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
     }
     s.read.format("graft-eventlog").load(store)
@@ -981,24 +924,15 @@ object Formats {
   def q313EventlogExtMerge(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_ext_merge") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       ev.where(col("ts_us") < EventlogCutoffUs)
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       graft.sources.v2.EventLogSchema.addColumn(p, "flags")
       ev.where(col("ts_us") >= EventlogCutoffUs)
         .withColumn("flags", when(col("event_id") % 11 === 0, lit(null))
           .otherwise(col("event_id") % 7))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val updates = ev.where(col("event_id") % 101 === 0)
         .withColumn("cents", col("cents") + 7777L)
@@ -1031,14 +965,8 @@ object Formats {
   def q311EventlogSqlUpdate(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_sql_update") { p =>
-      Tables.events(s, dir).select(col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("event_type"),
-          expr("cast(round(value * 100) as bigint)").as("cents"))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      eventlogRows(Tables.events(s, dir))
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val name = s"q311_${Integer.toHexString(p.hashCode)}"
       graft.sources.v2.GraftCatalog.register(s, name, p)
@@ -1065,14 +993,8 @@ object Formats {
   def q312EventlogSqlMerge(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_sql_merge") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      ev.withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+      val ev = eventlogRows(Tables.events(s, dir))
+      ev.transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       val updates = ev.where(col("event_id") % 101 === 0)
         .withColumn("cents", col("cents") + 7777L)
@@ -1129,16 +1051,10 @@ object Formats {
   def q305EventlogSqlCompact(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_sql_compact") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       (0 until 3).foreach { k =>
         ev.where(pmod(col("user_id"), lit(3)) === k)
-          .withColumn("__day", expr("ts_us div 86400000000"))
-          .repartition(col("__day"))
-          .sortWithinPartitions("ts_us", "event_id")
-          .drop("__day")
+          .transform(dayLayout)
           .write.format("graft-eventlog").mode("append").save(p)
       }
       val name = s"q305_${Integer.toHexString(p.hashCode)}"
@@ -1165,15 +1081,9 @@ object Formats {
   def q314EventlogDoubleLane(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_double_lane") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       ev.where(col("ts_us") < EventlogCutoffUs)
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       graft.sources.v2.EventLogSchema.addColumn(p, "score",
         org.apache.spark.sql.types.DoubleType)
@@ -1181,10 +1091,7 @@ object Formats {
         .withColumn("score", when(col("event_id") % 11 === 0,
             lit(null).cast("double"))
           .otherwise(col("cents") / lit(100.0) + col("event_id") % 7))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
     }
     s.read.format("graft-eventlog").load(store)
@@ -1205,15 +1112,9 @@ object Formats {
   def q315EventlogStringLane(s: SparkSession, dir: String): DataFrame = {
     val store = graft.operators.TempStoreCache.getOrCreate(s, dir,
         "eventlog_string_lane") { p =>
-      val ev = Tables.events(s, dir).select(col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("user_id"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
+      val ev = eventlogRows(Tables.events(s, dir))
       ev.where(col("ts_us") < EventlogCutoffUs)
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       graft.sources.v2.EventLogSchema.addColumn(p, "tag",
         org.apache.spark.sql.types.StringType)
@@ -1222,10 +1123,7 @@ object Formats {
             lit(null).cast("string"))
           .otherwise(concat(col("event_type"), lit("_"),
             (col("event_id") % 5).cast("string"))))
-        .withColumn("__day", expr("ts_us div 86400000000"))
-        .repartition(col("__day"))
-        .sortWithinPartitions("ts_us", "event_id")
-        .drop("__day")
+        .transform(dayLayout)
         .write.format("graft-eventlog").mode("append").save(p)
       // lanes must survive the rewrite: per-file dictionaries are
       // rebuilt by the compactor's encoder

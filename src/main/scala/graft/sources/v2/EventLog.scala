@@ -56,6 +56,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   | recordCount × (int64 event_id, int64 ts_us, int64 user_id,
   *                    int8 typeOrdinal, int64 cents)        — records
   * }}}
+  * A file carrying added columns ([[EventLogSchema]]) is written on the
+  * extended wire instead ([[EventLog.Magic3]]); [[EventLog.writeGelFile]]
+  * picks the wire, never its callers.
   *
   * Schema: `event_id, ts_us, user_id, cents` BIGINT; `event_type`
   * STRING (dictionary-encoded per file). The q281 query round-trips
@@ -132,7 +135,9 @@ object EventLog {
 
   /** Driver-side twin of the executor conf resolution: installs the
     * [[FsImplConfKey]] implementation in this process, so one
-    * `--conf` serves every JVM. No-op when the conf is absent. */
+    * `--conf` serves every JVM. No-op when the conf is absent. Every
+    * entry point (`Bench`, `Verify`, `EntrySmoke`, `ScaleSmoke`) calls
+    * it right after building its session. */
   def installFsFromConf(spark: org.apache.spark.sql.SparkSession): Unit = {
     val impl = spark.sparkContext.getConf.get(FsImplConfKey, null)
     if (impl != null) installedFs = loadFsImpl(impl)
@@ -198,13 +203,10 @@ object EventLog {
 
   val Magic = "GRAFTEL1".getBytes("US-ASCII")
   /** Extended-file magic (schema evolution): the header additionally
-    * names the ADDED columns present in this file, and each record
-    * appends (presence byte, int64) per named column. */
-  val Magic2 = "GRAFTEL2".getBytes("US-ASCII")
-  /** TYPED extended-file magic (round 11): like GRAFTEL2 but each
-    * added column carries a TYPE CODE (BIGINT / DOUBLE / STRING), and
-    * STRING columns a per-file value dictionary in the header. Records
-    * stay FIXED-WIDTH — every lane is still (presence byte, int64):
+    * names the ADDED columns present in this file, each with a TYPE
+    * CODE (BIGINT / DOUBLE / STRING), and STRING columns a per-file
+    * value dictionary; each record appends one lane per named column.
+    * Records stay FIXED-WIDTH — every lane is (presence byte, int64):
     * the payload is the value (BIGINT), the IEEE-754 bits (DOUBLE), or
     * the dictionary index (STRING) — so offset skipping, column
     * pruning by byte-skip, and [[Header.recordBytes]] arithmetic are
@@ -259,10 +261,9 @@ object EventLog {
   val lastDecodedFields = new AtomicLong(-1)
 
   /** `users` / `ids` are the OPTIONAL `user_id` / `event_id` zone
-    * lanes: present when the file's manifest entry was written by the
-    * round-9+ codec (`.gel` file headers themselves never carry them —
-    * the wire format is unchanged). None admits every predicate on
-    * that column, so legacy manifests and header-fallback files can
+    * lanes: present when the file's manifest entry carries them (`.gel`
+    * file headers themselves never do). None admits every predicate on
+    * that column, so boundless entries and header-fallback files can
     * only over-read, never drop. The ids lane is the KEY lane: day
     * files of a sequential-id feed carry tight disjoint ranges, so a
     * point lookup opens one file and a MERGE match pass decodes only
@@ -278,20 +279,13 @@ object EventLog {
       * FIXED regardless of added-column type (the typed wire keeps
       * lanes 9 bytes; strings dictionary-encode in the header). */
     def recordBytes: Int = RecordBytes + 9 * extras.size
-    /** Lane `j`'s type code: GRAFTEL2 files carry no codes — BIGINT. */
-    def extraTypeOf(j: Int): Byte =
-      if (extraTypes.isEmpty) ExtraBigint else extraTypes(j)
-    /** Lane `j`'s string dictionary (STRING lanes only). */
-    def extraDictOf(j: Int): IndexedSeq[String] =
-      if (extraDicts.isEmpty) IndexedSeq.empty else extraDicts(j)
   }
 
   def readHeader(in: DataInputStream): Header = {
     val magic = new Array[Byte](Magic.length)
     in.readFully(magic)
-    val extended = java.util.Arrays.equals(magic, Magic2)
     val typed = java.util.Arrays.equals(magic, Magic3)
-    require(extended || typed || java.util.Arrays.equals(magic, Magic),
+    require(typed || java.util.Arrays.equals(magic, Magic),
       "graft-eventlog: bad magic — not an eventlog file")
     val count = in.readInt()
     val minTs = in.readLong()
@@ -320,12 +314,7 @@ object EventLog {
       }
       Header(count, minTs, maxTs, types, extras = names.toSeq,
         extraTypes = codes.toSeq, extraDicts = dicts.toSeq)
-    } else {
-      val extras =
-        if (!extended) Nil
-        else (0 until in.readInt()).map(_ => readUtf(in))
-      Header(count, minTs, maxTs, types, extras = extras)
-    }
+    } else Header(count, minTs, maxTs, types)
   }
 
   def listFiles(dir: String): Seq[java.io.File] = {
@@ -384,21 +373,18 @@ object EventLog {
     * manifest (O(store) write amplification per append) and every plan
     * re-parsed it. This round applies the Delta-log pattern:
     *
-    *  - **Delta segments** `_manifest.<seq>.<uuid>.gelmd` (GRAFTMD2;
-    *    GRAFTMD1 read as legacy — no user-bounds lane):
+    *  - **Delta segments** `_manifest.<seq>.<uuid>.gelmd` (GRAFTMD2):
     *    each job commit writes ONE new segment holding only its own adds
     *    and removes — O(batch) bytes, never O(store). Segments are
     *    immutable once renamed in; two writer PROCESSES each write their
     *    own segment, so a concurrent commit can no longer lose another's
     *    entries (the round-8 lost-update exposure).
     *  - **Checkpoint** `_manifest.gelm` (GRAFTML4, carrying the highest
-    *    segment seq it folded; GRAFTML3/GRAFTML2/GRAFTML1 read as
-    *    legacy — user bounds unknown below ML4, fold-point unknown
-    *    below ML3, sums unknown for ML1): when the segment
-    *    count reaches [[CheckpointEvery]], the merged state is
-    *    rewritten as one checkpoint and the absorbed segments are
-    *    deleted — amortized O(batch) per commit, and reads stay
-    *    O(checkpoint + few segments), never O(commits-ever).
+    *    segment seq it folded): when the segment count reaches
+    *    [[CheckpointEvery]], the merged state is rewritten as one
+    *    checkpoint and the absorbed segments are deleted — amortized
+    *    O(batch) per commit, and reads stay O(checkpoint + few
+    *    segments), never O(commits-ever).
     *  - **Versions**: segment seq numbers double as VERSIONS — version
     *    N is the store after manifest commit N (version 0 = empty), so
     *    `.option("version", n)` reads a consistent SNAPSHOT
@@ -453,23 +439,18 @@ object EventLog {
     *   name) | int32 nAdds | nAdds × entry
     * }}} */
   val ManifestMagic = "GRAFTML4".getBytes("US-ASCII")
-  val LegacyManifestMagicV3 = "GRAFTML3".getBytes("US-ASCII")
-  val LegacyManifestMagicV2 = "GRAFTML2".getBytes("US-ASCII")
-  val LegacyManifestMagic = "GRAFTML1".getBytes("US-ASCII")
   val SegmentMagic = "GRAFTMD2".getBytes("US-ASCII")
-  val LegacySegmentMagic = "GRAFTMD1".getBytes("US-ASCII")
   val ManifestName = "_manifest.gelm"
   val CheckpointEvery = 16
 
   /** Header facts plus the per-type breakdowns only the writer can know
-    * cheaply. `typeSums` is None for entries read from a legacy GRAFTML1
-    * checkpoint — per-type COUNT pushdown still works there; per-type
-    * SUM pushdown refuses. `userBounds` (min/max `user_id` — the
-    * round-9 zone lane Z-order clustering makes selective) and
+    * cheaply. Each lane is optional on the wire (its `has*` byte):
+    * `typeSums` None keeps per-type COUNT pushdown working while
+    * per-type SUM pushdown refuses. `userBounds` (min/max `user_id` —
+    * the round-9 zone lane Z-order clustering makes selective) and
     * `idBounds` (min/max `event_id` — the KEY lane: point lookups and
-    * merge match passes prune on it) are None for entries read from
-    * any pre-GRAFTML4/GRAFTMD2 manifest: predicates on those columns
-    * then admit the file, so old stores only over-read. */
+    * merge match passes prune on it) None make predicates on those
+    * columns admit the file, so a boundless entry only over-reads. */
   case class ManifestEntry(file: String, count: Int, minTs: Long,
       maxTs: Long, types: Seq[String], typeCounts: Seq[Long],
       typeSums: Option[Seq[Long]] = None,
@@ -485,26 +466,22 @@ object EventLog {
     new String(b, "UTF-8")
   }
 
+  /** Read a file's magic and require it to be `magic` — the version
+    * check every eventlog file kind shares: a file of any other
+    * version fails here, loudly, before a byte of it is decoded. */
+  private[v2] def requireMagic(in: DataInputStream, magic: Array[Byte],
+      refusal: => String): Unit = {
+    val got = new Array[Byte](magic.length)
+    in.readFully(got)
+    require(java.util.Arrays.equals(got, magic), refusal)
+  }
+
   private[v2] def writeUtf(o: DataOutputStream, s: String): Unit = {
     val b = s.getBytes("UTF-8")
     o.writeInt(b.length); o.write(b)
   }
 
-  /** Legacy GRAFTML1 entry: no per-type sums lane. */
-  private[v2] def readEntryV1(in: DataInputStream): ManifestEntry = {
-    val name = readUtf(in)
-    val count = in.readInt()
-    val minTs = in.readLong()
-    val maxTs = in.readLong()
-    val pairs = (0 until in.readInt()).map(_ => (readUtf(in), in.readLong()))
-    ManifestEntry(name, count, minTs, maxTs, pairs.map(_._1), pairs.map(_._2))
-  }
-
-  /** `withUsers` = the container's codec revision: GRAFTML4/GRAFTMD2
-    * entries carry the user-bounds lane, GRAFTML3/GRAFTMD1 ones stop
-    * after the sums lane. */
-  private[v2] def readEntry(in: DataInputStream,
-      withUsers: Boolean): ManifestEntry = {
+  private[v2] def readEntry(in: DataInputStream): ManifestEntry = {
     val name = readUtf(in)
     val count = in.readInt()
     val minTs = in.readLong()
@@ -513,10 +490,10 @@ object EventLog {
     val sums = if (in.readByte() == 1)
       Some(pairs.indices.map(_ => in.readLong()))
     else None
-    val users = if (withUsers && in.readByte() == 1)
+    val users = if (in.readByte() == 1)
       Some((in.readLong(), in.readLong()))
     else None
-    val ids = if (withUsers && in.readByte() == 1)
+    val ids = if (in.readByte() == 1)
       Some((in.readLong(), in.readLong()))
     else None
     ManifestEntry(name, count, minTs, maxTs, pairs.map(_._1),
@@ -583,41 +560,29 @@ object EventLog {
   private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Map[String, ManifestEntry])]()
 
-  /** The checkpoint's fold point from its 16-byte prefix alone (-1 for
-    * legacy magics) — the O(1) read [[appendManifest]] needs for seq
-    * numbering, without parsing the whole entry list. */
+  /** The checkpoint's fold point from its 16-byte prefix alone — the
+    * O(1) read [[appendManifest]] needs for seq numbering, without
+    * parsing the whole entry list. */
   private def checkpointFoldedThrough(f: java.io.File): Long = {
     val in = new DataInputStream(EventLog.fs.openRead(f))
-    try {
-      val magic = new Array[Byte](ManifestMagic.length)
-      in.readFully(magic)
-      if (java.util.Arrays.equals(magic, ManifestMagic) ||
-          java.util.Arrays.equals(magic, LegacyManifestMagicV3)) in.readLong()
-      else -1L
-    } finally in.close()
+    try { requireCheckpointMagic(in); in.readLong() } finally in.close()
   }
 
+  private def requireCheckpointMagic(in: DataInputStream): Unit =
+    requireMagic(in, ManifestMagic,
+      s"graft-eventlog: $ManifestName has bad magic — not a manifest")
+
   /** (foldedThrough, entries): foldedThrough is the highest segment seq
-    * the checkpoint absorbed — the retention floor of version reads — or
-    * -1 for legacy GRAFTML2/GRAFTML1 checkpoints written before version
-    * tracking (current-state reads unaffected; time travel refuses). */
+    * the checkpoint absorbed — the retention floor of version reads. */
   private def parseCheckpoint(f: java.io.File)
       : (Long, Map[String, ManifestEntry]) = {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 16))
     try {
-      val magic = new Array[Byte](ManifestMagic.length)
-      in.readFully(magic)
-      val v1 = java.util.Arrays.equals(magic, LegacyManifestMagic)
-      val v2 = java.util.Arrays.equals(magic, LegacyManifestMagicV2)
-      val v3 = java.util.Arrays.equals(magic, LegacyManifestMagicV3)
-      require(v1 || v2 || v3 ||
-          java.util.Arrays.equals(magic, ManifestMagic),
-        s"graft-eventlog: $ManifestName has bad magic — not a manifest")
-      val folded = if (v1 || v2) -1L else in.readLong()
+      requireCheckpointMagic(in)
+      val folded = in.readLong()
       (folded, (0 until in.readInt()).map { _ =>
-        val e = if (v1) readEntryV1(in)
-        else readEntry(in, withUsers = !v2 && !v3)
+        val e = readEntry(in)
         e.file -> e
       }.toMap)
     } finally in.close()
@@ -657,14 +622,10 @@ object EventLog {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 16))
     try {
-      val magic = new Array[Byte](SegmentMagic.length)
-      in.readFully(magic)
-      val legacy = java.util.Arrays.equals(magic, LegacySegmentMagic)
-      require(legacy || java.util.Arrays.equals(magic, SegmentMagic),
+      requireMagic(in, SegmentMagic,
         s"graft-eventlog: ${f.getName} has bad magic — not a manifest segment")
       val removes = (0 until in.readInt()).map(_ => readUtf(in))
-      val adds = (0 until in.readInt()).map(_ =>
-        readEntry(in, withUsers = !legacy))
+      val adds = (0 until in.readInt()).map(_ => readEntry(in))
       (removes, adds)
     } finally in.close()
   }
@@ -1188,8 +1149,7 @@ object EventLog {
   /** The manifest state AS OF `version` (the store after manifest commit
     * number `version`; 0 = empty). Bounded by retention: a version below
     * the checkpoint's fold point needs segments that were absorbed and
-    * deleted, and a pre-GRAFTML3 checkpoint has no recorded fold point —
-    * both refuse LOUDLY. Uncached (audit-path frequency). */
+    * deleted — it refuses LOUDLY. Uncached (audit-path frequency). */
   def readManifestAsOf(dir: String, version: Long)
       : Map[String, ManifestEntry] = {
     require(version >= 0,
@@ -1198,12 +1158,6 @@ object EventLog {
     require(EventLog.fs.isDirectory(d), s"graft-eventlog: $dir is not a directory")
     val (ck, segs) = manifestFiles(d)
     val parsed = ck.map(parseCheckpoint)
-    parsed.foreach { case (folded, _) =>
-      require(folded >= 0,
-        s"graft-eventlog: $dir's checkpoint predates version tracking " +
-          "(GRAFTML2/GRAFTML1 has no fold point) — time travel is " +
-          "unavailable on this store; current-state reads are unaffected")
-    }
     val folded = parsed.map(_._1).getOrElse(0L)
     val cur = (segs.map(segSeq) :+ folded).foldLeft(0L)(math.max)
     require(version <= cur,
@@ -1244,9 +1198,10 @@ object EventLog {
     *    nothing — the CONTINUITY case a long-lived tail needs. With
     *    rows, `typed = false` REFUSES — appended rows cannot express
     *    updates or deletes; the error names `cdc.typed`. Without
-    *    parts at all (a legacy commit, or one torn before its part
-    *    renames) it refuses with the retention wording — absence of
-    *    change evidence never reads as "no changes". */
+    *    parts at all (a zone-proven whole-file delete, or one torn
+    *    before its part renames) it refuses with the retention
+    *    wording — absence of change evidence never reads as "no
+    *    changes". */
   def changeCommits(dir: String, from: Long, to: Long, typed: Boolean)
       : Seq[(Long, Seq[ManifestEntry], Seq[java.io.File])] = {
     require(0 <= from && from <= to,
@@ -1255,12 +1210,6 @@ object EventLog {
     require(EventLog.fs.isDirectory(d), s"graft-eventlog: $dir is not a directory")
     val (ck, segs) = manifestFiles(d)
     val parsed = ck.map(parseCheckpoint)
-    parsed.foreach { case (folded, _) =>
-      require(folded >= 0,
-        s"graft-eventlog: $dir's checkpoint predates version tracking " +
-          "(GRAFTML2/GRAFTML1 has no fold point) — the changes feed is " +
-          "unavailable on this store")
-    }
     val folded = parsed.map(_._1).getOrElse(0L)
     val cur = (segs.map(segSeq) :+ folded).foldLeft(0L)(math.max)
     require(to <= cur,
@@ -1357,7 +1306,7 @@ object EventLog {
     val eligible = segs.filter(f => mtimeNanos(f) / 1000L <= tsMicros)
       .map(segSeq)
     val ckWitness = ck.filter(f => mtimeNanos(f) / 1000L <= tsMicros)
-      .map(parseCheckpoint(_)._1).filter(_ >= 0)
+      .map(checkpointFoldedThrough)
     val candidates = eligible ++ ckWitness
     if (candidates.nonEmpty) candidates.max
     else if (ck.isEmpty) 0L
@@ -1499,51 +1448,105 @@ object EventLog {
     })
   }
 
-  /** Write one `.gel` file (header + records) — the single encoder
-    * behind the V2 DataWriter and the compactor. Records land in the
-    * given order; the caller owns sorting. Returns the manifest entry
-    * describing the written file (under its FINAL name). */
+  /** Write one `.gel` file — the single encoder behind every writer
+    * (the V2 DataWriter, the streaming sink, compaction and merge). It
+    * picks the wire: with no `lanes`, the base wire (GRAFTEL1); with
+    * lanes, the extended wire (GRAFTEL3) — base records plus the named
+    * added columns, one nullable fixed-width lane each, `laneVals`
+    * aligned to `rows`. Lane values are typed (`java.lang.Long` /
+    * `java.lang.Double` / `String` / null per the column's code);
+    * STRING lanes dictionary-encode into the header, so records stay
+    * fixed-width. A value whose runtime class contradicts its column's
+    * code is LOUD — it means a pipeline dropped the type somewhere
+    * upstream. Records land in the given order; the caller owns
+    * sorting. Returns the manifest entry describing the written file
+    * (under its FINAL name, [[entryOfRecords]]) — added columns have no
+    * metadata lanes (predicates on them admit every file, which can
+    * only over-read). */
   def writeGelFile(tmp: java.io.File, finalName: String,
-      buf: scala.collection.Seq[(Long, Long, Long, String, Long)]): ManifestEntry = {
-    require(buf.nonEmpty, "graft-eventlog: refusing to write an empty file")
-    val types = buf.map(_._4).distinct.sorted
+      rows: scala.collection.Seq[(Long, Long, Long, String, Long)],
+      lanes: Seq[ExtraCol] = Nil,
+      laneVals: scala.collection.Seq[Array[AnyRef]] = Nil): ManifestEntry = {
+    require(rows.nonEmpty, "graft-eventlog: refusing to write an empty file")
+    require(lanes.isEmpty || laneVals.length == rows.length,
+      s"graft-eventlog: ${rows.length} base rows vs ${laneVals.length} " +
+        "lane-value rows")
+    val entry = entryOfRecords(finalName, rows)
+    val types = entry.types
     require(types.length <= 256,
       s"graft-eventlog: ${types.length} event types in one file exceed " +
         "the 1-byte dictionary — split the write by type first")
     val ord = types.zipWithIndex.toMap
-    val minTs = buf.iterator.map(_._2).min
-    val maxTs = buf.iterator.map(_._2).max
+    // per-file string dictionaries: sorted distinct values per STRING
+    // lane; payloads are dictionary indexes
+    val dicts: Array[Map[String, Int]] = lanes.zipWithIndex.map {
+      case (c, j) =>
+        if (c.code != ExtraString) Map.empty[String, Int]
+        else laneVals.iterator.map(_(j)).filter(_ != null)
+          .map(_.asInstanceOf[String]).toSeq.distinct.sorted
+          .zipWithIndex.toMap
+    }.toArray
+    def laneBits(j: Int, v: AnyRef): Long = (lanes(j).code, v) match {
+      case (ExtraBigint, l: java.lang.Long) => l.longValue
+      case (ExtraDouble, d: java.lang.Double) =>
+        java.lang.Double.doubleToLongBits(d.doubleValue)
+      case (ExtraString, s: String) => dicts(j)(s).toLong
+      case (code, other) => throw new IllegalArgumentException(
+        s"graft-eventlog: added column ${lanes(j).name} has type code " +
+          s"$code but a lane value of ${other.getClass.getName} — a " +
+          "pipeline dropped the column's type")
+    }
     val o = new DataOutputStream(
       new BufferedOutputStream(EventLog.fs.openWrite(tmp), 1 << 16))
     try {
-      o.write(Magic)
-      o.writeInt(buf.length)
-      o.writeLong(minTs)
-      o.writeLong(maxTs)
+      o.write(if (lanes.isEmpty) Magic else Magic3)
+      o.writeInt(rows.length)
+      o.writeLong(entry.minTs)
+      o.writeLong(entry.maxTs)
       o.writeInt(types.length)
       types.foreach(t => writeUtf(o, t))
-      buf.foreach { case (id, ts, uid, tpe, cents) =>
-        o.writeLong(id); o.writeLong(ts); o.writeLong(uid)
-        o.writeByte(ord(tpe)); o.writeLong(cents)
+      if (lanes.nonEmpty) {
+        o.writeInt(lanes.length)
+        lanes.zipWithIndex.foreach { case (c, j) =>
+          writeUtf(o, c.name)
+          o.writeByte(c.code)
+          if (c.code == ExtraString) {
+            val vals = dicts(j).toSeq.sortBy(_._2).map(_._1)
+            o.writeInt(vals.length)
+            vals.foreach(writeUtf(o, _))
+          }
+        }
+      }
+      val vals =
+        if (lanes.isEmpty) Iterator.continually(NoLanes) else laneVals.iterator
+      rows.iterator.zip(vals).foreach {
+        case ((id, ts, uid, tpe, cents), ev) =>
+          o.writeLong(id); o.writeLong(ts); o.writeLong(uid)
+          o.writeByte(ord(tpe)); o.writeLong(cents)
+          var j = 0
+          while (j < lanes.length) {
+            val v = ev(j)
+            if (v == null) { o.writeByte(0); o.writeLong(0L) }
+            else { o.writeByte(1); o.writeLong(laneBits(j, v)) }
+            j += 1
+          }
       }
     } finally o.close()
-    val perType = buf.groupBy(_._4)
-    ManifestEntry(finalName, buf.length, minTs, maxTs, types.toSeq,
-      types.map(t => perType(t).length.toLong).toSeq,
-      Some(types.map(t => perType(t).iterator.map(_._5).sum).toSeq),
-      Some((buf.iterator.map(_._3).min, buf.iterator.map(_._3).max)),
-      Some((buf.iterator.map(_._1).min, buf.iterator.map(_._1).max)))
+    entry
   }
 
-  /** The manifest entry describing `rows` stored under `name` — the
-    * same statistics [[writeGelFile]] derives at encode time, for
-    * consumers (the DV delete) that update an entry WITHOUT rewriting
-    * its file. */
+  /** The lanes of a record with no added columns. */
+  private val NoLanes = Array.empty[AnyRef]
+
+  /** The manifest entry describing `rows` stored under `name` — the one
+    * place an entry's statistics are derived: [[writeGelFile]] returns
+    * it at encode time, and the DV delete updates an entry with it
+    * WITHOUT rewriting the file. */
   def entryOfRecords(name: String,
-      rows: Seq[(Long, Long, Long, String, Long)]): ManifestEntry = {
+      rows: scala.collection.Seq[(Long, Long, Long, String, Long)]): ManifestEntry = {
     require(rows.nonEmpty,
       s"graft-eventlog: no live rows for $name — remove the file instead")
-    val types = rows.map(_._4).distinct.sorted
+    val types = rows.map(_._4).distinct.sorted.toSeq
     val perType = rows.groupBy(_._4)
     ManifestEntry(name, rows.length,
       rows.iterator.map(_._2).min, rows.iterator.map(_._2).max,
@@ -1553,156 +1556,18 @@ object EventLog {
       Some((rows.iterator.map(_._1).min, rows.iterator.map(_._1).max)))
   }
 
-  /** Write one EXTENDED `.gel` file (GRAFTEL3): base records plus the
-    * named added columns, one nullable fixed-width lane each. Lane
-    * values are typed (`java.lang.Long` / `java.lang.Double` /
-    * `String` / null per the column's code); STRING lanes dictionary-
-    * encode into the header, so records stay fixed-width. A value
-    * whose runtime class contradicts its column's code is LOUD — it
-    * means a pipeline dropped the type somewhere upstream. The
-    * manifest entry carries the same base statistics as
-    * [[writeGelFile]]'s — added columns have no metadata lanes
-    * (predicates on them admit every file, which can only
-    * over-read). */
-  def writeGelFileExt(tmp: java.io.File, finalName: String,
-      buf: scala.collection.Seq[(Long, Long, Long, String, Long)],
-      extras: Seq[ExtraCol],
-      extraVals: scala.collection.Seq[Array[AnyRef]]): ManifestEntry = {
-    require(extras.nonEmpty, "writeGelFileExt needs added columns — " +
-      "use writeGelFile for base records")
-    require(buf.length == extraVals.length,
-      s"graft-eventlog: ${buf.length} base rows vs ${extraVals.length} " +
-        "extra-value rows")
-    require(buf.nonEmpty, "graft-eventlog: refusing to write an empty file")
-    val types = buf.map(_._4).distinct.sorted
-    require(types.length <= 256,
-      s"graft-eventlog: ${types.length} event types in one file exceed " +
-        "the 1-byte dictionary — split the write by type first")
-    val ord = types.zipWithIndex.toMap
-    val minTs = buf.iterator.map(_._2).min
-    val maxTs = buf.iterator.map(_._2).max
-    // per-file string dictionaries: sorted distinct values per STRING
-    // lane; payloads are dictionary indexes
-    val dicts: Array[Map[String, Int]] = extras.zipWithIndex.map {
-      case (c, j) =>
-        if (c.code != ExtraString) Map.empty[String, Int]
-        else extraVals.iterator.map(_(j)).filter(_ != null)
-          .map(_.asInstanceOf[String]).toSeq.distinct.sorted
-          .zipWithIndex.toMap
-    }.toArray
-    def laneBits(j: Int, v: AnyRef): Long = (extras(j).code, v) match {
-      case (ExtraBigint, l: java.lang.Long) => l.longValue
-      case (ExtraDouble, d: java.lang.Double) =>
-        java.lang.Double.doubleToLongBits(d.doubleValue)
-      case (ExtraString, s: String) => dicts(j)(s).toLong
-      case (code, other) => throw new IllegalArgumentException(
-        s"graft-eventlog: added column ${extras(j).name} has type code " +
-          s"$code but a lane value of ${other.getClass.getName} — a " +
-          "pipeline dropped the column's type")
-    }
-    val o = new DataOutputStream(
-      new BufferedOutputStream(EventLog.fs.openWrite(tmp), 1 << 16))
-    try {
-      o.write(Magic3)
-      o.writeInt(buf.length)
-      o.writeLong(minTs)
-      o.writeLong(maxTs)
-      o.writeInt(types.length)
-      types.foreach(t => writeUtf(o, t))
-      o.writeInt(extras.length)
-      extras.zipWithIndex.foreach { case (c, j) =>
-        writeUtf(o, c.name)
-        o.writeByte(c.code)
-        if (c.code == ExtraString) {
-          val vals = dicts(j).toSeq.sortBy(_._2).map(_._1)
-          o.writeInt(vals.length)
-          vals.foreach(writeUtf(o, _))
-        }
-      }
-      buf.iterator.zip(extraVals.iterator).foreach {
-        case ((id, ts, uid, tpe, cents), ev) =>
-          o.writeLong(id); o.writeLong(ts); o.writeLong(uid)
-          o.writeByte(ord(tpe)); o.writeLong(cents)
-          var j = 0
-          while (j < extras.length) {
-            val v = ev(j)
-            if (v == null) { o.writeByte(0); o.writeLong(0L) }
-            else { o.writeByte(1); o.writeLong(laneBits(j, v)) }
-            j += 1
-          }
-      }
-    } finally o.close()
-    val perType = buf.groupBy(_._4)
-    ManifestEntry(finalName, buf.length, minTs, maxTs, types.toSeq,
-      types.map(t => perType(t).length.toLong).toSeq,
-      Some(types.map(t => perType(t).iterator.map(_._5).sum).toSeq),
-      Some((buf.iterator.map(_._3).min, buf.iterator.map(_._3).max)),
-      Some((buf.iterator.map(_._1).min, buf.iterator.map(_._1).max)))
-  }
-
-  /** Decode EVERY record of `f` (the five BASE fields — added-column
-    * lanes are skipped) — the compactor's read side; scans go through
-    * the pruned readers instead. */
-  def readAllRecords(f: java.io.File): Seq[(Long, Long, Long, String, Long)] = {
-    val in = new DataInputStream(
-      new BufferedInputStream(EventLog.fs.openRead(f), 1 << 16))
-    try {
-      val h = readHeader(in)
-      val trail = 9 * h.extras.size
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long, String, Long)](h.count)
-      var i = 0
-      while (i < h.count) {
-        out += ((in.readLong(), in.readLong(), in.readLong(),
-          h.types(in.readByte() & 0xff), in.readLong()))
-        if (trail > 0) skipFully(in, trail)
-        i += 1
-      }
-      out.toSeq
-    } finally in.close()
-  }
-
-  /** Decode the LIVE records of a store file — [[readAllRecords]] with
-    * the file's committed deletion vector applied (the rewrite-side
-    * read of compaction and merge, so their outputs fold DVs away).
-    * The manifest entry's count arbitrates whether the mask is
-    * committed, exactly as in the scan readers ([[EventLogDv
-    * .maskFor]]); an unmanifested file must carry no DV. */
-  def readLiveRecords(dir: String, name: String)
-      : Seq[(Long, Long, Long, String, Long)] = {
-    val f = new java.io.File(dir, name)
-    val recs = readAllRecords(f)
-    val expect = readManifest(dir).get(name).map(_.count).getOrElse(-1)
-    EventLogDv.maskFor(f, recs.size, expect) match {
-      case None => recs
-      case Some(dv) => recs.iterator.zipWithIndex
-        .collect { case (r, i) if !dv.dead(i) => r }.toSeq
-    }
-  }
-
-  /** [[readLiveRecords]] plus the ADDED-COLUMN lanes, aligned to
-    * `cols` (registry order): the extended compactor's read side. A
-    * lane the file lacks (older wire) is null across its rows; lanes
-    * the file carries that `cols` omits cannot exist (the registry
-    * only grows). */
-  def readLiveRecordsExt(dir: String, name: String, cols: Seq[String])
-      : Seq[((Long, Long, Long, String, Long), Array[AnyRef])] = {
-    val f = new java.io.File(dir, name)
-    val pairs = readPhysicalRecordsExt(f, cols)
-    val expect = readManifest(dir).get(name).map(_.count).getOrElse(-1)
-    EventLogDv.maskFor(f, pairs.size, expect) match {
-      case None => pairs
-      case Some(dv) => pairs.zipWithIndex
-        .collect { case (p, i) if !dv.dead(i) => p }
-    }
-  }
-
-  /** Every PHYSICAL record of `f` with its added-column lanes aligned
-    * to `cols` — no deletion-vector mask (the CDC add-file read and
-    * [[readLiveRecordsExt]]'s decode side). Lane values are TYPED per
-    * the file's own header codes (`java.lang.Long` / `java.lang
-    * .Double` / `String` / null) — the wire is self-describing, so the
-    * caller never threads the registry here. */
-  def readPhysicalRecordsExt(f: java.io.File, cols: Seq[String])
+  /** Decode every PHYSICAL record of `f` with its added-column lanes
+    * aligned to `cols` (registry order) — the one `.gel` record decoder
+    * behind the rewrites (compaction, merge, COW SQL, the DV delete)
+    * and the CDC add-file read; scans go through the pruned readers
+    * instead. A lane the file lacks (written before the column was
+    * added) is null across its rows; lanes the file carries that
+    * `cols` omits are skipped. Lane values are TYPED per the file's
+    * own header codes (`java.lang.Long` / `java.lang.Double` /
+    * `String` / null) — the wire is self-describing, so the caller
+    * never threads the registry here. No deletion-vector mask: see
+    * [[readLiveRecords]]. */
+  def readRecords(f: java.io.File, cols: Seq[String] = Nil)
       : Seq[((Long, Long, Long, String, Long), Array[AnyRef])] = {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 16))
@@ -1711,10 +1576,10 @@ object EventLog {
       // output lane k ← file lane srcOf(k), or -1 = null fill
       val srcOf: Array[Int] = cols.map(h.extras.indexOf(_)).toArray
       val nFileEx = h.extras.size
-      val codes: Array[Byte] =
-        (0 until nFileEx).map(h.extraTypeOf).toArray
-      val dicts: Array[IndexedSeq[String]] =
-        (0 until nFileEx).map(h.extraDictOf).toArray
+      val used = new Array[Boolean](nFileEx)
+      srcOf.foreach(s => if (s >= 0) used(s) = true)
+      val codes: Array[Byte] = h.extraTypes.toArray
+      val dicts: Array[IndexedSeq[String]] = h.extraDicts.toArray
       def decode(j: Int, bits: Long): AnyRef = codes(j) match {
         case ExtraBigint => java.lang.Long.valueOf(bits)
         case ExtraDouble =>
@@ -1730,17 +1595,38 @@ object EventLog {
           h.types(in.readByte() & 0xff), in.readLong()))
         var j = 0
         while (j < nFileEx) {
-          val present = in.readByte() == 1
-          val v = in.readLong()
-          lane(j) = if (present) decode(j, v) else null
+          if (used(j)) {
+            val present = in.readByte() == 1
+            val v = in.readLong()
+            lane(j) = if (present) decode(j, v) else null
+          } else skipFully(in, 9)
           j += 1
         }
-        ext += srcOf.map(s => if (s < 0) null else lane(s))
+        ext += (if (srcOf.isEmpty) NoLanes
+          else srcOf.map(s => if (s < 0) null else lane(s)))
         i += 1
       }
       (base.toSeq, ext.toSeq)
     } finally in.close()
     recs.zip(exts)
+  }
+
+  /** The LIVE records of a store file — [[readRecords]] with the file's
+    * committed deletion vector applied (the rewrite-side read of
+    * compaction, merge and COW SQL, so their outputs fold DVs away).
+    * The manifest entry's count arbitrates whether the mask is
+    * committed, exactly as in the scan readers ([[EventLogDv
+    * .maskFor]]); an unmanifested file must carry no DV. */
+  def readLiveRecords(dir: String, name: String, cols: Seq[String] = Nil)
+      : Seq[((Long, Long, Long, String, Long), Array[AnyRef])] = {
+    val f = new java.io.File(dir, name)
+    val recs = readRecords(f, cols)
+    val expect = readManifest(dir).get(name).map(_.count).getOrElse(-1)
+    EventLogDv.maskFor(f, recs.size, expect) match {
+      case None => recs
+      case Some(dv) => recs.iterator.zipWithIndex
+        .collect { case (r, i) if !dv.dead(i) => r }.toSeq
+    }
   }
 
   // ------------------------------------------------------- bucketing
@@ -1904,9 +1790,8 @@ object EventLog {
         case v: java.lang.Long => h.minTs <= v && h.maxTs >= v
         case _ => true
       }
-      // user_id zone lane (round 9): only manifests written by the
-      // GRAFTML4/GRAFTMD2 codec carry bounds — None admits, so legacy
-      // stores and header-fallback files can only over-read
+      // user_id zone lane (round 9): an entry without bounds (or a
+      // header-fallback file) admits — it can only over-read
       case GreaterThan("user_id", v: java.lang.Long) =>
         h.users.forall(_._2 > v)
       case GreaterThanOrEqual("user_id", v: java.lang.Long) =>
@@ -2243,7 +2128,7 @@ class EventLogTable(path: String,
           .map { case (p, expect) =>
             EventLog.taskFsCheck(dirB, probeToken)
             val f = new java.io.File(p)
-            val pairs = EventLog.readPhysicalRecordsExt(f, extColsB)
+            val pairs = EventLog.readRecords(f, extColsB)
             val prior = EventLogDv.maskFor(f, pairs.size, expect)
             val dead = scala.collection.mutable.ArrayBuffer.empty[Int]
             val freshRows = scala.collection.mutable.ArrayBuffer
@@ -2571,7 +2456,7 @@ class EventLogScanBuilder(path: String,
         // the view's manifest entries — refused when any live file is
         // uncovered (the breakdowns live only there; headers don't
         // carry them), and SUM additionally refuses when any entry
-        // predates the per-type-sums lane (legacy GRAFTML1)
+        // lacks the per-type-sums lane
         val entries = metadataEntries match {
           case None => return false
           case Some(es) => es
@@ -2616,7 +2501,7 @@ class EventLogScanBuilder(path: String,
         if (!isCurrent && viewEntries.forall(_.isEmpty)) return false
         // global SUM(cents) is answerable from the manifest's per-type
         // sums — but only when EVERY entry in play is sums-bearing
-        // (headers don't carry sums; legacy entries don't either)
+        // (headers don't carry sums; sums-less entries don't either)
         lazy val sumsAvailable: Boolean = viewEntries match {
           case Some(es) => es.forall(_.typeSums.isDefined)
           case None =>
@@ -3147,7 +3032,8 @@ class EventLogMicroBatchStream(path: String, fields: Array[String],
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles}
+  import org.apache.spark.sql.connector.read.streaming.ReadLimit
+  import EventLogAdmission.{maxBytesOf, maxFilesOf}
 
   private def names: Seq[String] = EventLog.listFiles(path).map(_.getName)
 
@@ -3160,15 +3046,8 @@ class EventLogMicroBatchStream(path: String, fields: Array[String],
     * between a recoverable restart and an executor-OOM loop at 100 TB.
     * The limit bounds per-batch work; exactly-once and ordering are
     * untouched (offsets stay watermark names). */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxFilesPerTrigger.map(ReadLimit.maxFiles).toSeq ++
-      maxBytesPerTrigger.map(ReadLimit.maxBytes).toSeq
-    limits match {
-      case Nil => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    EventLogAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger)
 
   /** `Trigger.AvailableNow` snapshots the listing ONCE: the run drains
     * to this fixed end (in bounded batches, if a limit is set) and
@@ -3179,22 +3058,6 @@ class EventLogMicroBatchStream(path: String, fields: Array[String],
     availableNowCap = Some(names)
 
   private def visible: Seq[String] = availableNowCap.getOrElse(names)
-
-  private def maxFilesOf(limit: ReadLimit): Option[Int] = limit match {
-    case m: ReadMaxFiles => Some(m.maxFiles)
-    case c: CompositeReadLimit =>
-      val ms = c.getReadLimits.flatMap(maxFilesOf(_))
-      if (ms.isEmpty) None else Some(ms.min)
-    case _ => None // allAvailable / unknown kinds admit everything
-  }
-
-  private def maxBytesOf(limit: ReadLimit): Option[Long] = limit match {
-    case m: ReadMaxBytes => Some(m.maxBytes)
-    case c: CompositeReadLimit =>
-      val ms = c.getReadLimits.flatMap(maxBytesOf(_))
-      if (ms.isEmpty) None else Some(ms.min)
-    case _ => None
-  }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[EventLogOffset]
@@ -3297,6 +3160,39 @@ class EventLogMicroBatchStream(path: String, fields: Array[String],
     new EventLogReaderFactory(fields, opts)
 }
 
+/** Admission control shared by the two stream tails: the default read
+  * limit their `maxFilesPerTrigger` / `maxBytesPerTrigger` options
+  * declare, and the file and byte caps a (possibly composite) limit
+  * carries — None when it caps nothing (allAvailable and unknown kinds
+  * admit everything). */
+private[v2] object EventLogAdmission {
+  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxBytes, ReadMaxFiles}
+
+  def defaultLimit(maxFiles: Option[Int], maxBytes: Option[Long]): ReadLimit =
+    (maxFiles.map(ReadLimit.maxFiles).toSeq ++
+      maxBytes.map(ReadLimit.maxBytes).toSeq) match {
+      case Nil => ReadLimit.allAvailable()
+      case Seq(one) => one
+      case many => ReadLimit.compositeLimit(many.toArray)
+    }
+
+  def maxFilesOf(limit: ReadLimit): Option[Int] = limit match {
+    case m: ReadMaxFiles => Some(m.maxFiles)
+    case c: CompositeReadLimit =>
+      val ms = c.getReadLimits.flatMap(maxFilesOf(_))
+      if (ms.isEmpty) None else Some(ms.min)
+    case _ => None
+  }
+
+  def maxBytesOf(limit: ReadLimit): Option[Long] = limit match {
+    case m: ReadMaxBytes => Some(m.maxBytes)
+    case c: CompositeReadLimit =>
+      val ms = c.getReadLimits.flatMap(maxBytesOf(_))
+      if (ms.isEmpty) None else Some(ms.min)
+    case _ => None
+  }
+}
+
 case class EventLogOffset(watermark: String, count: Int) extends Offset {
   override def json(): String = {
     val esc = watermark.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -3357,7 +3253,8 @@ class EventLogChangesStream(path: String, fields: Array[String],
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxBytes, ReadMaxFiles}
+  import org.apache.spark.sql.connector.read.streaming.ReadLimit
+  import EventLogAdmission.{maxBytesOf, maxFilesOf}
 
   override def initialOffset(): Offset = {
     val cur = EventLog.currentVersion(path)
@@ -3368,15 +3265,8 @@ class EventLogChangesStream(path: String, fields: Array[String],
     EventLogVersionOffset(startingVersion)
   }
 
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxFilesPerTrigger.map(ReadLimit.maxFiles(_)).toSeq ++
-      maxBytesPerTrigger.map(ReadLimit.maxBytes(_)).toSeq
-    limits match {
-      case Nil => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    EventLogAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger)
 
   @volatile private var availableNowCap: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
@@ -3384,22 +3274,6 @@ class EventLogChangesStream(path: String, fields: Array[String],
 
   private def visibleVersion: Long =
     availableNowCap.getOrElse(EventLog.currentVersion(path))
-
-  private def maxFilesOf(limit: ReadLimit): Option[Int] = limit match {
-    case m: ReadMaxFiles => Some(m.maxFiles)
-    case c: CompositeReadLimit =>
-      val ms = c.getReadLimits.flatMap(maxFilesOf(_))
-      if (ms.isEmpty) None else Some(ms.min)
-    case _ => None
-  }
-
-  private def maxBytesOf(limit: ReadLimit): Option[Long] = limit match {
-    case m: ReadMaxBytes => Some(m.maxBytes)
-    case c: CompositeReadLimit =>
-      val ms = c.getReadLimits.flatMap(maxBytesOf(_))
-      if (ms.isEmpty) None else Some(ms.min)
-    case _ => None
-  }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[EventLogVersionOffset].version
@@ -3814,11 +3688,9 @@ class EventLogReaderFactory(fields: Array[String],
       private val exNull = new Array[Boolean](math.max(1, nEx))
       // lane types from THIS file's header (self-describing wire);
       // string dictionaries pre-converted once per file, not per row
-      private val exType: Array[Byte] =
-        (0 until nEx).map(header.extraTypeOf).toArray
+      private val exType: Array[Byte] = header.extraTypes.toArray
       private val exDictU8: Array[Array[UTF8String]] =
-        (0 until nEx).map(j =>
-          header.extraDictOf(j).map(UTF8String.fromString).toArray).toArray
+        header.extraDicts.map(_.map(UTF8String.fromString).toArray).toArray
       // output position i of an added column ← its lane in this file
       // (-1 = absent here → null)
       private val exSrc: Array[Int] = fields.map(f =>
@@ -3940,7 +3812,7 @@ class EventLogWriteBuilder(path: String, schema: StructType,
         .sameElements(EventLog.Schema.fields.map(_.dataType))
     // schema evolution: a store with added columns also accepts
     // base ++ ALL added columns (registry order, each its registered
-    // type) — a base-only frame still writes legacy-wire files that
+    // type) — a base-only frame still writes base-wire files that
     // read null-filled
     val added = EventLogSchema.read(path)
     val extNames = EventLog.Schema.fieldNames ++ added.map(_.name)
@@ -4084,17 +3956,62 @@ class EventLogDataWriter(path: String, partitionId: Int, taskId: Long,
     extras: Seq[EventLogSchema.AddedCol] = Nil,
     nameTag: String = "p") extends DataWriter[InternalRow] {
 
-  // per-(day, bucket) record buffers: (event_id, ts_us, user_id, type,
-  // cents); bucket is -1 on unbucketed writes. Added columns (schema
-  // evolution) buffer in a parallel lane, nullable.
-  private val days = scala.collection.mutable.LinkedHashMap
-    .empty[(Long, Int), scala.collection.mutable.ArrayBuffer[(Long, Long, Long, String, Long)]]
-  private val dayExtras = scala.collection.mutable.LinkedHashMap
-    .empty[(Long, Int), scala.collection.mutable.ArrayBuffer[Array[AnyRef]]]
+  private val buffer = new EventLogDayBuffer(extras, buckets)
   private val temps = scala.collection.mutable.ArrayBuffer.empty[(java.io.File, java.io.File)]
   private val entries = scala.collection.mutable.ArrayBuffer.empty[EventLog.ManifestEntry]
 
-  override def write(r: InternalRow): Unit = {
+  override def write(r: InternalRow): Unit = buffer.add(r)
+
+  override def commit(): WriterCommitMessage = {
+    buffer.groups.foreach { case key @ (day, bucket) =>
+      // the uuid makes the final name unique ACROSS jobs too: a second
+      // append producing the same (day, partitionId) must add files,
+      // never atomically rename over a previous job's output
+      val bTag = if (bucket < 0) "" else f"b$bucket%04d-"
+      val fin = new java.io.File(path,
+        f"day_$day%05d-" + bTag + f"$nameTag$partitionId%05d-" +
+          java.util.UUID.randomUUID().toString.take(8) + ".gel")
+      val tmp = new java.io.File(path,
+        s".inprogress.${java.util.UUID.randomUUID()}")
+      // the shared encoder returns the manifest entry for free: the
+      // task just computed every header field, plus the per-type
+      // counts only it can know cheaply
+      entries += buffer.encode(key, tmp, fin.getName)
+      temps += ((tmp, fin))
+    }
+    // rename into place only now: the all-or-nothing point of the task
+    temps.foreach { case (tmp, fin) =>
+      if (!EventLog.fs.rename(tmp, fin))
+        throw new java.io.IOException(
+          s"graft-eventlog: could not commit ${tmp.getName} -> ${fin.getName}")
+    }
+    EventLogCommit(entries.toSeq)
+  }
+
+  override def abort(): Unit =
+    temps.foreach(t => EventLog.fs.delete(t._1))
+  override def close(): Unit = ()
+}
+
+/** The per-(day, bucket) row buffer both `.gel` writers share, the
+  * batch [[EventLogDataWriter]] and the streaming
+  * [[EventLogStreamDataWriter]]: it refuses a null base field, routes
+  * each row to its UTC day (and, on a bucketed write, its bucket;
+  * -1 otherwise), converts the added-column lanes (`extras`, frame
+  * positions 5..) to their typed in-memory values, and encodes each
+  * group through [[EventLog.writeGelFile]]. Naming and publishing stay
+  * with each writer. */
+private[v2] class EventLogDayBuffer(extras: Seq[EventLogSchema.AddedCol],
+    buckets: Option[Int] = None) {
+
+  // (event_id, ts_us, user_id, type, cents) per group; added columns
+  // buffer in a parallel lane, nullable
+  private val rows = scala.collection.mutable.LinkedHashMap
+    .empty[(Long, Int), scala.collection.mutable.ArrayBuffer[(Long, Long, Long, String, Long)]]
+  private val lanes = scala.collection.mutable.LinkedHashMap
+    .empty[(Long, Int), scala.collection.mutable.ArrayBuffer[Array[AnyRef]]]
+
+  def add(r: InternalRow): Unit = {
     var i = 0
     while (i < 5) {
       if (r.isNullAt(i))
@@ -4104,12 +4021,9 @@ class EventLogDataWriter(path: String, partitionId: Int, taskId: Long,
       i += 1
     }
     val ts = r.getLong(1)
-    val day = Math.floorDiv(ts, 86400000000L)
-    val bucket = buckets
-      .map(GraftBucketFunction.bucketOf(r.getLong(2), _)).getOrElse(-1)
-    val key = (day, bucket)
-    days.getOrElseUpdate(key,
-        scala.collection.mutable.ArrayBuffer.empty) +=
+    val key = (Math.floorDiv(ts, 86400000000L),
+      buckets.map(GraftBucketFunction.bucketOf(r.getLong(2), _)).getOrElse(-1))
+    rows.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) +=
       ((r.getLong(0), ts, r.getLong(2), r.getUTF8String(3).toString,
         r.getLong(4)))
     if (extras.nonEmpty) {
@@ -4125,41 +4039,16 @@ class EventLogDataWriter(path: String, partitionId: Int, taskId: Long,
         }
         j += 1
       }
-      dayExtras.getOrElseUpdate(key,
-        scala.collection.mutable.ArrayBuffer.empty) += ev
+      lanes.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer.empty) += ev
     }
   }
 
-  override def commit(): WriterCommitMessage = {
-    days.foreach { case ((day, bucket), buf) =>
-      // the uuid makes the final name unique ACROSS jobs too: a second
-      // append producing the same (day, partitionId) must add files,
-      // never atomically rename over a previous job's output
-      val bTag = if (bucket < 0) "" else f"b$bucket%04d-"
-      val fin = new java.io.File(path,
-        f"day_$day%05d-" + bTag + f"$nameTag$partitionId%05d-" +
-          java.util.UUID.randomUUID().toString.take(8) + ".gel")
-      val tmp = new java.io.File(path,
-        s".inprogress.${java.util.UUID.randomUUID()}")
-      // the shared encoder returns the manifest entry for free: the
-      // task just computed every header field, plus the per-type
-      // counts only it can know cheaply
-      entries +=
-        (if (extras.isEmpty) EventLog.writeGelFile(tmp, fin.getName, buf)
-         else EventLog.writeGelFileExt(tmp, fin.getName, buf,
-           extras.map(_.wire), dayExtras((day, bucket))))
-      temps += ((tmp, fin))
-    }
-    // rename into place only now: the all-or-nothing point of the task
-    temps.foreach { case (tmp, fin) =>
-      if (!EventLog.fs.rename(tmp, fin))
-        throw new java.io.IOException(
-          s"graft-eventlog: could not commit ${tmp.getName} -> ${fin.getName}")
-    }
-    EventLogCommit(entries.toSeq)
-  }
+  /** The buffered (day, bucket) groups, in first-seen order. */
+  def groups: Iterable[(Long, Int)] = rows.keys
 
-  override def abort(): Unit =
-    temps.foreach(t => EventLog.fs.delete(t._1))
-  override def close(): Unit = ()
+  /** Encode group `key` into `tmp`; its entry names `finalName`. */
+  def encode(key: (Long, Int), tmp: java.io.File,
+      finalName: String): EventLog.ManifestEntry =
+    EventLog.writeGelFile(tmp, finalName, rows(key), extras.map(_.wire),
+      lanes.getOrElse(key, Nil))
 }

@@ -116,9 +116,7 @@ object EventLogBloom {
     if (!EventLog.fs.isFile(s)) return false
     val in = new DataInputStream(EventLog.fs.openRead(s))
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
-      require(java.util.Arrays.equals(magic, Magic),
+      EventLog.requireMagic(in, Magic,
         s"graft-eventlog: ${s.getName} is not a bloom sidecar")
       in.readLong() == EventLog.fs.length(dataFile)
     } finally in.close()
@@ -134,9 +132,7 @@ object EventLogBloom {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(s), 1 << 16))
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
-      require(java.util.Arrays.equals(magic, Magic),
+      EventLog.requireMagic(in, Magic,
         s"graft-eventlog: ${s.getName} is not a bloom sidecar")
       val builtLen = in.readLong()
       in.readInt() // id count — informational

@@ -17,12 +17,13 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
   *    plain feed uses to stream it as ZERO rows instead of refusing,
   *    the continuity rung every long-lived CDC consumer needs.
   *
-  * A rewrite commit WITHOUT parts (a legacy commit, or a crash between
-  * the manifest append and the part renames) still refuses loudly —
-  * absence of evidence never reads as "no changes". Plain (untyped)
-  * tails refuse commits whose parts carry rows (appends cannot express
-  * a delete or an update); the TYPED feed (`cdc.typed` read option,
-  * schema + `_change_type` + `_commit_version`) serves everything.
+  * A rewrite commit WITHOUT parts (a zone-proven whole-file delete, or
+  * a crash between the manifest append and the part renames) still
+  * refuses loudly — absence of evidence never reads as "no changes".
+  * Plain (untyped) tails refuse commits whose parts carry rows (appends
+  * cannot express a delete or an update); the TYPED feed (`cdc.typed`
+  * read option, schema + `_change_type` + `_commit_version`) serves
+  * everything.
   *
   * Wire format (big-endian): magic "GRAFTCD3" | int32 nExtras |
   * nExtras × (utf name, int8 typeCode) | int32 n | n × (int8
@@ -31,13 +32,10 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
   * presence, int64 value-or-bits) for BIGINT/DOUBLE and (int8
   * presence, int64 byteLen, bytes) for STRING — the extras are the
   * store's ADDED columns at journal time, so change rows carry their
-  * full width on extended stores. GRAFTCD2 (all-BIGINT lanes) and
-  * GRAFTCD1 (no extras header) read as legacy. Parts are batch-sized
+  * full width on extended stores. Parts are batch-sized
   * (bounded by the commit's own change volume) and decode whole. */
 object EventLogCdc {
 
-  private val LegacyMagic = "GRAFTCD1".getBytes("US-ASCII")
-  private val LegacyMagicV2 = "GRAFTCD2".getBytes("US-ASCII")
   private val Magic = "GRAFTCD3".getBytes("US-ASCII")
   private val PartName = """_cdc\.(\d{8})\.[0-9a-f]+\.gelc""".r
 
@@ -128,23 +126,20 @@ object EventLogCdc {
     tmp.getName
   }
 
-  /** (laneNames, rows) — legacy GRAFTCD1 parts read with no lanes,
-    * GRAFTCD2 (round 10) with all-BIGINT lanes. */
+  private def requirePartMagic(in: DataInputStream, f: java.io.File): Unit =
+    EventLog.requireMagic(in, Magic,
+      s"graft-eventlog cdc: ${f.getName} is not a change-data part")
+
+  /** (laneNames, rows) of one part. */
   def readPart(f: java.io.File): (Seq[String], Seq[Row]) = {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 16))
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
-      val legacy = java.util.Arrays.equals(magic, LegacyMagic)
-      val v2 = java.util.Arrays.equals(magic, LegacyMagicV2)
-      require(legacy || v2 || java.util.Arrays.equals(magic, Magic),
-        s"graft-eventlog cdc: ${f.getName} is not a change-data part")
+      requirePartMagic(in, f)
       val extras: Seq[(String, Byte)] =
-        if (legacy) Nil
-        else (0 until in.readInt()).map { _ =>
+        (0 until in.readInt()).map { _ =>
           val name = EventLog.readUtf(in)
-          (name, if (v2) EventLog.ExtraBigint else in.readByte())
+          (name, in.readByte())
         }.toSeq
       val rows = (0 until in.readInt()).map { _ =>
         val change = in.readByte()
@@ -157,7 +152,7 @@ object EventLogCdc {
         while (j < extras.length) {
           val present = in.readByte() == 1
           lanes(j) =
-            if (extras(j)._2 == EventLog.ExtraString && !v2 && !legacy) {
+            if (extras(j)._2 == EventLog.ExtraString) {
               val len = in.readLong()
               if (!present) { require(len == 0L); null }
               else {
@@ -183,9 +178,10 @@ object EventLogCdc {
   }
 
   /** The committed CDC parts of manifest commit `seq`: None = the
-    * commit journaled no change data (legacy, or torn before the part
-    * renames) — its consumers must refuse, never assume; Some(parts)
-    * may be empty-of-rows only through parts that SAY so. */
+    * commit journaled no change data (a zone-proven whole-file delete,
+    * or torn before the part renames) — its consumers must refuse,
+    * never assume; Some(parts) may be empty-of-rows only through parts
+    * that SAY so. */
   def partsOf(dir: String, seq: Long): Option[Seq[java.io.File]] = {
     val parts = EventLog.fs.listFiles(new java.io.File(dir))
       .filter(f => isPartName(f.getName) && partSeq(f.getName) == seq)
@@ -198,17 +194,11 @@ object EventLogCdc {
     partsOf(dir, seq).map(_.iterator.map { f =>
       val in = new DataInputStream(EventLog.fs.openRead(f))
       try {
-        val magic = new Array[Byte](Magic.length)
-        in.readFully(magic)
-        val legacy = java.util.Arrays.equals(magic, LegacyMagic)
-        val v2 = java.util.Arrays.equals(magic, LegacyMagicV2)
-        require(legacy || v2 || java.util.Arrays.equals(magic, Magic),
-          s"graft-eventlog cdc: ${f.getName} is not a change-data part")
-        if (!legacy)
-          (0 until in.readInt()).foreach { _ =>
-            EventLog.readUtf(in)
-            if (!v2) in.readByte()
-          }
+        requirePartMagic(in, f)
+        (0 until in.readInt()).foreach { _ =>
+          EventLog.readUtf(in)
+          in.readByte()
+        }
         in.readInt().toLong
       } finally in.close()
     }.sum)
@@ -331,7 +321,7 @@ class EventLogCdcReaderFactory(fields: Array[String])
       case EventLogCdcAddPartition(file, v) =>
         val f = new java.io.File(file)
         val wantedLanes = fields.filterNot(Base.contains).toSeq
-        val rows = EventLog.readPhysicalRecordsExt(f, wantedLanes)
+        val rows = EventLog.readRecords(f, wantedLanes)
           .iterator.map { case ((id, ts, user, tpe, cents), lanes) =>
             EventLogCdc.Row(EventLogCdc.Insert, id, ts, user, tpe, cents,
               lanes)

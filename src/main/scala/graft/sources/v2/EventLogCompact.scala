@@ -44,24 +44,17 @@ object EventLogCompact {
   case class Stats(recovered: Int, groupsMerged: Int, filesBefore: Int,
     filesAfter: Int)
 
-  // CI4: intents embed manifest entries, whose codec grew the per-type
-  // sums lane (CI2), the user-bounds zone lane (CI3), and then the
-  // commit's CDC part temps (CI4 — change-data files commit through
-  // the same journal as the swap, so a crash can never publish a
-  // rewrite without its change evidence or vice versa). CI3 intents
-  // still read (no CDC lane — their commits refuse in the changes
-  // feed, the pre-CDC behavior); older magics fail LOUDLY instead of
-  // being torn mid-read.
-  // CI5 (round 11): intents additionally journal the PLAN-TIME manifest
-  // entries of their inputs — the expected-state evidence the
-  // conflict-checked commit compares against, so even a crashed
-  // rewrite recovered later still detects a competitor's in-place
-  // update (DV delete) on its inputs. CI4/CI3 read with no
-  // input-entry lane (weaker name-level checking, the round-10
-  // behavior).
+  // CI5: intents embed manifest entries (with their per-type sums and
+  // zone lanes), the commit's CDC part temps (change-data files commit
+  // through the same journal as the swap, so a crash can never publish
+  // a rewrite without its change evidence or vice versa), and the
+  // PLAN-TIME manifest entries of their inputs — the expected-state
+  // evidence the conflict-checked commit compares against, so even a
+  // crashed rewrite recovered later still detects a competitor's
+  // in-place update (DV delete) on its inputs. An intent of any other
+  // magic fails LOUDLY instead of being torn mid-read: the recovery
+  // handoff across a format upgrade is a human-involved event.
   private val IntentMagic = "GRAFTCI5".getBytes("US-ASCII")
-  private val LegacyIntentMagicV4 = "GRAFTCI4".getBytes("US-ASCII")
-  private val LegacyIntentMagicV3 = "GRAFTCI3".getBytes("US-ASCII")
   private[v2] val IntentPrefix = ".compact.intent."
 
   /** One group's replacement plan: temps (pre-rename names) aligned
@@ -107,22 +100,15 @@ object EventLogCompact {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 12))
     try {
-      val magic = new Array[Byte](IntentMagic.length)
-      in.readFully(magic)
-      val v3 = java.util.Arrays.equals(magic, LegacyIntentMagicV3)
-      val v4 = java.util.Arrays.equals(magic, LegacyIntentMagicV4)
-      require(v3 || v4 || java.util.Arrays.equals(magic, IntentMagic),
+      EventLog.requireMagic(in, IntentMagic,
         s"graft-eventlog: ${f.getName} is not a compaction intent")
       val n = in.readInt()
       val temps = (0 until n).map(_ => EventLog.readUtf(in))
-      val entries = (0 until n).map(_ =>
-        EventLog.readEntry(in, withUsers = true))
+      val entries = (0 until n).map(_ => EventLog.readEntry(in))
       val inputs = (0 until in.readInt()).map(_ => EventLog.readUtf(in))
-      val cdc = if (v3) Nil
-        else (0 until in.readInt()).map(_ => EventLog.readUtf(in))
-      val inputEntries = if (v3 || v4) Nil
-        else (0 until in.readInt()).map(_ =>
-          EventLog.readEntry(in, withUsers = true))
+      val cdc = (0 until in.readInt()).map(_ => EventLog.readUtf(in))
+      val inputEntries =
+        (0 until in.readInt()).map(_ => EventLog.readEntry(in))
       Intent(temps, entries, inputs, cdc.toSeq, inputEntries.toSeq)
     } finally in.close()
   }
@@ -365,11 +351,8 @@ object EventLogCompact {
             val tmp = new java.io.File(dirOfDay, s".inprogress.compact.$uuid")
             val fin = f"day_$day%05d-" + bTag + s"c$uuid.gel"
             val sorted = chunk.sortBy(r => (r._1._2, r._1._1))
-            outs += ((tmp.getName,
-              if (extCols.isEmpty)
-                EventLog.writeGelFile(tmp, fin, sorted.map(_._1))
-              else EventLog.writeGelFileExt(tmp, fin, sorted.map(_._1),
-                extWire, sorted.map(_._2))))
+            outs += ((tmp.getName, EventLog.writeGelFile(tmp, fin,
+              sorted.map(_._1), extWire, sorted.map(_._2))))
             chunk = scala.collection.mutable.ArrayBuffer.empty
             types = scala.collection.mutable.Set.empty
           }
@@ -377,13 +360,10 @@ object EventLogCompact {
           // compaction folds DVs away — the output carries live rows
           // under new names, and the swap deletes the masks with their
           // inputs. Added-column lanes travel alongside, aligned to
-          // the registry (null where an older wire lacks them).
+          // the registry (null where a file predates a column).
           def liveOf(p: String): Seq[Row] = {
             val f = new java.io.File(p)
-            if (extCols.isEmpty)
-              EventLog.readLiveRecords(f.getParent, f.getName)
-                .map(r => (r, Array.empty[AnyRef]))
-            else EventLog.readLiveRecordsExt(f.getParent, f.getName, extCols)
+            EventLog.readLiveRecords(f.getParent, f.getName, extCols)
           }
           val ordered: Iterator[Row] =
             if (!zorder)
@@ -489,10 +469,7 @@ object EventLogCompact {
     val base = sc.parallelize(paths.sorted, paths.size)
       .flatMap { p =>
         val f = new java.io.File(p)
-        if (extCols.isEmpty)
-          EventLog.readLiveRecords(f.getParent, f.getName)
-            .map(r => (r, Array.empty[AnyRef]))
-        else EventLog.readLiveRecordsExt(f.getParent, f.getName, extCols)
+        EventLog.readLiveRecords(f.getParent, f.getName, extCols)
       }
       .zipWithIndex() // gidx: partition order == sorted file order
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -548,11 +525,8 @@ object EventLogCompact {
           val tmp = new java.io.File(dir, s".inprogress.compact.$uuid")
           val fin = f"day_$day%05d-" + bTag + s"c$uuid.gel"
           ((chunk, k),
-            (tmp.getName,
-              if (extCols.isEmpty)
-                EventLog.writeGelFile(tmp, fin, rs.map(_._1))
-              else EventLog.writeGelFileExt(tmp, fin, rs.map(_._1),
-                extWire, rs.map(_._2))))
+            (tmp.getName, EventLog.writeGelFile(tmp, fin, rs.map(_._1),
+              extWire, rs.map(_._2))))
         }
       }
       .collect().sortBy(_._1).map(_._2).toSeq

@@ -168,9 +168,7 @@ object EventLogDv {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(s), 1 << 16))
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
-      require(java.util.Arrays.equals(magic, Magic),
+      EventLog.requireMagic(in, Magic,
         s"graft-eventlog: ${s.getName} is not a deletion-vector sidecar")
       val builtLen = in.readLong()
       require(builtLen == EventLog.fs.length(dataFile),

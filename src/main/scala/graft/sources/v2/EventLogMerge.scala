@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions.col
   *    contains no batch key before anything is decoded — on a
   *    sequential-id feed (day files carry tight disjoint ranges) a
   *    small merge touches a handful of files, not the store. Files
-  *    without bounds (legacy manifests, header fallbacks) stay
+  *    without bounds (boundless entries, header fallbacks) stay
   *    candidates, so pruning can only skip work, never matches.
   *    Candidates decode once, executor-parallel (one task per file):
   *    O(candidate bytes) READ, O(touched files) WRITTEN. For
@@ -172,8 +172,8 @@ object EventLogMerge {
     val bucketing = EventLog.readBucketing(dir)
     // KEY-LANE PRUNE: a file whose manifest id-bounds cannot contain
     // any batch key is provably untouched — never decoded. Sorted keys
-    // + one binary search per file; files without bounds (legacy
-    // manifests, header fallbacks) stay candidates, so pruning can
+    // + one binary search per file; files without bounds (boundless
+    // entries, header fallbacks) stay candidates, so pruning can
     // only skip work, never matches.
     val sortedKeys = batch.map(_._1._1).sorted.toArray
     def intersects(lo: Long, hi: Long): Boolean = {
@@ -220,7 +220,7 @@ object EventLogMerge {
         // DV-dead row is not matchable, and the rewrite folds the mask
         // away — the output carries live rows (with their added-column
         // lanes) under a new name
-        val recs = EventLog.readLiveRecordsExt(f.getParent, f.getName,
+        val recs = EventLog.readLiveRecords(f.getParent, f.getName,
           extColsB)
         // matched PRE-IMAGES (whole rows): the ids drive the insert
         // anti-set, the full rows become the CDC update_preimage lane
@@ -253,11 +253,8 @@ object EventLogMerge {
           val tmp = new java.io.File(f.getParent, s".inprogress.merge.$uuid")
           val fin = f.getName.stripSuffix(".gel") + s"-m$uuid.gel"
           val sorted = merged.sortBy(r => (r._1._2, r._1._1))
-          val entry =
-            if (extColsB.isEmpty)
-              EventLog.writeGelFile(tmp, fin, sorted.map(_._1))
-            else EventLog.writeGelFileExt(tmp, fin, sorted.map(_._1),
-              extWireB, sorted.map(_._2))
+          val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
+            extWireB, sorted.map(_._2))
           (f.getName, matched, Some((tmp.getName, entry)), false)
         }
         }
@@ -287,11 +284,8 @@ object EventLogMerge {
         val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")
         val sorted = rs.sortBy(r => (r._1._2, r._1._1))
         val fin = f"day_$day%05d-" + bTag + s"u$uuid.gel"
-        val entry =
-          if (extWire.isEmpty)
-            EventLog.writeGelFile(tmp, fin, sorted.map(_._1))
-          else EventLog.writeGelFileExt(tmp, fin, sorted.map(_._1),
-            extWire, sorted.map(_._2))
+        val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
+          extWire, sorted.map(_._2))
         (tmp.getName, entry)
       }
 
@@ -320,7 +314,7 @@ object EventLogMerge {
   }
 
   /** Per-file id-bound metadata shipped to the assignment flatMap:
-    * None bounds = the file admits every key (legacy manifest entry or
+    * None bounds = the file admits every key (boundless manifest entry or
     * unmanifested foreign file). */
   private case class FileBounds(file: String, lo: Long, hi: Long,
     bounded: Boolean)
@@ -356,7 +350,7 @@ object EventLogMerge {
     *
     * Scale shape: per-task memory is O(file + the file's key-range
     * slice of the batch); on a sequential-id feed the slice is tiny,
-    * and on a boundless (legacy/foreign) store it degrades to O(batch)
+    * and on a boundless (foreign) store it degrades to O(batch)
     * per task — executor memory, never driver. Total shuffle volume is
     * Σ per-file assignments, so a dense-overlap store pays its real
     * routing cost instead of hiding it in a driver broadcast. Driver
@@ -488,7 +482,7 @@ object EventLogMerge {
             Option.empty[String])
         else {
           // live records (with lanes) — same DV fold as broadcast
-          val recs = EventLog.readLiveRecordsExt(f.getParent, f.getName,
+          val recs = EventLog.readLiveRecords(f.getParent, f.getName,
             extColsB)
           val matched = recs.iterator.map(_._1._1).filter(byId.contains)
             .toSeq.distinct
@@ -527,11 +521,8 @@ object EventLogMerge {
               s".inprogress.merge.$uuid")
             val fin = file.stripSuffix(".gel") + s"-m$uuid.gel"
             val sorted = merged.sortBy(r => (r._1._2, r._1._1))
-            val entry =
-              if (extColsB.isEmpty)
-                EventLog.writeGelFile(tmp, fin, sorted.map(_._1))
-              else EventLog.writeGelFileExt(tmp, fin, sorted.map(_._1),
-                extWireB, sorted.map(_._2))
+            val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
+              extWireB, sorted.map(_._2))
             // this task's CHANGE DATA part: pre/post image pairs for
             // its matches — executor-written like the data temp, so no
             // change row ever rides through the driver
@@ -580,11 +571,8 @@ object EventLogMerge {
         val bTag = if (bucket < 0) "" else f"b$bucket%04d-"
         val tmp = new java.io.File(dirB, s".inprogress.merge.$uuid")
         val fin = f"day_$day%05d-" + bTag + s"u$uuid.gel"
-        val entry =
-          if (extColsB.isEmpty)
-            EventLog.writeGelFile(tmp, fin, rs.map(_._1))
-          else EventLog.writeGelFileExt(tmp, fin, rs.map(_._1),
-            extWireB, rs.map(_._2))
+        val entry = EventLog.writeGelFile(tmp, fin, rs.map(_._1),
+          extWireB, rs.map(_._2))
         val cdcTmp = EventLogCdc.writeTemp(dirB, rs.map(r =>
           EventLogCdc.Row(EventLogCdc.Insert, r._1._1, r._1._2, r._1._3,
             r._1._4, r._1._5, r._2)), extWireB)

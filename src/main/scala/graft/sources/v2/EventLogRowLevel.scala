@@ -141,10 +141,9 @@ class EventLogCowBatchWrite(path: String,
     if (oldCount + newCount > EventLogCowBatchWrite.CdcDiffCap) return None
     type Pair = ((Long, Long, Long, String, Long), Array[AnyRef])
     val oldRows: Seq[Pair] = removed.flatMap(n =>
-      EventLog.readLiveRecordsExt(path, n, extCols))
+      EventLog.readLiveRecords(path, n, extCols))
     val newRows: Seq[Pair] = entries.flatMap(e =>
-      EventLog.readPhysicalRecordsExt(
-        new java.io.File(path, e.file), extCols))
+      EventLog.readRecords(new java.io.File(path, e.file), extCols))
     val oldBy = oldRows.map(r => r._1._1 -> r).toMap
     val newBy = newRows.map(r => r._1._1 -> r).toMap
     if (oldBy.size != oldRows.size || newBy.size != newRows.size)

@@ -19,9 +19,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
   *    appends a fixed-width (presence byte, int64) pair per extra —
   *    the payload is the value, the IEEE-754 bits, or the dictionary
   *    index, so record arithmetic never depends on type. Files from
-  *    BEFORE the add (GRAFTEL1/GRAFTEL2, or GRAFTEL3 missing the
-  *    column) read under the new schema with NULL fill — no rewrite,
-  *    ever.
+  *    BEFORE the add (GRAFTEL1, or GRAFTEL3 missing the column) read
+  *    under the new schema with NULL fill — no rewrite, ever.
   *  - INCOMPATIBLE changes refuse loudly: dropping or retyping a
   *    column would change what already-written bytes mean
   *    ([[dropColumn]] / [[retypeColumn]] name the bound); so do
@@ -37,12 +36,10 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
   *    time travel, and the plain changes feed.
   *
   * Registry wire (big-endian): magic "GRAFTSC2" | int32 n | n × (utf
-  * name | int64 addedAtVersion | int8 typeCode); GRAFTSC1 (no type
-  * codes) reads as all-BIGINT. Temp-and-rename, like every other
-  * store metadata file. */
+  * name | int64 addedAtVersion | int8 typeCode). Temp-and-rename, like
+  * every other store metadata file. */
 object EventLogSchema {
 
-  private val LegacyMagic = "GRAFTSC1".getBytes("US-ASCII")
   private val Magic = "GRAFTSC2".getBytes("US-ASCII")
   val RegistryName = "_schema.gelsc"
 
@@ -81,26 +78,20 @@ object EventLogSchema {
   def registryFile(dir: String): java.io.File =
     new java.io.File(dir, RegistryName)
 
-  /** Every added column, oldest first; empty for a base-schema store.
-    * GRAFTSC1 registries (round 10, BIGINT-only) read with LongType. */
+  /** Every added column, oldest first; empty for a base-schema store. */
   def read(dir: String): Seq[AddedCol] = {
     val f = registryFile(dir)
     if (!EventLog.fs.isFile(f)) return Nil
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 12))
     try {
-      val magic = new Array[Byte](Magic.length)
-      in.readFully(magic)
-      val legacy = java.util.Arrays.equals(magic, LegacyMagic)
-      require(legacy || java.util.Arrays.equals(magic, Magic),
+      EventLog.requireMagic(in, Magic,
         s"graft-eventlog: $RegistryName has bad magic — not a schema " +
           "registry")
       (0 until in.readInt()).map { _ =>
         val name = EventLog.readUtf(in)
         val at = in.readLong()
-        val dt = if (legacy) org.apache.spark.sql.types.LongType
-          else dtypeOf(in.readByte())
-        AddedCol(name, at, dt)
+        AddedCol(name, at, dtypeOf(in.readByte()))
       }
     } finally in.close()
   }
@@ -131,7 +122,7 @@ object EventLogSchema {
 
   /** Re-key the registry to a FRESH history (a truncating overwrite
     * reset the manifest log): the same columns, all visible from
-    * version `addedAt` on — the overwrite job's own GRAFTEL2 files
+    * version `addedAt` on — the overwrite job's own GRAFTEL3 files
     * must stay readable under the schema they were validated
     * against. */
   def resetAt(dir: String, cols: Seq[AddedCol], addedAt: Long = 0L): Unit =
@@ -162,7 +153,7 @@ object EventLogSchema {
     col
   }
 
-  /** Dropping a column would change what already-written GRAFTEL2
+  /** Dropping a column would change what already-written GRAFTEL3
     * bytes mean — every reader of every retained version shares the
     * registry. Refused, permanently and loudly. */
   def dropColumn(dir: String, name: String): Nothing =

@@ -113,14 +113,12 @@ object EventLogSink {
     val in = new DataInputStream(
       new BufferedInputStream(EventLog.fs.openRead(f), 1 << 12))
     try {
-      val magic = new Array[Byte](IntentMagic.length)
-      in.readFully(magic)
-      require(java.util.Arrays.equals(magic, IntentMagic),
+      EventLog.requireMagic(in, IntentMagic,
         s"graft-eventlog sink: ${f.getName} is not a sink intent")
       val epoch = in.readLong()
       (epoch, (0 until in.readInt()).map { _ =>
         Pending(EventLog.readUtf(in), EventLog.readUtf(in),
-          EventLog.readEntry(in, withUsers = true))
+          EventLog.readEntry(in))
       })
     } finally in.close()
   }
@@ -224,9 +222,10 @@ class EventLogStreamWriterFactory(path: String,
     new EventLogStreamDataWriter(path, partitionId, epochId, extras)
 }
 
-/** Buffers per-day like [[EventLogDataWriter]], but NEVER publishes:
-  * commit leaves the encoded files as `.inprogress.stream.*` temps and
-  * hands (temp, final, entry) to the epoch commit — the inversion that
+/** Buffers per day through the same [[EventLogDayBuffer]] as
+  * [[EventLogDataWriter]], but NEVER publishes: commit leaves the
+  * encoded files as `.inprogress.stream.*` temps and hands (temp,
+  * final, entry) to the epoch commit — the inversion that
   * makes epoch replay safe (see [[EventLogSink]]). On an extended
   * store, `extras` names the added-column lanes the stream frame
   * carries (positions 5..). */
@@ -234,47 +233,13 @@ class EventLogStreamDataWriter(path: String, partitionId: Int,
     epochId: Long, extras: Seq[EventLogSchema.AddedCol] = Nil)
     extends DataWriter[InternalRow] {
 
-  private val days = scala.collection.mutable.LinkedHashMap
-    .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long, Long, String, Long)]]
-  private val dayExtras = scala.collection.mutable.LinkedHashMap
-    .empty[Long, scala.collection.mutable.ArrayBuffer[Array[AnyRef]]]
+  private val buffer = new EventLogDayBuffer(extras)
   private val temps = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
 
-  override def write(r: InternalRow): Unit = {
-    var i = 0
-    while (i < 5) {
-      if (r.isNullAt(i))
-        throw new IllegalArgumentException(
-          s"graft-eventlog: null in field ${EventLog.Schema.fieldNames(i)} — " +
-            "the format has no null lane; repair or filter first")
-      i += 1
-    }
-    val ts = r.getLong(1)
-    val day = Math.floorDiv(ts, 86400000000L)
-    days.getOrElseUpdate(day,
-        scala.collection.mutable.ArrayBuffer.empty) +=
-      ((r.getLong(0), ts, r.getLong(2), r.getUTF8String(3).toString,
-        r.getLong(4)))
-    if (extras.nonEmpty) {
-      val ev = new Array[AnyRef](extras.length)
-      var j = 0
-      while (j < extras.length) {
-        if (!r.isNullAt(5 + j)) ev(j) = extras(j).dtype match {
-          case org.apache.spark.sql.types.LongType =>
-            java.lang.Long.valueOf(r.getLong(5 + j))
-          case org.apache.spark.sql.types.DoubleType =>
-            java.lang.Double.valueOf(r.getDouble(5 + j))
-          case _ => r.getUTF8String(5 + j).toString
-        }
-        j += 1
-      }
-      dayExtras.getOrElseUpdate(day,
-        scala.collection.mutable.ArrayBuffer.empty) += ev
-    }
-  }
+  override def write(r: InternalRow): Unit = buffer.add(r)
 
   override def commit(): WriterCommitMessage = {
-    val pending = days.toSeq.map { case (day, buf) =>
+    val pending = buffer.groups.toSeq.map { case key @ (day, _) =>
       val uuid = java.util.UUID.randomUUID().toString.take(8)
       // (day, epoch, partition) in the name: in-order-day feeds keep
       // the monotone-name contract the micro-batch source tails by
@@ -282,10 +247,7 @@ class EventLogStreamDataWriter(path: String, partitionId: Int,
       val tmp = new java.io.File(path,
         s".inprogress.stream.${java.util.UUID.randomUUID()}")
       temps += tmp
-      EventLogSink.Pending(tmp.getName, fin,
-        if (extras.isEmpty) EventLog.writeGelFile(tmp, fin, buf)
-        else EventLog.writeGelFileExt(tmp, fin, buf, extras.map(_.wire),
-          dayExtras(day)))
+      EventLogSink.Pending(tmp.getName, fin, buffer.encode(key, tmp, fin))
     }
     EventLogSink.EpochCommit(pending)
   }

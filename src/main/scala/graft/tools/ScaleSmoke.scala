@@ -30,6 +30,7 @@ object ScaleSmoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.sources.v2.EventLog.installFsFromConf(spark)
     // optional name filter: `runMain graft.tools.ScaleSmoke asof topk`
     // times only matching operators (substring match)
     val only = args.toSet
@@ -273,9 +274,7 @@ object ScaleSmoke {
         // space — that scattered-key case is the bloom lane's territory
         // and is covered as the bounds-less path in EventLogKeyLaneSpec.)
         val ev1x = graft.sources.Tables.events(spark, "/root/testdata/sf0.1")
-          .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"),
-            expr("cast(round(value * 100) as bigint)").as("cents"))
+          .transform(graft.queries.Formats.eventlogRows)
         for ((label, ev) <- Seq(
             "1x" -> ev1x,
             "10x" -> (0 until 10).map(k =>
@@ -305,9 +304,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val store = java.nio.file.Files.createTempDirectory("scale_gelbl").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           ev.withColumn("__day", expr("ts_us div 86400000000"))
             .repartition(col("__day")).drop("__day")
             .write.format("graft-eventlog").mode("append").save(store)
@@ -330,9 +327,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val frag = java.nio.file.Files.createTempDirectory("scale_gelz").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           (0 until 3).foreach { k =>
             ev.where(pmod(col("user_id"), lit(3)) === k)
               .withColumn("__day", expr("ts_us div 86400000000"))
@@ -355,9 +350,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val frag = java.nio.file.Files.createTempDirectory("scale_gelc").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           (0 until 3).foreach { k =>
             ev.where(pmod(col("user_id"), lit(3)) === k)
               .withColumn("__day", expr("ts_us div 86400000000"))
@@ -378,9 +371,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val store = java.nio.file.Files.createTempDirectory("scale_gelsm").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           ev.withColumn("__day", expr("ts_us div 86400000000"))
             .repartition(col("__day")).drop("__day")
             .write.format("graft-eventlog").mode("append").save(store)
@@ -402,9 +393,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val store = java.nio.file.Files.createTempDirectory("scale_geldv").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           ev.withColumn("__day", expr("ts_us div 86400000000"))
             .repartition(col("__day")).drop("__day")
             .write.format("graft-eventlog").mode("append").save(store)
@@ -428,9 +417,7 @@ object ScaleSmoke {
         for ((label, dir) <- Seq("1x" -> "/root/testdata/sf0.1", "10x" -> evDir)) {
           val store = java.nio.file.Files.createTempDirectory("scale_gelcw").toString
           val ev = graft.sources.Tables.events(spark, dir)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              col("user_id"), col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("cents"))
+            .transform(graft.queries.Formats.eventlogRows)
           ev.withColumn("__day", expr("ts_us div 86400000000"))
             .repartition(col("__day")).drop("__day")
             .write.format("graft-eventlog").mode("append").save(store)

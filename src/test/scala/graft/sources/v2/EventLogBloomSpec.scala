@@ -72,7 +72,7 @@ class EventLogBloomSpec extends graft.SparkTestBase {
     val victim = EventLog.listFiles(dir).head
     // rewrite the data file in place with one extra record (length
     // changes); keep the OLD sidecar under the same name
-    val recs = EventLog.readAllRecords(victim) :+
+    val recs = EventLog.readRecords(victim).map(_._1) :+
       ((9999L, recsDay(victim), 1L, "z", 1L))
     val tmp = new java.io.File(dir, ".inprogress.bloomtest")
     val entry = EventLog.writeGelFile(tmp, victim.getName,
@@ -124,5 +124,5 @@ class EventLogBloomSpec extends graft.SparkTestBase {
   }
 
   private def recsDay(f: java.io.File): Long =
-    EventLog.readAllRecords(f).head._2
+    EventLog.readRecords(f).map(_._1).head._2
 }

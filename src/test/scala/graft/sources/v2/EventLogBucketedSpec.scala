@@ -45,7 +45,7 @@ class EventLogBucketedSpec extends graft.SparkTestBase {
       val b = EventLog.bucketOfName(f.getName)
       assert(b.isDefined, s"${f.getName} lacks a bucket tag")
       // every record in the file actually belongs to the tagged bucket
-      EventLog.readAllRecords(f).foreach { r =>
+      EventLog.readRecords(f).map(_._1).foreach { r =>
         assert(GraftBucketFunction.bucketOf(r._3, 4) == b.get,
           s"record user ${r._3} in bucket-${b.get} file ${f.getName}")
       }

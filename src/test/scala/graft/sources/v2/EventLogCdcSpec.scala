@@ -153,7 +153,7 @@ class EventLogCdcSpec extends graft.SparkTestBase {
     // hand-build the crash state of a merge: output renamed in, intent
     // (with its CDC temp) still journaled, manifest not yet appended
     val victim = EventLog.listFiles(dir).head
-    val recs = EventLog.readAllRecords(victim)
+    val recs = EventLog.readRecords(victim).map(_._1)
     val upd = recs.map(r => if (r._1 == 1L) r.copy(_5 = 4242L) else r)
     val tmp = new java.io.File(dir, ".inprogress.merge.test")
     val fin = victim.getName.stripSuffix(".gel") + "-mtest.gel"

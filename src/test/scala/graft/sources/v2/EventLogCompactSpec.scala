@@ -106,7 +106,7 @@ class EventLogCompactSpec extends graft.SparkTestBase {
       .filter { case (_, h) => Math.floorDiv(h.minTs, Day) == 0L }.map(_._1)
     // hand-build the post-rename, pre-delete crash state: merged output
     // visible under its final name, inputs still alive, intent present
-    val recs = day0.flatMap(EventLog.readAllRecords).sortBy(r => (r._2, r._1))
+    val recs = day0.flatMap(EventLog.readRecords(_).map(_._1)).sortBy(r => (r._2, r._1))
     val tmp = new java.io.File(dir, ".inprogress.compact.test")
     val entry = EventLog.writeGelFile(tmp, "day_00000-ctest.gel", recs)
     assert(tmp.renameTo(new java.io.File(dir, entry.file)))
@@ -136,7 +136,7 @@ class EventLogCompactSpec extends graft.SparkTestBase {
     val filesBefore = EventLog.listFiles(dir).map(_.getName).toSet
     val day0 = EventLog.zoneMaps(dir)
       .filter { case (_, h) => Math.floorDiv(h.minTs, Day) == 0L }.map(_._1)
-    val recs = day0.flatMap(EventLog.readAllRecords).sortBy(r => (r._2, r._1))
+    val recs = day0.flatMap(EventLog.readRecords(_).map(_._1)).sortBy(r => (r._2, r._1))
     // two-chunk replacement where only chunk 1 got renamed in: torn
     val tmp1 = new java.io.File(dir, ".inprogress.compact.t1")
     val e1 = EventLog.writeGelFile(tmp1, "day_00000-ct1.gel",

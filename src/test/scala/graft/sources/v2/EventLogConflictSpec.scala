@@ -35,7 +35,7 @@ class EventLogConflictSpec extends graft.SparkTestBase {
   private def stageRewrite(dir: String, input: String,
       bump: Long): EventLogCompact.Intent = {
     val manAtPlan = EventLog.readManifest(dir)
-    val rows = EventLog.readAllRecords(new java.io.File(dir, input))
+    val rows = EventLog.readRecords(new java.io.File(dir, input)).map(_._1)
       .map(r => r.copy(_5 = r._5 + bump))
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")
@@ -286,7 +286,7 @@ object ConflictRaceChild {
   def main(args: Array[String]): Unit = {
     val Array(dir, input, _, barrier) = args
     val manAtPlan = EventLog.readManifest(dir)
-    val rows = EventLog.readAllRecords(new java.io.File(dir, input))
+    val rows = EventLog.readRecords(new java.io.File(dir, input)).map(_._1)
       .map(r => r.copy(_5 = r._5 + 7000L))
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")

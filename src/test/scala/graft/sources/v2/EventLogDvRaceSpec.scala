@@ -36,7 +36,7 @@ class EventLogDvRaceSpec extends graft.SparkTestBase {
     * manifest entry — exactly what deleteWhere's task computes. */
   private def stageKill(dir: String, f: java.io.File, idx: Int)
       : (EventLogDv.Dv, String, EventLog.ManifestEntry) = {
-    val pairs = EventLog.readPhysicalRecordsExt(f, Nil)
+    val pairs = EventLog.readRecords(f)
     val (dv, tmp) = EventLogDv.writeStaged(f, pairs.size, Seq(idx))
     val live = pairs.iterator.zipWithIndex
       .collect { case ((r, _), i) if i != idx => r }.toSeq
@@ -98,7 +98,7 @@ class EventLogDvRaceSpec extends graft.SparkTestBase {
     commitKill(dir, name, planned, dvA, tmpA, entryA)
     // re-run after a hypothetical crash between finalize and append:
     // the recomputed cumulative mask is byte-identical
-    val pairs = EventLog.readPhysicalRecordsExt(f, Nil)
+    val pairs = EventLog.readRecords(f)
     val (dv2, tmp2) = EventLogDv.writeStaged(f, pairs.size, Seq(0))
     EventLogDv.finalizeStaged(dir, tmp2, name, dv2.live,
       EventLog.readManifest(dir)) // must not throw

@@ -36,7 +36,7 @@ class EventLogIsolationSpec extends graft.SparkTestBase {
     // hand-build the window: a rewritten copy visible under its final
     // maintenance-tagged name, manifest untouched, intent journaled
     val victim = EventLog.listFiles(dir).head
-    val recs = EventLog.readAllRecords(victim)
+    val recs = EventLog.readRecords(victim).map(_._1)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")
     val fin = victim.getName.stripSuffix(".gel") + s"-m$uuid.gel"
@@ -61,7 +61,7 @@ class EventLogIsolationSpec extends graft.SparkTestBase {
   test("post-commit, inputs not yet unlinked: readers see the POST state") {
     val dir = store()
     val victim = EventLog.listFiles(dir).head
-    val recs = EventLog.readAllRecords(victim)
+    val recs = EventLog.readRecords(victim).map(_._1)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new java.io.File(dir, s".inprogress.compact.$uuid")
     val fin = f"day_00000-c$uuid.gel"

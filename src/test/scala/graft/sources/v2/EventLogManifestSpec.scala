@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * whole manifest, reads fold checkpoint + segments and are cached per
   * content key (one parse per manifest CHANGE, not per plan), the log
   * folds into a checkpoint at the segment cap, crash windows between
-  * the checkpoint rename and segment deletes are idempotent, and the
-  * legacy single-file GRAFTML1 form still reads (sums unknown). */
+  * the checkpoint rename and segment deletes are idempotent, and an
+  * entry without the per-type sums lane reads with sums unknown. */
 class EventLogManifestSpec extends graft.SparkTestBase {
   import spark.implicits._
 
@@ -121,27 +121,22 @@ class EventLogManifestSpec extends graft.SparkTestBase {
       "re-applying absorbed segments over their checkpoint changed state")
   }
 
-  test("a legacy GRAFTML1 checkpoint reads: counts usable, sums unknown") {
+  test("a sums-less checkpoint entry reads: counts usable, sums unknown") {
     val dir = Files.createTempDirectory("gelm").toString
-    val f = new java.io.File(dir, EventLog.ManifestName)
-    val o = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(f)))
-    try {
-      o.write(EventLog.LegacyManifestMagic)
-      o.writeInt(1)
-      EventLog.writeUtf(o, "old.gel")
-      o.writeInt(3); o.writeLong(5L); o.writeLong(9L)
-      o.writeInt(2)
-      EventLog.writeUtf(o, "a"); o.writeLong(1L)
-      EventLog.writeUtf(o, "b"); o.writeLong(2L)
-    } finally o.close()
+    val old = EventLog.ManifestEntry("old.gel", 3, 5L, 9L, Seq("a", "b"),
+      Seq(1L, 2L))
+    EventLog.appendManifest(dir, Seq(old))
+    (1 until EventLog.CheckpointEvery).foreach { i =>
+      EventLog.appendManifest(dir, Seq(entry(f"f$i%04d.gel", i)))
+    }
+    assert(segmentFiles(dir).isEmpty, "the log did not fold")
     val m = EventLog.readManifest(dir)
     assert(m("old.gel").typeCounts == Seq(1L, 2L))
     assert(m("old.gel").typeSums.isEmpty)
-    // a new commit layers a v2 segment on the legacy checkpoint
+    // a new commit layers a segment on the checkpoint
     EventLog.appendManifest(dir, Seq(entry("new.gel")))
     val m2 = EventLog.readManifest(dir)
-    assert(m2.keySet == Set("old.gel", "new.gel"))
+    assert(m2("old.gel") == old)
     assert(m2("new.gel").typeSums.contains(Seq(10L)))
   }
 

@@ -162,7 +162,7 @@ class EventLogMergeShuffleSpec extends graft.SparkTestBase {
     // the post-rename, pre-manifest crash state (same construction as
     // EventLogMergeSpec's — the swap sequence is shared)
     val victim = EventLog.listFiles(dir).minBy(_.getName)
-    val orig = EventLog.readAllRecords(victim)
+    val orig = EventLog.readRecords(victim).map(_._1)
     val headId = orig.head._1
     val recs = orig.map(r => if (r._1 == headId) r.copy(_5 = 4242L) else r)
     val tmp = new java.io.File(dir, ".inprogress.merge.test")

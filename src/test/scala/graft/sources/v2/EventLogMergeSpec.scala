@@ -156,7 +156,7 @@ class EventLogMergeSpec extends graft.SparkTestBase {
     // leaves: one day file's updated copy visible under its final -m
     // name, the original still present, the intent still journaled
     val victim = EventLog.listFiles(dir).minBy(_.getName)
-    val orig = EventLog.readAllRecords(victim)
+    val orig = EventLog.readRecords(victim).map(_._1)
     val headId = orig.head._1
     val recs = orig.map(r => if (r._1 == headId) r.copy(_5 = 4242L) else r)
     val tmp = new java.io.File(dir, ".inprogress.merge.test")

@@ -156,25 +156,6 @@ class EventLogSnapshotSpec extends graft.SparkTestBase {
     assert(spark.read.format("graft-eventlog").load(dir).count() == 5L)
   }
 
-  test("pre-GRAFTML3 checkpoints refuse time travel, serve current reads") {
-    val dir = Files.createTempDirectory("gelv").toString
-    // hand-write a legacy GRAFTML2 checkpoint (no foldedThrough lane)
-    val e = EventLog.ManifestEntry("f0001.gel", 1, 0L, 1L, Seq("a"),
-      Seq(1L), Some(Seq(10L)))
-    val out = new java.io.DataOutputStream(new java.io.FileOutputStream(
-      new java.io.File(dir, EventLog.ManifestName)))
-    try {
-      out.write(EventLog.LegacyManifestMagicV2)
-      out.writeInt(1)
-      EventLog.writeEntry(out, e)
-    } finally out.close()
-    assert(EventLog.readManifest(dir).size == 1)
-    val err = intercept[IllegalArgumentException] {
-      EventLog.readManifestAsOf(dir, 0)
-    }
-    assert(err.getMessage.contains("predates version tracking"))
-  }
-
   test("q292/q293 partition the corpus exactly at the commit boundary") {
     val dir = "/root/testdata/sf0.001"
     val cutoff = graft.queries.Formats.EventlogCutoffUs

@@ -8,9 +8,9 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThanOrEqual}
 /** Z-order clustering + the `user_id` zone lane (round 9): content
   * preserved exactly through the re-layout, manifest entries carry
   * user bounds, a user-range plan PRUNES whole files on the z-ordered
-  * layout and nothing on the ts-striped one, legacy manifests (no
-  * bounds) only over-read, the delete path's all-match dual stays
-  * conservative, and a GRAFTMD1 legacy segment still parses. */
+  * layout and nothing on the ts-striped one, entries without bounds
+  * only over-read, the delete path's all-match dual stays
+  * conservative, and a segment entry without the lane still parses. */
 class EventLogZOrderSpec extends graft.SparkTestBase {
   import spark.implicits._
 
@@ -135,7 +135,7 @@ class EventLogZOrderSpec extends graft.SparkTestBase {
       zorder = true, zorderDayCap = 10)
     assert(contents(dirA) == contents(dirB))
     def chunks(dir: String): Seq[Seq[(Long, Long, Long, String, Long)]] =
-      EventLog.listFiles(dir).map(EventLog.readAllRecords)
+      EventLog.listFiles(dir).map(EventLog.readRecords(_).map(_._1))
     val a = chunks(dirA)
     val b = chunks(dirB)
     assert(a.size == b.size, s"chunk counts differ: ${a.size} vs ${b.size}")
@@ -204,7 +204,7 @@ class EventLogZOrderSpec extends graft.SparkTestBase {
     EventLog.listFiles(dir).foreach { f =>
       val b = EventLog.bucketOfName(f.getName)
       assert(b.isDefined, s"${f.getName} lost its bucket tag")
-      EventLog.readAllRecords(f).foreach(r =>
+      EventLog.readRecords(f).map(_._1).foreach(r =>
         assert(GraftBucketFunction.bucketOf(r._3, 4) == b.get,
           s"row with user ${r._3} landed in bucket-${b.get} file"))
     }
@@ -231,31 +231,15 @@ class EventLogZOrderSpec extends graft.SparkTestBase {
       java.lang.Long.valueOf(4L)))))
   }
 
-  test("a GRAFTMD1 legacy segment parses with unknown user bounds") {
+  test("a segment entry without the user-bounds lane parses with unknown user bounds") {
     val dir = Files.createTempDirectory("gelz").toString
-    // one real data file, manifested the legacy way: hand-encode an
-    // old-codec segment (no user lane) under the legacy magic
-    val tmp = new java.io.File(dir, ".inprogress.legacy")
-    val entry = EventLog.writeGelFile(tmp, "day_00000-legacy.gel",
+    // one real data file, manifested with its user lane absent (the
+    // entry's hasUsers byte is 0)
+    val tmp = new java.io.File(dir, ".inprogress.boundless")
+    val entry = EventLog.writeGelFile(tmp, "day_00000-boundless.gel",
       rows.filter(_._2 < Day))
     assert(tmp.renameTo(new java.io.File(dir, entry.file)))
-    val seg = new java.io.File(dir, "_manifest.00000001.0abc1234.gelmd")
-    val o = new java.io.DataOutputStream(
-      new java.io.FileOutputStream(seg))
-    try {
-      o.write(EventLog.LegacySegmentMagic)
-      o.writeInt(0) // removes
-      o.writeInt(1) // adds, OLD codec: stops after the sums lane
-      EventLog.writeUtf(o, entry.file)
-      o.writeInt(entry.count); o.writeLong(entry.minTs)
-      o.writeLong(entry.maxTs)
-      o.writeInt(entry.types.length)
-      entry.types.zip(entry.typeCounts).foreach { case (t, c) =>
-        EventLog.writeUtf(o, t); o.writeLong(c)
-      }
-      o.writeByte(1)
-      entry.typeSums.get.foreach(o.writeLong)
-    } finally o.close()
+    EventLog.appendManifest(dir, Seq(entry.copy(userBounds = None)))
     val m = EventLog.readManifest(dir)
     assert(m.keySet == Set(entry.file))
     assert(m(entry.file).userBounds.isEmpty)

@@ -93,6 +93,19 @@ class GelFsExecutorSpec extends graft.SparkTestBase {
     new java.io.File(dir).listFiles().toSet[java.io.File]
       .map(f => (f.getName, f.length()))
 
+  test("installFsFromConf installs the conf-named fs on the driver; without the conf it does nothing") {
+    val prev = EventLog.fs
+    try {
+      withTaskFsConf("graft.sources.v2.ElsewhereGelFs") {
+        EventLog.installFsFromConf(spark)
+        assert(EventLog.fs eq ElsewhereGelFs)
+      }
+      EventLog.fs = HadoopGelFs
+      EventLog.installFsFromConf(spark)
+      assert(EventLog.fs eq HadoopGelFs)
+    } finally EventLog.fs = prev
+  }
+
   test("tasks resolve the conf-named fs: a correctly-submitted app maintains the store end-to-end") {
     val dir = Files.createTempDirectory("gelexec").toString
     writeStore(dir)
