@@ -3,17 +3,14 @@ package graft.outbreak
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.feature.{PCA, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.linalg.{DenseMatrix, Vector, Vectors}
 import org.apache.spark.mllib.clustering.{DriverFit, DriverKMeans}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.Lineage.CutOps
 
 /** KMeans-distance anomaly scorer — the reference's canonical batch scoring
   * path (SURVEY §2.11 M2-M5; reference notebook SparkBatchProcessKmeanPCA
@@ -23,26 +20,24 @@ import graft.operators.Lineage.CutOps
   * |z| > 2 flags an anomaly.
   *
   * Scale notes: [[fit]] is the one model fit of every outbreak path, from
-  * the tidy daily table to the scores. Below `localEvalThreshold` feature
-  * rows it collects the tidy rows once and does everything else on the
-  * driver: the feature front (detrend, pivot, month one-hot, assembly,
-  * replayed by [[localFront]]) and the whole model — scaler, PCA, every
-  * candidate k, the distance normalization — with
-  * [[org.apache.spark.mllib.clustering.DriverFit]] and
-  * [[org.apache.spark.mllib.clustering.DriverKMeans]], bit-identical to
-  * the Spark front and the MLlib path, and returns the scores and the
-  * detrend state as local relations: one Spark job, the collect. Above it
-  * the Spark front ([[sparkFront]]) runs, MLlib fits distributed (one job
-  * per pass, per Lloyd iteration, per silhouette), only the k centroids
-  * reach scoring — as array literals in a native codegen'd distance
-  * expression (the reference closure-captured them; SURVEY §3 EP3 notes
-  * the serialization cost) — and the z-score constants come from one
-  * scalar aggregate over a materialized distance table, not a second ML
-  * pass. Both fronts hand the fit its rows in (date, region) order, which
-  * is the order the seeded k-means|| initialization depends on; without
-  * it the model would follow the shuffle partitioning. The app's
-  * increments ([[IncrementalOutbreak]]) run the same driver front, seeded
-  * with the saved detrend state, and the same scorer ([[Model.score]]).
+  * the tidy daily table to the scores. It has two fronts and one tail. Up
+  * to `localEvalThreshold` feature rows it collects the tidy rows once
+  * and builds the features on the driver (detrend, pivot, month one-hot,
+  * assembly, replayed by [[localFront]]), then the scaler and PCA with
+  * [[org.apache.spark.mllib.clustering.DriverFit]]: one Spark job, the
+  * collect. Above it the Spark front ([[sparkFront]]) builds the
+  * features, MLlib fits the scaler and PCA, and the projected rows — pcaK
+  * doubles each, about 23 MB at 720k rows — are collected. The tail runs
+  * on the driver either way: every candidate k fitted by
+  * [[org.apache.spark.mllib.clustering.DriverKMeans]] and ranked by
+  * [[localSilhouette]], the z-normalization of the nearest-center
+  * distances, and the scores as a local relation. Each step replays MLlib
+  * or Spark SQL bit for bit, so the two fronts give the same model. Both
+  * hand the tail their rows in (date, region) order, which is the order
+  * the seeded k-means|| initialization depends on; without it the model
+  * would follow the shuffle partitioning. The app's increments
+  * ([[IncrementalOutbreak]]) run the driver front, seeded with the saved
+  * detrend state, and the same scorer ([[Model.score]]).
   */
 object AnomalyScorer {
 
@@ -66,14 +61,19 @@ object AnomalyScorer {
 
     /** The z-scores of feature rows, in order: the scaler, the PCA
       * projection, the squared distance to the nearest center, then
-      * (d − mu) / sigma, each step MLlib's or Spark SQL's arithmetic. The
-      * driver fit scores its own rows with this, and an increment its new
-      * rows. */
+      * (d − mu) / sigma, each step MLlib's or Spark SQL's arithmetic. An
+      * increment scores its new rows with this; the fit scores its own
+      * rows with [[zScores]] of the distances it fitted mu and sigma on,
+      * the same numbers. */
     def score(features: Array[Vector]): Array[Double] = {
       val points = projection.fold(features)(p =>
         features.map(DriverFit.scaler(p.mean, p.std).andThen(DriverFit.projection(p.pc))))
-      sqDistsToNearest(points, centers).map(d => (d - mu) / sigma)
+      zScores(sqDistsToNearest(points, centers))
     }
+
+    /** (d − mu) / sigma of each distance. */
+    private[outbreak] def zScores(dists: Array[Double]): Array[Double] =
+      dists.map(d => (d - mu) / sigma)
   }
 
   private def sqDistsToNearest(points: Array[Vector], centers: Array[Vector]): Array[Double] = {
@@ -87,32 +87,30 @@ object AnomalyScorer {
     StructField("region", StringType), StructField("kw", StringType),
     StructField("n", LongType, nullable = false), StructField("sumv", DoubleType)))
 
-  /** The feature-row count up to which the fit runs on the driver. */
+  /** The feature-row count up to which the fit builds its front on the
+    * driver. */
   private[outbreak] val LocalEvalThreshold = 50000L
 
   /** Fit the model on the tidy daily table `daily` (`date`, `region`, `kw`,
     * `value`, one row per (date, region, kw)) over the terms `vocab`, and
     * score every (date, region): returns `(date, region, score)`, the
     * model, and the per-series detrend state `(region, kw, n, sumv)` — the
-    * count and the sum of the non-null values. `pcaK` > 0 standardizes and
-    * projects to `pcaK` components first, at most one per feature; 0
-    * clusters the raw features. */
+    * count and the sum of the non-null values, summed in date order on
+    * either front. `pcaK` > 0 standardizes and projects to `pcaK`
+    * components first, at most one per feature; 0 clusters the raw
+    * features. */
   def fit(daily: DataFrame, vocab: Seq[String], pcaK: Int, kRange: Range = 2 to 6,
       seed: Long = 1L,
       localEvalThreshold: Long = LocalEvalThreshold): (DataFrame, Model, DataFrame) = {
     val k = math.min(pcaK, Preprocess.featureCols(Preprocess.sanitizeVocab(vocab)).size)
-    localFront(daily, vocab, localEvalThreshold) match {
-      case Some(front) =>
-        val (scores, model) = driverFit(daily, front, k, kRange, seed)
-        (scores, model, front.state)
+    val (projected, state) = localFront(daily, vocab, localEvalThreshold) match {
+      case Some(front) => (driverProjection(front, k), front.state)
       case None =>
-        val (scores, model) = withCached(sparkFront(daily, vocab)) { table =>
-          mllibFit(table, k, kRange, seed, localEvalThreshold)
-        }
-        val state = Preprocess.sanitizeTerms(daily).groupBy("region", "kw")
-          .agg(count("value").as("n"), sum(col("value").cast(DoubleType)).as("sumv"))
-        (scores, model, state)
+        (withCached(sparkFront(daily, vocab))(sparkProjection(_, k)),
+          Preprocess.detrendState(Preprocess.sanitizeTerms(daily)))
     }
+    val (scores, model) = fitTail(daily, projected, kRange, seed)
+    (scores, model, state)
   }
 
   /** The model input built with Spark: daily → detrend → pivot → month
@@ -279,38 +277,31 @@ object AnomalyScorer {
     out
   }
 
-  /** [[fit]] on the driver-built front. Days × regions feature tables are
-    * tiny next to the raw input, and MLlib spends one job per pass over
-    * them; each step here replays MLlib or Spark SQL on the rows in
+  /** The rows the tail fits and scores: `points(i)`, the projected
+    * features of (`dates(i)`, `regions(i)`), in the fronts' (date, region)
+    * order, and the projection that made them (None without PCA). */
+  private case class Projected(dates: Array[Any], regions: Array[String],
+      projection: Option[Projection], points: Array[Vector])
+
+  /** The scaler and PCA fitted on the driver-built front. Days × regions
+    * feature tables are tiny next to the raw input, and MLlib spends one
+    * job per pass over them; each step here replays MLlib on the rows in
     * (date, region) order, the order the Spark front hands MLlib. */
-  private def driverFit(daily: DataFrame, front: LocalFront, pcaK: Int,
-      kRange: Range, seed: Long): (DataFrame, Model) = {
+  private def driverProjection(front: LocalFront, pcaK: Int): Projected = {
     val vecs = front.features
-    val (projection, points) =
-      if (pcaK > 0) {
-        val (mean, std) = DriverFit.scalerStats(vecs)
-        val scaled = vecs.map(DriverFit.scaler(mean, std))
-        val pc = DriverFit.pca(scaled, pcaK)
-        (Some(Projection(mean, std, pc)), scaled.map(DriverFit.projection(pc)))
-      } else (None, vecs)
-    val (_, centers) = selectLocal(points, kRange, seed)
-    val (mu, std) = DriverFit.meanStd(sqDistsToNearest(points, centers))
-    val model = Model(projection, centers, mu, zScale(std))
-    (scoreFrame(daily, front, model.score(vecs)), model)
+    if (pcaK > 0) {
+      val (mean, std) = DriverFit.scalerStats(vecs)
+      val scaled = vecs.map(DriverFit.scaler(mean, std))
+      val pc = DriverFit.pca(scaled, pcaK)
+      Projected(front.dates, front.regions, Some(Projection(mean, std, pc)),
+        scaled.map(DriverFit.projection(pc)))
+    } else Projected(front.dates, front.regions, None, vecs)
   }
 
-  /** `(date, region, score)` of the front's rows, as a local relation. */
-  private[outbreak] def scoreFrame(daily: DataFrame, front: LocalFront,
-      scores: Array[Double]): DataFrame = {
-    val rows = scores.indices.map(i => Row(front.dates(i), front.regions(i), scores(i)))
-    val schema = StructType(Seq(daily.schema("date"), daily.schema("region"),
-      StructField("score", DoubleType)))
-    daily.sparkSession.createDataFrame(rows.asJava, schema)
-  }
-
-  /** [[fit]] with MLlib and Spark jobs, for tables the driver cannot hold. */
-  private def mllibFit(table: DataFrame, pcaK: Int, kRange: Range, seed: Long,
-      localEvalThreshold: Long): (DataFrame, Model) = {
+  /** The scaler and PCA fitted by MLlib on the Spark front's `table`, for
+    * fronts the driver cannot build; the projected rows are collected in
+    * the table's (date, region) order. */
+  private def sparkProjection(table: DataFrame, pcaK: Int): Projected = {
     val (projection, projected) =
       if (pcaK > 0) {
         val scaler = new StandardScaler().setWithMean(true).setWithStd(true)
@@ -319,14 +310,33 @@ object AnomalyScorer {
         val pca = new PCA().setK(pcaK).setInputCol("scaled").setOutputCol("pca")
           .fit(scaled)
         (Some(Projection(scaler.mean, scaler.std, pca.pc)),
-          pca.transform(scaled)
-            .select(col("date"), col("region"), col("pca").as("features")))
+          pca.transform(scaled).select(col("date"), col("region"), col("pca")))
       } else (None, table)
-    withCached(projected) { ml =>
-      val (_, centers) = selectKModel(ml, kRange, seed, localEvalThreshold)
-      val (scores, mu, sigma) = scoresWithModel(ml, centers)
-      (scores, Model(projection, centers, mu, sigma))
-    }
+    val rows = projected.collect()
+    Projected(rows.map(_.get(0)), rows.map(_.getString(1)), projection,
+      rows.map(_.getAs[Vector](2)))
+  }
+
+  /** The model on the projected rows and their scores: the centers of the
+    * silhouette-selected k, then the z-normalization of the distances to
+    * them, which are the distances the scores are made of. */
+  private def fitTail(daily: DataFrame, p: Projected, kRange: Range,
+      seed: Long): (DataFrame, Model) = {
+    val (_, centers) = selectLocal(p.points, kRange, seed)
+    val dists = sqDistsToNearest(p.points, centers)
+    val (mu, std) = DriverFit.meanStd(dists)
+    val model = Model(p.projection, centers, mu, zScale(std))
+    (scoreFrame(daily, p.dates, p.regions, model.zScores(dists)), model)
+  }
+
+  /** `(date, region, score)` of `dates(i)`, `regions(i)`, `scores(i)`, as
+    * a local relation. */
+  private[outbreak] def scoreFrame(daily: DataFrame, dates: Array[Any],
+      regions: Array[String], scores: Array[Double]): DataFrame = {
+    val rows = scores.indices.map(i => Row(dates(i), regions(i), scores(i)))
+    val schema = StructType(Seq(daily.schema("date"), daily.schema("region"),
+      StructField("score", DoubleType)))
+    daily.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** `body(df)` on `df` cached. Only a cache this call made is released
@@ -338,71 +348,55 @@ object AnomalyScorer {
       try body(cached) finally cached.unpersist()
     }
 
-  /** Silhouette-maximizing k in `kRange` (reference `select_k`,
-    * README.md:713-731 semantics) and the winning model's cluster
-    * centers, so the caller never re-fits (same seed ⇒ identical model;
-    * the reference's loop discards and re-fits). Centers are what
-    * `KMeans().setK(k).setSeed(seed).fit(features)` returns when
-    * `features` has one partition. */
-  def selectKModel(features: DataFrame, kRange: Range = 2 to 6,
-      seed: Long = 1L, localEvalThreshold: Long = LocalEvalThreshold): (Int, Array[Vector]) =
-    withCached(features) { cached =>
-      if (cached.count() <= localEvalThreshold)
-        selectLocal(cached.select("features").collect().map(_.getAs[Vector](0)),
-          kRange, seed)
-      else {
-        // Too big to collect: the candidate-k fits are independent Spark
-        // jobs over the same cached table — submit them CONCURRENTLY
-        // (Spark's scheduler interleaves jobs from different threads).
-        // Same seed per k ⇒ identical models regardless of completion order.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        best(Await.result(Future.sequence(kRange.map { k => Future {
-          val model = new KMeans().setK(k).setSeed(seed).fit(cached)
-          (k, model.clusterCenters,
-            new ClusteringEvaluator().evaluate(model.transform(cached)))
-        }}), Duration.Inf))
-      }
-    }
-
-  /** [[selectKModel]] on vectors collected to the driver: every candidate
-    * k fitted by DriverKMeans, which replays MLlib on the rows in the
-    * given order, and scored by [[localSilhouette]]. */
-  private def selectLocal(vecs: Array[Vector], kRange: Range,
+  /** The silhouette-maximizing k in `kRange` (reference `select_k`,
+    * README.md:713-731 semantics) and its centers, so the caller never
+    * re-fits. Every candidate k is fitted by DriverKMeans, which replays
+    * MLlib's `KMeans().setK(k).setSeed(seed)` on the rows in the given
+    * order, and scored by [[localSilhouette]]. A fit that leaves fewer
+    * than two non-empty clusters (all rows identical, say) has no
+    * silhouette: it loses to every fit that has one, and where none has
+    * one the smallest k wins. Ties go to the smallest k. */
+  private[outbreak] def selectLocal(vecs: Array[Vector], kRange: Range,
       seed: Long): (Int, Array[Vector]) = {
     val pts = vecs.map(_.toArray)
-    best(kRange.map { k =>
+    val fits = kRange.sorted.map { k =>
       val centers = DriverKMeans.fit(vecs, k, seed).centers
-      (k, centers, localSilhouette(pts, centers.map(_.toArray)))
-    })
+      val cs = centers.map(_.toArray)
+      val silhouette =
+        if (nearestCenters(pts, cs).distinct.length < 2) Double.NegativeInfinity
+        else localSilhouette(pts, cs)
+      (k, centers, silhouette)
+    }
+    val best = fits.maxBy(_._3)
+    (best._1, best._2)
   }
 
-  /** Highest silhouette, ties to the smallest k. */
-  private def best(fitted: Seq[(Int, Array[Vector], Double)]): (Int, Array[Vector]) = {
-    val b = fitted.sortBy(_._1).maxBy(_._3)
-    (b._1, b._2)
-  }
+  /** Each point's nearest center, the first on ties: the rule
+    * KMeansModel.transform applies. */
+  private def nearestCenters(points: Array[Array[Double]],
+      centers: Array[Array[Double]]): Array[Int] =
+    points.map { p =>
+      var best = 0; var bestD = Double.MaxValue; var c = 0
+      while (c < centers.length) {
+        var dd = 0.0; var i = 0
+        while (i < p.length) { val t = p(i) - centers(c)(i); dd += t * t; i += 1 }
+        if (dd < bestD) { bestD = dd; best = c }
+        c += 1
+      }
+      best
+    }
 
   /** Mean silhouette with squared-Euclidean distance, computed from
-    * cluster aggregates in O(n·k·d): assignment by nearest center (the
-    * same rule KMeansModel.transform applies), a/b from per-cluster
-    * (Σy, Σ‖y‖², n) — own-cluster mean excludes the point itself;
-    * singleton clusters contribute 0 (standard convention). */
+    * cluster aggregates in O(n·k·d): assignment by [[nearestCenters]],
+    * a/b from per-cluster (Σy, Σ‖y‖², n) — own-cluster mean excludes the
+    * point itself; singleton clusters contribute 0 (standard convention),
+    * and so does every point where no other cluster is non-empty, which
+    * has no nearest other cluster. */
   private[outbreak] def localSilhouette(points: Array[Array[Double]],
       centers: Array[Array[Double]]): Double = {
     val k = centers.length
     val d = points.headOption.map(_.length).getOrElse(0)
-    def sq(x: Array[Double], y: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < d) { val t = x(i) - y(i); s += t * t; i += 1 }
-      s
-    }
-    val assign = points.map { p =>
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < k) { val dd = sq(p, centers(c)); if (dd < bestD) { bestD = dd; best = c }; c += 1 }
-      best
-    }
+    val assign = nearestCenters(points, centers)
     val counts = new Array[Long](k)
     val sums = Array.fill(k)(new Array[Double](d))
     val sqsums = new Array[Double](k)
@@ -415,7 +409,8 @@ object AnomalyScorer {
     val sil = points.indices.map { i =>
       val x = points(i)
       val own = assign(i)
-      if (counts(own) <= 1) 0.0
+      val others = (0 until k).filter(c => c != own && counts(c) > 0)
+      if (counts(own) <= 1 || others.isEmpty) 0.0
       else {
         val x2 = x.map(v => v * v).sum
         def totalSq(c: Int): Double = {
@@ -424,8 +419,7 @@ object AnomalyScorer {
           counts(c) * x2 - 2.0 * dot + sqsums(c)
         }
         val a = totalSq(own) / (counts(own) - 1.0)
-        val b = (0 until k).filter(c => c != own && counts(c) > 0)
-          .map(c => totalSq(c) / counts(c)).min
+        val b = others.map(c => totalSq(c) / counts(c)).min
         (b - a) / math.max(a, b)
       }
     }
@@ -436,36 +430,6 @@ object AnomalyScorer {
     * std is 0 or undefined. */
   private def zScale(std: Double): Double =
     if (std == 0.0 || std.isNaN) 1.0 else std
-
-  /** Squared distance to the ASSIGNED (= nearest) centroid, as native
-    * codegen'd expressions: the k centroids (tiny) embed as array
-    * literals and the assignment rule "nearest center wins" is simply
-    * `least` over the k `graft_sqdist` values — KMeansModel.transform's
-    * prediction UDF never enters the scoring plan. `vec` must be the
-    * feature vector as `array<double>`. */
-  private def sqDistToNearest(centers: Seq[Seq[Double]], vec: Column): Column = {
-    val dists = centers.map(c => call_function("graft_sqdist", vec, typedLit(c)))
-    if (dists.length == 1) dists.head else least(dists: _*)
-  }
-
-  /** Score `features` against fitted cluster centers (no re-fit, no
-    * transform UDF): `(date, region, score)`, mu and sigma. The distance
-    * table is materialized once by a lineage cut, which the mu/sigma
-    * aggregate and the returned scores both read; it is no cache entry, so
-    * nothing outlives the caller's use of the scores. */
-  private def scoresWithModel(features: DataFrame,
-      centers: Array[Vector]): (DataFrame, Double, Double) = {
-    graft.plans.VectorExpressions.register(features.sparkSession)
-    val withDist = features.withColumn("distance", sqDistToNearest(
-      centers.map(_.toArray.toSeq).toSeq,
-      org.apache.spark.ml.functions.vector_to_array(col("features"), "float64")))
-      .cut()
-    val stats = withDist.agg(
-      avg("distance").as("mu"), stddev_samp("distance").as("sigma")).first()
-    val (mu, sigma) = (stats.getDouble(0), zScale(stats.getDouble(1)))
-    (withDist.select(col("date"), col("region"),
-      ((col("distance") - mu) / sigma).as("score")), mu, sigma)
-  }
 
   /** Keep only |z| > `threshold` outliers (reference notebook cell 15). */
   def outliers(scores: DataFrame, threshold: Double = 2.0): DataFrame =

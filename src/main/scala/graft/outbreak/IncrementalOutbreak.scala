@@ -22,8 +22,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
   *    (scaler, PCA projection, nearest-centroid distance, z-score). Two
   *    collects, the state's and the batch's, and no shuffle: cost
   *    proportional to the new day and the series count, flat in history.
-  *    From a driver fit's state, the scores equal, bit for bit, what the
-  *    fit's scorer gives the same rows in a front over all history.
+  *    Both of the fit's fronts sum the state in date order, so from
+  *    either the scores equal, bit for bit, what the fit's scorer gives
+  *    the same rows in a front over all history.
   *
   * Idempotency (foreachBatch is at-least-once): the model row records the
   * last applied batchId; `Main` skips a re-delivered batch whose id the
@@ -46,8 +47,10 @@ object IncrementalOutbreak {
     * state), from [[AnomalyScorer.fit]] with PCA, the fit q37 runs. Up to
     * 50k (date, region) rows that is one collect of `daily` and no other
     * Spark job: the features, the model and the state are built on the
-    * driver, the state's Σ summed in date order, which is what lets an
-    * increment continue the cumulative average exactly. */
+    * driver. Above that Spark builds the features, the scaler, PCA and
+    * the state, and the model is fitted on the driver. Either way the
+    * state's Σ is summed in date order, which is what lets an increment
+    * continue the cumulative average exactly. */
   def fitFull(spark: SparkSession, daily: DataFrame, vocab: Seq[String],
       pcaK: Int = 4, kRange: Range = 2 to 6, seed: Long = 1L,
       batchId: Long = 0L): (DataFrame, OutbreakModel, DataFrame) = {
@@ -86,12 +89,12 @@ object IncrementalOutbreak {
       detrendState: DataFrame, localEvalThreshold: Long): Option[(DataFrame, DataFrame)] =
     AnomalyScorer.localFront(newDaily, model.vocab, localEvalThreshold, Some(detrendState))
       .map { front =>
-        (AnomalyScorer.scoreFrame(newDaily, front, scorer(model).score(front.features)),
-          front.state)
+        (AnomalyScorer.scoreFrame(newDaily, front.dates, front.regions,
+          scorer(model).score(front.features)), front.state)
       }
 
   /** The saved model as the fit's [[AnomalyScorer.Model]]. */
-  private def scorer(m: OutbreakModel): AnomalyScorer.Model =
+  private[outbreak] def scorer(m: OutbreakModel): AnomalyScorer.Model =
     AnomalyScorer.Model(
       Some(AnomalyScorer.Projection(Vectors.dense(m.scalerMean.toArray),
         Vectors.dense(m.scalerStd.toArray),

@@ -3,6 +3,7 @@ package graft.outbreak
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Batch preprocessing for the outbreak pipeline — the reference's EP2/EP3
   * stages re-expressed as pure DataFrame transforms (cf. reference
@@ -39,14 +40,29 @@ object Preprocess {
     * reference's produce-then-repair).
     */
   def detrend(daily: DataFrame): DataFrame = {
-    val w = Window.partitionBy("kw", "region").orderBy(col("date").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = bySeries.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
       .withColumn("cma", avg("value").over(w))
       .withColumn("value",
         when(col("cma").isNull || col("cma") === 0.0 || isnan(col("cma")), 1.0)
           .otherwise(col("value") / col("cma")))
       .drop("cma")
+  }
+
+  /** One (kw, region) series in date order. */
+  private def bySeries = Window.partitionBy("kw", "region").orderBy(col("date").asc)
+
+  /** Each series' `(region, kw, n, sumv)`: the count and the sum of its
+    * non-null values, accumulated in date order over the whole series —
+    * the running (count, Σ) of [[detrend]]'s cumulative average at the
+    * series' last date, so a later day's average continues it bit for
+    * bit. An unordered `sum` would add in shuffle order and round
+    * differently. */
+  def detrendState(daily: DataFrame): DataFrame = {
+    val w = bySeries.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    daily.select(col("region"), col("kw"), count("value").over(w).as("n"),
+        sum(col("value").cast(DoubleType)).over(w).as("sumv"))
+      .dropDuplicates("region", "kw")
   }
 
   /** Long → wide: one Double column per term (reference Main.scala:212-216).

@@ -561,8 +561,9 @@ object EventLog {
     String, (String, Map[String, ManifestEntry])]()
 
   /** The checkpoint's fold point from its 16-byte prefix alone — the
-    * O(1) read [[appendManifest]] needs for seq numbering, without
-    * parsing the whole entry list. */
+    * O(1) read [[appendManifest]] needs for seq numbering and
+    * [[currentVersion]] on every change-feed trigger, without parsing
+    * the whole entry list. */
   private def checkpointFoldedThrough(f: java.io.File): Long = {
     val in = new DataInputStream(EventLog.fs.openRead(f))
     try { requireCheckpointMagic(in); in.readLong() } finally in.close()
@@ -1143,7 +1144,7 @@ object EventLog {
     val d = new java.io.File(dir)
     if (!EventLog.fs.isDirectory(d)) return 0L
     val (ck, segs) = manifestFiles(d)
-    (segs.map(segSeq) ++ ck.map(parseCheckpoint(_)._1)).foldLeft(0L)(math.max)
+    (segs.map(segSeq) ++ ck.map(checkpointFoldedThrough)).foldLeft(0L)(math.max)
   }
 
   /** The manifest state AS OF `version` (the store after manifest commit

@@ -96,6 +96,60 @@ object EventLogMerge {
     * base store). */
   private type MRec = ((Long, Long, Long, String, Long), Array[AnyRef])
 
+  /** Store file `f` rewritten with each of its records `recs` whose
+    * event_id `update` maps replaced by that update, into a merge temp
+    * beside it: (temp name, manifest entry). An update must keep its
+    * record's UTC day and, on a store hashed into `bucketing` buckets,
+    * the bucket of `f`. */
+  private def rewrite(f: java.io.File, recs: Seq[MRec], update: Long => Option[MRec],
+      bucketing: Option[Int],
+      extWire: Seq[EventLog.ExtraCol]): (String, EventLog.ManifestEntry) = {
+    val merged = recs.map { old =>
+      update(old._1._1) match {
+        case Some(upd) =>
+          require(Math.floorDiv(upd._1._2, Day) ==
+              Math.floorDiv(old._1._2, Day),
+            s"graft-eventlog merge: update for event_id ${old._1._1} " +
+              s"moves ts across a UTC day (${old._1._2} -> " +
+              s"${upd._1._2}) — day files and the day profile " +
+              "assume single-day rows; express a day move as " +
+              "DELETE + INSERT")
+          bucketing.foreach { n =>
+            val b = EventLog.bucketOfName(f.getName)
+            require(b.forall(_ == GraftBucketFunction.bucketOf(upd._1._3, n)),
+              s"graft-eventlog merge: update for event_id ${old._1._1} " +
+                s"moves user_id ${old._1._3} -> ${upd._1._3} across " +
+                s"buckets (n=$n) — it would break the store's " +
+                "co-partitioning; express it as DELETE + INSERT")
+          }
+          upd
+        case None => old
+      }
+    }
+    writeMerged(f.getParent, uuid => f.getName.stripSuffix(".gel") + s"-m$uuid.gel",
+      merged, extWire)
+  }
+
+  /** The inserts `rs` of one UTC `day` (and bucket, on a bucketed store)
+    * as a fresh file's merge temp in `dir`: (temp name, manifest entry). */
+  private def insertFile(dir: String, day: Long, bucket: Option[Int], rs: Seq[MRec],
+      extWire: Seq[EventLog.ExtraCol]): (String, EventLog.ManifestEntry) = {
+    val bTag = bucket.map(b => f"b$b%04d-").getOrElse("")
+    writeMerged(dir, uuid => f"day_$day%05d-" + bTag + s"u$uuid.gel", rs, extWire)
+  }
+
+  /** `rows` sorted like every writer output, (ts_us, event_id), written
+    * to a `.inprogress.merge` temp in `dir` under the final name
+    * `name(uuid)`: (temp name, manifest entry). */
+  private def writeMerged(dir: String, name: String => String, rows: Seq[MRec],
+      extWire: Seq[EventLog.ExtraCol]): (String, EventLog.ManifestEntry) = {
+    val uuid = java.util.UUID.randomUUID().toString.take(8)
+    val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")
+    val sorted = rows.sortBy(r => (r._1._2, r._1._1))
+    (tmp.getName, EventLog.writeGelFile(tmp, name(uuid), sorted.map(_._1),
+      extWire, sorted.map(_._2)))
+  }
+
   /** The base+added column list a merge batch must carry on a store
     * with added columns: MERGE replaces WHOLE rows, so a base-only
     * batch would silently null every matched row's lanes — refused. */
@@ -226,37 +280,7 @@ object EventLogMerge {
         // anti-set, the full rows become the CDC update_preimage lane
         val matched = recs.filter(r => byId.contains(r._1._1))
         if (matched.isEmpty) (f.getName, matched, None, false)
-        else {
-          val merged = recs.map { old =>
-            byId.get(old._1._1) match {
-              case Some(upd) =>
-                require(Math.floorDiv(upd._1._2, Day) ==
-                    Math.floorDiv(old._1._2, Day),
-                  s"graft-eventlog merge: update for event_id ${old._1._1} " +
-                    s"moves ts across a UTC day (${old._1._2} -> " +
-                    s"${upd._1._2}) — day files and the day profile " +
-                    "assume single-day rows; express a day move as " +
-                    "DELETE + INSERT")
-                bucketing.foreach { n =>
-                  val b = EventLog.bucketOfName(f.getName)
-                  require(b.forall(_ == GraftBucketFunction.bucketOf(upd._1._3, n)),
-                    s"graft-eventlog merge: update for event_id ${old._1._1} " +
-                      s"moves user_id ${old._1._3} -> ${upd._1._3} across " +
-                      s"buckets (n=$n) — it would break the store's " +
-                      "co-partitioning; express it as DELETE + INSERT")
-                }
-                upd
-              case None => old
-            }
-          }
-          val uuid = java.util.UUID.randomUUID().toString.take(8)
-          val tmp = new java.io.File(f.getParent, s".inprogress.merge.$uuid")
-          val fin = f.getName.stripSuffix(".gel") + s"-m$uuid.gel"
-          val sorted = merged.sortBy(r => (r._1._2, r._1._1))
-          val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
-            extWireB, sorted.map(_._2))
-          (f.getName, matched, Some((tmp.getName, entry)), false)
-        }
+        else (f.getName, matched, Some(rewrite(f, recs, byId.get, bucketing, extWireB)), false)
         }
       }.collect().toSeq
       }
@@ -278,16 +302,7 @@ object EventLogMerge {
       .groupBy(r => (Math.floorDiv(r._1._2, Day),
         bucketing.map(n => GraftBucketFunction.bucketOf(r._1._3, n))))
       .toSeq.sortBy { case ((day, b), _) => (day, b.getOrElse(-1)) }
-      .map { case ((day, bucket), rs) =>
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val bTag = bucket.map(b => f"b$b%04d-").getOrElse("")
-        val tmp = new java.io.File(dir, s".inprogress.merge.$uuid")
-        val sorted = rs.sortBy(r => (r._1._2, r._1._1))
-        val fin = f"day_$day%05d-" + bTag + s"u$uuid.gel"
-        val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
-          extWire, sorted.map(_._2))
-        (tmp.getName, entry)
-      }
+      .map { case ((day, bucket), rs) => insertFile(dir, day, bucket, rs, extWire) }
 
     // ONE intent for the whole merge, committed through the compactor's
     // shared swap sequence — the merge is one commit, one version. The
@@ -493,36 +508,8 @@ object EventLogMerge {
           else {
             def up(u: (Long, Long, Long, String, Long, Seq[Option[String]]))
                 : MRec = ((u._1, u._2, u._3, u._4, u._5), lanesOf(u))
-            val merged: Seq[MRec] = recs.map { old =>
-              byId.get(old._1._1) match {
-                case Some(updRow) =>
-                  val upd = up(updRow)
-                  require(Math.floorDiv(upd._1._2, Day) ==
-                      Math.floorDiv(old._1._2, Day),
-                    s"graft-eventlog merge: update for event_id ${old._1._1} " +
-                      s"moves ts across a UTC day (${old._1._2} -> " +
-                      s"${upd._1._2}) — day files and the day profile " +
-                      "assume single-day rows; express a day move as " +
-                      "DELETE + INSERT")
-                  bucketing.foreach { n =>
-                    val b = EventLog.bucketOfName(file)
-                    require(b.forall(_ == GraftBucketFunction.bucketOf(upd._1._3, n)),
-                      s"graft-eventlog merge: update for event_id ${old._1._1} " +
-                        s"moves user_id ${old._1._3} -> ${upd._1._3} across " +
-                        s"buckets (n=$n) — it would break the store's " +
-                        "co-partitioning; express it as DELETE + INSERT")
-                  }
-                  upd
-                case None => old
-              }
-            }
-            val uuid = java.util.UUID.randomUUID().toString.take(8)
-            val tmp = new java.io.File(f.getParent,
-              s".inprogress.merge.$uuid")
-            val fin = file.stripSuffix(".gel") + s"-m$uuid.gel"
-            val sorted = merged.sortBy(r => (r._1._2, r._1._1))
-            val entry = EventLog.writeGelFile(tmp, fin, sorted.map(_._1),
-              extWireB, sorted.map(_._2))
+            val (tmp, entry) = rewrite(f, recs, id => byId.get(id).map(up), bucketing,
+              extWireB)
             // this task's CHANGE DATA part: pre/post image pairs for
             // its matches — executor-written like the data temp, so no
             // change row ever rides through the driver
@@ -537,8 +524,7 @@ object EventLogMerge {
               }
             val cdcTmp = EventLogCdc.writeTemp(f.getParent, cdcRows,
               extWireB)
-            (file, matched, Some(tmp.getName), Some(entry), false,
-              Some(cdcTmp))
+            (file, matched, Some(tmp), Some(entry), false, Some(cdcTmp))
           }
         }
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -567,16 +553,11 @@ object EventLogMerge {
         val rs = it.toSeq
           .map(r => (((r._1, r._2, r._3, r._4, r._5)), lanesOf(r)): MRec)
           .sortBy(r => (r._1._2, r._1._1))
-        val uuid = java.util.UUID.randomUUID().toString.take(8)
-        val bTag = if (bucket < 0) "" else f"b$bucket%04d-"
-        val tmp = new java.io.File(dirB, s".inprogress.merge.$uuid")
-        val fin = f"day_$day%05d-" + bTag + s"u$uuid.gel"
-        val entry = EventLog.writeGelFile(tmp, fin, rs.map(_._1),
-          extWireB, rs.map(_._2))
+        val (tmp, entry) = insertFile(dirB, day, Some(bucket).filter(_ >= 0), rs, extWireB)
         val cdcTmp = EventLogCdc.writeTemp(dirB, rs.map(r =>
           EventLogCdc.Row(EventLogCdc.Insert, r._1._1, r._1._2, r._1._3,
             r._1._4, r._1._5, r._2)), extWireB)
-        (tmp.getName, entry, cdcTmp)
+        (tmp, entry, cdcTmp)
       }.collect().toSeq
 
     // matched = DISTINCT store ids updated, the broadcast path's

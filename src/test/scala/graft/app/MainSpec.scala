@@ -79,6 +79,30 @@ class MainSpec extends SparkTestBase {
 
   private val spikeDays = (36 to 38).map(dayStr).toSet
 
+  test("a fresh deployment whose first batch closes a single day refits on it, " +
+      "then scores the second day") {
+    val in = Files.createTempDirectory("app-in").toString
+    val out = Files.createTempDirectory("app-out").toString
+    val appArgs = Array("--json-dir", in, "--landing", s"$out/landing",
+      "--scores", s"$out/scores", "--checkpoint", s"$out/ckpt",
+      "--terms", "Cough,Fever", "--once")
+    // run 1: day 1, and the first record of day 2, which closes day 1. On
+    // one day every value is its own cumulative average, so both regions'
+    // feature rows are identical and every candidate k fits one cluster
+    val day2 = eventLines(2 to 2, Set.empty)
+    Files.write(java.nio.file.Paths.get(s"$in/events.json"),
+      (eventLines(1 to 1, Set.empty) :+ day2.head).mkString("\n").getBytes)
+    Main.main(appArgs)
+    assert(spark.read.parquet(s"$out/landing").count() == 2L * 2)
+    assert(new java.io.File(s"$out/ckpt/graft-state/model").exists(),
+      "the refit on one day must persist the state")
+    // run 2: the rest of day 2, and the first record of day 3
+    Files.write(java.nio.file.Paths.get(s"$in/events2.json"),
+      (day2.tail :+ eventLines(3 to 3, Set.empty).head).mkString("\n").getBytes)
+    Main.main(appArgs)
+    assert(spark.read.parquet(s"$out/landing").count() == 2L * 2 * 2)
+  }
+
   /** Both runs flag only planted spikes; run 1 flags at least one of
     * its own and run 2 flags the new one. */
   private def assertDetections(d: Drive): Unit = {

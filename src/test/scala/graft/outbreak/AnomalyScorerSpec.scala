@@ -49,7 +49,9 @@ class AnomalyScorerSpec extends SparkTestBase {
   test("selectK finds the obvious 2-cluster structure") {
     val assembled = AnomalyScorer.assemble(
       featureTable().where($"f1" < 50), Seq("f1", "f2"))
-    assert(AnomalyScorer.selectKModel(assembled, 2 to 4, seed = 1L)._1 == 2)
+    val vecs = assembled.select("features").collect()
+      .map(_.getAs[org.apache.spark.ml.linalg.Vector](0))
+    assert(AnomalyScorer.selectLocal(vecs, 2 to 4, seed = 1L)._1 == 2)
   }
 
   test("assemble keeps id columns alongside the features vector") {
@@ -73,15 +75,5 @@ class AnomalyScorerSpec extends SparkTestBase {
     assert(cacheEntries == before)
     assert(daily.storageLevel != StorageLevel.NONE, "the caller's cache was dropped")
     daily.unpersist()
-  }
-
-  test("selectKModel keeps a frame the caller cached") {
-    val features = AnomalyScorer.assemble(featureTable(), Seq("f1", "f2")).cache()
-    features.count()
-    AnomalyScorer.selectKModel(features, 2 to 3, seed = 1L, localEvalThreshold = 0L)
-    assert(features.storageLevel != StorageLevel.NONE)
-    AnomalyScorer.selectKModel(features, 2 to 3, seed = 1L)
-    assert(features.storageLevel != StorageLevel.NONE)
-    features.unpersist()
   }
 }

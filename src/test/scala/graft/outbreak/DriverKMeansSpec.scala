@@ -3,6 +3,7 @@ package graft.outbreak
 import graft.SparkTestBase
 import graft.queries.PipelineQueries
 import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.feature.{PCA, StandardScaler}
 import org.apache.spark.ml.linalg.{DenseVector, Vector, Vectors}
 import org.apache.spark.mllib.clustering.DriverKMeans
@@ -49,17 +50,38 @@ class DriverKMeansSpec extends SparkTestBase {
     assertIdentical(q41Features)
   }
 
-  test("dense PCA-projected table (MLlib's auto solver picks block)") {
+  private lazy val pcaFeatures = {
     val scaled = new StandardScaler().setWithMean(true).setWithStd(true)
       .setInputCol("features").setOutputCol("scaled").fit(q41Features)
       .transform(q41Features)
-    val pca = new PCA().setK(4).setInputCol("scaled").setOutputCol("pca")
+    new PCA().setK(4).setInputCol("scaled").setOutputCol("pca")
       .fit(scaled).transform(scaled)
       .select(col("pca").as("features"))
-    val vecs = pca.collect().map(_.getAs[Vector](0))
+  }
+
+  test("dense PCA-projected table (MLlib's auto solver picks block)") {
+    val vecs = pcaFeatures.collect().map(_.getAs[Vector](0))
     // auto picks block when nnz >= rows * dims / 2
     assert(vecs.map(_.numNonzeros.toLong).sum * 2 >= vecs.length.toLong * 4)
-    assertIdentical(pca)
+    assertIdentical(pcaFeatures)
+  }
+
+  test("localSilhouette of DriverKMeans's centers equals ClusteringEvaluator on MLlib's fit") {
+    for ((name, features) <- Seq("q41" -> q41Features, "PCA-projected" -> pcaFeatures)) {
+      val df = features.select("features").cache()
+      try {
+        val vecs = df.collect().map(_.getAs[Vector](0))
+        for (k <- ks) {
+          val mllib = new KMeans().setK(k).setSeed(1L).fit(df.coalesce(1))
+          val expected = new ClusteringEvaluator().setDistanceMeasure("squaredEuclidean")
+            .evaluate(mllib.transform(df))
+          val got = AnomalyScorer.localSilhouette(vecs.map(_.toArray),
+            DriverKMeans.fit(vecs, k, 1L).centers.map(_.toArray))
+          assert(math.abs(got - expected) <= 1e-9 * math.abs(expected),
+            s"$name k=$k: $got vs $expected")
+        }
+      } finally df.unpersist()
+    }
   }
 
   test("multi-partition 21-row table: collect order is the fit order") {

@@ -47,6 +47,25 @@ class FitDeterminismSpec extends SparkTestBase {
     assertAllEqual(runs.map { case (n, (_, s)) => n -> s }, "scores")
   }
 
+  test("the Spark front's fit: same model, scores and detrend state at 1, 4 and 16 shuffle " +
+      "partitions") {
+    val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30, spikeDays = Set(12, 25))
+    def bits(xs: Array[Double]) = xs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val runs = atEachPartitionCount {
+      val (scores, m, state) = AnomalyScorer.fit(daily, IncrementalOutbreakSpec.terms,
+        pcaK = 4, localEvalThreshold = 0L)
+      val p = m.projection.get
+      val model = Seq(bits(p.mean.toArray), bits(p.std.toArray), bits(p.pc.toArray),
+        bits(Array(m.mu, m.sigma))) ++ m.centers.map(c => bits(c.toArray))
+      (model, scoreBits(scores), IncrementalOutbreakSpec.stateBits(state))
+    }
+    assert(runs.head._2._2.size == 30 * 2)
+    assert(runs.head._2._3.size == 2 * 2)
+    assertAllEqual(runs.map { case (n, (m, _, _)) => n -> m }, "model")
+    assertAllEqual(runs.map { case (n, (_, s, _)) => n -> s }, "scores")
+    assertAllEqual(runs.map { case (n, (_, _, st)) => n -> st }, "detrend state")
+  }
+
   test("q41's scores at sf0.001: the same at 1, 4 and 16 shuffle partitions") {
     val runs = atEachPartitionCount(
       scoreBits(PipelineQueries.outbreakScores(spark, "/root/testdata/sf0.001")))

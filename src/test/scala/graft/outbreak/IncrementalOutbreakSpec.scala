@@ -42,9 +42,40 @@ class IncrementalOutbreakSpec extends SparkTestBase {
     // the updated state equals a from-scratch fit's state over all 33 days
     val (_, _, fullState) =
       IncrementalOutbreak.fitFull(spark, history.unionByName(increment), terms)
-    def stateBits(df: DataFrame) = df.as[(String, String, Long, Double)].collect()
-      .map(t => (t._1, t._2, t._3, java.lang.Double.doubleToRawLongBits(t._4))).toSet
-    assert(stateBits(newState) == stateBits(fullState))
+    assert(IncrementalOutbreakSpec.stateBits(newState) ==
+      IncrementalOutbreakSpec.stateBits(fullState))
+  }
+
+  test("over the driver cap: increment scores equal the fit's scorer on a 303-day front, " +
+      "and its state a 303-day fit's") {
+    val history = IncrementalOutbreakSpec.overCap(spark, 1 to 300).cache()
+    val increment = IncrementalOutbreakSpec.overCap(spark, 301 to 303)
+    val all = history.unionByName(increment)
+    assert(AnomalyScorer.localFront(history, terms, AnomalyScorer.LocalEvalThreshold).isEmpty,
+      "the 300-day fit must run the Spark front")
+    val (_, model, state) = IncrementalOutbreak.fitFull(spark, history, terms)
+    val (scores, newState) = IncrementalOutbreak.scoreIncrement(spark, increment, model, state)
+
+    // ground truth: the fitted model's scorer on the rows of days 301–303
+    // of a front over all 303 days
+    val firstNew = java.time.LocalDate.of(2020, 1, 1).plusDays(300).toString
+    val newRows = AnomalyScorer.sparkFront(all, terms).collect()
+      .filter(_.get(0).toString >= firstNew)
+    assert(newRows.length == 3 * 175)
+    val zs = IncrementalOutbreak.scorer(model)
+      .score(newRows.map(_.getAs[org.apache.spark.ml.linalg.Vector](2)))
+    val expected = newRows.zip(zs).toSeq.map { case (r, z) =>
+      (r.get(0), r.get(1), java.lang.Double.doubleToRawLongBits(z))
+    }
+    val actual = scores.collect().toSeq.map(r =>
+      (r.get(0), r.get(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    assert(actual == expected)
+
+    // the updated state equals a from-scratch fit's state over all 303 days
+    val (_, _, fullState) = IncrementalOutbreak.fitFull(spark, all, terms)
+    assert(IncrementalOutbreakSpec.stateBits(newState) ==
+      IncrementalOutbreakSpec.stateBits(fullState))
+    history.unpersist()
   }
 
   test("the increment declines a batch over the driver front's cap or with a null date") {
@@ -131,4 +162,24 @@ object IncrementalOutbreakSpec {
         region, kw, v)
     }).toDF("date", "region", "kw", "value")
   }
+
+  /** A daily table over the fit's driver cap: `days` × 175 regions ×
+    * [[terms]], on 4 partitions, with non-integer values, so sums round
+    * and only the same order of additions gives the same bits. 300 days
+    * are 52,500 feature rows. */
+  def overCap(spark: SparkSession, days: Range): DataFrame = {
+    import spark.implicits._
+    (for {
+      day <- days
+      r <- 0 until 175
+      (kw, t) <- terms.zipWithIndex
+    } yield (Date.valueOf(java.time.LocalDate.of(2020, 1, 1).plusDays(day - 1)),
+      f"R$r%03d", kw, (40.0 + day % 7 + r % 13 + 3 * t + (day * 7 + r * 3 + t) % 5) / 3.0))
+      .toDF("date", "region", "kw", "value").repartition(4)
+  }
+
+  /** A detrend state as a set of (region, kw, n, raw bits of sumv). */
+  def stateBits(state: DataFrame): Set[(String, String, Long, Long)] =
+    state.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
 }

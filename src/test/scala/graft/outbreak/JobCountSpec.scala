@@ -3,7 +3,6 @@ package graft.outbreak
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
-import graft.queries.PipelineQueries
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -16,13 +15,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Spark-job counts of the outbreak fit, the app's state load and increment,
   * pinned as upper bounds. On tables of a few hundred rows the fit's cost
   * is job scheduling, not arithmetic, so a change that adds jobs per fit
-  * is a regression even when the outputs stay identical. Each bound is
-  * the count measured with the features and the whole model built on the
-  * driver from one collect of the tidy daily table: what is left is that
-  * collect and, for the queries, the jobs of the events aggregate in front
-  * of it. The Spark feature front costs about three more per fit, fitting
-  * the scaler, PCA and the distance normalization with Spark jobs about
-  * ten more, fitting the candidate k with MLlib about a hundred more. */
+  * is a regression even when the outputs stay identical. Up to the fit's
+  * driver cap each bound is the count measured with the features and the
+  * whole model built on the driver from one collect of the tidy daily
+  * table: what is left is that collect and, for the queries, the jobs of
+  * the events aggregate in front of it. Above the cap the refit runs the
+  * declined capped collect, the Spark feature front, MLlib's scaler and
+  * PCA fits and one collect of the projected rows; the k selection, the
+  * distance normalization and the scores run on the driver and add no
+  * job. */
 class JobCountSpec extends SparkTestBase {
 
   /** Jobs started while `body` runs, from any thread (a job group would
@@ -63,20 +64,20 @@ class JobCountSpec extends SparkTestBase {
 
   private val sf0001 = "/root/testdata/sf0.001"
 
-  test("selectKModel under the local threshold: at most 2 jobs") {
-    val features = AnomalyScorer.sparkFront(
-      PipelineQueries.dailyFromEvents(spark, sf0001), PipelineQueries.EventTypes).cache()
-    features.count()
-    val jobs = jobsOf(AnomalyScorer.selectKModel(features, 2 to 6, 1L))
-    assert(jobs <= 2, s"selectKModel ran $jobs jobs")
-  }
-
   test("IncrementalOutbreak.fitFull on IncrementalOutbreakSpec's 30-day table: at most 1 job") {
     val daily = IncrementalOutbreakSpec.mkDaily(spark, 1 to 30).cache()
     daily.count()
     val jobs = jobsOf(IncrementalOutbreak.fitFull(spark, daily, IncrementalOutbreakSpec.terms))
     daily.unpersist()
     assert(jobs <= 1, s"fitFull ran $jobs jobs")
+  }
+
+  test("fitFull over the driver cap, 300 days × 175 regions: at most 11 jobs") {
+    val daily = IncrementalOutbreakSpec.overCap(spark, 1 to 300).cache()
+    daily.count()
+    val jobs = jobsOf(IncrementalOutbreak.fitFull(spark, daily, IncrementalOutbreakSpec.terms))
+    daily.unpersist()
+    assert(jobs <= 11, s"fitFull ran $jobs jobs")
   }
 
   test("saveState of fitFull's state on IncrementalOutbreakSpec's 30-day table: at most 2 jobs") {

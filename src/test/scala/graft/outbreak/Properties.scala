@@ -34,6 +34,16 @@ object KernelProperties extends Properties("graft.kernels") {
       Prop(s >= -1.0 - 1e-9 && s <= 1.0 + 1e-9) :| s"silhouette=$s"
     }
 
+  property("local silhouette of collapsed centers is finite in [-1, 1]") =
+    forAll(dataGen, Gen.choose(1, 5), Gen.oneOf(true, false)) { (data, k, samePoints) =>
+      // every point identical under k centers, or the points under one center
+      val (points, centers) =
+        if (samePoints) (Array.fill(data.length)(data.head.clone()), data.take(k).map(_.clone()))
+        else (data, Array(data.head.clone()))
+      val s = AnomalyScorer.localSilhouette(points, centers)
+      Prop(!s.isNaN && !s.isInfinite && s >= -1.0 && s <= 1.0) :| s"silhouette=$s"
+    }
+
   property("integer-cents accumulation is order-independent") =
     forAll(Gen.listOf(Gen.choose(-1e6, 1e6))) { xs =>
       def centsSum(vs: Seq[Double]): Long =

@@ -218,21 +218,19 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
-  test("flagship scores consume no UDF: q41 is a local relation, its MLlib path reads a cut") {
-    // Below the local threshold the whole model, distances included, is
-    // fitted on the driver (graft_sqdist's loop, DriverFitSpec pins it
-    // bit for bit) and the scores come back as a local relation: no
-    // scoring plan is left to hold a UDF. Above it, the scores project a
-    // materialized distance table (least(graft_sqdist(...)) over literal
-    // centers, computed before the cut), again with no UDF.
+  test("flagship scores consume no UDF: q41 is a local relation on both fronts") {
+    // The model, distances included, is fitted on the driver on either
+    // side of the local threshold (DriverFitSpec pins the two bit for
+    // bit), and the scores come back as a local relation: no scoring plan
+    // is left to hold a UDF.
     val p = plan("q41_outbreak_scores")
     assert(p.contains("LocalTableScan"), p.take(1200))
     assert(!p.contains("UDF"), p.take(1200))
-    val mllib = graft.outbreak.AnomalyScorer.fit(PipelineQueries.dailyFromEvents(spark, dir),
+    val above = graft.outbreak.AnomalyScorer.fit(PipelineQueries.dailyFromEvents(spark, dir),
       PipelineQueries.EventTypes, pcaK = 0, localEvalThreshold = 0L)._1
       .queryExecution.executedPlan.toString
-    assert(mllib.contains("ExistingRDD"), mllib.take(1200))
-    assert(!mllib.contains("UDF"), mllib.take(1200))
+    assert(above.contains("LocalTableScan"), above.take(1200))
+    assert(!above.contains("UDF"), above.take(1200))
   }
 
   test("weighted sample ranks via WindowGroupLimit, no global sort (q126)") {

@@ -228,6 +228,35 @@ class EventLogChangesStreamSpec extends graft.SparkTestBase {
       s"expected the checkpoint-retention refusal, got: ${deepMsg(e)}")
   }
 
+  test("idle triggers on a folded store read the checkpoint's 16-byte prefix, no entry") {
+    val fs = new CheckpointReadsFs(Files.createTempDirectory("gelcdcroot").toFile)
+    val dir = "/graft-virtual-store/cdc-idle"
+    EventLog.withFs(fs) {
+      (0 until 17).foreach(k => commit(dir, Seq(k.toLong), idBase = k * 100))
+      assert(fs.listFiles(new java.io.File(dir)).exists(_.getName == EventLog.ManifestName),
+        "the manifest log did not fold into a checkpoint")
+      // the tail starts after the fold, at the current version: every
+      // trigger is idle
+      val q = spark.readStream.format("graft-eventlog")
+        .option("stream.changes", "true")
+        .option("changes.startingVersion", EventLog.currentVersion(dir).toString)
+        .load(dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50L))
+        .start()
+      try {
+        q.processAllAvailable()
+        fs.opens.set(0); fs.maxRead.set(0)
+        val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+        while (fs.opens.get() < 10 && System.nanoTime() < deadline) Thread.sleep(50)
+      } finally q.stop()
+    }
+    assert(fs.opens.get() >= 10, s"idle triggers opened the checkpoint ${fs.opens.get()} times")
+    assert(fs.maxRead.get() <= EventLog.ManifestMagic.length + 8L,
+      s"an idle trigger read ${fs.maxRead.get()} bytes of the checkpoint")
+  }
+
   test("maxBytesPerTrigger bounds the CDC batches by whole commits") {
     val dir = Files.createTempDirectory("gelcdc").toString
     commit(dir, Seq(0L), idBase = 0)   // version 1: 1 file
@@ -283,6 +312,30 @@ class EventLogChangesStreamSpec extends graft.SparkTestBase {
     assert(EventLogVersionOffset.fromJson(o.json()) == o)
     intercept[IllegalArgumentException] {
       EventLogVersionOffset.fromJson("""{"watermark":"x","count":1}""")
+    }
+  }
+}
+
+/** A [[ChrootGelFs]] that counts the opens of the manifest checkpoint and
+  * keeps the most bytes any one open has read from it. */
+class CheckpointReadsFs(root: java.io.File) extends ChrootGelFs(root) {
+  val opens = new java.util.concurrent.atomic.AtomicLong(0)
+  val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
+  override def openRead(f: java.io.File): java.io.InputStream = {
+    val in = super.openRead(f)
+    if (f.getName != EventLog.ManifestName) in
+    else {
+      opens.incrementAndGet()
+      new java.io.FilterInputStream(in) {
+        private var taken = 0L
+        private def counted(n: Int): Int = {
+          if (n > 0) { taken += n; maxRead.accumulateAndGet(taken, (a, b) => math.max(a, b)) }
+          n
+        }
+        override def read(): Int = { val b = super.read(); counted(if (b < 0) -1 else 1); b }
+        override def read(b: Array[Byte], off: Int, len: Int): Int =
+          counted(super.read(b, off, len))
+      }
     }
   }
 }
