@@ -351,7 +351,7 @@ object AnomalyScorer {
   /** The silhouette-maximizing k in `kRange` (reference `select_k`,
     * README.md:713-731 semantics) and its centers, so the caller never
     * re-fits. Every candidate k is fitted by DriverKMeans, which replays
-    * MLlib's `KMeans().setK(k).setSeed(seed)` on the rows in the given
+    * MLlib's k-means fit with this k and seed on the rows in the given
     * order, and scored by [[localSilhouette]]. A fit that leaves fewer
     * than two non-empty clusters (all rows identical, say) has no
     * silhouette: it loses to every fit that has one, and where none has
