@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -11,17 +9,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Session(s"local[$cpus]")(
       // 110 queries × several codegen stages far exceeds the default
       // 100-entry compiled-class cache — thrash re-Janino-compiles the
       // big vector/LSH expressions on every run (q109: 6.1s cold vs
       // 0.75s warm). Static conf, so it must be set at session build.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
       // Sweep-integrity (r4/r5 medians up to 10× mins on identical
       // code): ContextCleaner reclaims broadcasts/shuffles only when the
       // JVM GCs, and the default periodic GC is every 30 MIN — a
@@ -29,10 +22,7 @@ object Bench {
       // shuffle state between collections, and whichever query runs
       // during the eventual collection eats it. Collect every minute,
       // plus an explicit gc between queries below.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.v2.EventLog.installFsFromConf(spark)
+      "spark.cleaner.periodicGC.interval" -> "1min")
     // the measurement is only meaningful with real heap headroom —
     // make a too-small launcher configuration loudly visible
     val maxGb = Runtime.getRuntime.maxMemory / (1L << 30)

@@ -1,11 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session("local[4]")()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     // no args = every declared query (the guide §1 full-plan capture)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,7 @@ object Verify {
     // dump to those queries (local iteration); the driver passes two args.
     val Array(sfDir, outDir, rest @ _*) = args: @unchecked
     val only: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.v2.EventLog.installFsFromConf(spark)
+    val spark = Session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")()
     new java.io.File(outDir).mkdirs()
     // failures are per-query (one broken query must not hide the other
     // 150 results) but they must not exit 0 either — r5 lost 35 queries

@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.Trigger
   * batch-replay / backfill mode. Note append-mode semantics: the most
   * recent day(s) still inside the watermark are NOT final and therefore
   * not landed by a `--once` run; they emit on the next run once newer
-  * events advance the watermark past their window end.
+  * events advance the watermark past their window end. A deployment's
+  * conf overrides [[graft.Session]]'s settings; the Spark UI stays on.
   *
   * Flow: stream → single parse → watermarked daily aggregation → ONE
   * foreachBatch that (a) appends closed daily rows to the parquet landing
@@ -50,21 +51,14 @@ object Main {
     val preexistingSession =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).isDefined
 
-    // spark-submit normally supplies the master; default local for dev runs
-    val master = arg(args, "--master")
-      .orElse(sys.env.get("SPARK_MASTER")).getOrElse("local[*]")
-    val spark = SparkSession.builder()
-      .appName("graft-outbreak")
-      .master(master)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = graft.Session("local[*]", master = arg(args, "--master"), ui = true)(
+      "spark.app.name" -> "graft-outbreak",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       // RocksDB-backed streaming state: keeps watermark/dedup state off the
       // executor heap — the difference between OOM and steady-state when
       // the key space (terms × regions × open windows) grows at scale.
-      .config("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val parsed = (arg(args, "--kafka"), arg(args, "--json-dir")) match {
       case (Some(servers), _) =>

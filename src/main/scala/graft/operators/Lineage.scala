@@ -21,9 +21,7 @@ import org.apache.spark.sql.DataFrame
   *       an already-configured SparkContext checkpoint dir also counts)
   *
   * The keys carry the `spark.` prefix because `spark-submit --conf` and
-  * `spark-defaults.conf` drop any other key. The unprefixed names
-  * `graft.checkpoint.{mode,dir}`, which a session can still set at
-  * runtime, are read where the prefixed ones are unset.
+  * `spark-defaults.conf` drop any other key.
   *
   * Both modes materialize eagerly and preserve the input's
   * partitioning, so plan shape and results are identical — only the
@@ -37,14 +35,12 @@ object Lineage {
 
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    def conf(key: String) =
-      spark.conf.getOption(key).orElse(spark.conf.getOption(key.stripPrefix("spark.")))
-    conf(ModeKey).getOrElse("local") match {
+    spark.conf.getOption(ModeKey).getOrElse("local") match {
       case "local" => df.localCheckpoint(true)
       case "reliable" =>
         val sc = spark.sparkContext
         if (sc.getCheckpointDir.isEmpty) {
-          val dir = conf(DirKey).getOrElse(
+          val dir = spark.conf.getOption(DirKey).getOrElse(
             throw new IllegalStateException(
               s"$ModeKey=reliable needs $DirKey " +
                 "(or a pre-set SparkContext checkpoint dir)"))

@@ -292,7 +292,10 @@ object AnomalyScorer {
     if (pcaK > 0) {
       val (mean, std) = DriverFit.scalerStats(vecs)
       val scaled = vecs.map(DriverFit.scaler(mean, std))
-      val pc = DriverFit.pca(scaled, pcaK)
+      // one row has no covariance, and scales to 0: any basis serves
+      val n = mean.size
+      val pc = if (vecs.length > 1) DriverFit.pca(scaled, pcaK)
+        else new DenseMatrix(n, pcaK, DenseMatrix.eye(n).values.take(n * pcaK))
       Projected(front.dates, front.regions, Some(Projection(mean, std, pc)),
         scaled.map(DriverFit.projection(pc)))
     } else Projected(front.dates, front.regions, None, vecs)

@@ -24,13 +24,7 @@ object ScaleSmoke {
     }.reduce(_ unionByName _)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.v2.EventLog.installFsFromConf(spark)
+    val spark = graft.Session("local[32]")()
     // optional name filter: `runMain graft.tools.ScaleSmoke asof topk`
     // times only matching operators (substring match)
     val only = args.toSet

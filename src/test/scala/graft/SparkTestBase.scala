@@ -15,17 +15,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 object SparkTestBase {
   // One session per JVM (Test / fork := true gives each test run its own).
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = Session("local[4]")(
+      "spark.app.name" -> "graft-test",
       // managed tables (bucketed-write specs) land in tmp, not the repo
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
     graft.plans.VectorExpressions.register(s)
     s
   }

@@ -10,10 +10,11 @@ import graft.SparkTestBase
 class MainSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def eventLines(days: Range, spikeDays: Set[Int]): Seq[String] =
+  private def eventLines(days: Range, spikeDays: Set[Int],
+      regions: Seq[String] = Seq("US", "IL")): Seq[String] =
     (for {
       day <- days
-      region <- Seq("US", "IL")
+      region <- regions
       kw <- Seq("Cough", "Fever")
       hh <- Seq("06", "18")
     } yield {
@@ -81,26 +82,29 @@ class MainSpec extends SparkTestBase {
 
   test("a fresh deployment whose first batch closes a single day refits on it, " +
       "then scores the second day") {
-    val in = Files.createTempDirectory("app-in").toString
-    val out = Files.createTempDirectory("app-out").toString
-    val appArgs = Array("--json-dir", in, "--landing", s"$out/landing",
-      "--scores", s"$out/scores", "--checkpoint", s"$out/ckpt",
-      "--terms", "Cough,Fever", "--once")
-    // run 1: day 1, and the first record of day 2, which closes day 1. On
-    // one day every value is its own cumulative average, so both regions'
-    // feature rows are identical and every candidate k fits one cluster
-    val day2 = eventLines(2 to 2, Set.empty)
-    Files.write(java.nio.file.Paths.get(s"$in/events.json"),
-      (eventLines(1 to 1, Set.empty) :+ day2.head).mkString("\n").getBytes)
-    Main.main(appArgs)
-    assert(spark.read.parquet(s"$out/landing").count() == 2L * 2)
-    assert(new java.io.File(s"$out/ckpt/graft-state/model").exists(),
-      "the refit on one day must persist the state")
-    // run 2: the rest of day 2, and the first record of day 3
-    Files.write(java.nio.file.Paths.get(s"$in/events2.json"),
-      (day2.tail :+ eventLines(3 to 3, Set.empty).head).mkString("\n").getBytes)
-    Main.main(appArgs)
-    assert(spark.read.parquet(s"$out/landing").count() == 2L * 2 * 2)
+    // two regions, and one: a single feature row has no covariance for PCA
+    for (regions <- Seq(Seq("US", "IL"), Seq("US"))) {
+      val in = Files.createTempDirectory("app-in").toString
+      val out = Files.createTempDirectory("app-out").toString
+      val appArgs = Array("--json-dir", in, "--landing", s"$out/landing",
+        "--scores", s"$out/scores", "--checkpoint", s"$out/ckpt",
+        "--terms", "Cough,Fever", "--once")
+      // run 1: day 1, and the first record of day 2, which closes day 1. On
+      // one day every value is its own cumulative average, so all regions'
+      // feature rows are identical and every candidate k fits one cluster
+      val day2 = eventLines(2 to 2, Set.empty, regions)
+      Files.write(java.nio.file.Paths.get(s"$in/events.json"),
+        (eventLines(1 to 1, Set.empty, regions) :+ day2.head).mkString("\n").getBytes)
+      Main.main(appArgs)
+      assert(spark.read.parquet(s"$out/landing").count() == regions.size * 2L)
+      assert(new java.io.File(s"$out/ckpt/graft-state/model").exists(),
+        s"the refit on one day of $regions must persist the state")
+      // run 2: the rest of day 2, and the first record of day 3
+      Files.write(java.nio.file.Paths.get(s"$in/events2.json"),
+        (day2.tail :+ eventLines(3 to 3, Set.empty, regions).head).mkString("\n").getBytes)
+      Main.main(appArgs)
+      assert(spark.read.parquet(s"$out/landing").count() == regions.size * 2L * 2)
+    }
   }
 
   /** Both runs flag only planted spikes; run 1 flags at least one of
