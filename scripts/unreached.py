@@ -6,7 +6,8 @@ object that no reached code names (member mode).
 Usage: python3 scripts/unreached.py [repo_root]
 
 Exits 1 when either mode prints a definition that is not in KEEP and
-that no KEEP entry names either.
+that no KEEP entry names either, or when a KEEP entry names no
+definition at all (printed as `stale keep`: its code is gone).
 
 A definition is reached when some code path leads to it from an entry
 point. The entry points are:
@@ -57,17 +58,6 @@ BY_NAME = {"GelFs": "spark.graft.eventlog.fs.impl"}
 
 # Definitions that no entry point reaches and that stay, with the reason.
 KEEP = {
-    "graft.streaming.EwmaMonitor":
-        "kept monitor: to be wired into the app's metrics line or deleted "
-        "(ROADMAP, three kept monitors)",
-    "graft.streaming.HoltWintersMonitor":
-        "kept monitor: to be wired into the app's metrics line or deleted "
-        "(ROADMAP, three kept monitors)",
-    "graft.streaming.StaleFeedMonitor":
-        "kept monitor: to be wired into the app's metrics line or deleted "
-        "(ROADMAP, three kept monitors)",
-    "graft.streaming.StaleAlert":
-        "the alert row of the kept StaleFeedMonitor",
     "graft.sources.SyntheticProducer":
         "test fixture: feeds the Kafka-shaped specs",
     "graft.sources.ProduceSynthetic":
@@ -428,12 +418,16 @@ def main():
         name = f"{owner}.{m}"
         print(f"{name}\t{s.kind}\t{s.file}:{s.line}\ttests: {tests(owner, m)}"
               f"{keep(name, (owner, m) in live)}")
+    stale = [n for n in KEEP
+             if n not in nodes and tuple(n.rsplit(".", 1)) not in members]
+    for name in stale:
+        print(f"{name}\tstale keep\tkeep: {KEEP[name]}")
     print(f"# {len(unreached)} of {len(nodes)} top-level definitions unreached, "
           f"{len(dead)} of {sum(1 for k in members if k[0] in reached_from_entries)} "
           f"members of reached objects unnamed", file=sys.stderr)
     stray = [q for q in unreached if q not in KEEP and q not in reached] + \
             [f"{o}.{m}" for o, m in dead if f"{o}.{m}" not in KEEP and (o, m) not in live]
-    sys.exit(1 if stray else 0)
+    sys.exit(1 if stray or stale else 0)
 
 
 if __name__ == "__main__":

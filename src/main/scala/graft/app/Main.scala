@@ -53,7 +53,6 @@ object Main {
 
     val spark = graft.Session("local[*]", master = arg(args, "--master"), ui = true)(
       "spark.app.name" -> "graft-outbreak",
-      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       // RocksDB-backed streaming state: keeps watermark/dedup state off the
       // executor heap — the difference between OOM and steady-state when
       // the key space (terms × regions × open windows) grows at scale.

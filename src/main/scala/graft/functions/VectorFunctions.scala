@@ -32,7 +32,7 @@ object VectorFunctions {
   /** Native codegen'd variants (see [[graft.plans.VectorExpressions]]) —
     * bit-identical to the fold versions but one tight generated loop.
     * Requires `VectorExpressions.register(spark)` (done by
-    * [[graft.sources.Tables.load]]) or GraftExtensions. */
+    * [[graft.sources.Tables.load]]). */
   def nativeDot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
 

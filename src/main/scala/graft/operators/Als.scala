@@ -93,14 +93,22 @@ object Als {
     * scoring (r − x·y)² against the just-solved x inside the mapGroups
     * yields exactly [[errorOf]]'s statistic for the completed
     * alternation — without errorOf's two extra corpus joins per
-    * iteration. Quantization is [[graft.streaming.Micro.halfUp]], the
-    * Spark-`round` bit-identical snap, and the dot product walks dims
-    * in zip_with's sequential order, so the golden q232 curve is
-    * unchanged. */
+    * iteration. Quantization is [[halfUp]], the Spark-`round`
+    * bit-identical snap, and the dot product walks dims in zip_with's
+    * sequential order, so the golden q232 curve is unchanged. */
   private def solveSideWithError(ratings: DataFrame, otherFactors: DataFrame,
       k: Int, lambda: Double): DataFrame =
     solvedGroups(ratings, otherFactors, k, lambda)
       .toDF("id", "vec", "__n", "__sse")
+
+  /** Spark SQL `round(x, 0)` as a whole Long: HALF_UP over the
+    * SHORTEST-decimal rendering (`BigDecimal.valueOf`, not the exact
+    * binary expansion). `math.round`'s `floor(x + 0.5)` drifts on
+    * .5-adjacent doubles. Out-of-long-range input fails loudly
+    * (`longValueExact`) instead of saturating. */
+  private def halfUp(x: Double): Long =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
 
   private def solvedGroups(ratings: DataFrame, otherFactors: DataFrame,
       k: Int, lambda: Double)
@@ -131,14 +139,14 @@ object Als {
         while (i < k) { a(i)(i) += reg; i += 1 }
         val x = solve(a, b)
         // group SSE against the fresh x: y(i)*x(i) in ascending-dim
-        // order = errorOf's zip_with fold; Micro.halfUp = Spark round
+        // order = errorOf's zip_with fold; halfUp = Spark round
         var sse = 0L
         obs.foreach { case (_, _, r, y) =>
           var d = 0.0
           var j = 0
           while (j < k) { d += y(j) * x(j); j += 1 }
           val e = r - d
-          sse += graft.streaming.Micro.halfUp(e * e * 1000000.0)
+          sse += halfUp(e * e * 1000000.0)
         }
         (key, x.toSeq, obs.length.toLong, sse)
       }

@@ -23,6 +23,14 @@ import org.apache.spark.sql.DataFrame
   * The keys carry the `spark.` prefix because `spark-submit --conf` and
   * `spark-defaults.conf` drop any other key.
   *
+  * Reliable mode never deletes what it writes: every round's checkpoint
+  * files stay in the directory for the application's lifetime and after
+  * it, because Spark's `spark.cleaner.referenceTracking.cleanCheckpoints`
+  * defaults to false. A deployment that runs reliable mode sets it to
+  * true (the context cleaner then deletes a round's files once the
+  * driver garbage-collects that round's RDD) and still removes the
+  * per-application directory itself after the run.
+  *
   * Both modes materialize eagerly and preserve the input's
   * partitioning, so plan shape and results are identical — only the
   * failure-recovery story changes. CheckpointModeSpec runs the

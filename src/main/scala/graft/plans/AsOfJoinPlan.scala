@@ -49,8 +49,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * v1 contract (checked by the rewrite, which otherwise leaves the
   * join untouched): key and time expressions are BIGINT; rows with
   * null key/time match nothing (left ones still emit with nulls).
-  * Installed by [[GraftExtensions]] or idempotently at table-load time
-  * ([[AsOfJoinPlan.install]]). */
+  * Installed idempotently at table-load time ([[AsOfJoinPlan.install]],
+  * called by [[graft.sources.Tables.load]]). */
 object AsOfJoinPlan {
 
   val functionEntries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
@@ -62,7 +62,7 @@ object AsOfJoinPlan {
       (args: Seq[Expression]) => AsOfMarker(args(0), args(1), forward = true)))
 
   /** Idempotently install marker + rewrite + strategy on a live
-    * session (the non-`spark.sql.extensions` path). */
+    * session. */
   def install(spark: SparkSession): Unit = synchronized {
     functionEntries.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
@@ -90,7 +90,7 @@ case class AsOfMarker(left: Expression, right: Expression, forward: Boolean)
   private def unrewritten(): Nothing = throw new UnsupportedOperationException(
     "graft_asof is a join marker, not a predicate: it must appear as a " +
       "conjunct of a LEFT OUTER equi-join condition with " +
-      "graft.plans.GraftExtensions (or AsOfJoinPlan.install) active, " +
+      "graft.plans.AsOfJoinPlan.install (Tables.load calls it) active, " +
       "and BIGINT key/time columns")
 
   override def eval(input: InternalRow): Any = unrewritten()

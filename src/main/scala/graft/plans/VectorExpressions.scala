@@ -240,20 +240,6 @@ object VectorExpressions {
     }
 }
 
-/** `SparkSession.builder.withExtensions(new GraftExtensions)` — or
-  * `spark.sql.extensions=graft.plans.GraftExtensions` — installs the
-  * native vector functions at session build time. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    VectorExpressions.functions.foreach(ext.injectFunction)
-    AsOfJoinPlan.functionEntries.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => IntersectSizeRewrite)
-    ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    ext.injectOptimizerRule(_ => AsOfJoinRewrite)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
-}
-
 /** `graft_intersect_size(a, b)` — |a ∩ b| for two SORTED, de-duplicated
   * string arrays, as one merge walk: O(n+m), zero allocation — replaces
   * `size(array_intersect(...))`, which builds a hash set per row pair.

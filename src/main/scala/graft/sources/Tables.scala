@@ -15,7 +15,8 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Engine bootstrap: install the native vector expressions and the
     // as-of join operator (marker + rewrite + strategy) on whatever
-    // session is in use (idempotent; also available via GraftExtensions).
+    // session is in use (idempotent). This is the one way the engine
+    // enters a session.
     graft.plans.VectorExpressions.register(spark)
     graft.plans.AsOfJoinPlan.install(spark)
     spark.read.parquet(s"$dir/$name.parquet")

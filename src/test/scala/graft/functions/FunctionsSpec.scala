@@ -185,32 +185,3 @@ class ShinglesSpec extends SparkTestBase {
     assert(shi(0) != shi(1))  // different 3-gram sets: shingles differ
   }
 }
-
-class IntersectSizeRewriteSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("optimizer swaps size(array_intersect) for the native merge walk when sortedness is provable") {
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.IntersectSizeRewrite)
-    try {
-      // a real scan: over a LocalRelation the ConvertToLocalRelation rule
-      // evaluates the whole projection before our rewrite can be observed
-      val dir = java.nio.file.Files.createTempDirectory("rw").toString
-      Seq(("a b c b", "b c d")).toDF("x", "y").write.mode("overwrite").parquet(dir)
-      val df = spark.read.parquet(dir)
-      val q = df.select(
-        functions.size(functions.array_intersect(
-          functions.sort_array(functions.array_distinct(functions.split($"x", " "))),
-          functions.sort_array(functions.array_distinct(functions.split($"y", " ")))))
-          .as("n"),
-        // NOT provably sorted -> must stay as the built-in
-        functions.size(functions.array_intersect(
-          functions.split($"x", " "), functions.split($"y", " "))).as("m"))
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("graft_intersect_size"), optimized)
-      assert(optimized.contains("array_intersect"), optimized) // unsorted kept
-      val row = q.as[(Int, Int)].collect().head
-      assert(row == ((2, 2)))
-    } finally spark.experimental.extraOptimizations = Nil
-  }
-}
